@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Hypervisor-steal measurement for the bench launch (r16 verdict #4).
   * Round 16 measured that this host's steal is DEMAND-TRIGGERED: an
@@ -113,21 +112,23 @@ object Bench {
       stealProbe: Double = -1.0, stealRun: Double = -1.0,
       stealTicks: Seq[Double] = Seq.empty,
       bcastViolations: Seq[String] = Seq.empty,
-      jitMs: Seq[(String, Long)] = Seq.empty): String = {
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+      jitMs: Seq[(String, Long)] = Seq.empty,
+      errors: Seq[(String, String)] = Seq.empty): String = {
+    def obj(kvs: Seq[(String, Any)]): String =
+      kvs.map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
     val ticks = stealTicks.mkString("[", ",", "]")
-    val bv = bcastViolations.map(s => "\"" +
-      s.replace("\\", "\\\\").replace("\"", "\\\"").take(200) + "\"")
-      .mkString("[", ",", "]")
+    val bv = bcastViolations.map(v => Json.str(v.take(200))).mkString("[", ",", "]")
     // per-key JIT-compiler wall-ms (CompilationMXBean delta across the
     // timed action — r17/r18 roving-spike adjudication: the spike is C2
     // compile placement, not plan cost; see OPTIMIZATION_r18.md. A key
     // whose seconds jump WITH a jit_ms jump is compiler-window noise; one
-    // without is a real plan change.)
-    val jm = jitMs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    s"""{"metric":"per_query","unit":"sec","sf":"$sf","action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_ms":$jm,"queries":$qs}"""
+    // without is a real plan change.) The delta is JVM-wide, so it also
+    // counts compile backlog queued by earlier keys (or the warmup) that
+    // drained inside this key's window: it is window overlap, not a
+    // causal per-key compile cost.
+    val jm = obj(jitMs)
+    val errs = obj(errors.map { case (k, e) => k -> Json.str(e) })
+    s"""{"metric":"per_query","unit":"sec","sf":${Json.str(sf)},"action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_ms":$jm,"errors":$errs,"queries":${obj(results)}}"""
   }
 
   /** 1-minute system load average, rounded to 2 decimals (-1.0 where the
@@ -159,7 +160,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Steal-aware launch (r16 verdict #4): saturate the benched width and
     // retry until the hypervisor-steal window is quiet, so the OFFICIAL
     // per-round artifact is itself a quiet point rather than needing a
@@ -173,38 +173,14 @@ object Bench {
     var quiet = false
     while (!quiet && attempt < stealTries) {
       attempt += 1
-      probeSteal = Steal.probe(cpus.toInt, 8)
+      probeSteal = Steal.probe(GraftSession.cpus, 8)
       System.err.println(
         s"[bench] full-width steal probe $attempt/$stealTries: " +
           s"$probeSteal% (gate $stealMax%)")
       if (probeSteal < 0 || probeSteal <= stealMax) quiet = true
       else Thread.sleep(60000)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Coalesce small post-shuffle partitions to the advisory SIZE, not to
-      // max parallelism: with the default parallelismFirst=true, AQE keeps
-      // ~`cpus` post-shuffle partitions even for KB-sized shuffles, so at
-      // the graded cpus=32 every one of 171 small queries paid a
-      // 32-tiny-task floor per shuffle (round-5 bench: trivial queries
-      // inflated most). false is also the documented recommendation for
-      // real clusters — partitions sized to data, not to the core count.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // broadcast decisions read actual-bytes-calibrated estimates
-      // (measured 6.3× row-format blowup — see GraftSession)
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      // faithful broadcast dataSize metrics for the audit below: without
-      // this the big-heap default page size (32 MiB) floors every build's
-      // dataSize at one allocated page (see GraftSession.BufferPageSize)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: benign per-query WARNs (e.g. WindowExec's bounded
-    // no-partition notes on k-row frames) otherwise flood the driver's
-    // bounded stdout+stderr tail that must retain the summary line.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain()
     // Untimed warmup: absorb one-time JVM/codegen and streaming-engine
     // initialization (~6s measured) so per-query numbers reflect per-query
     // cost, not which arbitrary query ran first. Deterministic name order
@@ -225,10 +201,12 @@ object Bench {
     val jitSupported = compiler != null &&
       compiler.isCompilationTimeMonitoringSupported
     val jitTimes = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+    val errors = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val jit0 = if (jitSupported) compiler.getTotalCompilationTime else 0L
       val t0 = System.nanoTime()
-      // A crashed query reports -1.0, never a normal-looking elapsed time.
+      // A crashed query reports -1.0, never a normal-looking elapsed time,
+      // and its cause goes to stderr and the detail's `errors` object.
       // The timed action is a NOOP WRITE, not count() (round 17): count
       // lets Catalyst prune everything cardinality-neutral — window
       // functions whose outputs count doesn't read, aggregate-side
@@ -246,7 +224,13 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable =>
+          // capped: a Spark analysis error can inline a whole plan
+          val cause = s"${e.getClass.getName}: ${e.getMessage}".take(500)
+          System.err.println(s"[bench] $name failed: $cause")
+          errors += name -> cause
+          -1.0
+        }
       if (jitSupported)
         jitTimes += name -> (compiler.getTotalCompilationTime - jit0)
       name -> math.round(sec * 1000) / 1000.0
@@ -259,7 +243,7 @@ object Bench {
     }
     bcast.foreach(v => System.err.println(s"[bench] BCAST VIOLATION: $v"))
     val detail = detailJson(results, sfDir, loadStart, loadEnd,
-      probeSteal, stealRun, stealTicks, bcast, jitTimes.toSeq)
+      probeSteal, stealRun, stealTicks, bcast, jitTimes.toSeq, errors.toSeq)
     // Detail goes ONLY to files. Printing it (even to stderr) is unsafe:
     // the driver captures stdout+stderr combined, and 3.5 KB of per-query
     // detail eats most of the bounded tail window the summary must fit in.

@@ -1,38 +1,20 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-evidence dump for the optimization rounds: writes
   * `.explain("formatted")` for named queries (default: all) to
-  * `<outDir>/<name>.txt`, under EXACTLY the session configs the bench
-  * runs with, so the committed plan files in plans/rNN/ reflect the
-  * plans the timed runs execute. Usage:
+  * `<outDir>/<name>.txt`. It runs on the bench's own session
+  * ([[GraftSession.forMain]]), so the committed plan files in plans/rNN/
+  * reflect the plans the timed runs execute. Usage:
   *   tools/run.sh graft.Explain <sfDir> <outDir> [queryName ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.select(args.drop(2)).toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted"))

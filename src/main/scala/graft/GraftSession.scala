@@ -103,6 +103,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** The library's front door: a SparkSession tuned the way every graft
   * operator expects (UTC, AQE, right-sized shuffle partitions, native
   * functions registered). A user of the reference pipeline starts here.
+  * [[builder]] is the ONE place a session is configured: the graft mains
+  * (via [[forMain]]), the benchmark harness and the test suite all build
+  * through it, so the plans the tests pin are the plans the mains run.
   */
 object GraftSession {
   /** Broadcast-decision calibration (r16 verdict #1). Spark decides
@@ -159,6 +162,23 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
 
   def build(): SparkSession = builder().getOrCreate()
+
+  /** Local cores the graft mains run on: `SPARK_GRAFT_CPUS`, else the
+    * builder's own default (every available processor). */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session of every graft main: `local[cpus]`, `cpus` shuffle
+    * partitions. Log level ERROR, not WARN: a run is read from a bounded
+    * stdout/stderr tail, and benign per-query WARNs (e.g.
+    * WindowExec's "No Partition Defined" on the k-bounded global-window
+    * keys) crowd real signal out of it. The mains' own diagnostics go
+    * through System.err directly, so they survive the raised level. */
+  def forMain(): SparkSession = {
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
   /** Register the native functions on an already-running session (e.g. a
     * shell or notebook session built without `spark.sql.extensions`). */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local iteration harness for the optimization rounds: times named keys
   * under the SAME session + noop action as the bench, with warm repeats,
@@ -13,25 +12,12 @@ object Probe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val keys = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val unknown = keys.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    val fns = SparkEntry.select(keys)
+    val spark = GraftSession.forMain()
     keys.foreach { name =>
-      val fn = SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        fns(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         math.round((System.nanoTime() - t0) / 1e6) / 1000.0
       }
       System.err.println(s"[probe] $name: ${times.mkString(" ")}")

@@ -357,23 +357,7 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT",
       "/tmp/graft_scaling.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // broadcast decisions read actual-bytes-calibrated estimates
-      // (measured 6.3× row-format blowup — see GraftSession); the
-      // join_multiway study below verifies the flip now lands where
-      // the ACTUAL build bytes cross the threshold (m≈16), not at the
-      // discounted estimate's m≈103
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      // faithful broadcast dataSize metrics (see GraftSession.BufferPageSize)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain()
     val loadStart = Bench.loadAvg()
 
     // ---- stage inflated corpora ---------------------------------------

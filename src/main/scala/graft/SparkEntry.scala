@@ -25,6 +25,16 @@ object SparkEntry {
       TierCSubquery.queries ++ TierD.queries ++
       Dedup.queries ++ Similarity.queries ++ TextStats.queries
 
+  /** The named subset of `queries` (all of them when `names` is empty),
+    * failing fast on a name that is not a key. */
+  def select(names: Iterable[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.toSet -- all.keySet
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else all.view.filterKeys(names.toSet).toMap
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,55 +7,18 @@ object Verify {
     // args: <sfDir> <outDir> [queryName ...] — the driver passes two; extra
     // names restrict the dump to those queries (local iteration speed)
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size post-shuffle partitions to data, not core count (see Bench)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // broadcast decisions read actual-bytes-calibrated estimates
-      // (measured 6.3× row-format blowup — see GraftSession)
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      // faithful broadcast dataSize metrics (see GraftSession.BufferPageSize)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver keeps only a bounded stdout/stderr tail,
-    // and the k-bounded global-window queries each emit a benign
-    // "WindowExec: No Partition Defined" WARN that was crowding real
-    // signal out of it. Verify's own failure diagnostics go through
-    // System.err.println directly, so they survive the raised level.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
-    selected.foreach { case (name, fn) =>
+    SparkEntry.select(args.drop(2)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

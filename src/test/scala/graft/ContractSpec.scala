@@ -158,6 +158,24 @@ class ContractSpec extends SparkSpec {
       "per-query detail must never be inlined into the summary line")
   }
 
+  test("bench detail JSON escapes every key and string it carries") {
+    // Query names, jit_ms keys, broadcast-violation text and failure causes
+    // all reach the committed detail artifact; one unescaped quote or tab
+    // in any of them makes the whole file unreadable.
+    val odd = "k\"ey\twith\\odd"
+    val cause = "java.lang.RuntimeException: bad \"input\"\n\tat x"
+    val json = Bench.detailJson(Seq(odd -> 1.5, "plain" -> -1.0), "/sf\"x",
+      bcastViolations = Seq("join \"x\"\tbig"), jitMs = Seq(odd -> 7L),
+      errors = Seq("plain" -> cause))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("queries").get(odd).asDouble == 1.5)
+    assert(tree.get("queries").get("plain").asDouble == -1.0)
+    assert(tree.get("jit_ms").get(odd).asLong == 7L)
+    assert(tree.get("bcast_violations").get(0).asText == "join \"x\"\tbig")
+    assert(tree.get("errors").get("plain").asText == cause)
+    assert(tree.get("sf").asText == "/sf\"x")
+  }
+
   test("build.sbt keeps the bench's stdout shape driver-parseable") {
     // Round 3 proved the line itself isn't enough: the driver launches the
     // bench via `sbt "runMain graft.Bench"`, and with sbt's defaults the

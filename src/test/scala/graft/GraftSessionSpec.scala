@@ -1,9 +1,35 @@
 package graft
 
-/** The SQL surface of the native functions: GraftSession.register binds them
-  * on the shared suite session (the config-time path is
-  * spark.sql.extensions=graft.GraftExtensions, same builders). */
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The session factory and the SQL surface of the native functions:
+  * GraftSession.register binds them on the shared suite session (the
+  * config-time path is spark.sql.extensions=graft.GraftExtensions, same
+  * builders). */
 class GraftSessionSpec extends SparkSpec {
+
+  test("the suite session is the production session, configured in one place") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+    assert(conf.get("spark.sql.sources.fileCompressionFactor") ==
+      GraftSession.FileCompressionFactor)
+    assert(spark.sparkContext.getConf.getOption("spark.buffer.pageSize") ==
+      Some(GraftSession.BufferPageSize))
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    // split so this file does not match its own search string
+    val call = "SparkSession" + ".builder()"
+    val walk = Files.walk(Paths.get("src"))
+    val elsewhere =
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter(p => Files.readString(p).contains(call))
+        .toList
+      finally walk.close()
+    assert(elsewhere.isEmpty,
+      s"sessions must be built through GraftSession.builder, not in: $elsewhere")
+  }
 
   test("native functions are callable from SQL after registration") {
     GraftSession.register(spark)

@@ -4,19 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs — one local session per JVM
-  * (getOrCreate returns the same instance across suites). */
+  * (getOrCreate returns the same instance across suites), built through
+  * the same factory as the mains so the tests pin the plans they run. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    // broadcast decisions read actual-bytes-calibrated estimates
-    // (measured 6.3× row-format blowup — see GraftSession)
-    .config("spark.sql.sources.fileCompressionFactor",
-      GraftSession.FileCompressionFactor)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("local[8]", 8).getOrCreate()
 
   lazy val sf: String = "/root/testdata/sf0.001"
 
