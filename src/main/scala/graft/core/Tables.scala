@@ -89,18 +89,14 @@ object Tables {
 
   /** Streaming view of the events table (file source), same ts conversion.
     * The file source wants a directory; stage a symlink dir over the single
-    * driver-generated file. The explicit schema is taken from a batch read
-    * of the actual file, so it tracks whichever physical vintage is on
-    * disk. */
+    * driver-generated file and read it through [[eventsStreamFromDir]] —
+    * one file at one file per trigger is still one micro-batch. */
   def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$d/events.parquet").schema
     val dir = java.nio.file.Paths.get(scratchDir("graft_events_src"))
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$d/events.parquet"))
-    s.readStream.schema(raw).parquet(dir.toString)
-      .withColumn("ts", tsToTimestamp(raw("ts").dataType))
+    eventsStreamFromDir(s, dir.toString)
   }
   /** Streaming view of the events table staged as `chunks` event-time-
     * ordered files, for gate queries that must exercise REAL multi-batch
@@ -135,9 +131,11 @@ object Tables {
       chunks: Int): String =
     chunkDirCache.computeIfAbsent(s"$d#$chunks", _ => stageChunks(s, d, chunks))
 
-  /** One-file-per-trigger streaming source over a staged chunk dir (the
-    * [[eventsStreamChunked]] body, parameterized by dir — single-sourced
-    * so the recovery spec streams EXACTLY what the gated keys stream). */
+  /** One-file-per-trigger streaming source over a staged events dir — the
+    * one events stream reader, behind [[eventsStream]] and
+    * [[eventsStreamChunked]], and the one the recovery spec streams. The
+    * explicit schema comes from a batch read of the files on disk, so it
+    * tracks whichever physical vintage is there. */
   private[graft] def eventsStreamFromDir(s: SparkSession, dir: String)
       : DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

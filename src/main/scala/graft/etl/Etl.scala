@@ -101,14 +101,12 @@ class Crawler(spark: SparkSession) {
   * JDBC for the Redshift-analogue load (embedded Derby in tests — same
   * `df.write.format("jdbc")` code path a real warehouse uses), parquet for
   * the columnar-at-rest lake sink. */
-sealed trait Sink { def write(df: DataFrame): Unit }
-
-case class ParquetSink(path: String, mode: String = "overwrite") extends Sink {
+case class ParquetSink(path: String, mode: String = "overwrite") {
   def write(df: DataFrame): Unit = df.write.mode(mode).parquet(path)
 }
 
 case class JdbcSink(url: String, table: String,
-    driver: String = "org.apache.derby.jdbc.EmbeddedDriver") extends Sink {
+    driver: String = "org.apache.derby.jdbc.EmbeddedDriver") {
   def write(df: DataFrame): Unit =
     df.write.mode("overwrite").format("jdbc")
       .option("url", url).option("dbtable", table).option("driver", driver)
@@ -121,24 +119,10 @@ case class JdbcSink(url: String, table: String,
 }
 
 /** A7 — workflow DAG (README.md:155-166): on-demand trigger → crawler →
-  * "start after ALL watched events" → job. In-process this is a strict
-  * topological run: crawl, then transform, then load — each stage gated on
-  * every upstream stage having completed (the "ALL watched events" rule). */
-case class Pipeline(crawl: () => DataFrame,
-    transform: DataFrame => DataFrame,
-    load: Sink) {
-  def run(): DataFrame = {
-    val crawled = crawl()          // stage 1: crawler (README.md:162)
-    val shaped = transform(crawled) // stage 2: Glue "Change schema" job (:149)
-    load.write(shaped)             // stage 3: target load (:150)
-    shaped
-  }
-}
-
-/** A7b — AND-gate workflow DAG (README.md:164: a trigger watches SEVERAL
-  * events and starts its job only "after ALL watched events" have fired).
-  * [[Pipeline]] is the linear special case; this is the general form hit
-  * the first time two crawlers feed one job.
+  * "start after ALL watched events" → job → load. A trigger may watch
+  * SEVERAL events and start its job only "after ALL watched events" have
+  * fired (README.md:164); a linear crawl → transform → load run is the
+  * one-watch special case.
   *
   * Each node names the upstream nodes it watches; `run` executes nodes in
   * dependency order (declaration order breaks ties, so runs are

@@ -405,6 +405,26 @@ object Similarity {
       .select("vec_id", "label", "qv")
   }
 
+  /** [[quantizedVectors]]' global symmetric scale as a DuckDB oracle CTE:
+    * `m` = max|x| over every embedding component (NULL when all are 0). */
+  private[graft] val OracleInt8Scale: String =
+    """m AS (
+      |  SELECT nullif(MAX(list_max(list_transform(embedding,
+      |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
+      |  FROM embeddings)""".stripMargin
+
+  /** The oracle twin of [[quantizedVectors]]: the [[OracleInt8Scale]] CTE
+    * plus `q(vec_id, qv)`, each embedding floor-half-up quantized to int8
+    * under that scale. Oracles that shift the codes or carry labels take
+    * the scale alone and spell their own `q`. */
+  private[graft] val OracleInt8Vectors: String =
+    s"""$OracleInt8Scale,
+      |q AS (
+      |  SELECT vec_id,
+      |         list_transform(embedding,
+      |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
+      |  FROM embeddings, m)""".stripMargin
+
   private[llm] def quantizedScores(s: SparkSession, d: String): DataFrame = {
     val q = quantizedVectors(s, d).select("vec_id", "qv")
     val probe = q.filter(col("vec_id") === 0)
@@ -440,10 +460,7 @@ object Similarity {
     * the `knn_pq_adc` and `retrieval_eval_ndcg` oracles so the eval
     * grades exactly the ranking the search key ships. */
   private val PqOracleCtes: String =
-    """m AS (
-      |  SELECT nullif(MAX(list_max(list_transform(embedding,
-      |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-      |  FROM embeddings),
+    s"""$OracleInt8Scale,
       |q AS (
       |  SELECT vec_id,
       |         list_transform(embedding,
@@ -1706,15 +1723,7 @@ object Similarity {
     // every score is an exact integer, so list_dot_product over the
     // integer-valued quantized lists agrees bit-for-bit
     "knn_quantized_topk" ->
-      """WITH m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m),
+      s"""WITH $OracleInt8Vectors,
         |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0)
         |SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
         |FROM q, p WHERE q.vec_id <> 0
@@ -1723,15 +1732,7 @@ object Similarity {
     // and Cauchy-Schwarz-non-negative variance forms keep every // on
     // non-negative operands
     "embed_dim_stats" ->
-      """WITH m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m),
+      s"""WITH $OracleInt8Vectors,
         |per AS (
         |  SELECT CAST(t.i AS INT) AS dim,
         |         CAST(qv[CAST(t.i AS INT) + 1] AS BIGINT) AS x
@@ -1759,15 +1760,7 @@ object Similarity {
            |                THEN 1.0 ELSE -1.0 END)) AS BIGINT) AS p$j"""
           .stripMargin
       }.mkString(",\n        ")
-      s"""WITH m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m)
+      s"""WITH $OracleInt8Vectors
         |SELECT vec_id,
         |        $pCols
         |FROM q ORDER BY vec_id""".stripMargin
@@ -1891,10 +1884,7 @@ object Similarity {
     // both rankings replayed over the probe set (shared quantize/shift +
     // sign-matrix CTEs), then the same integer q6 MRR/recall fold
     "retrieval_eval_mrr" ->
-      """WITH m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
+      s"""WITH $OracleInt8Scale,
         |q AS (
         |  SELECT vec_id,
         |         list_transform(embedding,
@@ -1951,15 +1941,7 @@ object Similarity {
     // same quantization pipeline, threshold filter instead of LIMIT — the
     // scores are exact integers so the >= 10000 cut cannot straddle noise
     "knn_radius_quantized" ->
-      """WITH m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m),
+      s"""WITH $OracleInt8Vectors,
         |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
         |scored AS (
         |  SELECT q.vec_id,
@@ -1971,10 +1953,7 @@ object Similarity {
     // the MaxSim double aggregation — max per (label, query token), sum
     // per label; every dot an exact BIGINT
     "retrieval_maxsim" ->
-      """WITH m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
+      s"""WITH $OracleInt8Scale,
         |q AS (
         |  SELECT vec_id, label,
         |         list_transform(embedding,
@@ -2007,15 +1986,7 @@ object Similarity {
            |        SELECT q2.vec_id, q2.qv, q2.n2 FROM q2
            |        JOIN p${i + 1} USING (vec_id))""".stripMargin
       }.mkString(",\n")
-      s"""WITH m AS (
-         |  SELECT nullif(MAX(list_max(list_transform(embedding,
-         |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-         |  FROM embeddings),
-         |q AS (
-         |  SELECT vec_id,
-         |         list_transform(embedding,
-         |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-         |  FROM embeddings, m),
+      s"""WITH $OracleInt8Vectors,
          |q2 AS (SELECT vec_id, qv,
          |              CAST(list_dot_product(qv, qv) AS BIGINT) AS n2
          |       FROM q),

@@ -2693,7 +2693,7 @@ object TextStats {
     // CTEs above, the quantized dot from knn_quantized_topk); the fusion
     // itself is pure integer arithmetic — // and DIV agree on positives
     "retrieval_rrf" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
         |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
         |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
@@ -2723,15 +2723,7 @@ object TextStats {
         |           AS r_text
         |  FROM (SELECT doc_id, score FROM bm
         |        ORDER BY score DESC, doc_id LIMIT 20)),
-        |m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m),
+        |${Similarity.OracleInt8Vectors},
         |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
         |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
         |       FROM q, p WHERE q.vec_id <> 0),
@@ -2751,7 +2743,7 @@ object TextStats {
     // is the floor(s*1e4 + 0.5) half-up idiom (identical doubles in both
     // engines), normalization and blend are pure integer arithmetic
     "retrieval_hybrid_weighted" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
         |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
         |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
@@ -2786,15 +2778,7 @@ object TextStats {
         |                   THEN (t - tmin) * 1000000 // (tmax - tmin)
         |                   ELSE 1000000 END AS nt_q6
         |       FROM atop, ts),
-        |m AS (
-        |  SELECT nullif(MAX(list_max(list_transform(embedding,
-        |           x -> abs(CAST(x AS DOUBLE))))), 0.0) AS m
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m),
+        |${Similarity.OracleInt8Vectors},
         |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
         |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
         |       FROM q, p WHERE q.vec_id <> 0),

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.core.Tables._
 
 /** Tier D — streaming / incremental semantics (SURVEY.md §2 Tier D).
@@ -57,7 +57,7 @@ object TierD {
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
-      runToMemory(s, stream, "wm_late_out")
+      runToMemory(s, stream, "wm_late")
         .select(col("window.start").as("wstart"), col("event_type"), col("cnt"))
         .orderBy("wstart", "event_type")
     }),
@@ -77,12 +77,12 @@ object TierD {
     // (window, page) rows are the only shuffle; the rank runs on the
     // emitted aggregate, never the raw stream.
     "stream_window_topn" -> ((s, d) => {
-      val stream = graft.core.Tables.eventsStreamChunked(s, d, chunks = 3)
+      val stream = eventsStreamChunked(s, d, chunks = 3)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"),
           get_json_object(col("props"), "$.k").cast("long").as("page"))
         .agg(count(lit(1)).as("cnt"))
-      val t = runToMemory(s, stream, "wtopn_out")
+      val t = runToMemory(s, stream, "wtopn")
       val byW = Window.partitionBy("wstart")
         .orderBy(desc("cnt"), asc("page"))
       t.select(col("w.start").as("wstart"), col("page"), col("cnt"))
@@ -103,12 +103,12 @@ object TierD {
     // the exact batch distinct and pins the emitted window set to the
     // watermark-finalized contract.
     "stream_hll_window" -> ((s, d) => {
-      val stream = graft.core.Tables.eventsStreamChunked(s, d, chunks = 3)
+      val stream = eventsStreamChunked(s, d, chunks = 3)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n_events"),
           approx_count_distinct(col("user_id"), 0.02).as("n_users_approx"))
-      runToMemory(s, stream, "whll_out")
+      runToMemory(s, stream, "whll")
         .select(col("w.start").as("wstart"), col("n_events"),
           col("n_users_approx"))
         .orderBy("wstart")
@@ -130,21 +130,9 @@ object TierD {
     // window was still open at end-of-stream are withheld, the
     // append-mode contract. 100 TB shape: state holds only rows inside
     // the watermark horizon on both sides; the join shuffles on user_id.
-    "stream_stream_outer_join" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"ssoj_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val ev = graft.core.Tables.eventsStreamChunked(s, d, chunks = 3)
-      val joined = ssojJoined(ev)
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_ssoj_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch outer-state carry was not exercised")
-      s.table(name)
+    "stream_stream_outer_join" -> ((s, d) => {
+      val ev = eventsStreamChunked(s, d, chunks = 3)
+      runToMemory(s, ssojJoined(ev), "ssoj", minBatches = 2)
         .select(col("c_user"), col("c_id"), col("c_ts"), col("p_ts"))
         .orderBy("c_id", "p_ts")
     }),
@@ -154,7 +142,7 @@ object TierD {
     "stream_dedup_stateful" -> ((s, d) => {
       val stream = dedupedEvents(eventsStream(s, d))
         .groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
-      runToMemory(s, stream, "dedup_out", complete = true)
+      runToMemory(s, stream, "dedup", OutputMode.Complete)
         .orderBy("event_type")
     }),
     // D7 — custom streaming state via typed mapGroupsWithState
@@ -162,21 +150,15 @@ object TierD {
     // state store across micro-batches. CustomStateSpec proves cross-batch
     // state with MemoryStream; the oracle checks the final states equal the
     // batch aggregate (exact-decimal accumulation makes them hashable).
-    "stream_custom_state" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"cs_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val q = graft.streaming.CustomState.runningUserStats(eventsStream(s, d))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(graft.streaming.CustomState.outputMode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_cs_ckpt"))
-        .start()
-      q.awaitTermination()
+    "stream_custom_state" -> ((s, d) => {
+      val t = runToMemory(s,
+        graft.streaming.CustomState.runningUserStats(eventsStream(s, d)),
+        "cs", graft.streaming.CustomState.outputMode)
       // update mode re-emits a refreshed row per (batch, user); the final
       // state is the max-events row (events strictly grows across batches)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(desc("events"))
-      s.table(name)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      t.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("user_id"), col("events"), col("total_value"))
         .orderBy("user_id")
     }),
@@ -196,7 +178,7 @@ object TierD {
     // (no maxFilesPerTrigger is set), so no state is ever evicted
     // mid-input; (b) the 30-min watermark is double the 15-min join window
     // as headroom, not a substitute for (a).
-    "stream_stream_join" -> ((s, d) => withFewStatePartitions(s) {
+    "stream_stream_join" -> ((s, d) => {
       // THREE real micro-batches (round 11, the r10 #2 "optionally" item):
       // the chunked source exercises the join's cross-batch state buffers
       // on the gated path. Watermark safety is by construction — chunks
@@ -207,8 +189,7 @@ object TierD {
       // purchase ts) finds the purchase still buffered for the same
       // reason. Inner-join rows emit exactly once when the match forms,
       // so no multi-batch dedup is needed.
-      val name = s"ssj_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val ev = graft.core.Tables.eventsStreamChunked(s, d, chunks = 3)
+      val ev = eventsStreamChunked(s, d, chunks = 3)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
         .withWatermark("c_ts", "30 minutes")
@@ -220,18 +201,8 @@ object TierD {
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 15 MINUTES"))
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_ssj_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch join buffers were not exercised")
       // compact per-user attribution report over the joined pairs
-      s.table(name)
+      runToMemory(s, joined, "ssj", minBatches = 2)
         .groupBy(col("c_user").as("user_id"))
         .agg(count(lit(1)).as("n_attributed"),
           decSum(col("p_value")).as("attributed_value"))
@@ -256,8 +227,7 @@ object TierD {
     // incrementally on the gated path; the memory-sink table then
     // aggregates per version for the oracle (which derives each event's
     // version from the change predicates — the etl_dim_asof_join gate).
-    "stream_dim_asof" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"sda_out_${java.lang.Long.toHexString(System.nanoTime)}"
+    "stream_dim_asof" -> ((s, d) => {
       // a stream-static join re-plans (and re-computes) the static side
       // EVERY micro-batch; the SCD2 derivation is 3 customer scans + 2
       // joins + a union, so checkpoint it once (r17 optimization) and
@@ -271,31 +241,18 @@ object TierD {
           col("user_id") === col("c_custkey") &&
             col("valid_from") <= to_date(col("ts")) &&
             to_date(col("ts")) < col("valid_to"))
-      val q = enriched.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_sda_ckpt"))
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      runToMemory(s, enriched, "sda")
         .groupBy("valid_from")
         .agg(count(lit(1)).as("n_events"),
           count_distinct(col("user_id")).as("n_users"),
           decSum(col("value")).as("sum_value"))
         .orderBy("valid_from")
     }),
-    "stream_static_join" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"ssd_out_${java.lang.Long.toHexString(System.nanoTime)}"
+    "stream_static_join" -> ((s, d) => {
       val dim = customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
       val enriched = eventsStream(s, d)
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
-      val q = enriched.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_ssd_ckpt"))
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      runToMemory(s, enriched, "ssd")
         .groupBy("c_mktsegment", "event_type")
         .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("sum_value"))
         .orderBy("c_mktsegment", "event_type")
@@ -307,7 +264,7 @@ object TierD {
     // 30-min gap in epoch-second longs, exact-decimal sums; the
     // multi-batch reduction below recovers the batch sessionization,
     // which is the DuckDB oracle.
-    "stream_sessionize_flatmap" -> ((s, d) => withFewStatePartitions(s) {
+    "stream_sessionize_flatmap" -> ((s, d) => {
       // THREE real micro-batches (r10 verdict #2): the events fixture is
       // staged as 3 event-time-ordered files and maxFilesPerTrigger=1
       // makes AvailableNow process them one per batch, so the operator's
@@ -317,23 +274,11 @@ object TierD {
       // each batch that grows it, so the multi-batch consumer reduction —
       // keep the longest row per (user_id, session_start_s) — recovers
       // exactly the batch sessionization the oracle computes.
-      val name = s"sfm_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val q = graft.streaming.SessionAssembly
-        .sessions(graft.core.Tables.eventsStreamChunked(s, d, chunks = 3))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_sfm_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch carry was not exercised")
+      val t = runToMemory(s, graft.streaming.SessionAssembly
+        .sessions(eventsStreamChunked(s, d, chunks = 3)), "sfm", minBatches = 2)
       val wTail = Window.partitionBy("user_id", "session_start_s")
         .orderBy(desc("session_end_s"), desc("n_events"))
-      s.table(name)
-        .withColumn("graft_rn", row_number().over(wTail))
+      t.withColumn("graft_rn", row_number().over(wTail))
         .filter(col("graft_rn") === 1).drop("graft_rn")
         .orderBy("user_id", "session_start_s")
     }),
@@ -349,21 +294,11 @@ object TierD {
     // oracle states that boundary in SQL. Runs the same 3 real
     // micro-batches as D5b; the timeout fires in the no-data
     // watermark-commit batch Spark appends when state requires it.
-    "stream_sessionize_final" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"sff_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val q = graft.streaming.SessionAssembly
-        .sessionsFinal(graft.core.Tables.eventsStreamChunked(s, d, chunks = 3))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_sff_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch carry was not exercised")
-      s.table(name).orderBy("user_id", "session_start_s")
+    "stream_sessionize_final" -> ((s, d) => {
+      runToMemory(s, graft.streaming.SessionAssembly
+          .sessionsFinal(eventsStreamChunked(s, d, chunks = 3)),
+        "sff", minBatches = 2)
+        .orderBy("user_id", "session_start_s")
     }),
     // D8 (round 12) — per-user streaming EWMA anomaly scoring: the
     // ORDER-SENSITIVE stateful recurrence (EwmaAnomaly scaladoc) — state
@@ -372,21 +307,11 @@ object TierD {
     // Fold order is total ((unix_micros, event_id); chunks are ntile over
     // the same global order), so the batch oracle's per-user
     // recursive-CTE replay matches row-for-row.
-    "stream_ewma_anomaly" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"sea_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val q = graft.streaming.EwmaAnomaly
-        .scored(graft.core.Tables.eventsStreamChunked(s, d, chunks = 3))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_sea_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch EWMA carry was not exercised")
-      s.table(name).orderBy("user_id", "t_s", "event_id")
+    "stream_ewma_anomaly" -> ((s, d) => {
+      runToMemory(s, graft.streaming.EwmaAnomaly
+          .scored(eventsStreamChunked(s, d, chunks = 3)),
+        "sea", minBatches = 2)
+        .orderBy("user_id", "t_s", "event_id")
     }),
     // D8b — streaming Space-Saving heavy hitters (round 12g): one k=16
     // sketch per event_type carried across 3 real micro-batches, a
@@ -397,21 +322,9 @@ object TierD {
     // (unix_micros, event_id) order contract; unit-tier like the batch
     // sketch (StreamTopKSpec: exact sequential-fold parity, ICDT bounds
     // vs exact counts, n/k heavy-hitter presence, cross-batch n carry).
-    "stream_spacesaving_topk" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"sst_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val q = graft.streaming.StreamTopK
-        .topk(graft.core.Tables.eventsStreamChunked(s, d, chunks = 3))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_sst_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch sketch carry was not exercised")
-      val t = s.table(name)
+    "stream_spacesaving_topk" -> ((s, d) => {
+      val t = runToMemory(s, graft.streaming.StreamTopK
+        .topk(eventsStreamChunked(s, d, chunks = 3)), "sst", minBatches = 2)
       val wMax = Window.partitionBy("event_type")
       t.withColumn("n_max", max("n_so_far").over(wMax))
         .filter(col("n_so_far") === col("n_max")).drop("n_max")
@@ -429,21 +342,9 @@ object TierD {
     // merge-order-dependent by construction — StreamTopKSpec asserts the
     // order-independent ICDT bounds, the n carry across batches and the
     // n/k heavy-hitter presence under the merge tree.
-    "stream_spacesaving_global" -> ((s, d) => withFewStatePartitions(s) {
-      val name = s"ssg_out_${java.lang.Long.toHexString(System.nanoTime)}"
-      val q = graft.streaming.StreamTopK
-        .topkGlobal(graft.core.Tables.eventsStreamChunked(s, d, chunks = 3))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", scratchDir("graft_ssg_ckpt"))
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"multi-batch contract violated: $batches data batch(es) ran — " +
-          "the cross-batch sketch-merge carry was not exercised")
-      val t = s.table(name)
+    "stream_spacesaving_global" -> ((s, d) => {
+      val t = runToMemory(s, graft.streaming.StreamTopK
+        .topkGlobal(eventsStreamChunked(s, d, chunks = 3)), "ssg", minBatches = 2)
       val wMax = Window.partitionBy("event_type")
       t.withColumn("n_max", max("n_so_far").over(wMax))
         .filter(col("n_so_far") === col("n_max")).drop("n_max")
@@ -530,18 +431,36 @@ object TierD {
     try body finally s.conf.set(key, prev)
   }
 
-  /** Run a streaming DataFrame to a memory sink synchronously (AvailableNow
-    * processes the full backlog then stops — the Job-Bookmark execution mode). */
-  private def runToMemory(s: SparkSession, df: DataFrame, name: String,
-      complete: Boolean = false): DataFrame = withFewStatePartitions(s) {
-    val q = df.writeStream
-      .format("memory").queryName(name)
-      .outputMode(if (complete) "complete" else "append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        scratchDir(s"graft_${name}_ckpt"))
-      .start()
-    q.awaitTermination()
+  /** The one way a Tier D key runs a stream to a memory sink: synchronously
+    * under AvailableNow (process the full backlog, then stop — the
+    * Job-Bookmark execution mode), into a sink named `<tag>_out_<nanoTime
+    * hex>` so repeat calls never collide, checkpointed to a fresh
+    * `graft_<tag>_ckpt` scratch dir. Returns the sink table.
+    *
+    * Only start and await run under [[withFewStatePartitions]]: Spark clones
+    * the session conf into the StreamExecution at start(), so the cap sizes
+    * the stream's state store while input built before the call (dim
+    * checkpoints, chunk staging) runs uncapped.
+    *
+    * `minBatches` is the multi-batch contract of the chunked-source keys: at
+    * least that many micro-batches must have read data, or the cross-batch
+    * state carry was never exercised on the gated path. */
+  private[graft] def runToMemory(s: SparkSession, df: Dataset[_], tag: String,
+      mode: OutputMode = OutputMode.Append, minBatches: Int = 0): DataFrame = {
+    val name = s"${tag}_out_${java.lang.Long.toHexString(System.nanoTime)}"
+    val q = withFewStatePartitions(s) {
+      val q = df.writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", scratchDir(s"graft_${tag}_ckpt"))
+        .start()
+      q.awaitTermination()
+      q
+    }
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    require(batches >= minBatches,
+      s"$tag: multi-batch contract violated: $batches data batch(es) ran, " +
+        s"$minBatches required — the cross-batch state carry was not exercised")
     s.table(name)
   }
 

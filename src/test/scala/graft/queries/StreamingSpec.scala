@@ -179,6 +179,19 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("runToMemory: a short stream fails naming its tag and restores the partition cap") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // one file at one file per trigger is one data batch, short of two
+    val err = intercept[IllegalArgumentException] {
+      TierD.runToMemory(spark, Tables.eventsStream(spark, sf), "runner_spec",
+        minBatches = 2)
+    }
+    assert(err.getMessage.contains("runner_spec"), err.getMessage)
+    assert(spark.conf.get(key) == before,
+      s"$key reads ${spark.conf.get(key)} after the runner, $before before")
+  }
+
   test("D1: streaming tumbling counts equal the batch form") {
     val batch = graft.SparkEntry.queries("stream_tumbling")(spark, sf)
       .select(col("wstart").cast("string"), col("event_type"), col("cnt"))
