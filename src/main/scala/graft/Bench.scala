@@ -112,23 +112,29 @@ object Bench {
       stealProbe: Double = -1.0, stealRun: Double = -1.0,
       stealTicks: Seq[Double] = Seq.empty,
       bcastViolations: Seq[String] = Seq.empty,
-      jitMs: Seq[(String, Long)] = Seq.empty,
+      jitCpuMs: Seq[(String, Long)] = Seq.empty,
+      codegenCompiles: Seq[(String, Long)] = Seq.empty,
       errors: Seq[(String, String)] = Seq.empty): String = {
     def obj(kvs: Seq[(String, Any)]): String =
       kvs.map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
     val ticks = stealTicks.mkString("[", ",", "]")
     val bv = bcastViolations.map(v => Json.str(v.take(200))).mkString("[", ",", "]")
-    // per-key JIT-compiler wall-ms (CompilationMXBean delta across the
-    // timed action — r17/r18 roving-spike adjudication: the spike is C2
-    // compile placement, not plan cost; see OPTIMIZATION_r18.md. A key
-    // whose seconds jump WITH a jit_ms jump is compiler-window noise; one
+    // per-key JIT-compiler ms (CompilationMXBean delta across the timed
+    // action, summed over every compiler thread, so CPU rather than wall —
+    // r17/r18 roving-spike adjudication: the spike is C2 compile
+    // placement, not plan cost; see OPTIMIZATION_r18.md. A key whose
+    // seconds jump WITH a jit_cpu_ms jump is compiler-window noise; one
     // without is a real plan change.) The delta is JVM-wide, so it also
     // counts compile backlog queued by earlier keys (or the warmup) that
     // drained inside this key's window: it is window overlap, not a
     // causal per-key compile cost.
-    val jm = obj(jitMs)
+    val jm = obj(jitCpuMs)
+    // per-key Janino compiles (CodegenMetrics delta): codegen runs inside
+    // the key's own action, so unlike jit_cpu_ms this count is the key's.
+    // A key that reads 0 found every class in the codegen cache.
+    val cg = obj(codegenCompiles)
     val errs = obj(errors.map { case (k, e) => k -> Json.str(e) })
-    s"""{"metric":"per_query","unit":"sec","sf":${Json.str(sf)},"action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_ms":$jm,"errors":$errs,"queries":${obj(results)}}"""
+    s"""{"metric":"per_query","unit":"sec","sf":${Json.str(sf)},"action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_cpu_ms":$jm,"codegen_compiles":$cg,"errors":$errs,"queries":${obj(results)}}"""
   }
 
   /** 1-minute system load average, rounded to 2 decimals (-1.0 where the
@@ -201,9 +207,12 @@ object Bench {
     val jitSupported = compiler != null &&
       compiler.isCompilationTimeMonitoringSupported
     val jitTimes = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+    val codegen = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiles = scala.collection.mutable.ArrayBuffer[(String, Long)]()
     val errors = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val jit0 = if (jitSupported) compiler.getTotalCompilationTime else 0L
+      val compiles0 = codegen.getCount
       val t0 = System.nanoTime()
       // A crashed query reports -1.0, never a normal-looking elapsed time,
       // and its cause goes to stderr and the detail's `errors` object.
@@ -233,6 +242,7 @@ object Bench {
         }
       if (jitSupported)
         jitTimes += name -> (compiler.getTotalCompilationTime - jit0)
+      compiles += name -> (codegen.getCount - compiles0)
       name -> math.round(sec * 1000) / 1000.0
     }
     val loadEnd = loadAvg() // 1-min window ≈ the run itself at 32 threads
@@ -243,7 +253,8 @@ object Bench {
     }
     bcast.foreach(v => System.err.println(s"[bench] BCAST VIOLATION: $v"))
     val detail = detailJson(results, sfDir, loadStart, loadEnd,
-      probeSteal, stealRun, stealTicks, bcast, jitTimes.toSeq, errors.toSeq)
+      probeSteal, stealRun, stealTicks, bcast, jitTimes.toSeq, compiles.toSeq,
+      errors.toSeq)
     // Detail goes ONLY to files. Printing it (even to stderr) is unsafe:
     // the driver captures stdout+stderr combined, and 3.5 KB of per-query
     // detail eats most of the bounded tail window the summary must fit in.

@@ -170,14 +170,14 @@ object TierD {
     // of the operator. For a finite AvailableNow input an inner stream-stream
     // join emits exactly the batch interval join, so the oracle replays it
     // as plain SQL — the state machinery is differentially checked.
-    // Batch-equality caveat: if the source ever split into multiple
-    // micro-batches with cross-batch event-time disorder beyond the
-    // watermark, clicks could be evicted before a late matching purchase
-    // arrived and the differential check would diverge. Holds here because
-    // (a) AvailableNow over this parquet dir reads all files in ONE batch
-    // (no maxFilesPerTrigger is set), so no state is ever evicted
-    // mid-input; (b) the 30-min watermark is double the 15-min join window
-    // as headroom, not a substitute for (a).
+    // Batch-equality caveat: the source runs as three micro-batches, so
+    // cross-batch event-time disorder beyond the watermark could evict a
+    // click before a late matching purchase arrived, and the differential
+    // check would diverge. Holds here because (a) the chunks are
+    // event-time ordered and read one file per trigger, so every row of a
+    // batch is newer than all rows of the batches before it (the argument
+    // is spelled out in the key below); (b) the 30-min watermark is double
+    // the 15-min join window as headroom, not a substitute for (a).
     "stream_stream_join" -> ((s, d) => {
       // THREE real micro-batches (round 11, the r10 #2 "optionally" item):
       // the chunked source exercises the join's cross-batch state buffers

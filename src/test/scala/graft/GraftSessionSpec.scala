@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** The session factory and the SQL surface of the native functions:
   * GraftSession.register binds them on the shared suite session (the
@@ -16,6 +17,8 @@ class GraftSessionSpec extends SparkSpec {
       GraftSession.FileCompressionFactor)
     assert(spark.sparkContext.getConf.getOption("spark.buffer.pageSize") ==
       Some(GraftSession.BufferPageSize))
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     // split so this file does not match its own search string
     val call = "SparkSession" + ".builder()"
@@ -29,6 +32,24 @@ class GraftSessionSpec extends SparkSpec {
       finally walk.close()
     assert(elsewhere.isEmpty,
       s"sessions must be built through GraftSession.builder, not in: $elsewhere")
+  }
+
+  test("a plan run again after 150 other plans reuses its compiled classes") {
+    // Spark's default cache keeps 100 classes: the fillers below evict the
+    // first plan's classes there, so its re-run recompiles them
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    def plan(): Unit = spark.range(1000)
+      .selectExpr("id % 7 AS k", "id * 3 AS v").groupBy("k").sum("v").collect()
+    plan()
+    val beforeFillers = compiles.getCount
+    // the literal is inlined into the generated code: one new class each
+    (1 to 150).foreach(i => spark.range(1).selectExpr(s"id * $i + 1").collect())
+    assert(compiles.getCount > beforeFillers, "the fillers must compile classes")
+    val beforeRerun = compiles.getCount
+    plan()
+    assert(compiles.getCount == beforeRerun,
+      s"the re-run compiled ${compiles.getCount - beforeRerun} classes: the " +
+        "codegen cache no longer holds a plan across 150 others")
   }
 
   test("native functions are callable from SQL after registration") {
