@@ -134,7 +134,10 @@ object Bench {
     // A key that reads 0 found every class in the codegen cache.
     val cg = obj(codegenCompiles)
     val errs = obj(errors.map { case (k, e) => k -> Json.str(e) })
-    s"""{"metric":"per_query","unit":"sec","sf":${Json.str(sf)},"action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_cpu_ms":$jm,"codegen_compiles":$cg,"errors":$errs,"queries":${obj(results)}}"""
+    // the local[cpus] width the keys ran at and the host's core count: a
+    // detail from another width or host is not comparable key by key
+    val nproc = Runtime.getRuntime.availableProcessors()
+    s"""{"metric":"per_query","unit":"sec","sf":${Json.str(sf)},"action":"$TimedAction","cpus":${GraftSession.cpus},"nproc":$nproc,"loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_cpu_ms":$jm,"codegen_compiles":$cg,"errors":$errs,"queries":${obj(results)}}"""
   }
 
   /** 1-minute system load average, rounded to 2 decimals (-1.0 where the

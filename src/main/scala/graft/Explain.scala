@@ -21,7 +21,7 @@ object Explain {
         Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
         System.err.println(s"[explain] wrote $name")
       } catch { case e: Throwable =>
-        System.err.println(s"[explain] $name failed: ${e.getMessage}")
+        System.err.println(s"[explain] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -13,10 +13,11 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
+    // sorted, so two commits' dumps compare with diff
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,8 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Query
 import graft.core.Tables._
 import graft.functions.SortedIntersectCount.sorted_intersect_count
 
@@ -257,9 +258,9 @@ object Dedup {
 
   // ---- queries ----------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Seq[Query] = Seq(
     // E1 — exact dedup: content hash, keep the smallest doc_id per hash.
-    "dedup_exact_text" -> ((s, d) => {
+    Query("dedup_exact_text", (s, d) => {
       val w = Window.partitionBy("h").orderBy("doc_id")
       documents(s, d)
         .select(col("doc_id"), sha2(col("text"), 256).as("h"))
@@ -267,7 +268,12 @@ object Dedup {
         .filter(col("rn") === 1)
         .select("doc_id", "h")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, h FROM (
+        |  SELECT doc_id, sha256(text) AS h,
+        |         row_number() OVER (PARTITION BY sha256(text) ORDER BY doc_id) AS rn
+        |  FROM documents) t
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin),
     // Exact-dup RATE by language (round 14c) — the corpus-health monitor
     // on top of dedup_exact_text's mechanism: per language, how much of
     // the corpus is byte-duplicate mass (docs beyond their digest group's
@@ -282,7 +288,7 @@ object Dedup {
     // the oracle adds the NULL group explicitly because SQL
     // COUNT(DISTINCT) would skip it — review find, latent on a
     // null-free fixture).
-    "dedup_rate_by_lang" -> ((s, d) => {
+    Query("dedup_rate_by_lang", (s, d) => {
       val per = documents(s, d)
         .select(col("lang"), sha2(col("text"), 256).as("h"))
         .groupBy("lang", "h").agg(count(lit(1)).as("c"))
@@ -293,11 +299,41 @@ object Dedup {
         .select(col("lang"), col("n_docs"), col("n_distinct"), col("n_dupes"),
           expr("n_dupes * 1000000 DIV n_docs").as("dup_rate_q6"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      // the same sha256 recipe re-aggregated per language; the dup count
+      // spelled independently as COUNT(*) − n_distinct, with the NULL-text
+      // group added explicitly (COUNT DISTINCT skips NULLs; the Spark
+      // groupBy counts the NULL digest as one distinct text)
+      """WITH d AS (
+        |  SELECT lang,
+        |         COUNT(*) AS n_docs,
+        |         COUNT(DISTINCT sha256(text))
+        |           + MAX(CASE WHEN text IS NULL THEN 1 ELSE 0 END)
+        |           AS n_distinct
+        |  FROM documents GROUP BY lang)
+        |SELECT lang, n_docs, n_distinct,
+        |       n_docs - n_distinct AS n_dupes,
+        |       CAST((n_docs - n_distinct) * 1000000 // n_docs AS BIGINT)
+        |         AS dup_rate_q6
+        |FROM d ORDER BY lang""".stripMargin),
     // E2 — near-dup by token-set Jaccard >= 0.8, blocked on
     // (first token, length bucket) so the self-join is per-block.
-    "dedup_near_jaccard" -> ((s, d) =>
-      nearDupPairs(documents(s, d), 0.8).orderBy("d1", "d2")),
+    Query("dedup_near_jaccard", (s, d) =>
+      nearDupPairs(documents(s, d), 0.8).orderBy("d1", "d2"), oracle =
+      """WITH docs AS (
+        |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
+        |         str_split(text, ' ')[1] AS blk_tok,
+        |         floor(n_chars / 100.0) AS blk_len
+        |  FROM documents)
+        |SELECT a.doc_id AS d1, b.doc_id AS d2,
+        |       CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+        |         / len(list_distinct(list_concat(a.toks, b.toks))) AS jac
+        |FROM docs a JOIN docs b
+        |  ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
+        | AND a.doc_id < b.doc_id
+        |WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+        |        / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.8
+        |ORDER BY d1, d2""".stripMargin),
     // Cluster-level dedup (the step after pairs: Gopher/RefinedWeb keep ONE
     // doc per near-dup CLUSTER, not per pair — pairwise keepers over- and
     // under-delete on chains A~B~C where A!~C). Exact connected components
@@ -305,12 +341,36 @@ object Dedup {
     // maps to its cluster's smallest doc_id. The DuckDB oracle replays the
     // fixpoint as a recursive reachability CTE, so even the iterative
     // operator is differentially checked.
-    "dedup_clusters" -> ((s, d) => {
+    Query("dedup_clusters", (s, d) => {
       val docs = documents(s, d)
       graft.operators.ConnectedComponents
         .run(nearDupPairs(docs, 0.8), "d1", "d2", docs, "doc_id")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // The recursive CTE computes, for every doc, every id reachable over
+      // the near-dup edge set; MIN over that reach set is exactly the
+      // min-label-propagation fixpoint the Spark operator iterates to.
+      """WITH RECURSIVE
+        |docs AS (
+        |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
+        |         str_split(text, ' ')[1] AS blk_tok,
+        |         floor(n_chars / 100.0) AS blk_len
+        |  FROM documents),
+        |edges AS (
+        |  SELECT a.doc_id AS d1, b.doc_id AS d2
+        |  FROM docs a JOIN docs b
+        |    ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
+        |   AND a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+        |          / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.8),
+        |sym AS (SELECT d1 AS src, d2 AS dst FROM edges
+        |        UNION ALL SELECT d2, d1 FROM edges),
+        |reach(v, r) AS (
+        |  SELECT doc_id, doc_id FROM documents
+        |  UNION
+        |  SELECT s.dst, rc.r FROM reach rc JOIN sym s ON s.src = rc.v)
+        |SELECT v AS doc_id, MIN(r) AS comp FROM reach
+        |GROUP BY v ORDER BY doc_id""".stripMargin),
     // Quality-aware cluster KEEPER POLICY (round 11): the step after
     // dedup_clusters' component labels — production dedup keeps the BEST
     // representative per near-dup cluster, not the smallest id
@@ -322,7 +382,7 @@ object Dedup {
     // unchanged. 100 TB: one row_number window + one join back, both
     // hash-partitioned on the high-cardinality comp key; the CC labels
     // are the dedup_clusters operator unchanged.
-    "dedup_cluster_keep_best" -> ((s, d) => {
+    Query("dedup_cluster_keep_best", (s, d) => {
       val docs = documents(s, d)
       val comp = graft.operators.ConnectedComponents
         .run(nearDupPairs(docs, 0.8), "d1", "d2", docs, "doc_id")
@@ -337,7 +397,40 @@ object Dedup {
         .select(col("doc_id"), col("comp"), col("keeper"),
           when(col("doc_id") === col("keeper"), 1).otherwise(0).as("kept"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the component labels replay dedup_clusters' recursive-CTE oracle;
+      // the keeper policy is an independent per-component argmax
+      """WITH RECURSIVE
+        |docs AS (
+        |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
+        |         str_split(text, ' ')[1] AS blk_tok,
+        |         floor(n_chars / 100.0) AS blk_len
+        |  FROM documents),
+        |edges AS (
+        |  SELECT a.doc_id AS d1, b.doc_id AS d2
+        |  FROM docs a JOIN docs b
+        |    ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
+        |   AND a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+        |          / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.8),
+        |sym AS (SELECT d1 AS src, d2 AS dst FROM edges
+        |        UNION ALL SELECT d2, d1 FROM edges),
+        |reach(v, r) AS (
+        |  SELECT doc_id, doc_id FROM documents
+        |  UNION
+        |  SELECT s.dst, rc.r FROM reach rc JOIN sym s ON s.src = rc.v),
+        |compt AS (SELECT v AS doc_id, MIN(r) AS comp FROM reach GROUP BY v),
+        |k AS (
+        |  SELECT comp, doc_id AS keeper FROM (
+        |    SELECT c.comp, c.doc_id,
+        |           row_number() OVER (PARTITION BY c.comp
+        |             ORDER BY d.n_chars DESC, c.doc_id) AS rn
+        |    FROM compt c JOIN documents d ON c.doc_id = d.doc_id) t
+        |  WHERE rn = 1)
+        |SELECT c.doc_id, c.comp, k.keeper,
+        |       CASE WHEN c.doc_id = k.keeper THEN 1 ELSE 0 END AS kept
+        |FROM compt c JOIN k ON c.comp = k.comp
+        |ORDER BY c.doc_id""".stripMargin),
     // PRODUCTION cluster keeper (round 12): the same quality-aware keeper
     // policy fed from `dedup_minhash_verified`'s LINEAR star-candidate
     // edge set instead of the quadratic exact pair join — completing the
@@ -354,7 +447,7 @@ object Dedup {
     // joins token arrays only onto candidate rows, CC loop
     // frontier-restricted; vs dedup_cluster_keep_best's measured 1.5
     // scaling slope inherited from the exact pair-gen.
-    "dedup_cluster_keep_best_lsh" -> ((s, d) => {
+    Query("dedup_cluster_keep_best_lsh", (s, d) => {
       val docs = documents(s, d)
       val edges = minhashVerifiedPairs(docs)
         .select(col("doc_id").as("d1"), col("keeper").as("d2"))
@@ -371,13 +464,70 @@ object Dedup {
         .select(col("doc_id"), col("comp"), col("keeper"),
           when(col("doc_id") === col("keeper"), 1).otherwise(0).as("kept"))
         .orderBy("doc_id")
+    }, oracle =
+      // edge stage replays dedup_minhash_verified's banded-candidate +
+      // exact-verify construction; component labels the recursive reach
+      // fixpoint over those edges; keeper an independent per-comp argmax
+      {
+      val sigCols = (0 until 8).map(i =>
+        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
+        .mkString(",\n        |         ")
+      s"""WITH RECURSIVE
+         |t AS (
+         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
+         |  FROM documents),
+         |sig AS (
+         |  SELECT doc_id,
+         |         $sigCols
+         |  FROM t),
+         |banded AS (
+         |  SELECT doc_id,
+         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
+         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
+         |  FROM sig),
+         |long AS (
+         |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
+         |  UNION ALL
+         |  SELECT doc_id, 1 AS band, b1 AS bh FROM banded),
+         |cand AS (
+         |  SELECT DISTINCT doc_id, keeper FROM (
+         |    SELECT doc_id,
+         |           MIN(doc_id) OVER (PARTITION BY band, bh) AS keeper
+         |    FROM long) m
+         |  WHERE keeper < doc_id),
+         |edges AS (
+         |  SELECT c.doc_id AS d1, c.keeper AS d2
+         |  FROM cand c
+         |  JOIN t a ON a.doc_id = c.doc_id
+         |  JOIN t b ON b.doc_id = c.keeper
+         |  WHERE len(list_intersect(a.toks, b.toks)) * 5
+         |          >= (len(a.toks) + len(b.toks)
+         |              - len(list_intersect(a.toks, b.toks))) * 4),
+         |sym AS (SELECT d1 AS src, d2 AS dst FROM edges
+         |        UNION ALL SELECT d2, d1 FROM edges),
+         |reach(v, r) AS (
+         |  SELECT doc_id, doc_id FROM documents
+         |  UNION
+         |  SELECT s.dst, rc.r FROM reach rc JOIN sym s ON s.src = rc.v),
+         |compt AS (SELECT v AS doc_id, MIN(r) AS comp FROM reach GROUP BY v),
+         |k AS (
+         |  SELECT comp, doc_id AS keeper FROM (
+         |    SELECT c.comp, c.doc_id,
+         |           row_number() OVER (PARTITION BY c.comp
+         |             ORDER BY d.n_chars DESC, c.doc_id) AS rn
+         |    FROM compt c JOIN documents d ON c.doc_id = d.doc_id) t2
+         |  WHERE rn = 1)
+         |SELECT c.doc_id, c.comp, k.keeper,
+         |       CASE WHEN c.doc_id = k.keeper THEN 1 ELSE 0 END AS kept
+         |FROM compt c JOIN k ON c.comp = k.comp
+         |ORDER BY c.doc_id""".stripMargin
     }),
     // E3 — MinHash signatures (unit-tier: MinHashSpec property-tests the
     // Jaccard estimate; here the signature table itself). Tokenization is
     // materialized in its own projection so the k=32 signature expressions
     // reference the array instead of re-splitting the text k times
     // (CollapseProject keeps the split separate: non-cheap, multi-referenced).
-    "minhash_signature" -> ((s, d) => {
+    Query("minhash_signature", (s, d) => {
       documents(s, d)
         .select(col("doc_id"), tokenHashes(tokenSet(col("text"))).as("th"))
         .select(col("doc_id") +: minhashFromHashes(col("th")): _*)
@@ -389,7 +539,7 @@ object Dedup {
     // near-dup clusters of thousands, so pairs are quadratic in cluster size
     // (3.3M pairs at sf0.1) while the min-per-bucket reduction stays linear
     // in docs × bands — the shape that survives 100 TB.
-    "dedup_minhash_lsh" -> ((s, d) => {
+    Query("dedup_minhash_lsh", (s, d) => {
       val sigs = documents(s, d)
         .select(col("doc_id"), tokenHashes(tokenSet(col("text"))).as("th"))
         .select(col("doc_id") +: minhashFromHashes(col("th")): _*)
@@ -421,7 +571,7 @@ object Dedup {
     // enumeration); md5 costs more per token than xxhash64, which is
     // exactly why the unit-tier sibling keeps the fast path and this one
     // is the auditable construction.
-    "dedup_minhash_banded" -> ((s, d) => {
+    Query("dedup_minhash_banded", (s, d) => {
       val k = 8; val bands = 2; val r = k / bands
       val sigs = documents(s, d)
         .select(col("doc_id"),
@@ -443,6 +593,34 @@ object Dedup {
         .groupBy("doc_id").agg(min(col("bucket_keeper")).as("keeper"))
         .filter(col("keeper") < col("doc_id"))
         .orderBy("doc_id")
+    }, oracle = {
+      val sigCols = (0 until 8).map(i =>
+        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
+        .mkString(",\n        |         ")
+      s"""WITH t AS (
+         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
+         |  FROM documents),
+         |sig AS (
+         |  SELECT doc_id,
+         |         $sigCols
+         |  FROM t),
+         |banded AS (
+         |  SELECT doc_id,
+         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
+         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
+         |  FROM sig),
+         |long AS (
+         |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
+         |  UNION ALL
+         |  SELECT doc_id, 1 AS band, b1 AS bh FROM banded),
+         |m AS (
+         |  SELECT doc_id,
+         |         MIN(doc_id) OVER (PARTITION BY band, bh) AS bucket_keeper
+         |  FROM long)
+         |SELECT doc_id, MIN(bucket_keeper) AS keeper
+         |FROM m GROUP BY doc_id
+         |HAVING MIN(bucket_keeper) < doc_id
+         |ORDER BY doc_id""".stripMargin
     }),
     // LSH CALIBRATION audit (round 14): estimated-vs-true Jaccard for
     // every band-collision candidate pair, bucketed by the signature
@@ -458,7 +636,7 @@ object Dedup {
     // arrays join onto candidate rows only (the minhash_verified
     // discipline), and the report is ≤ 9 rows (one per possible match
     // count).
-    "dedup_minhash_calibration" -> ((s, d) => {
+    Query("dedup_minhash_calibration", (s, d) => {
       val k = 8; val bands = 2; val r = k / bands
       // base feeds sigs + both token fetches, sigs feeds the band stream
       // + both signature fetches — the multi-consumer fact-derivation
@@ -557,13 +735,62 @@ object Dedup {
           min("true_q6").as("min_true_q6"),
           max("true_q6").as("max_true_q6"))
         .orderBy("est_q6")
+    }, oracle =
+      // md5 hex is lowercase in both engines; list min over hex strings is
+      // the same lexicographic min array_min takes. The replay IS the same
+      // recurrence (signatures are deterministic functions, there is no
+      // independent construction of a minwise hash) — what the gate checks
+      // is that every stage agrees bit-for-bit cross-engine.
+      // the banded oracle's sig/band CTEs + candidate join + exact list
+      // intersection — every stage the same deterministic md5 recurrence
+      {
+      val sigCols = (0 until 8).map(i =>
+        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
+        .mkString(",\n        |         ")
+      val matchSum = (0 until 8).map(i =>
+        s"CASE WHEN a.mh_$i = b.mh_$i THEN 1 ELSE 0 END").mkString(" + ")
+      s"""WITH t AS (
+         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
+         |  FROM documents),
+         |sig AS (
+         |  SELECT doc_id,
+         |         $sigCols
+         |  FROM t),
+         |banded AS (
+         |  SELECT doc_id,
+         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
+         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
+         |  FROM sig),
+         |long AS (
+         |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
+         |  UNION ALL SELECT doc_id, 1, b1 FROM banded),
+         |cand AS (
+         |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
+         |  FROM long x JOIN long y ON x.band = y.band AND x.bh = y.bh
+         |  WHERE x.doc_id < y.doc_id),
+         |scored AS (
+         |  SELECT ($matchSum) * 1000000 // 8 AS est_q6,
+         |         len(list_intersect(ta.toks, tb.toks)) * 1000000 //
+         |           (len(ta.toks) + len(tb.toks)
+         |            - len(list_intersect(ta.toks, tb.toks))) AS true_q6
+         |  FROM cand c
+         |    JOIN sig a ON a.doc_id = c.a_id
+         |    JOIN sig b ON b.doc_id = c.b_id
+         |    JOIN t ta ON ta.doc_id = c.a_id
+         |    JOIN t tb ON tb.doc_id = c.b_id)
+         |SELECT CAST(est_q6 AS BIGINT) AS est_q6,
+         |       COUNT(*) AS n_pairs,
+         |       CAST(SUM(true_q6) // COUNT(*) AS BIGINT) AS avg_true_q6,
+         |       CAST(MIN(true_q6) AS BIGINT) AS min_true_q6,
+         |       CAST(MAX(true_q6) AS BIGINT) AS max_true_q6
+         |FROM scored GROUP BY est_q6 ORDER BY est_q6""".stripMargin
     }),
     // SimHash fingerprints (builder mandate; unit-tier).
-    "dedup_simhash" -> ((s, d) =>
+    Query("dedup_simhash", (s, d) =>
       simhash(documents(s, d), col("doc_id"), col("text")).orderBy("doc_id")),
     // Character-3-gram Jaccard near-dup (builder mandate), same blocking
     // discipline as E2.
-    "dedup_ngram_jaccard" -> ((s, d) => {
+    Query("dedup_ngram_jaccard", (s, d) => {
       // Character 3-gram shingles, hashed to 64-bit at the doc level so the
       // pairwise intersect compares longs, not strings (collision probability
       // over the whole corpus ~1e-10; the DuckDB oracle intersects the plain
@@ -596,7 +823,23 @@ object Dedup {
         .filter(col("jac") >= 0.8)
         .select("d1", "d2", "jac")
         .orderBy("d1", "d2")
-    }),
+    }, oracle =
+      """WITH docs AS (
+        |  SELECT doc_id,
+        |         list_distinct(list_transform(range(1, greatest(length(text) - 2, 1) + 1),
+        |                                      i -> text[i:i+2])) AS g,
+        |         str_split(text, ' ')[1] AS blk_tok,
+        |         floor(n_chars / 100.0) AS blk_len
+        |  FROM documents)
+        |SELECT a.doc_id AS d1, b.doc_id AS d2,
+        |       CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
+        |         / len(list_distinct(list_concat(a.g, b.g))) AS jac
+        |FROM docs a JOIN docs b
+        |  ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
+        | AND a.doc_id < b.doc_id
+        |WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
+        |        / len(list_distinct(list_concat(a.g, b.g))) >= 0.8
+        |ORDER BY d1, d2""".stripMargin),
     // Incremental dedup — a new ingest batch against the standing corpus,
     // the shape that makes dedup affordable at 100 TB: the corpus is never
     // re-paired with itself. A new doc is 'dup_corpus' if its content hash
@@ -607,7 +850,7 @@ object Dedup {
     // without bound), else 'dup_batch' if an earlier new doc in the same
     // batch has the hash, else 'new'. Batch membership is doc_id % 5 — a
     // pure fixture function at every SF.
-    "dedup_incremental" -> ((s, d) => {
+    Query("dedup_incremental", (s, d) => {
       val docs = documents(s, d)
         .select(col("doc_id"), sha2(col("text"), 256).as("h"))
       val corpusHashes = docs.filter(col("doc_id") % 5 =!= 0)
@@ -623,7 +866,20 @@ object Dedup {
             .when(col("rn") > 1, "dup_batch")
             .otherwise("new").as("verdict"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH h AS (
+        |  SELECT doc_id, sha256(text) AS h FROM documents),
+        |corpus AS (
+        |  SELECT DISTINCT h FROM h WHERE doc_id % 5 <> 0),
+        |batch AS (
+        |  SELECT doc_id, h.h, EXISTS (SELECT 1 FROM corpus c WHERE c.h = h.h) AS in_corpus,
+        |         row_number() OVER (PARTITION BY h.h ORDER BY doc_id) AS rn
+        |  FROM h WHERE doc_id % 5 = 0)
+        |SELECT doc_id,
+        |       CASE WHEN in_corpus THEN 'dup_corpus'
+        |            WHEN rn > 1 THEN 'dup_batch'
+        |            ELSE 'new' END AS verdict
+        |FROM batch ORDER BY doc_id""".stripMargin),
     // Incremental dedup, bloom-prefiltered (round 12) — the production
     // sibling of dedup_incremental for the 100 TB ingest loop. The plain
     // shape above shuffles the corpus's ENTIRE distinct hash set to probe
@@ -640,7 +896,7 @@ object Dedup {
     // ~50× the sf0.1 batch; production sizes it from ingest stats, and
     // only the FP rate (extra shuffled rows) depends on it, never
     // correctness.
-    "dedup_incremental_bloom" -> ((s, d) => {
+    Query("dedup_incremental_bloom", (s, d) => {
       graft.GraftSession.register(s) // idempotent; brings bloom_agg into SQL
       documents(s, d)
         .select(col("doc_id"), sha2(col("text"), 256).as("h"))
@@ -663,7 +919,23 @@ object Dedup {
           |            ELSE 'new' END AS verdict
           |FROM batch b LEFT JOIN corpus c ON b.h = c.h
           |ORDER BY b.doc_id""".stripMargin)
-    }),
+    }, oracle =
+      // the bloom variant is exact by construction (the confirm join clears
+      // false positives), so its oracle IS the plain incremental semantics —
+      // no bloom anywhere in it, same text as dedup_incremental's
+      """WITH h AS (
+        |  SELECT doc_id, sha256(text) AS h FROM documents),
+        |corpus AS (
+        |  SELECT DISTINCT h FROM h WHERE doc_id % 5 <> 0),
+        |batch AS (
+        |  SELECT doc_id, h.h, EXISTS (SELECT 1 FROM corpus c WHERE c.h = h.h) AS in_corpus,
+        |         row_number() OVER (PARTITION BY h.h ORDER BY doc_id) AS rn
+        |  FROM h WHERE doc_id % 5 = 0)
+        |SELECT doc_id,
+        |       CASE WHEN in_corpus THEN 'dup_corpus'
+        |            WHEN rn > 1 THEN 'dup_batch'
+        |            ELSE 'new' END AS verdict
+        |FROM batch ORDER BY doc_id""".stripMargin),
     // Asymmetric CONTAINMENT dedup (round 8): C(A,B) = |G(A)∩G(B)| / |G(A)|
     // over char-3-gram shingle sets, ≥ 0.9 — the subset-duplicate detector
     // symmetric Jaccard misses by construction (a short doc quoted inside a
@@ -682,7 +954,7 @@ object Dedup {
     // Exactness never depends on the filter (it only generates candidates);
     // a uniform-frequency corpus degrades toward the pair family's
     // quadratic cost but stays correct.
-    "dedup_containment" -> ((s, d) => {
+    Query("dedup_containment", (s, d) => {
       // NOT materialized (round-16 measurement): four branches re-derive
       // the shingle table, but a localCheckpoint here read 8.2-8.8 s
       // warm vs 7.8-8.6 baseline at sf0.1 — the cost is the candidate
@@ -814,7 +1086,23 @@ object Dedup {
         .filter(col("inter") * 10 >= col("n_sub") * 9)
         .select("d_new", "d_src", "inter", "n_sub")
         .orderBy("d_new", "d_src")
-    }),
+    }, oracle =
+      // brute delta×corpus intersect over PLAIN grams (no prefix filter, no
+      // hashing) — an independent construction end to end; counts agree with
+      // the Spark side's hashed-gram intersect absent a 64-bit collision
+      // (the dedup_ngram_jaccard argument)
+      """WITH d AS (
+        |  SELECT doc_id,
+        |         list_distinct([substr(text, i, 3)
+        |                        for i in range(1, len(text) - 1)]) AS g
+        |  FROM documents),
+        |n AS (SELECT doc_id, g, len(g) AS n FROM d),
+        |delta AS (SELECT * FROM n WHERE doc_id % 10 = 7 AND n >= 10)
+        |SELECT a.doc_id AS d_new, b.doc_id AS d_src,
+        |       len(list_intersect(a.g, b.g)) AS inter, a.n AS n_sub
+        |FROM delta a JOIN n b ON a.doc_id <> b.doc_id
+        |WHERE 10 * len(list_intersect(a.g, b.g)) >= 9 * a.n
+        |ORDER BY d_new, d_src""".stripMargin),
     // Fuzzy entity matching by edit distance (the record-linkage flavor of
     // near-dup: "cold widget" ~ "gold widget"). Two scale moves make this
     // survive 100 TB where the naive pairwise levenshtein is doubly
@@ -824,7 +1112,7 @@ object Dedup {
     // independent; (2) block vocabulary pairs on the name's last token, so
     // only plausible pairs run the DP. Multiplicities multiply back at the
     // end (n_pairs = cnt_a × cnt_b row pairs behind each name pair).
-    "dedup_fuzzy_edit" -> ((s, d) => {
+    Query("dedup_fuzzy_edit", (s, d) => {
       val names = part(s, d)
         .groupBy(split_part(col("p_name"), lit(" "), lit(-1)).as("blk"),
           col("p_name"))
@@ -839,7 +1127,17 @@ object Dedup {
         .select(col("name_a"), col("name_b"), col("dist"),
           (col("cnt_a") * col("cnt_b")).as("n_pairs"))
         .orderBy("name_a", "name_b")
-    }),
+    }, oracle =
+      // both engines ship classic Levenshtein (full DP, unit costs) — the
+      // oracle's is DuckDB's own implementation, not a replay
+      """WITH names AS (
+        |  SELECT split_part(p_name, ' ', -1) AS blk, p_name, COUNT(*) AS cnt
+        |  FROM part GROUP BY 1, 2)
+        |SELECT a.p_name AS name_a, b.p_name AS name_b,
+        |       levenshtein(a.p_name, b.p_name) AS dist, a.cnt * b.cnt AS n_pairs
+        |FROM names a JOIN names b ON a.blk = b.blk AND a.p_name < b.p_name
+        |WHERE levenshtein(a.p_name, b.p_name) <= 2
+        |ORDER BY name_a, name_b""".stripMargin),
     // Substring-WINDOW duplication profile (round 11) — the signal behind
     // substring-level dedup (remove repeated SPANS, not whole documents):
     // doc-level dedup keeps a document that quotes a boilerplate paragraph
@@ -856,7 +1154,7 @@ object Dedup {
     // shared-window table is |distinct windows|-sized with map-side
     // combinable counts; docs shorter than one window are reported with
     // n_win = 0 rather than silently dropped.
-    "dedup_substring_window" -> ((s, d) => {
+    Query("dedup_substring_window", (s, d) => {
       val W = 32; val S = 16
       val docs = documents(s, d)
       // ONE window-hashing pass feeds both consumers (r17 optimization:
@@ -900,7 +1198,30 @@ object Dedup {
           when(col("n_win") > 0, expr("n_shared * 1000000 DIV n_win"))
             .otherwise(0L))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // instance-level n_shared over the SAME md5 window digests (ASCII
+      // corpus: substr chars == Spark substring chars == bytes); the
+      // distinct (doc, window) view feeds only the >=2-docs test, and //
+      // matches DIV on the non-negative quotients
+      """WITH e AS (SELECT doc_id, text, length(text) AS l FROM documents),
+        |w AS (
+        |  SELECT doc_id,
+        |         unnest(list_transform(range(0, (l - 32) // 16 + 1),
+        |                k -> md5(substr(text, k * 16 + 1, 32)))) AS wh
+        |  FROM e WHERE l >= 32),
+        |dw AS (SELECT DISTINCT doc_id, wh FROM w),
+        |sh AS (SELECT wh FROM dw GROUP BY wh HAVING COUNT(*) >= 2),
+        |pd AS (SELECT doc_id, COUNT(*) AS n_shared
+        |       FROM w JOIN sh USING (wh) GROUP BY doc_id)
+        |SELECT e.doc_id,
+        |       CAST(CASE WHEN l >= 32 THEN (l - 32) // 16 + 1 ELSE 0 END
+        |            AS BIGINT) AS n_win,
+        |       CAST(coalesce(pd.n_shared, 0) AS BIGINT) AS n_shared,
+        |       CAST(CASE WHEN l >= 32 THEN
+        |              coalesce(pd.n_shared, 0) * 1000000 // ((l - 32) // 16 + 1)
+        |            ELSE 0 END AS BIGINT) AS dup_q6
+        |FROM e LEFT JOIN pd ON e.doc_id = pd.doc_id
+        |ORDER BY e.doc_id""".stripMargin),
     // WINNOWING fingerprint duplication profile (round 11b) — the
     // Schleimer/Wilkerson/Aiken local fingerprinting scheme (the MOSS
     // algorithm): hash every k-gram (k=8), then from every window of
@@ -926,399 +1247,15 @@ object Dedup {
     // fixture family max doc length is ~4k chars (WinnowSpec pins the
     // margin); a corpus with longer docs must raise PAD_BASE/width in
     // BOTH engines (the oracle uses the same constant).
-    "dedup_winnow_fingerprint" -> ((s, d) =>
-      winnowProfile(documents(s, d)).orderBy("doc_id")),
-    // E3d — the full TWO-STAGE production dedup (round 11): LSH candidates
-    // → EXACT verification. dedup_minhash_lsh/banded trust the band
-    // collision alone, so an LSH false positive (S-curve tail: J < 0.8
-    // pairs still collide with probability J^4 per band) becomes a wrong
-    // verdict; production pipelines always re-check candidates exactly.
-    // Candidates here are STAR-shaped, not all-pairs: each doc is paired
-    // only with its bucket's min-doc_id keeper (docs × bands candidate
-    // rows, linear — never the quadratic within-bucket pair enumeration,
-    // which this corpus's thousand-doc dup clusters would blow up; the
-    // dedup_minhash_lsh argument), then token-set Jaccard ≥ 0.8 is
-    // verified with the native sorted intersect. A doc may verify against
-    // several bucket keepers — every verified (doc, keeper) edge is
-    // reported with its exact (inter, uni) witness, integers end to end.
-    // Signatures are the md5-seeded k=8/2-band construction so the whole
-    // pipeline runs through the differential gate (the banded-sibling
-    // discipline); the VERIFY stage is independently constructed in the
-    // oracle (list_intersect over plain token lists vs the native sorted
-    // hash intersect). 100 TB: signature pass linear, candidate set
-    // linear in docs × bands, token arrays join back only for candidate
-    // rows — no array rides the bucket shuffle.
-    "dedup_minhash_verified" -> ((s, d) =>
-      minhashVerifiedPairs(documents(s, d)).orderBy("doc_id", "keeper")),
-    // Per-doc n-gram NOVELTY vs the earlier corpus (round 11): what
-    // fraction of this doc's distinct char-3-grams first appeared in a
-    // LOWER-doc_id doc — the ingest-order curation signal (drop or
-    // down-weight low-novelty docs as a stream arrives) that doc-level
-    // dedup can't give: a doc can be 0% novel without any single earlier
-    // doc containing it (its grams scattered across many). Distinct from
-    // dedup_substring_window (position-contiguous, cross-doc symmetric)
-    // and dedup_containment (thresholded delta-vs-corpus verdicts): this
-    // is a per-doc PROFILE against the doc_id-ordered prefix. novelty_q6
-    // is an exact integer fixed-point fraction; gram-less docs (< 3
-    // chars) report fully novel. 100 TB shape: grams travel as 64-bit
-    // hashes (one fused native pass); the first-occurrence table is
-    // |distinct grams|-sized with a map-side-combinable MIN; only
-    // (hash, doc_id) rows shuffle — document text never does.
-    "dedup_ngram_novelty" -> ((s, d) => {
-      // ONE fused gram-hash pass (r17 optimization): without the lineage
-      // cut the ngram_hashes scan re-ran three times — under `grams` for
-      // the first-occurrence MIN, under `grams` again for the seen-count
-      // join, and a third time just to take size(g) for the denominator.
-      val docs = documents(s, d).select(col("doc_id"),
-        graft.functions.CharNgramHashes.ngram_hashes(col("text"), 3).as("g"))
-        .localCheckpoint()
-      val grams = docs.select(col("doc_id"), explode(col("g")).as("gh"))
-      val firstDoc = grams.groupBy("gh").agg(min(col("doc_id")).as("first_doc"))
-      val seen = grams.join(firstDoc, "gh")
-        .filter(col("first_doc") < col("doc_id"))
-        .groupBy("doc_id").agg(count(lit(1)).as("n_seen"))
-      docs.select(col("doc_id"), size(col("g")).cast("long").as("n_grams"))
-        .join(seen, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_grams"),
-          coalesce(col("n_seen"), lit(0L)).as("n_seen"))
-        .withColumn("novelty_q6",
-          when(col("n_grams") > 0,
-            expr("(n_grams - n_seen) * 1000000 DIV n_grams"))
-            .otherwise(1000000L))
-        .orderBy("doc_id")
-    })
-  )
-
-  def oracle: Map[String, String] = Map(
-    // md5 hex is lowercase in both engines; list min over hex strings is
-    // the same lexicographic min array_min takes. The replay IS the same
-    // recurrence (signatures are deterministic functions, there is no
-    // independent construction of a minwise hash) — what the gate checks
-    // is that every stage agrees bit-for-bit cross-engine.
-    // the banded oracle's sig/band CTEs + candidate join + exact list
-    // intersection — every stage the same deterministic md5 recurrence
-    "dedup_minhash_calibration" -> {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
-      val matchSum = (0 until 8).map(i =>
-        s"CASE WHEN a.mh_$i = b.mh_$i THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
-         |long AS (
-         |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
-         |  UNION ALL SELECT doc_id, 1, b1 FROM banded),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-         |  FROM long x JOIN long y ON x.band = y.band AND x.bh = y.bh
-         |  WHERE x.doc_id < y.doc_id),
-         |scored AS (
-         |  SELECT ($matchSum) * 1000000 // 8 AS est_q6,
-         |         len(list_intersect(ta.toks, tb.toks)) * 1000000 //
-         |           (len(ta.toks) + len(tb.toks)
-         |            - len(list_intersect(ta.toks, tb.toks))) AS true_q6
-         |  FROM cand c
-         |    JOIN sig a ON a.doc_id = c.a_id
-         |    JOIN sig b ON b.doc_id = c.b_id
-         |    JOIN t ta ON ta.doc_id = c.a_id
-         |    JOIN t tb ON tb.doc_id = c.b_id)
-         |SELECT CAST(est_q6 AS BIGINT) AS est_q6,
-         |       COUNT(*) AS n_pairs,
-         |       CAST(SUM(true_q6) // COUNT(*) AS BIGINT) AS avg_true_q6,
-         |       CAST(MIN(true_q6) AS BIGINT) AS min_true_q6,
-         |       CAST(MAX(true_q6) AS BIGINT) AS max_true_q6
-         |FROM scored GROUP BY est_q6 ORDER BY est_q6""".stripMargin
-    },
-    "dedup_minhash_banded" -> {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
-         |long AS (
-         |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
-         |  UNION ALL
-         |  SELECT doc_id, 1 AS band, b1 AS bh FROM banded),
-         |m AS (
-         |  SELECT doc_id,
-         |         MIN(doc_id) OVER (PARTITION BY band, bh) AS bucket_keeper
-         |  FROM long)
-         |SELECT doc_id, MIN(bucket_keeper) AS keeper
-         |FROM m GROUP BY doc_id
-         |HAVING MIN(bucket_keeper) < doc_id
-         |ORDER BY doc_id""".stripMargin
-    },
-    "dedup_exact_text" ->
-      """SELECT doc_id, h FROM (
-        |  SELECT doc_id, sha256(text) AS h,
-        |         row_number() OVER (PARTITION BY sha256(text) ORDER BY doc_id) AS rn
-        |  FROM documents) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // the same sha256 recipe re-aggregated per language; the dup count
-    // spelled independently as COUNT(*) − n_distinct, with the NULL-text
-    // group added explicitly (COUNT DISTINCT skips NULLs; the Spark
-    // groupBy counts the NULL digest as one distinct text)
-    "dedup_rate_by_lang" ->
-      """WITH d AS (
-        |  SELECT lang,
-        |         COUNT(*) AS n_docs,
-        |         COUNT(DISTINCT sha256(text))
-        |           + MAX(CASE WHEN text IS NULL THEN 1 ELSE 0 END)
-        |           AS n_distinct
-        |  FROM documents GROUP BY lang)
-        |SELECT lang, n_docs, n_distinct,
-        |       n_docs - n_distinct AS n_dupes,
-        |       CAST((n_docs - n_distinct) * 1000000 // n_docs AS BIGINT)
-        |         AS dup_rate_q6
-        |FROM d ORDER BY lang""".stripMargin,
-    // brute delta×corpus intersect over PLAIN grams (no prefix filter, no
-    // hashing) — an independent construction end to end; counts agree with
-    // the Spark side's hashed-gram intersect absent a 64-bit collision
-    // (the dedup_ngram_jaccard argument)
-    "dedup_containment" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         list_distinct([substr(text, i, 3)
-        |                        for i in range(1, len(text) - 1)]) AS g
-        |  FROM documents),
-        |n AS (SELECT doc_id, g, len(g) AS n FROM d),
-        |delta AS (SELECT * FROM n WHERE doc_id % 10 = 7 AND n >= 10)
-        |SELECT a.doc_id AS d_new, b.doc_id AS d_src,
-        |       len(list_intersect(a.g, b.g)) AS inter, a.n AS n_sub
-        |FROM delta a JOIN n b ON a.doc_id <> b.doc_id
-        |WHERE 10 * len(list_intersect(a.g, b.g)) >= 9 * a.n
-        |ORDER BY d_new, d_src""".stripMargin,
-    "dedup_near_jaccard" ->
-      """WITH docs AS (
-        |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
-        |         str_split(text, ' ')[1] AS blk_tok,
-        |         floor(n_chars / 100.0) AS blk_len
-        |  FROM documents)
-        |SELECT a.doc_id AS d1, b.doc_id AS d2,
-        |       CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |         / len(list_distinct(list_concat(a.toks, b.toks))) AS jac
-        |FROM docs a JOIN docs b
-        |  ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
-        | AND a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |        / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.8
-        |ORDER BY d1, d2""".stripMargin,
-    // The recursive CTE computes, for every doc, every id reachable over
-    // the near-dup edge set; MIN over that reach set is exactly the
-    // min-label-propagation fixpoint the Spark operator iterates to.
-    "dedup_clusters" ->
-      """WITH RECURSIVE
-        |docs AS (
-        |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
-        |         str_split(text, ' ')[1] AS blk_tok,
-        |         floor(n_chars / 100.0) AS blk_len
-        |  FROM documents),
-        |edges AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM docs a JOIN docs b
-        |    ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
-        |   AND a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |          / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.8),
-        |sym AS (SELECT d1 AS src, d2 AS dst FROM edges
-        |        UNION ALL SELECT d2, d1 FROM edges),
-        |reach(v, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT s.dst, rc.r FROM reach rc JOIN sym s ON s.src = rc.v)
-        |SELECT v AS doc_id, MIN(r) AS comp FROM reach
-        |GROUP BY v ORDER BY doc_id""".stripMargin,
-    // the component labels replay dedup_clusters' recursive-CTE oracle;
-    // the keeper policy is an independent per-component argmax
-    "dedup_cluster_keep_best" ->
-      """WITH RECURSIVE
-        |docs AS (
-        |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
-        |         str_split(text, ' ')[1] AS blk_tok,
-        |         floor(n_chars / 100.0) AS blk_len
-        |  FROM documents),
-        |edges AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM docs a JOIN docs b
-        |    ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
-        |   AND a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |          / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.8),
-        |sym AS (SELECT d1 AS src, d2 AS dst FROM edges
-        |        UNION ALL SELECT d2, d1 FROM edges),
-        |reach(v, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT s.dst, rc.r FROM reach rc JOIN sym s ON s.src = rc.v),
-        |compt AS (SELECT v AS doc_id, MIN(r) AS comp FROM reach GROUP BY v),
-        |k AS (
-        |  SELECT comp, doc_id AS keeper FROM (
-        |    SELECT c.comp, c.doc_id,
-        |           row_number() OVER (PARTITION BY c.comp
-        |             ORDER BY d.n_chars DESC, c.doc_id) AS rn
-        |    FROM compt c JOIN documents d ON c.doc_id = d.doc_id) t
-        |  WHERE rn = 1)
-        |SELECT c.doc_id, c.comp, k.keeper,
-        |       CASE WHEN c.doc_id = k.keeper THEN 1 ELSE 0 END AS kept
-        |FROM compt c JOIN k ON c.comp = k.comp
-        |ORDER BY c.doc_id""".stripMargin,
-    // edge stage replays dedup_minhash_verified's banded-candidate +
-    // exact-verify construction; component labels the recursive reach
-    // fixpoint over those edges; keeper an independent per-comp argmax
-    "dedup_cluster_keep_best_lsh" -> {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
-      s"""WITH RECURSIVE
-         |t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
-         |long AS (
-         |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
-         |  UNION ALL
-         |  SELECT doc_id, 1 AS band, b1 AS bh FROM banded),
-         |cand AS (
-         |  SELECT DISTINCT doc_id, keeper FROM (
-         |    SELECT doc_id,
-         |           MIN(doc_id) OVER (PARTITION BY band, bh) AS keeper
-         |    FROM long) m
-         |  WHERE keeper < doc_id),
-         |edges AS (
-         |  SELECT c.doc_id AS d1, c.keeper AS d2
-         |  FROM cand c
-         |  JOIN t a ON a.doc_id = c.doc_id
-         |  JOIN t b ON b.doc_id = c.keeper
-         |  WHERE len(list_intersect(a.toks, b.toks)) * 5
-         |          >= (len(a.toks) + len(b.toks)
-         |              - len(list_intersect(a.toks, b.toks))) * 4),
-         |sym AS (SELECT d1 AS src, d2 AS dst FROM edges
-         |        UNION ALL SELECT d2, d1 FROM edges),
-         |reach(v, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, rc.r FROM reach rc JOIN sym s ON s.src = rc.v),
-         |compt AS (SELECT v AS doc_id, MIN(r) AS comp FROM reach GROUP BY v),
-         |k AS (
-         |  SELECT comp, doc_id AS keeper FROM (
-         |    SELECT c.comp, c.doc_id,
-         |           row_number() OVER (PARTITION BY c.comp
-         |             ORDER BY d.n_chars DESC, c.doc_id) AS rn
-         |    FROM compt c JOIN documents d ON c.doc_id = d.doc_id) t2
-         |  WHERE rn = 1)
-         |SELECT c.doc_id, c.comp, k.keeper,
-         |       CASE WHEN c.doc_id = k.keeper THEN 1 ELSE 0 END AS kept
-         |FROM compt c JOIN k ON c.comp = k.comp
-         |ORDER BY c.doc_id""".stripMargin
-    },
-    "dedup_ngram_jaccard" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_transform(range(1, greatest(length(text) - 2, 1) + 1),
-        |                                      i -> text[i:i+2])) AS g,
-        |         str_split(text, ' ')[1] AS blk_tok,
-        |         floor(n_chars / 100.0) AS blk_len
-        |  FROM documents)
-        |SELECT a.doc_id AS d1, b.doc_id AS d2,
-        |       CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-        |         / len(list_distinct(list_concat(a.g, b.g))) AS jac
-        |FROM docs a JOIN docs b
-        |  ON a.blk_tok = b.blk_tok AND a.blk_len = b.blk_len
-        | AND a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-        |        / len(list_distinct(list_concat(a.g, b.g))) >= 0.8
-        |ORDER BY d1, d2""".stripMargin,
-    "dedup_incremental" ->
-      """WITH h AS (
-        |  SELECT doc_id, sha256(text) AS h FROM documents),
-        |corpus AS (
-        |  SELECT DISTINCT h FROM h WHERE doc_id % 5 <> 0),
-        |batch AS (
-        |  SELECT doc_id, h.h, EXISTS (SELECT 1 FROM corpus c WHERE c.h = h.h) AS in_corpus,
-        |         row_number() OVER (PARTITION BY h.h ORDER BY doc_id) AS rn
-        |  FROM h WHERE doc_id % 5 = 0)
-        |SELECT doc_id,
-        |       CASE WHEN in_corpus THEN 'dup_corpus'
-        |            WHEN rn > 1 THEN 'dup_batch'
-        |            ELSE 'new' END AS verdict
-        |FROM batch ORDER BY doc_id""".stripMargin,
-    // the bloom variant is exact by construction (the confirm join clears
-    // false positives), so its oracle IS the plain incremental semantics —
-    // no bloom anywhere in it, same text as dedup_incremental's
-    "dedup_incremental_bloom" ->
-      """WITH h AS (
-        |  SELECT doc_id, sha256(text) AS h FROM documents),
-        |corpus AS (
-        |  SELECT DISTINCT h FROM h WHERE doc_id % 5 <> 0),
-        |batch AS (
-        |  SELECT doc_id, h.h, EXISTS (SELECT 1 FROM corpus c WHERE c.h = h.h) AS in_corpus,
-        |         row_number() OVER (PARTITION BY h.h ORDER BY doc_id) AS rn
-        |  FROM h WHERE doc_id % 5 = 0)
-        |SELECT doc_id,
-        |       CASE WHEN in_corpus THEN 'dup_corpus'
-        |            WHEN rn > 1 THEN 'dup_batch'
-        |            ELSE 'new' END AS verdict
-        |FROM batch ORDER BY doc_id""".stripMargin,
-    // instance-level n_shared over the SAME md5 window digests (ASCII
-    // corpus: substr chars == Spark substring chars == bytes); the
-    // distinct (doc, window) view feeds only the >=2-docs test, and //
-    // matches DIV on the non-negative quotients
-    "dedup_substring_window" ->
-      """WITH e AS (SELECT doc_id, text, length(text) AS l FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(0, (l - 32) // 16 + 1),
-        |                k -> md5(substr(text, k * 16 + 1, 32)))) AS wh
-        |  FROM e WHERE l >= 32),
-        |dw AS (SELECT DISTINCT doc_id, wh FROM w),
-        |sh AS (SELECT wh FROM dw GROUP BY wh HAVING COUNT(*) >= 2),
-        |pd AS (SELECT doc_id, COUNT(*) AS n_shared
-        |       FROM w JOIN sh USING (wh) GROUP BY doc_id)
-        |SELECT e.doc_id,
-        |       CAST(CASE WHEN l >= 32 THEN (l - 32) // 16 + 1 ELSE 0 END
-        |            AS BIGINT) AS n_win,
-        |       CAST(coalesce(pd.n_shared, 0) AS BIGINT) AS n_shared,
-        |       CAST(CASE WHEN l >= 32 THEN
-        |              coalesce(pd.n_shared, 0) * 1000000 // ((l - 32) // 16 + 1)
-        |            ELSE 0 END AS BIGINT) AS dup_q6
-        |FROM e LEFT JOIN pd ON e.doc_id = pd.doc_id
-        |ORDER BY e.doc_id""".stripMargin,
-    // the identical winnowing recurrence in DuckDB's list dialect:
-    // list_transform/list_slice/list_aggregate('min') replay the
-    // per-window (hash ASC, pos DESC) selection over the same
-    // md5-of-k-gram keys; range() is end-exclusive where Spark's
-    // sequence() is inclusive, hence the +2/+1 bounds. Same 3,000,000
-    // tie-break pad base as the engine — the ≤3M-char doc bound applies
-    // here too (see the engine-side BOUND note)
-    "dedup_winnow_fingerprint" ->
+    Query("dedup_winnow_fingerprint", (s, d) =>
+      winnowProfile(documents(s, d)).orderBy("doc_id"), oracle =
+      // the identical winnowing recurrence in DuckDB's list dialect:
+      // list_transform/list_slice/list_aggregate('min') replay the
+      // per-window (hash ASC, pos DESC) selection over the same
+      // md5-of-k-gram keys; range() is end-exclusive where Spark's
+      // sequence() is inclusive, hence the +2/+1 bounds. Same 3,000,000
+      // tie-break pad base as the engine — the ≤3M-char doc bound applies
+      // here too (see the engine-side BOUND note)
       """WITH e AS (SELECT doc_id, text, length(text) AS l FROM documents),
         |g AS (
         |  SELECT doc_id,
@@ -1348,24 +1285,35 @@ object Dedup {
         |            ELSE 0 END AS BIGINT) AS dup_q6
         |FROM e LEFT JOIN nf ON e.doc_id = nf.doc_id
         |       LEFT JOIN pd ON e.doc_id = pd.doc_id
-        |ORDER BY e.doc_id""".stripMargin,
-    // both engines ship classic Levenshtein (full DP, unit costs) — the
-    // oracle's is DuckDB's own implementation, not a replay
-    "dedup_fuzzy_edit" ->
-      """WITH names AS (
-        |  SELECT split_part(p_name, ' ', -1) AS blk, p_name, COUNT(*) AS cnt
-        |  FROM part GROUP BY 1, 2)
-        |SELECT a.p_name AS name_a, b.p_name AS name_b,
-        |       levenshtein(a.p_name, b.p_name) AS dist, a.cnt * b.cnt AS n_pairs
-        |FROM names a JOIN names b ON a.blk = b.blk AND a.p_name < b.p_name
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY name_a, name_b""".stripMargin,
-    // the signature stage is the dedup_minhash_banded replay (no
-    // independent minwise construction exists — the gate checks
-    // cross-engine bit-agreement); the VERIFY stage is independently
-    // constructed: plain-token list_intersect here vs the native sorted
-    // 64-bit-hash intersect on the Spark side
-    "dedup_minhash_verified" -> {
+        |ORDER BY e.doc_id""".stripMargin),
+    // E3d — the full TWO-STAGE production dedup (round 11): LSH candidates
+    // → EXACT verification. dedup_minhash_lsh/banded trust the band
+    // collision alone, so an LSH false positive (S-curve tail: J < 0.8
+    // pairs still collide with probability J^4 per band) becomes a wrong
+    // verdict; production pipelines always re-check candidates exactly.
+    // Candidates here are STAR-shaped, not all-pairs: each doc is paired
+    // only with its bucket's min-doc_id keeper (docs × bands candidate
+    // rows, linear — never the quadratic within-bucket pair enumeration,
+    // which this corpus's thousand-doc dup clusters would blow up; the
+    // dedup_minhash_lsh argument), then token-set Jaccard ≥ 0.8 is
+    // verified with the native sorted intersect. A doc may verify against
+    // several bucket keepers — every verified (doc, keeper) edge is
+    // reported with its exact (inter, uni) witness, integers end to end.
+    // Signatures are the md5-seeded k=8/2-band construction so the whole
+    // pipeline runs through the differential gate (the banded-sibling
+    // discipline); the VERIFY stage is independently constructed in the
+    // oracle (list_intersect over plain token lists vs the native sorted
+    // hash intersect). 100 TB: signature pass linear, candidate set
+    // linear in docs × bands, token arrays join back only for candidate
+    // rows — no array rides the bucket shuffle.
+    Query("dedup_minhash_verified", (s, d) =>
+      minhashVerifiedPairs(documents(s, d)).orderBy("doc_id", "keeper"), oracle =
+      // the signature stage is the dedup_minhash_banded replay (no
+      // independent minwise construction exists — the gate checks
+      // cross-engine bit-agreement); the VERIFY stage is independently
+      // constructed: plain-token list_intersect here vs the native sorted
+      // 64-bit-hash intersect on the Spark side
+      {
       val sigCols = (0 until 8).map(i =>
         s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
         .mkString(",\n        |         ")
@@ -1402,12 +1350,48 @@ object Dedup {
          |SELECT doc_id, keeper, inter, uni FROM j
          |WHERE inter * 5 >= uni * 4
          |ORDER BY doc_id, keeper""".stripMargin
-    },
-    // independent construction over PLAIN string grams (no hashing) —
-    // counts agree with the Spark side's hashed-gram first-occurrence
-    // absent a 64-bit collision (the dedup_ngram_jaccard argument);
-    // // matches DIV on the non-negative quotients
-    "dedup_ngram_novelty" ->
+    }),
+    // Per-doc n-gram NOVELTY vs the earlier corpus (round 11): what
+    // fraction of this doc's distinct char-3-grams first appeared in a
+    // LOWER-doc_id doc — the ingest-order curation signal (drop or
+    // down-weight low-novelty docs as a stream arrives) that doc-level
+    // dedup can't give: a doc can be 0% novel without any single earlier
+    // doc containing it (its grams scattered across many). Distinct from
+    // dedup_substring_window (position-contiguous, cross-doc symmetric)
+    // and dedup_containment (thresholded delta-vs-corpus verdicts): this
+    // is a per-doc PROFILE against the doc_id-ordered prefix. novelty_q6
+    // is an exact integer fixed-point fraction; gram-less docs (< 3
+    // chars) report fully novel. 100 TB shape: grams travel as 64-bit
+    // hashes (one fused native pass); the first-occurrence table is
+    // |distinct grams|-sized with a map-side-combinable MIN; only
+    // (hash, doc_id) rows shuffle — document text never does.
+    Query("dedup_ngram_novelty", (s, d) => {
+      // ONE fused gram-hash pass (r17 optimization): without the lineage
+      // cut the ngram_hashes scan re-ran three times — under `grams` for
+      // the first-occurrence MIN, under `grams` again for the seen-count
+      // join, and a third time just to take size(g) for the denominator.
+      val docs = documents(s, d).select(col("doc_id"),
+        graft.functions.CharNgramHashes.ngram_hashes(col("text"), 3).as("g"))
+        .localCheckpoint()
+      val grams = docs.select(col("doc_id"), explode(col("g")).as("gh"))
+      val firstDoc = grams.groupBy("gh").agg(min(col("doc_id")).as("first_doc"))
+      val seen = grams.join(firstDoc, "gh")
+        .filter(col("first_doc") < col("doc_id"))
+        .groupBy("doc_id").agg(count(lit(1)).as("n_seen"))
+      docs.select(col("doc_id"), size(col("g")).cast("long").as("n_grams"))
+        .join(seen, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_grams"),
+          coalesce(col("n_seen"), lit(0L)).as("n_seen"))
+        .withColumn("novelty_q6",
+          when(col("n_grams") > 0,
+            expr("(n_grams - n_seen) * 1000000 DIV n_grams"))
+            .otherwise(1000000L))
+        .orderBy("doc_id")
+    }, oracle =
+      // independent construction over PLAIN string grams (no hashing) —
+      // counts agree with the Spark side's hashed-gram first-occurrence
+      // absent a 64-bit collision (the dedup_ngram_jaccard argument);
+      // // matches DIV on the non-negative quotients
       """WITH d AS (
         |  SELECT doc_id,
         |         list_distinct([substr(text, i, 3)
@@ -1427,6 +1411,6 @@ object Dedup {
         |              (len(d.g) - coalesce(s.n_seen, 0)) * 1000000 // len(d.g)
         |            ELSE 1000000 END AS BIGINT) AS novelty_q6
         |FROM d LEFT JOIN seen s ON d.doc_id = s.doc_id
-        |ORDER BY d.doc_id""".stripMargin
+        |ORDER BY d.doc_id""".stripMargin)
   )
 }

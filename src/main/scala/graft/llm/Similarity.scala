@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Query
 import graft.core.Tables._
 
 /** Tier E similarity search over the 64-dim `embeddings.embedding` column
@@ -832,7 +833,7 @@ object Similarity {
     pairs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Seq[Query] = Seq(
     // E4 — exact top-10 cosine neighbours of vec_id=0. Similarity itself is
     // engine-local float math, so only the *ranking* (with PK tiebreak) is
     // oracle-compared, not the raw double — and the sim is quantized to 1e-4
@@ -842,7 +843,16 @@ object Similarity {
     // heaps, driver merges k·p rows) — a global row_number window would
     // funnel every candidate through one partition at scale. Numbering
     // happens after, over k rows only (the shared exactTop10 builder).
-    "knn_cosine_topk" -> ((s, d) => exactTop10(s, d).orderBy("rn")),
+    Query("knn_cosine_topk", (s, d) => exactTop10(s, d).orderBy("rn"), oracle =
+      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+        |sims AS (
+        |  SELECT vec_id,
+        |         round(list_cosine_similarity(embedding, (SELECT qv FROM q)), 4) AS sim
+        |  FROM embeddings WHERE vec_id <> 0)
+        |SELECT rn, vec_id FROM (
+        |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id) AS rn
+        |  FROM sims) t
+        |WHERE rn <= 10 ORDER BY rn""".stripMargin),
     // Matryoshka prefix-truncation recall (round 14; Kusupati et al.
     // 2022 "Matryoshka Representation Learning"): how much of the full-
     // dim exact top-10 survives when the search runs on the first
@@ -857,7 +867,7 @@ object Similarity {
     // at the scan (column pruning cannot help inside an array, but the
     // dot product runs on p of 64 lanes), TakeOrdered heaps, a 40-row
     // join against the 10-row reference set.
-    "knn_mrl_prefix_recall" -> ((s, d) => {
+    Query("knn_mrl_prefix_recall", (s, d) => {
       val emb = embeddings(s, d)
       def topAt(p: Int): DataFrame = {
         val pref = emb.select(col("vec_id"),
@@ -877,6 +887,30 @@ object Similarity {
         .agg(count(lit(1)).as("k"),
           sum(coalesce(col("hit"), lit(0L))).as("recall10"))
         .orderBy("prefix_dim")
+    }, oracle =
+      // each prefix ranking is the knn_cosine_topk oracle on sliced lists;
+      // recall counts membership in the full-dim top-10
+      {
+      def top(p: Int): String =
+        s"""SELECT $p AS prefix_dim, vec_id FROM (
+           |  SELECT vec_id, row_number() OVER (ORDER BY
+           |    round(list_cosine_similarity(list_slice(embedding, 1, $p),
+           |      (SELECT list_slice(embedding, 1, $p) FROM embeddings
+           |       WHERE vec_id = 0)), 4) DESC, vec_id) AS rn
+           |  FROM embeddings WHERE vec_id <> 0) t WHERE rn <= 10""".stripMargin
+      s"""WITH allp AS (
+         |${top(8)}
+         |UNION ALL
+         |${top(16)}
+         |UNION ALL
+         |${top(32)}
+         |UNION ALL
+         |${top(64)}),
+         |ref AS (SELECT vec_id FROM (${top(64)}) f)
+         |SELECT prefix_dim, COUNT(*) AS k,
+         |       CAST(SUM(CASE WHEN vec_id IN (SELECT vec_id FROM ref)
+         |                     THEN 1 ELSE 0 END) AS BIGINT) AS recall10
+         |FROM allp GROUP BY prefix_dim ORDER BY prefix_dim""".stripMargin
     }),
     // MMR diversified retrieval (round 6): greedy maximal-marginal-
     // relevance re-rank of the exact top-20 candidates — pick 5, each step
@@ -889,9 +923,53 @@ object Similarity {
     // over ≤20 rows — the candidate pool IS the scale contract; production
     // swaps the exact top-20 for an ANN pool). No collect: the steps chain
     // lazily, checkpointed per step to keep the plan flat.
-    "retrieval_mmr" -> ((s, d) =>
+    Query("retrieval_mmr", (s, d) =>
       mmrSelect(embeddings(s, d), queryId = 0, pool = 20, k = 5,
-        lamRel = 0.7, lamDiv = 0.3)),
+        lamRel = 0.7, lamDiv = 0.3), oracle =
+      // greedy MMR replayed as chained CTEs (one per selection step). The
+      // emitted rel forces BIT-parity of the cosine itself, so the oracle
+      // mirrors Spark's exact shape in DOUBLE — dot/(norm·norm) over
+      // double-cast lists via list_inner_product (the kmeans recipe);
+      // list_cosine_similarity would compute in FLOAT on these FLOAT[]
+      // fixtures and drift at the 8th decimal. 0.7/0.3 CAST to DOUBLE
+      // (bare decimals are DECIMAL in DuckDB).
+      {
+      val steps = (2 to 5).map { t =>
+        s"""s$t AS (SELECT * FROM s${t - 1} UNION ALL (
+           |  SELECT c.vec_id, c.rel, $t AS step FROM cand c
+           |  JOIN sims ON sims.a_id = c.vec_id
+           |  JOIN s${t - 1} p ON sims.b_id = p.vec_id
+           |  WHERE c.vec_id NOT IN (SELECT vec_id FROM s${t - 1})
+           |  GROUP BY c.vec_id, c.rel
+           |  ORDER BY CAST(0.7 AS DOUBLE) * c.rel
+           |           - CAST(0.3 AS DOUBLE) * MAX(sims.sim) DESC, c.vec_id
+           |  LIMIT 1))""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ed AS (
+         |  SELECT vec_id,
+         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  FROM embeddings),
+         |q AS (SELECT e AS qe FROM ed WHERE vec_id = 0),
+         |cand AS (
+         |  SELECT vec_id, e,
+         |         round(list_inner_product(e, (SELECT qe FROM q))
+         |               / (sqrt(list_inner_product(e, e))
+         |                  * sqrt(list_inner_product((SELECT qe FROM q),
+         |                                            (SELECT qe FROM q)))),
+         |               4) AS rel
+         |  FROM ed WHERE vec_id <> 0
+         |  ORDER BY rel DESC, vec_id LIMIT 20),
+         |sims AS (
+         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         |         round(list_inner_product(a.e, b.e)
+         |               / (sqrt(list_inner_product(a.e, a.e))
+         |                  * sqrt(list_inner_product(b.e, b.e))), 4) AS sim
+         |  FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
+         |s1 AS (SELECT vec_id, rel, 1 AS step FROM cand
+         |       ORDER BY rel DESC, vec_id LIMIT 1),
+         |$steps
+         |SELECT step, vec_id, rel FROM s5 ORDER BY step""".stripMargin
+    }),
     // E5 — nearest neighbour per probe vector within its label block
     // (probe set capped at vec_id < 200 so bench cost stays linear-ish).
     // Scale honesty: label blocking bounds the pair space by the label
@@ -899,8 +977,19 @@ object Similarity {
     // the production path composes IVF cells (knn_ivf_coarse) or LSH bands
     // (knn_lsh_bucketed) INSIDE each label; this query is the exact,
     // oracle-checkable per-label semantics those approximate.
-    "knn_pairs_label" -> ((s, d) =>
-      labelTop1(s, d).select("a_id", "b_id", "label").orderBy("a_id")),
+    Query("knn_pairs_label", (s, d) =>
+      labelTop1(s, d).select("a_id", "b_id", "label").orderBy("a_id"), oracle =
+      """WITH pairs AS (
+        |  SELECT a.label, a.vec_id AS a_id, b.vec_id AS b_id,
+        |         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim
+        |  FROM embeddings a JOIN embeddings b
+        |    ON a.label = b.label AND a.vec_id <> b.vec_id
+        |  WHERE a.vec_id < 200)
+        |SELECT a_id, b_id, label FROM (
+        |  SELECT a_id, b_id, label,
+        |         row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rn
+        |  FROM pairs) t
+        |WHERE rn = 1 ORDER BY a_id""".stripMargin),
     // Hubness audit of the exact top-1 kNN edge set (round 14): the
     // in-degree histogram of "how many probes chose ME as nearest" — the
     // diagnostic that quantifies the hub pathology knn_mutual_pairs'
@@ -911,12 +1000,27 @@ object Similarity {
     // describe a different edge set than the one shipped. Two
     // map-side-combinable count aggs over the top-1 table (|probes|
     // rows); output is max-indegree-bounded.
-    "knn_hubness_audit" -> ((s, d) => {
+    Query("knn_hubness_audit", (s, d) => {
       val indeg = labelTop1(s, d)
         .groupBy("b_id").agg(count(lit(1)).as("indeg"))
       indeg.groupBy("indeg").agg(count(lit(1)).as("n_nodes"))
         .orderBy("indeg")
-    }),
+    }, oracle =
+      // the same top-1 construction, aggregated twice — in-degree per
+      // chosen neighbour, then the histogram
+      """WITH pairs AS (
+        |  SELECT a.label, a.vec_id AS a_id, b.vec_id AS b_id,
+        |         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim
+        |  FROM embeddings a JOIN embeddings b
+        |    ON a.label = b.label AND a.vec_id <> b.vec_id
+        |  WHERE a.vec_id < 200),
+        |t1 AS (SELECT b_id FROM (
+        |  SELECT b_id,
+        |         row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rn
+        |  FROM pairs) t WHERE rn = 1),
+        |ind AS (SELECT b_id, COUNT(*) AS indeg FROM t1 GROUP BY b_id)
+        |SELECT indeg, COUNT(*) AS n_nodes FROM ind GROUP BY indeg
+        |ORDER BY indeg""".stripMargin),
     // Embedding-cosine near-dup verdicts (builder mandate): vectors whose
     // cosine to an earlier same-label vector exceeds a threshold map to that
     // keeper. Label blocking bounds the pair space (the IVF idea); verdict
@@ -925,8 +1029,13 @@ object Similarity {
     // at 0.3498 — a threshold measured to sit >=1.4e-4 away from every pair
     // cosine at sf0.001/0.01/0.1, ~100× the cross-engine float noise, so the
     // verdict set is oracle-hashable despite float similarity math.
-    "dedup_embedding_cosine" -> ((s, d) =>
-      embeddingCosineDedup(embeddings(s, d), threshold = 0.3498)),
+    Query("dedup_embedding_cosine", (s, d) =>
+      embeddingCosineDedup(embeddings(s, d), threshold = 0.3498), oracle =
+      """SELECT a.vec_id, MIN(b.vec_id) AS keeper
+        |FROM embeddings a JOIN embeddings b
+        |  ON a.label = b.label AND b.vec_id < a.vec_id
+        |WHERE list_cosine_similarity(a.embedding, b.embedding) > 0.3498
+        |GROUP BY a.vec_id ORDER BY a.vec_id""".stripMargin),
     // Approximate (LSH-candidate) variant of the same dedup: sub-quadratic
     // candidate generation, exact re-rank, unit-tier (LlmSpec asserts the
     // verdicts are a sound subset of the exact query's and measures recall).
@@ -935,7 +1044,7 @@ object Similarity {
     // re-invocations) pay the sizing job once per corpus, not per
     // construction — dirs are immutable within a process (scaling staging
     // writes fresh scratch dirs), so the cache cannot go stale
-    "dedup_embedding_ann" -> ((s, d) =>
+    Query("dedup_embedding_ann", (s, d) =>
       embeddingCosineDedupAnn(embeddings(s, d), threshold = 0.3498,
         bandBits = Some(annBandBits.computeIfAbsent(d, _ =>
           Integer.valueOf(adaptiveBandBits(embeddings(s, d))))))),
@@ -958,7 +1067,7 @@ object Similarity {
     // cell pair term is the documented exact-reference cost — production
     // composes the ANN candidate generators inside each cell, exactly as
     // the label-blocked family does.
-    "dedup_semantic_cells" -> ((s, d) => {
+    Query("dedup_semantic_cells", (s, d) => {
       val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
       val clustered = ivfCellAssign(unit, cellCountFor(s, d))
       val blocked = Dedup.withAdaptiveSalt(clustered, Seq("cell"))
@@ -974,7 +1083,32 @@ object Similarity {
         .groupBy(col("a_id").as("vec_id"))
         .agg(min(col("b_id")).as("keeper"))
         .orderBy("vec_id")
-    }),
+    }, oracle =
+      // the assignment replays knn_ivf_coarse's deterministic ranking; the
+      // within-cell dedup is the dedup_embedding_cosine construction with
+      // the cell in place of the label
+      // the adaptive cell count K = max(8, ⌈√n⌉ // 8) is derived in SQL
+      // from the same exact count (sqrt/ceil IEEE-exact — fixture K = 8)
+      """WITH kc AS (
+        |  SELECT GREATEST(8, CAST(ceil(sqrt(CAST(COUNT(*) AS DOUBLE)))
+        |                          AS BIGINT) // 8) AS k
+        |  FROM embeddings),
+        |cent AS (
+        |  SELECT vec_id AS c_id, embedding AS c_v
+        |  FROM embeddings, kc WHERE vec_id < kc.k),
+        |assign AS (
+        |  SELECT vec_id, embedding, c_id,
+        |         row_number() OVER (PARTITION BY vec_id
+        |           ORDER BY round(list_cosine_similarity(embedding, c_v), 4)
+        |                    DESC, c_id) AS arn
+        |  FROM embeddings CROSS JOIN cent),
+        |cl AS (
+        |  SELECT vec_id, embedding, c_id AS cell
+        |  FROM assign WHERE arn = 1)
+        |SELECT a.vec_id, MIN(b.vec_id) AS keeper
+        |FROM cl a JOIN cl b ON a.cell = b.cell AND b.vec_id < a.vec_id
+        |WHERE list_cosine_similarity(a.embedding, b.embedding) > 0.4458
+        |GROUP BY a.vec_id ORDER BY a.vec_id""".stripMargin),
     // PRODUCTION SemDeDup (round 12): the composition dedup_semantic_cells'
     // scaladoc promised — sign-LSH candidate generation INSIDE each IVF
     // cell (the same deterministic ivfCellAssign cells, so the two keys
@@ -988,7 +1122,7 @@ object Similarity {
     // sound subset of dedup_semantic_cells' (same cells, same threshold,
     // candidates ⊆ within-cell pairs ⇒ keepers can only move up) and a
     // recall floor vs the exact key.
-    "dedup_semantic_ann" -> ((s, d) => {
+    Query("dedup_semantic_ann", (s, d) => {
       val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
       val cells = ivfCellAssign(unit, cellCountFor(s, d))
         .select(col("vec_id"), col("uv"), col("cell").as("blk"))
@@ -1001,7 +1135,7 @@ object Similarity {
     // The per-label pair space never materializes — the candidate join is
     // linear in colliding rows, the shape that survives a hot label at
     // 100 TB. Unit-tier: LlmSpec measures top-1 agreement vs the exact E5.
-    "knn_pairs_label_ann" -> ((s, d) => {
+    Query("knn_pairs_label_ann", (s, d) => {
       val planes = hyperplanes(Bands * BandBits, 64)
       val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
       val tagged = unit.select(col("vec_id"), col("label"),
@@ -1040,18 +1174,36 @@ object Similarity {
     // linear in vectors, one hash shuffle; the pair space stays bounded
     // by the label blocking (production swaps it for IVF/LSH candidates,
     // the knn_pairs_label_ann path, without touching the mutual step).
-    "knn_mutual_pairs" -> ((s, d) =>
+    Query("knn_mutual_pairs", (s, d) =>
       mutualNearestPairs(
         withUnitVec(embeddings(s, d), "embedding", "uv")
           .filter(col("vec_id") < 200))
-        .orderBy("a_id")),
+        .orderBy("a_id"), oracle =
+      // the top-1 table is the knn_pairs_label construction with both sides
+      // probe-bounded; the mutual filter is a self-join on the reversed key
+      """WITH pairs AS (
+        |  SELECT a.label, a.vec_id AS a_id, b.vec_id AS b_id,
+        |         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim
+        |  FROM embeddings a JOIN embeddings b
+        |    ON a.label = b.label AND a.vec_id <> b.vec_id
+        |  WHERE a.vec_id < 200 AND b.vec_id < 200),
+        |nn AS (
+        |  SELECT a_id, b_id, label FROM (
+        |    SELECT a_id, b_id, label,
+        |           row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rn
+        |    FROM pairs) t
+        |  WHERE rn = 1)
+        |SELECT x.a_id, x.b_id, x.label
+        |FROM nn x JOIN nn y ON x.a_id = y.b_id AND x.b_id = y.a_id
+        |WHERE x.a_id < x.b_id
+        |ORDER BY x.a_id""".stripMargin),
     // IVF-style coarse-quantized ANN (the other builder-mandated scale path
     // besides LSH): K seed centroids (a production build would k-means; seeds
     // keep it deterministic), every vector assigned to its nearest centroid —
     // one broadcast pass, linear in N×K — then the probe searches only its
     // own cell. 100 TB story: cells are the partition key, so a query touches
     // 1/K of the corpus; assignment is embarrassingly parallel.
-    "knn_ivf_coarse" -> ((s, d) => {
+    Query("knn_ivf_coarse", (s, d) => {
       val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
       val cent = unit.filter(col("vec_id") < 8)
         .select(col("vec_id").as("c_id"), col("uv").as("c_v"))
@@ -1073,7 +1225,31 @@ object Similarity {
         .withColumn("rn", row_number().over(w))
         .select("rn", "vec_id")
         .orderBy("rn")
-    }),
+    }, oracle =
+      """WITH cent AS (
+        |  SELECT vec_id AS c_id, embedding AS c_v FROM embeddings WHERE vec_id < 8),
+        |assigned AS (
+        |  SELECT e.vec_id, c.c_id,
+        |         round(list_cosine_similarity(e.embedding, c.c_v), 4) AS csim
+        |  FROM embeddings e CROSS JOIN cent c),
+        |clustered AS (
+        |  SELECT vec_id, c_id AS cell FROM (
+        |    SELECT vec_id, c_id,
+        |           row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, c_id) AS arn
+        |    FROM assigned) t
+        |  WHERE arn = 1),
+        |sims AS (
+        |  SELECT e.vec_id,
+        |         round(list_cosine_similarity(e.embedding,
+        |           (SELECT embedding FROM embeddings WHERE vec_id = 0)), 4) AS sim
+        |  FROM embeddings e
+        |  JOIN clustered c ON e.vec_id = c.vec_id
+        |  WHERE c.cell = (SELECT cell FROM clustered WHERE vec_id = 0)
+        |    AND e.vec_id <> 0)
+        |SELECT rn, vec_id FROM (
+        |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id) AS rn
+        |  FROM sims) t
+        |WHERE rn <= 10 ORDER BY rn""".stripMargin),
     // Multi-probe IVF (round 11) — the recall/latency knob every IVF
     // deployment tunes: the probe searches its nprobe=2 NEAREST cells
     // instead of only its own. Single-probe misses any neighbour that
@@ -1084,8 +1260,36 @@ object Similarity {
     // tiebreaks, so the nprobe cell SET (arn <= 2) is a pure fixture
     // function in both engines; candidate scan stays cell-partitioned, the
     // probe's cell list and query vector ride as one-row broadcasts.
-    "knn_ivf_multiprobe" -> ((s, d) => ivfTop10(s, d, nprobe = 2)
-      .orderBy("rn")),
+    Query("knn_ivf_multiprobe", (s, d) => ivfTop10(s, d, nprobe = 2)
+      .orderBy("rn"), oracle =
+      // same assignment replay as knn_ivf_coarse; the probe's cell set is
+      // the arn <= 2 ranking instead of arn = 1
+      """WITH cent AS (
+        |  SELECT vec_id AS c_id, embedding AS c_v FROM embeddings WHERE vec_id < 8),
+        |assigned AS (
+        |  SELECT e.vec_id, c.c_id,
+        |         round(list_cosine_similarity(e.embedding, c.c_v), 4) AS csim
+        |  FROM embeddings e CROSS JOIN cent c),
+        |ranked AS (
+        |  SELECT vec_id, c_id,
+        |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, c_id) AS arn
+        |  FROM assigned),
+        |clustered AS (
+        |  SELECT vec_id, c_id AS cell FROM ranked WHERE arn = 1),
+        |pcells AS (
+        |  SELECT c_id AS cell FROM ranked WHERE vec_id = 0 AND arn <= 2),
+        |sims AS (
+        |  SELECT e.vec_id,
+        |         round(list_cosine_similarity(e.embedding,
+        |           (SELECT embedding FROM embeddings WHERE vec_id = 0)), 4) AS sim
+        |  FROM embeddings e
+        |  JOIN clustered c ON e.vec_id = c.vec_id
+        |  JOIN pcells p ON c.cell = p.cell
+        |  WHERE e.vec_id <> 0)
+        |SELECT rn, vec_id FROM (
+        |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id) AS rn
+        |  FROM sims) t
+        |WHERE rn <= 10 ORDER BY rn""".stripMargin),
     // IVF recall-vs-nprobe audit (round 14b): the tuning curve every IVF
     // deployment reads before fixing nprobe — overlap of the IVF top-10
     // with the exact top-10 at nprobe = 1, 2, 4, on the SAME ivfTop10
@@ -1096,7 +1300,7 @@ object Similarity {
     // the cells-searched knob. 100 TB: three cell-bounded candidate
     // scans (nprobe/K of the corpus each) + TakeOrdered heaps + a
     // 30-row join against the 10-row reference.
-    "knn_ivf_recall_audit" -> ((s, d) => {
+    Query("knn_ivf_recall_audit", (s, d) => {
       val ref = exactTop10(s, d)
         .select(col("vec_id")).withColumn("hit", lit(1L))
       // ONE corpus assignment pass total (round 15): the index
@@ -1130,1062 +1334,11 @@ object Similarity {
           sum(coalesce(col("hit"), lit(0L))).as("recall10"))
         .join(broadcast(cost), Seq("nprobe"))
         .orderBy("nprobe")
-    }),
-    // Per-dimension embedding stats (round 14c) — the PCA-lite audit run
-    // before trusting/compressing an embedding column: which dimensions
-    // carry variance and which are dead (a collapsed dim means the
-    // encoder wasted capacity; a dominant one distorts cosine). Runs in
-    // the shared int8 space (quantizedVectors — ONE global symmetric
-    // scale), so every sum is an exact integer and the report is
-    // hash-exact with zero float discipline. Negative-safe q6: the mean
-    // divides the +127-shifted sum (DIV vs // diverge on negatives —
-    // SURVEY §7.4), then shifts back exactly; the variance numerator
-    // n·s2 − s1² is ≥ 0 by Cauchy-Schwarz. DECIMAL(38,0) products (n·s2
-    // passes 2⁶³ near 10⁹ vectors; the mean numerator (s1+127n)·10⁶
-    // would pass it near 3.6·10¹⁰, so it rides DECIMAL too — round-15
-    // advice fix, same discipline for both moments). 100 TB: one
-    // expression-level
-    // posexplode + a 64-group map-side-combinable agg — nothing wider
-    // than (dim, x) shuffles, and only 64 aggregate rows survive.
-    "embed_dim_stats" -> ((s, d) => {
-      val per = quantizedVectors(s, d)
-        .select(posexplode(col("qv")).as(Seq("dim", "x")))
-        .select(col("dim"), col("x").cast("long").as("x"))
-      per.groupBy("dim")
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
-          sum(col("x") * col("x")).as("s2"),
-          min(col("x")).cast("long").as("min_q"),
-          max(col("x")).cast("long").as("max_q"))
-        .select(col("dim"), col("n"), col("s1"), col("s2"),
-          col("min_q"), col("max_q"),
-          expr("CAST(CAST(s1 + 127 * n AS DECIMAL(38,0)) * 1000000 " +
-            "DIV n AS BIGINT) - 1000000 * 127")
-            .as("mean_q6"),
-          expr("CAST((CAST(n AS DECIMAL(38,0)) * s2 - " +
-            "CAST(s1 AS DECIMAL(38,0)) * s1) * 1000000 DIV " +
-            "(CAST(n AS DECIMAL(38,0)) * n) AS BIGINT)").as("var_q6"))
-        .orderBy("dim")
-    }),
-    // Quantized retrieval — the production serving path embed_quantize
-    // (below) prepares for: top-k by INTEGER dot product over int8
-    // vectors. One GLOBAL symmetric scale (corpus max-abs, a 1-row
-    // broadcast) instead of per-vector scales, so integer scores are
-    // directly comparable and the ranking needs no float correction —
-    // every score is an exact integer (≤ 127²·64), the whole query is
-    // hashable with zero float discipline, and memory/bandwidth drop 4×
-    // vs float32. Scoring runs through the native dot_product kernel over
-    // integer-valued doubles (exact); top-k is TakeOrdered with a PK
-    // tiebreak (integer scores tie often). nullif guards the degenerate
-    // all-zero corpus the same way embed_quantize guards the all-zero row.
-    "knn_quantized_topk" -> ((s, d) =>
-      quantizedScores(s, d).orderBy(desc("score"), asc("vec_id")).limit(10)),
-    // Radius (range) search — the OTHER similarity-search modality next to
-    // top-k: every vector whose integer quantized dot with the probe
-    // clears a fixed threshold, however many or few that is (dedup wants
-    // "all near-dups", not "the 10 nearest"). Same exact-integer scores as
-    // knn_quantized_topk (ONE shared quantizedScores definition), so the
-    // threshold needs no float gap analysis — any cut is hash-exact; 10000
-    // keeps the top ~5-12% of the fixture corpora (measured p90≈8-12k,
-    // max≈19-23k across sf0.001-0.1, nonempty at every SF). At scale the
-    // filter is map-side on the scored pass (no top-k heap, no global
-    // sort barrier until the bounded survivor set).
-    "knn_radius_quantized" -> ((s, d) =>
-      quantizedScores(s, d).filter(col("score") >= 10000)
-        .orderBy(desc("score"), asc("vec_id"))),
-    // Late-interaction (ColBERT-style) MaxSim retrieval (round 11): the
-    // multi-vector scoring rule modern retrievers use when one pooled
-    // vector per document loses too much — score(doc) = Σ over query
-    // tokens of the MAX dot product against any of the document's
-    // vectors. Here the label groups play the multi-vector documents
-    // (each label owns ~50 member vectors) and vec_ids 0-3 are the 4
-    // query tokens (excluded from the corpus side). Every dot is an
-    // exact long under the shared global-scale int8 quantization
-    // (quantizedVectors — the knn_quantized_topk scale), so MaxSim
-    // ranks are hash-exact with zero float discipline. 100 TB shape:
-    // the 4-row query token table rides a broadcast; per-(doc, token)
-    // max and per-doc sum are both map-side-combinable hash aggs — the
-    // corpus streams through one pass, no shuffle wider than
-    // (label, q_id, long), no global sort until the |labels|-sized
-    // score table.
-    "retrieval_maxsim" -> ((s, d) => {
-      val q = quantizedVectors(s, d)
-      val queryToks = q.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("q_id"), col("qv").as("qv_q"))
-      q.filter(col("vec_id") >= 4)
-        .crossJoin(broadcast(queryToks))
-        .select(col("label"), col("q_id"),
-          graft.functions.VectorOps.dot_product(col("qv"), col("qv_q"))
-            .cast("long").as("dot"))
-        .groupBy("label", "q_id").agg(max(col("dot")).as("best"))
-        .groupBy("label").agg(sum(col("best")).as("maxsim"))
-        .orderBy(desc("maxsim"), asc("label"))
-    }),
-    // k-center coreset selection (round 11b): greedy farthest-first
-    // traversal (the Gonzalez 2-approximation) — the diversity-maximizing
-    // subset selection training-data curation uses where MMR needs a
-    // query and k-means needs a cell count. Seed = vec_id 0, then k−1 = 3
-    // rounds of "add the point farthest from the chosen set"; output is
-    // every point's assigned nearest center and its exact squared L2
-    // distance. All arithmetic exact longs under the shared int8
-    // quantization: d² = |a|² + |b|² − 2a·b from three integer dot
-    // products, argmax pinned by (d² DESC, vec_id ASC), assignment by
-    // (d² ASC, c_id ASC) — zero floats, so the DuckDB oracle (the same
-    // recurrence as unrolled CTEs — bounded, the LPA precedent) is
-    // hash-exact. 100 TB shape: each round is one broadcast of the ≤k-row
-    // center table, one map-side d²-min pass, and one TakeOrdered(1) —
-    // never a collect; the center table localCheckpoints per round (the
-    // kmeans_lloyd lineage discipline). O(k·N) total like k-means
-    // assignment; k is a small constant.
-    "coreset_kcenter" -> ((s, d) =>
-      kcenterAssign(quantizedVectors(s, d)).orderBy("vec_id")),
-    // Johnson-Lindenstrauss random projection 64 → 16 dims (round 12): the
-    // dimensionality-reduction step ahead of ANN indexing/clustering —
-    // JL (1984) preserves pairwise distances within (1±ε) under a random
-    // linear map, and Achlioptas (2003) showed iid ±1 entries suffice
-    // ("database-friendly" projections: no Gaussians, integer arithmetic).
-    // Signs are a pure function of (in_dim, out_dim) via md5 parity —
-    // derived identically in Scala (jlSign, driver-side literal matrix)
-    // and in the oracle's SQL (DuckDB md5 of the same "i|j" strings), so
-    // the gate checks the sign derivation itself, not a shared constant.
-    // Inputs are the shared global-scale int8 quantization
-    // (quantizedVectors), so each output coordinate Σᵢ s(i,j)·qᵢ is an
-    // exact integer (|y| ≤ 64·127 ≪ 2⁵³) computed through the native
-    // dot_product kernel — zero floats, hash-exact. Emitted as 16 scalar
-    // long columns (p0..p15), never an array (the embed_quantize
-    // pandas-hash constraint). 100 TB shape: pure per-row map work on one
-    // corpus scan — zero shuffle beyond the 1-row broadcast scale; output
-    // is 4× narrower for every downstream consumer. Fixture-dim 64 is
-    // asserted (a dim mismatch must fail loudly, not zero-pad).
-    "embed_random_projection" -> ((s, d) => {
-      val q = quantizedVectors(s, d)
-      val checked = q.withColumn("qv",
-        when(size(col("qv")) === JlInDim, col("qv")).otherwise(
-          raise_error(concat(lit(s"embed_random_projection: dim != $JlInDim: "),
-            size(col("qv")).cast("string")))))
-      val cols = (0 until JlOutDim).map { j =>
-        val signs = array((0 until JlInDim).map(i => lit(jlSign(i, j))): _*)
-        graft.functions.VectorOps.dot_product(col("qv"), signs)
-          .cast("long").as(s"p$j")
-      }
-      checked.select(col("vec_id") +: cols: _*).orderBy("vec_id")
-    }),
-    // Product-quantization ADC search (round 12): the Jégou/Douze/Schmid
-    // 2011 scheme behind FAISS's IVFPQ — THE memory lever for
-    // billion-vector ANN: split each vector into M=8 subvectors of 8
-    // dims, learn a K=16-centroid codebook per subspace, store each
-    // vector as 8 four-bit codes (8 bytes vs 256 — 32×), and answer
-    // queries by Asymmetric Distance Computation: precompute the probe's
-    // exact d² to all M·K centroids (a 128-entry table), then each
-    // vector's approximate d² is a SUM OF 8 TABLE LOOKUPS — no vector
-    // math at query time. Training is pinned deterministic: seeds =
-    // subvectors of vec_ids 0..15, ONE Lloyd round (exact-integer d²
-    // argmin with (d², code) tie-break, centroid = component-wise mean),
-    // so the codebook is a pure function of the corpus and the DuckDB
-    // oracle replays it exactly. ALL arithmetic lives in the +127-SHIFTED
-    // non-negative int domain ([0,254] components): squared distances are
-    // shift-invariant, and the centroid mean's integer division is only
-    // cross-engine-deterministic for non-negative operands (Spark DIV
-    // truncates toward zero, DuckDB // floors — they agree iff ≥ 0, the
-    // CommonNeighbors caveat). Zero floats anywhere. 100 TB shape: the
-    // codebook (128 rows) and ADC table (128 rows) ride broadcasts;
-    // training is two corpus passes (seed-assign + recenter), encoding
-    // one more, and the query pass is a broadcast-lookup sum — every agg
-    // map-side-combinable; empty codes just drop out of the argmin
-    // (deterministic in both engines via the inner join).
-    "knn_pq_adc" -> ((s, d) =>
-      pqAdcTop10(s, d).select("rn", "vec_id", "adc_d2").orderBy("rn")),
-    // IVF-PQ (round 12e) — the composition production ANN serving actually
-    // deploys (Jégou, Douze & Schmid, "Product Quantization for Nearest
-    // Neighbor Search", TPAMI 2011, §V: coarse inverted index × product
-    // codes): the IVF cell restricts WHICH postings the query scans (1/K
-    // of the corpus — the latency axis) and PQ compresses WHAT each
-    // posting stores (32× — the memory axis); ADC scores the probed
-    // cell's codes with 8 table lookups each. Both halves are the
-    // already-shipped deterministic pieces, single-sourced so they cannot
-    // drift: cells come from ivfCellAssign(unit, 8) — the exact
-    // knn_ivf_coarse / dedup_semantic_cells assignment — and scoring is
-    // pqAdcTop10 with the cell's vec_id set as the postings restriction
-    // (codebook TRAINING stays corpus-wide, like a FAISS index). 100 TB
-    // shape: cells are the partition key, the cell filter is a semi-join
-    // pushed before the ADC lookup join, and everything the probe touches
-    // after assignment is |cell| rows, not |corpus|.
-    "knn_ivf_pq" -> ((s, d) => {
-      val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
-      val clustered = ivfCellAssign(unit, 8)
-      val probeCell = clustered.filter(col("vec_id") === 0).select("cell")
-      val members = clustered.join(broadcast(probeCell), Seq("cell"))
-        .filter(col("vec_id") =!= 0).select("vec_id")
-      pqAdcTop10(s, d, Some(members))
-        .select("rn", "vec_id", "adc_d2").orderBy("rn")
-    }),
-    // Retrieve-then-rerank (round 12i) — the two-stage serving pattern
-    // every production ANN deploy runs (FAISS/ScaNN docs both prescribe
-    // it; Guo et al., ICML 2020 §4 quantify the recall recovery): the
-    // COMPRESSED index proposes a candidate pool (PQ-ADC top-100 — cheap,
-    // lossy), the EXACT metric re-scores only that pool (100 full-width
-    // distances, not |corpus|) and ships the top-10. ADC's quantization
-    // error costs rank-ordering accuracy precisely AT the top — reranking
-    // buys exact top-k order for a constant extra cost. Both stages are
-    // the already-shipped deterministic pieces (pqAdcTop10 with k=100;
-    // the shiftedVectors exact-L2 kernel retrieval_eval_ndcg grades
-    // with), so the composition cannot drift. 100 TB shape: stage 1 is
-    // the PQ scan (32× smaller than raw vectors), stage 2 touches 100
-    // vectors fetched by a semi-join — the rerank never scans the corpus;
-    // the probe rides a 1-row broadcast.
-    "knn_pq_rerank" -> ((s, d) => {
-      val cand = pqAdcTop10(s, d, k = 100).select("vec_id")
-      val sv = shiftedVectors(s, d)
-      val probe = sv.filter(col("vec_id") === 0).select(col("sv0").as("pv"))
-      sv.join(cand, Seq("vec_id"), "left_semi")
-        .crossJoin(broadcast(probe))
-        .select(col("vec_id"), sqdCol(col("sv0"), col("pv")).as("d2"))
-        .orderBy(asc("d2"), asc("vec_id")).limit(10)
-        .withColumn("rn", row_number().over(
-          Window.orderBy(asc("d2"), asc("vec_id"))))
-        .select("rn", "vec_id", "d2").orderBy("rn")
-    }),
-    // Ranking-quality evaluation (round 12): NDCG@10 of the two lossy
-    // rankings this engine ships — PQ-ADC (the memory axis) and JL-16
-    // (the dimensionality axis) — against the EXACT shifted-L2 top-10,
-    // as a first-class query (the accept/reject readout an ANN rollout
-    // gates on; LlmSpec measures recall for the LSH family, this puts
-    // the graded-relevance metric on the oracle surface). Relevance of
-    // exact-rank i is 11−i; the rank discounts 1/log2(i+1) are TEN
-    // PRECOMPUTED ⌊10⁶/log2(i+1)+0.5⌋ integer constants (the
-    // profile_benford recipe — no transcendental at query time), so DCG,
-    // IDCG and ndcg_q6 = dcg·10⁶ DIV idcg are all exact longs. The PQ
-    // candidate list is the SAME pqAdcTop10 the search key ships
-    // (factored body; the oracle shares the CTE prefix identically), so
-    // the eval can never drift from the thing it grades. 100 TB shape:
-    // two corpus-scan rankings (TakeOrdered heaps) + 10-row broadcast
-    // joins — the eval adds nothing beyond the rankings themselves.
-    "retrieval_eval_ndcg" -> ((s, d) => {
-      val w = Seq(1000000L, 630930L, 500000L, 430677L, 386853L,
-        356207L, 333333L, 315465L, 301030L, 289065L)
-      val idcg = (1 to 10).map(i => (11L - i) * w(i - 1)).sum
-      val sv = shiftedVectors(s, d)
-      val probe = sv.filter(col("vec_id") === 0).select(col("sv0").as("pv"))
-      val exTop = sv.filter(col("vec_id") =!= 0).crossJoin(broadcast(probe))
-        .select(col("vec_id"), sqdCol(col("sv0"), col("pv")).as("d2"))
-        .orderBy(asc("d2"), asc("vec_id")).limit(10)
-        .withColumn("ern", row_number().over(
-          Window.orderBy(asc("d2"), asc("vec_id"))))
-        .select(col("vec_id"), (lit(11) - col("ern")).cast("long").as("rel"))
-        .localCheckpoint()
-      val projCols = (0 until 16).map { j =>
-        val signs = array((0 until 64).map(i => lit(jlSign(i, j))): _*)
-        graft.functions.VectorOps.dot_product(col("sv0"), signs)
-          .cast("long").as(s"p$j")
-      }
-      val proj = sv.select(col("vec_id") +: projCols: _*)
-      val probeP = proj.filter(col("vec_id") === 0)
-        .select((0 until 16).map(j => col(s"p$j").as(s"q$j")): _*)
-      val jlTop = proj.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(probeP))
-        .select(col("vec_id"),
-          (0 until 16).map(j =>
-            (col(s"p$j") - col(s"q$j")) * (col(s"p$j") - col(s"q$j")))
-            .reduce(_ + _).as("d2"))
-        .orderBy(asc("d2"), asc("vec_id")).limit(10)
-        .withColumn("rn", row_number().over(
-          Window.orderBy(asc("d2"), asc("vec_id"))))
-        .select("rn", "vec_id")
-      val pqTop = pqAdcTop10(s, d).select("rn", "vec_id")
-      val wLit = array(w.map(lit): _*)
-      def grade(cand: DataFrame, name: String): DataFrame =
-        cand.join(broadcast(exTop), Seq("vec_id"), "left")
-          .select(col("rn"), coalesce(col("rel"), lit(0L)).as("rel"))
-          .agg(count(when(col("rel") > 0, 1)).as("n_hits"),
-            sum(col("rel") * element_at(wLit, col("rn"))).as("dcg_q6"))
-          .select(lit(name).as("variant"), col("n_hits"), col("dcg_q6"),
-            lit(idcg).as("idcg_q6"),
-            expr(s"dcg_q6 * 1000000L DIV ${idcg}L").as("ndcg_q6"))
-      grade(jlTop, "jl16").unionAll(grade(pqTop, "pq_adc"))
-        .orderBy("variant")
-    }),
-    // MRR + recall@10 eval over a PROBE SET (round 13) — the multi-query
-    // companion of retrieval_eval_ndcg's single-probe grading, and the
-    // two metrics retrieval papers actually lead with: for each of the
-    // 10 probes (vec_id < 10), the truth is the exact shifted-L2 top-10
-    // (the same retrieval_eval_ndcg kernel) and the system under eval is
-    // the JL-16 projected ranking (embed_random_projection's sign
-    // matrix) — rr = 1/rank of the true nearest neighbor in the system
-    // list (0 if absent), recall@10 = |truth ∩ system| / 10, both
-    // averaged over probes as integer q6 (10⁶ DIV rank — every metric an
-    // exact long, zero floats). 100 TB shape: the 10-row probe tables
-    // ride broadcasts onto TWO single-pass scans (64-dim exact, 16-dim
-    // projected); per-probe top-10 via a probe-partitioned window over
-    // the scored stream; everything after lives on ≤200 rows. The oracle
-    // replays both rankings (shared quantize/sign-matrix SQL) and the
-    // same fixed-point fold.
-    "retrieval_eval_mrr" -> ((s, d) => {
-      val sv = shiftedVectors(s, d)
-      val probes = sv.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("pid"), col("sv0").as("pv"))
-      val wp = Window.partitionBy("pid").orderBy(asc("d2"), asc("vec_id"))
-      val truth = sv.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("pid"))
-        .select(col("pid"), col("vec_id"),
-          sqdCol(col("sv0"), col("pv")).as("d2"))
-        .withColumn("ern", row_number().over(wp)).filter(col("ern") <= 10)
-        .select("pid", "vec_id", "ern").localCheckpoint()
-      val projCols = (0 until JlOutDim).map { j =>
-        val signs = array((0 until JlInDim).map(i => lit(jlSign(i, j))): _*)
-        graft.functions.VectorOps.dot_product(col("sv0"), signs)
-          .cast("long").as(s"p$j")
-      }
-      val proj = sv.select(col("vec_id") +: projCols: _*)
-      val probeP = proj.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("pid") +:
-          (0 until JlOutDim).map(j => col(s"p$j").as(s"q$j")): _*)
-      val sys = proj.crossJoin(broadcast(probeP))
-        .filter(col("vec_id") =!= col("pid"))
-        .select(col("pid"), col("vec_id"),
-          (0 until JlOutDim).map(j =>
-            (col(s"p$j") - col(s"q$j")) * (col(s"p$j") - col(s"q$j")))
-            .reduce(_ + _).as("d2"))
-        .withColumn("srn", row_number().over(wp)).filter(col("srn") <= 10)
-        .select("pid", "vec_id", "srn").localCheckpoint()
-      val rr = truth.filter(col("ern") === 1)
-        .join(sys, Seq("pid", "vec_id"), "left")
-        .select(col("pid"),
-          coalesce(expr("1000000L DIV srn"), lit(0L)).as("rr_q6"))
-      val hits = truth.join(sys, Seq("pid", "vec_id"))
-        .groupBy("pid").agg(count(lit(1)).as("h"))
-      rr.join(hits, Seq("pid"), "left")
-        .select(col("pid"), col("rr_q6"),
-          coalesce(col("h"), lit(0L)).as("h"))
-        .agg(count(lit(1)).as("n_probes"),
-          expr("sum(rr_q6) DIV count(1)").as("mrr_q6"),
-          expr("sum(h) * 1000000L DIV (count(1) * 10)").as("recall10_q6"))
-    }),
-    // Int8 symmetric quantization of the embedding column (training-data
-    // pipeline op): per-vector scale = 127/max|x|, q_i = floor(x·scale+0.5)
-    // — the storage/serving compression step (4× smaller than float32).
-    // Zero shuffle: pure per-row array math; scale and q are exact IEEE
-    // (float→double exact, one multiply, half-up via floor(x+0.5) — the
-    // SAME formula in both engines, because round() half-even vs half-up
-    // conventions differ but floor does not). |q| ≤ 127 by construction:
-    // the max-magnitude component maps to exactly ±127, so no clamp.
-    // The checked output carries the quantized vector as a CSV string
-    // (array_join), not a raw array column: the driver's oracle harness
-    // sorts result frames with pandas before hashing, and array cells are
-    // unhashable there — representation change only, int8 math untouched.
-    "embed_quantize" -> ((s, d) => {
-      // nullif guards the all-zero vector (padding row, failed encode):
-      // 127/0 = Inf would make q = floor(0·Inf + 0.5) = NaN, and ANSI
-      // mode's int cast throws on NaN — a null scale nulls q/q_sum instead
-      embeddings(s, d)
-        .withColumn("scale", lit(127.0) /
-          nullif(array_max(transform(col("embedding"),
-            x => abs(x.cast("double")))), lit(0.0)))
-        .withColumn("q", transform(col("embedding"),
-          x => floor(x.cast("double") * col("scale") + 0.5).cast("int")))
-        .select(col("vec_id"), col("scale"),
-          array_join(col("q"), ",").as("q_csv"),
-          aggregate(col("q"), lit(0L), (acc, v) => acc + v).as("q_sum"))
-        .orderBy("vec_id")
-    }),
-    // Spherical k-means (Lloyd) centroid TRAINING — the step knn_ivf_coarse
-    // points at ("a production build would k-means the centroids"): K=8
-    // seeds, two unrolled Lloyd iterations (assign to max-cosine centroid →
-    // recenter to the normalized per-cell mean), then the trained cells'
-    // sizes + leading centroid coordinates as the report. Everything stays
-    // a single lazy plan — no per-iteration collect/count on the driver.
-    // Cross-engine float discipline: unit vectors and centroids are
-    // quantized to 1e-6 (so per-dim mean sums are EXACT decimals in both
-    // engines) and assignment similarity to 1e-4 with the c_id tiebreak
-    // (the knn discipline). 100 TB shape: assignment is a broadcast
-    // cross-join with map-side max-struct combine (N skinny rows cross the
-    // shuffle, not N×K); recentering aggregates 64·K cells. The group key
-    // carries the vector payload here for a one-shuffle plan; production
-    // would keep (id → cell) and co-partitioned vectors.
-    "kmeans_lloyd" -> ((s, d) => {
-      val (cents, assigned) = lloydTrain(s, d)
-      assigned
-        .groupBy("cell").agg(count(lit(1)).as("n_vectors"))
-        .join(cents.select(col("c_id").as("cell"),
-          round(element_at(col("c_v"), 1), 4).as("c0"),
-          round(element_at(col("c_v"), 2), 4).as("c1")), "cell")
-        .orderBy("cell")
-    }),
-    // The composed ANN-index BUILD: the trained centroids (same lloydTrain
-    // as kmeans_lloyd — one definition, the corpus_curation discipline)
-    // plus per-cell posting lists — sizes, id range, and the sorted head.
-    // This is the artifact knn_ivf_coarse queries against; at 100 TB the
-    // postings write out partitioned BY cell so a probe reads one
-    // partition. Sorted-prefix string keeps the list representation
-    // cross-engine hashable (§7.4.6).
-    "ivf_index_build" -> ((s, d) => {
-      val (_, assigned) = lloydTrain(s, d)
-      assigned.groupBy("cell")
-        .agg(count(lit(1)).as("n_vectors"),
-          min(col("vec_id")).as("min_vec"),
-          max(col("vec_id")).as("max_vec"),
-          array_join(transform(
-            slice(sort_array(collect_list(col("vec_id"))), 1, 8),
-            x => x.cast("string")), ",").as("posting_head"))
-        .orderBy("cell")
-    }),
-    // ANN scale path — banded sign-projection LSH: candidates collide in
-    // any of the 32 bands, then exact cosine re-ranks candidates only
-    // (rows-only check; LlmSpec asserts recall against brute force).
-    // 100 TB story: the bucket join touches candidate pairs, not all pairs;
-    // vectors are NOT replicated per band — only (vec_id, bucket) rows fan
-    // out 32×, and the two vector fetches are equi-joins on vec_id.
-    "knn_lsh_bucketed" -> ((s, d) => {
-      val planes = hyperplanes(Bands * BandBits, 64)
-      val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
-        .select(col("vec_id"), col("uv"))
-      val tagged = unit.select(col("vec_id"),
-        explode(lshBandBuckets(col("uv"), planes)).as("bucket"))
-      val cand = tagged.as("x").join(tagged.as("y"), Seq("bucket"))
-        .filter(col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-        .distinct()
-      val pairs = cand
-        .join(unit.select(col("vec_id").as("a_id"), col("uv").as("a_v")), "a_id")
-        .join(unit.select(col("vec_id").as("b_id"), col("uv").as("b_v")), "b_id")
-        .select(col("a_id"), col("b_id"), dotD(col("a_v"), col("b_v")).as("sim"))
-      // top-100 most similar candidate pairs (rank, not threshold: stays
-      // non-empty at any SF; total order via PK tiebreak)
-      pairs.orderBy(desc("sim"), asc("a_id"), asc("b_id")).limit(100)
-        .select("a_id", "b_id")
-    }),
-    // NN-Descent k-NN graph (round 12) — see nnDescent's scaladoc: the
-    // graph-based ANN candidate generator (neighbors-of-neighbors local
-    // joins over a k-best list), the fourth family next to LSH bands, IVF
-    // cells and PQ codes. Engine-local float cosine → unit-only key;
-    // LlmSpec measures recall@10 vs brute force and asserts the descent
-    // property (final recall strictly above the hash-init recall).
-    "knn_nndescent" -> ((s, d) =>
-      nnDescent(embeddings(s, d)))
-  )
-
-  def oracle: Map[String, String] = Map(
-    "knn_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |sims AS (
-        |  SELECT vec_id,
-        |         round(list_cosine_similarity(embedding, (SELECT qv FROM q)), 4) AS sim
-        |  FROM embeddings WHERE vec_id <> 0)
-        |SELECT rn, vec_id FROM (
-        |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id) AS rn
-        |  FROM sims) t
-        |WHERE rn <= 10 ORDER BY rn""".stripMargin,
-    // greedy MMR replayed as chained CTEs (one per selection step). The
-    // emitted rel forces BIT-parity of the cosine itself, so the oracle
-    // mirrors Spark's exact shape in DOUBLE — dot/(norm·norm) over
-    // double-cast lists via list_inner_product (the kmeans recipe);
-    // list_cosine_similarity would compute in FLOAT on these FLOAT[]
-    // fixtures and drift at the 8th decimal. 0.7/0.3 CAST to DOUBLE
-    // (bare decimals are DECIMAL in DuckDB).
-    "retrieval_mmr" -> {
-      val steps = (2 to 5).map { t =>
-        s"""s$t AS (SELECT * FROM s${t - 1} UNION ALL (
-           |  SELECT c.vec_id, c.rel, $t AS step FROM cand c
-           |  JOIN sims ON sims.a_id = c.vec_id
-           |  JOIN s${t - 1} p ON sims.b_id = p.vec_id
-           |  WHERE c.vec_id NOT IN (SELECT vec_id FROM s${t - 1})
-           |  GROUP BY c.vec_id, c.rel
-           |  ORDER BY CAST(0.7 AS DOUBLE) * c.rel
-           |           - CAST(0.3 AS DOUBLE) * MAX(sims.sim) DESC, c.vec_id
-           |  LIMIT 1))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ed AS (
-         |  SELECT vec_id,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
-         |q AS (SELECT e AS qe FROM ed WHERE vec_id = 0),
-         |cand AS (
-         |  SELECT vec_id, e,
-         |         round(list_inner_product(e, (SELECT qe FROM q))
-         |               / (sqrt(list_inner_product(e, e))
-         |                  * sqrt(list_inner_product((SELECT qe FROM q),
-         |                                            (SELECT qe FROM q)))),
-         |               4) AS rel
-         |  FROM ed WHERE vec_id <> 0
-         |  ORDER BY rel DESC, vec_id LIMIT 20),
-         |sims AS (
-         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |         round(list_inner_product(a.e, b.e)
-         |               / (sqrt(list_inner_product(a.e, a.e))
-         |                  * sqrt(list_inner_product(b.e, b.e))), 4) AS sim
-         |  FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
-         |s1 AS (SELECT vec_id, rel, 1 AS step FROM cand
-         |       ORDER BY rel DESC, vec_id LIMIT 1),
-         |$steps
-         |SELECT step, vec_id, rel FROM s5 ORDER BY step""".stripMargin
-    },
-    // each prefix ranking is the knn_cosine_topk oracle on sliced lists;
-    // recall counts membership in the full-dim top-10
-    "knn_mrl_prefix_recall" -> {
-      def top(p: Int): String =
-        s"""SELECT $p AS prefix_dim, vec_id FROM (
-           |  SELECT vec_id, row_number() OVER (ORDER BY
-           |    round(list_cosine_similarity(list_slice(embedding, 1, $p),
-           |      (SELECT list_slice(embedding, 1, $p) FROM embeddings
-           |       WHERE vec_id = 0)), 4) DESC, vec_id) AS rn
-           |  FROM embeddings WHERE vec_id <> 0) t WHERE rn <= 10""".stripMargin
-      s"""WITH allp AS (
-         |${top(8)}
-         |UNION ALL
-         |${top(16)}
-         |UNION ALL
-         |${top(32)}
-         |UNION ALL
-         |${top(64)}),
-         |ref AS (SELECT vec_id FROM (${top(64)}) f)
-         |SELECT prefix_dim, COUNT(*) AS k,
-         |       CAST(SUM(CASE WHEN vec_id IN (SELECT vec_id FROM ref)
-         |                     THEN 1 ELSE 0 END) AS BIGINT) AS recall10
-         |FROM allp GROUP BY prefix_dim ORDER BY prefix_dim""".stripMargin
-    },
-    "knn_pairs_label" ->
-      """WITH pairs AS (
-        |  SELECT a.label, a.vec_id AS a_id, b.vec_id AS b_id,
-        |         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 200)
-        |SELECT a_id, b_id, label FROM (
-        |  SELECT a_id, b_id, label,
-        |         row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rn
-        |  FROM pairs) t
-        |WHERE rn = 1 ORDER BY a_id""".stripMargin,
-    // the same top-1 construction, aggregated twice — in-degree per
-    // chosen neighbour, then the histogram
-    "knn_hubness_audit" ->
-      """WITH pairs AS (
-        |  SELECT a.label, a.vec_id AS a_id, b.vec_id AS b_id,
-        |         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 200),
-        |t1 AS (SELECT b_id FROM (
-        |  SELECT b_id,
-        |         row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rn
-        |  FROM pairs) t WHERE rn = 1),
-        |ind AS (SELECT b_id, COUNT(*) AS indeg FROM t1 GROUP BY b_id)
-        |SELECT indeg, COUNT(*) AS n_nodes FROM ind GROUP BY indeg
-        |ORDER BY indeg""".stripMargin,
-    // the top-1 table is the knn_pairs_label construction with both sides
-    // probe-bounded; the mutual filter is a self-join on the reversed key
-    "knn_mutual_pairs" ->
-      """WITH pairs AS (
-        |  SELECT a.label, a.vec_id AS a_id, b.vec_id AS b_id,
-        |         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 200 AND b.vec_id < 200),
-        |nn AS (
-        |  SELECT a_id, b_id, label FROM (
-        |    SELECT a_id, b_id, label,
-        |           row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rn
-        |    FROM pairs) t
-        |  WHERE rn = 1)
-        |SELECT x.a_id, x.b_id, x.label
-        |FROM nn x JOIN nn y ON x.a_id = y.b_id AND x.b_id = y.a_id
-        |WHERE x.a_id < x.b_id
-        |ORDER BY x.a_id""".stripMargin,
-    "dedup_embedding_cosine" ->
-      """SELECT a.vec_id, MIN(b.vec_id) AS keeper
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND b.vec_id < a.vec_id
-        |WHERE list_cosine_similarity(a.embedding, b.embedding) > 0.3498
-        |GROUP BY a.vec_id ORDER BY a.vec_id""".stripMargin,
-    // the assignment replays knn_ivf_coarse's deterministic ranking; the
-    // within-cell dedup is the dedup_embedding_cosine construction with
-    // the cell in place of the label
-    // the adaptive cell count K = max(8, ⌈√n⌉ // 8) is derived in SQL
-    // from the same exact count (sqrt/ceil IEEE-exact — fixture K = 8)
-    "dedup_semantic_cells" ->
-      """WITH kc AS (
-        |  SELECT GREATEST(8, CAST(ceil(sqrt(CAST(COUNT(*) AS DOUBLE)))
-        |                          AS BIGINT) // 8) AS k
-        |  FROM embeddings),
-        |cent AS (
-        |  SELECT vec_id AS c_id, embedding AS c_v
-        |  FROM embeddings, kc WHERE vec_id < kc.k),
-        |assign AS (
-        |  SELECT vec_id, embedding, c_id,
-        |         row_number() OVER (PARTITION BY vec_id
-        |           ORDER BY round(list_cosine_similarity(embedding, c_v), 4)
-        |                    DESC, c_id) AS arn
-        |  FROM embeddings CROSS JOIN cent),
-        |cl AS (
-        |  SELECT vec_id, embedding, c_id AS cell
-        |  FROM assign WHERE arn = 1)
-        |SELECT a.vec_id, MIN(b.vec_id) AS keeper
-        |FROM cl a JOIN cl b ON a.cell = b.cell AND b.vec_id < a.vec_id
-        |WHERE list_cosine_similarity(a.embedding, b.embedding) > 0.4458
-        |GROUP BY a.vec_id ORDER BY a.vec_id""".stripMargin,
-    // every score is an exact integer, so list_dot_product over the
-    // integer-valued quantized lists agrees bit-for-bit
-    "knn_quantized_topk" ->
-      s"""WITH $OracleInt8Vectors,
-        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0)
-        |SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
-        |FROM q, p WHERE q.vec_id <> 0
-        |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // the same quantization CTE; dims unnested by range, the shifted-mean
-    // and Cauchy-Schwarz-non-negative variance forms keep every // on
-    // non-negative operands
-    "embed_dim_stats" ->
-      s"""WITH $OracleInt8Vectors,
-        |per AS (
-        |  SELECT CAST(t.i AS INT) AS dim,
-        |         CAST(qv[CAST(t.i AS INT) + 1] AS BIGINT) AS x
-        |  FROM q, UNNEST(range(0, 64)) AS t(i))
-        |SELECT dim, COUNT(*) AS n,
-        |       CAST(SUM(x) AS BIGINT) AS s1,
-        |       CAST(SUM(x * x) AS BIGINT) AS s2,
-        |       MIN(x) AS min_q, MAX(x) AS max_q,
-        |       CAST((SUM(x) + 127 * COUNT(*)) * 1000000 // COUNT(*)
-        |            - 1000000 * 127 AS BIGINT) AS mean_q6,
-        |       CAST((CAST(COUNT(*) AS HUGEINT) * SUM(x * x)
-        |             - CAST(SUM(x) AS HUGEINT) * SUM(x)) * 1000000
-        |            // (CAST(COUNT(*) AS HUGEINT) * COUNT(*)) AS BIGINT)
-        |         AS var_q6
-        |FROM per GROUP BY dim ORDER BY dim""".stripMargin,
-    // same quantization CTE; the sign matrix is derived IN SQL from md5
-    // parity of "i|j" (the Scala side derives its literal matrix from the
-    // same strings — see jlSign), each projection an exact-integer
-    // list_dot_product
-    "embed_random_projection" -> {
-      val pCols = (0 until JlOutDim).map { j =>
-        s"""CAST(list_dot_product(qv, list_transform(range(0, $JlInDim),
-           |           i -> CASE WHEN ascii(substr(md5(i || '|' || $j), 1, 1))
-           |                          % 2 = 0
-           |                THEN 1.0 ELSE -1.0 END)) AS BIGINT) AS p$j"""
-          .stripMargin
-      }.mkString(",\n        ")
-      s"""WITH $OracleInt8Vectors
-        |SELECT vec_id,
-        |        $pCols
-        |FROM q ORDER BY vec_id""".stripMargin
-    },
-    // full replay of the deterministic PQ pipeline in the +127-shifted
-    // integer domain: subvector split, seed assignment, one-round integer
-    // centroids, re-encode, ADC table, lookup-sum top-10 — every distance
-    // an exact BIGINT (CTE prefix shared with retrieval_eval_ndcg)
-    "knn_pq_adc" ->
-      s"""WITH $PqOracleCtes
-        |SELECT row_number() OVER (ORDER BY adc_d2, vec_id) AS rn,
-        |       vec_id, adc_d2
-        |FROM (SELECT * FROM scored ORDER BY adc_d2, vec_id LIMIT 10) t
-        |ORDER BY rn""".stripMargin,
-    // the shared PQ CTE prefix proposes the top-100 pool; the exact
-    // shifted-L2 kernel (the retrieval_eval_ndcg `exd` spelling) reranks
-    // only the pool
-    "knn_pq_rerank" ->
-      s"""WITH $PqOracleCtes,
-        |cand AS (
-        |  SELECT vec_id FROM (SELECT * FROM scored
-        |                      ORDER BY adc_d2, vec_id LIMIT 100) t),
-        |exd AS (
-        |  SELECT a.vec_id,
-        |         CAST(list_aggregate(list_transform(range(1, 65),
-        |           i -> (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])
-        |              * (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])),
-        |           'sum') AS BIGINT) AS d2
-        |  FROM q a JOIN cand USING (vec_id),
-        |       (SELECT sv0 FROM q WHERE vec_id = 0) p)
-        |SELECT row_number() OVER (ORDER BY d2, vec_id) AS rn, vec_id, d2
-        |FROM (SELECT * FROM exd ORDER BY d2, vec_id LIMIT 10) t
-        |ORDER BY rn""".stripMargin,
-    // the shared PQ CTE prefix restricted to the probe's IVF cell — the
-    // cell CTEs replay knn_ivf_coarse's assignment verbatim
-    "knn_ivf_pq" ->
-      s"""WITH $PqOracleCtes,
-        |icent AS (
-        |  SELECT vec_id AS c_id, embedding AS c_v FROM embeddings
-        |  WHERE vec_id < 8),
-        |iassign AS (
-        |  SELECT e.vec_id, c.c_id,
-        |         round(list_cosine_similarity(e.embedding, c.c_v), 4) AS csim
-        |  FROM embeddings e CROSS JOIN icent c),
-        |icl AS (
-        |  SELECT vec_id, c_id AS cell FROM (
-        |    SELECT vec_id, c_id,
-        |           row_number() OVER (PARTITION BY vec_id
-        |                              ORDER BY csim DESC, c_id) AS arn
-        |    FROM iassign) t
-        |  WHERE arn = 1),
-        |mem AS (
-        |  SELECT vec_id FROM icl
-        |  WHERE cell = (SELECT cell FROM icl WHERE vec_id = 0)
-        |    AND vec_id <> 0)
-        |SELECT row_number() OVER (ORDER BY adc_d2, vec_id) AS rn,
-        |       vec_id, adc_d2
-        |FROM (SELECT s.vec_id, s.adc_d2 FROM scored s JOIN mem USING (vec_id)
-        |      ORDER BY adc_d2, vec_id LIMIT 10) t
-        |ORDER BY rn""".stripMargin,
-    // grades the SAME pq pipeline (shared CTE prefix) and an independent
-    // in-SQL JL-16 ranking against the exact shifted-L2 top-10; discount
-    // weights are the ten precomputed ⌊1e6/log2(i+1)+0.5⌋ constants
-    "retrieval_eval_ndcg" ->
-      s"""WITH $PqOracleCtes,
-        |pqtop AS (
-        |  SELECT vec_id, row_number() OVER (ORDER BY adc_d2, vec_id) AS rn
-        |  FROM (SELECT * FROM scored ORDER BY adc_d2, vec_id LIMIT 10) t),
-        |exd AS (
-        |  SELECT a.vec_id,
-        |         CAST(list_aggregate(list_transform(range(1, 65),
-        |           i -> (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])
-        |              * (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])),
-        |           'sum') AS BIGINT) AS d2
-        |  FROM q a, (SELECT sv0 FROM q WHERE vec_id = 0) p
-        |  WHERE a.vec_id <> 0),
-        |extop AS (
-        |  SELECT vec_id, CAST(11 - rn AS BIGINT) AS rel FROM (
-        |    SELECT vec_id, row_number() OVER (ORDER BY d2, vec_id) AS rn
-        |    FROM (SELECT * FROM exd ORDER BY d2, vec_id LIMIT 10) t0) t),
-        |sgn AS (
-        |  SELECT CAST(j AS INT) AS j,
-        |         list_transform(range(0, 64), i ->
-        |           CASE WHEN ascii(substr(md5(i || '|' || j), 1, 1)) % 2 = 0
-        |                THEN 1.0 ELSE -1.0 END) AS sg
-        |  FROM range(0, 16) t(j)),
-        |pj AS (
-        |  SELECT q.vec_id, sgn.j,
-        |         CAST(list_dot_product(q.sv0, sgn.sg) AS BIGINT) AS p
-        |  FROM q, sgn),
-        |jld AS (
-        |  SELECT a.vec_id, SUM((a.p - b.p) * (a.p - b.p)) AS d2
-        |  FROM pj a JOIN (SELECT j, p FROM pj WHERE vec_id = 0) b USING (j)
-        |  WHERE a.vec_id <> 0 GROUP BY 1),
-        |jltop AS (
-        |  SELECT vec_id, row_number() OVER (ORDER BY d2, vec_id) AS rn
-        |  FROM (SELECT * FROM jld ORDER BY d2, vec_id LIMIT 10) t),
-        |w AS (
-        |  SELECT CAST(i AS INT) AS i,
-        |         CAST(CASE i WHEN 1 THEN 1000000 WHEN 2 THEN 630930
-        |           WHEN 3 THEN 500000 WHEN 4 THEN 430677 WHEN 5 THEN 386853
-        |           WHEN 6 THEN 356207 WHEN 7 THEN 333333 WHEN 8 THEN 315465
-        |           WHEN 9 THEN 301030 ELSE 289065 END AS BIGINT) AS w
-        |  FROM range(1, 11) t(i)),
-        |cand AS (
-        |  SELECT 'jl16' AS variant, rn, vec_id FROM jltop
-        |  UNION ALL SELECT 'pq_adc', rn, vec_id FROM pqtop),
-        |graded AS (
-        |  SELECT cand.variant,
-        |         COUNT(e.vec_id) AS n_hits,
-        |         SUM(COALESCE(e.rel, 0) * w.w) AS dcg_q6
-        |  FROM cand JOIN w ON w.i = cand.rn
-        |  LEFT JOIN extop e ON e.vec_id = cand.vec_id
-        |  GROUP BY 1),
-        |idcg AS (SELECT SUM((11 - i) * w) AS idcg_q6 FROM w)
-        |SELECT variant, CAST(n_hits AS BIGINT) AS n_hits,
-        |       CAST(dcg_q6 AS BIGINT) AS dcg_q6,
-        |       CAST(idcg_q6 AS BIGINT) AS idcg_q6,
-        |       CAST(dcg_q6 * 1000000 // idcg_q6 AS BIGINT) AS ndcg_q6
-        |FROM graded, idcg ORDER BY variant""".stripMargin,
-    // both rankings replayed over the probe set (shared quantize/shift +
-    // sign-matrix CTEs), then the same integer q6 MRR/recall fold
-    "retrieval_eval_mrr" ->
-      s"""WITH $OracleInt8Scale,
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5) + 127.0)
-        |           AS sv0
-        |  FROM embeddings, m),
-        |exd AS (
-        |  SELECT p.vec_id AS pid, a.vec_id,
-        |         CAST(list_aggregate(list_transform(range(1, 65),
-        |           i -> (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])
-        |              * (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])),
-        |           'sum') AS BIGINT) AS d2
-        |  FROM q a, (SELECT vec_id, sv0 FROM q WHERE vec_id < 10) p
-        |  WHERE a.vec_id <> p.vec_id),
-        |truth AS (
-        |  SELECT pid, vec_id, ern FROM (
-        |    SELECT pid, vec_id, row_number() OVER (PARTITION BY pid
-        |      ORDER BY d2, vec_id) AS ern FROM exd) t
-        |  WHERE ern <= 10),
-        |sgn AS (
-        |  SELECT CAST(j AS INT) AS j,
-        |         list_transform(range(0, 64), i ->
-        |           CASE WHEN ascii(substr(md5(i || '|' || j), 1, 1)) % 2 = 0
-        |                THEN 1.0 ELSE -1.0 END) AS sg
-        |  FROM range(0, 16) t(j)),
-        |pj AS (
-        |  SELECT q.vec_id, sgn.j,
-        |         CAST(list_dot_product(q.sv0, sgn.sg) AS BIGINT) AS p
-        |  FROM q, sgn),
-        |jld AS (
-        |  SELECT b.pid, a.vec_id, SUM((a.p - b.p) * (a.p - b.p)) AS d2
-        |  FROM pj a JOIN (SELECT vec_id AS pid, j, p FROM pj
-        |                  WHERE vec_id < 10) b ON a.j = b.j
-        |  WHERE a.vec_id <> b.pid GROUP BY 1, 2),
-        |sys AS (
-        |  SELECT pid, vec_id, srn FROM (
-        |    SELECT pid, vec_id, row_number() OVER (PARTITION BY pid
-        |      ORDER BY d2, vec_id) AS srn FROM jld) t
-        |  WHERE srn <= 10),
-        |rr AS (
-        |  SELECT t.pid, COALESCE(1000000 // s.srn, 0) AS rr_q6
-        |  FROM truth t LEFT JOIN sys s
-        |    ON s.pid = t.pid AND s.vec_id = t.vec_id
-        |  WHERE t.ern = 1),
-        |hits AS (
-        |  SELECT t.pid, COUNT(*) AS h
-        |  FROM truth t JOIN sys s ON s.pid = t.pid AND s.vec_id = t.vec_id
-        |  GROUP BY t.pid)
-        |SELECT COUNT(*) AS n_probes,
-        |       CAST(SUM(rr_q6) // COUNT(*) AS BIGINT) AS mrr_q6,
-        |       CAST(SUM(COALESCE(h, 0)) * 1000000 // (COUNT(*) * 10)
-        |         AS BIGINT) AS recall10_q6
-        |FROM rr LEFT JOIN hits USING (pid)""".stripMargin,
-    // same quantization pipeline, threshold filter instead of LIMIT — the
-    // scores are exact integers so the >= 10000 cut cannot straddle noise
-    "knn_radius_quantized" ->
-      s"""WITH $OracleInt8Vectors,
-        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
-        |scored AS (
-        |  SELECT q.vec_id,
-        |         CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
-        |  FROM q, p WHERE q.vec_id <> 0)
-        |SELECT vec_id, score FROM scored WHERE score >= 10000
-        |ORDER BY score DESC, vec_id ASC""".stripMargin,
-    // same global-scale quantization CTE (labels carried through), then
-    // the MaxSim double aggregation — max per (label, query token), sum
-    // per label; every dot an exact BIGINT
-    "retrieval_maxsim" ->
-      s"""WITH $OracleInt8Scale,
-        |q AS (
-        |  SELECT vec_id, label,
-        |         list_transform(embedding,
-        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
-        |  FROM embeddings, m),
-        |qt AS (SELECT vec_id AS q_id, qv AS qv_q FROM q WHERE vec_id < 4),
-        |dots AS (
-        |  SELECT q.label, qt.q_id,
-        |         CAST(list_dot_product(q.qv, qt.qv_q) AS BIGINT) AS dot
-        |  FROM q, qt WHERE q.vec_id >= 4),
-        |best AS (SELECT label, q_id, MAX(dot) AS best
-        |         FROM dots GROUP BY label, q_id)
-        |SELECT label, CAST(SUM(best) AS BIGINT) AS maxsim
-        |FROM best GROUP BY label
-        |ORDER BY maxsim DESC, label ASC""".stripMargin,
-    // the same greedy farthest-first recurrence, 3 unrolled steps (the
-    // bounded-recurrence oracle precedent): every distance an exact
-    // BIGINT, argmax and assignment tie rules spelled identically
-    "coreset_kcenter" -> {
-      val steps = (1 to 3).map { i =>
-        s"""d$i AS (
-           |  SELECT q2.vec_id,
-           |         MIN(q2.n2 + c.cn2
-           |             - 2 * CAST(list_dot_product(q2.qv, c.cv) AS BIGINT))
-           |           AS dmin
-           |  FROM q2, c$i c GROUP BY q2.vec_id),
-           |p${i + 1} AS (SELECT vec_id FROM d$i
-           |        ORDER BY dmin DESC, vec_id ASC LIMIT 1),
-           |c${i + 1} AS (SELECT * FROM c$i UNION ALL
-           |        SELECT q2.vec_id, q2.qv, q2.n2 FROM q2
-           |        JOIN p${i + 1} USING (vec_id))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $OracleInt8Vectors,
-         |q2 AS (SELECT vec_id, qv,
-         |              CAST(list_dot_product(qv, qv) AS BIGINT) AS n2
-         |       FROM q),
-         |c1 AS (SELECT vec_id AS c_id, qv AS cv, n2 AS cn2
-         |       FROM q2 WHERE vec_id = 0),
-         |$steps,
-         |dist AS (
-         |  SELECT q2.vec_id, c.c_id,
-         |         q2.n2 + c.cn2
-         |         - 2 * CAST(list_dot_product(q2.qv, c.cv) AS BIGINT) AS d2
-         |  FROM q2, c4 c),
-         |r AS (SELECT vec_id, c_id, d2,
-         |        ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                           ORDER BY d2 ASC, c_id ASC) AS rn
-         |      FROM dist)
-         |SELECT vec_id, c_id AS center, d2 FROM r WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin
-    },
-    // exact IEEE agreement: float→double casts, one multiply, floor-half-up
-    // — no round() anywhere, so engine rounding conventions can't diverge
-    "embed_quantize" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |         127.0 / nullif(list_max(list_transform(embedding,
-        |                          x -> abs(CAST(x AS DOUBLE)))), 0.0) AS scale
-        |  FROM embeddings),
-        |qq AS (
-        |  SELECT vec_id, scale,
-        |         list_transform(embedding,
-        |           x -> CAST(floor(CAST(x AS DOUBLE) * scale + 0.5) AS INT)) AS q
-        |  FROM s)
-        |SELECT vec_id, scale, array_to_string(q, ',') AS q_csv,
-        |       CAST(list_aggregate(q, 'sum') AS BIGINT) AS q_sum
-        |FROM qq ORDER BY vec_id""".stripMargin,
-    // two unrolled Lloyd iterations; the assignment replays as a per-vector
-    // row_number argmax (semantics, not the Spark plan), the means as exact
-    // DECIMAL(18,6) sums of the 1e-6-quantized unit vectors
-    "kmeans_lloyd" ->
-      """WITH ud AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |u AS (
-        |  SELECT vec_id,
-        |         list_transform(e, x -> round(x / sqrt(list_inner_product(e, e)), 6)) AS uv
-        |  FROM ud),
-        |c0 AS (SELECT vec_id AS c_id, uv AS c_v FROM u WHERE vec_id < 8),
-        |a1 AS (
-        |  SELECT vec_id, uv, cell FROM (
-        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
-        |           row_number() OVER (PARTITION BY u.vec_id
-        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
-        |    FROM u CROSS JOIN c0 c) t
-        |  WHERE rn = 1),
-        |s1 AS (
-        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
-        |  FROM a1 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
-        |c1m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s1 GROUP BY cell),
-        |c1 AS (
-        |  SELECT cell AS c_id,
-        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
-        |  FROM c1m),
-        |a2 AS (
-        |  SELECT vec_id, uv, cell FROM (
-        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
-        |           row_number() OVER (PARTITION BY u.vec_id
-        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
-        |    FROM u CROSS JOIN c1 c) t
-        |  WHERE rn = 1),
-        |s2 AS (
-        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
-        |  FROM a2 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
-        |c2m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s2 GROUP BY cell),
-        |c2 AS (
-        |  SELECT cell AS c_id,
-        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
-        |  FROM c2m),
-        |a3 AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT u.vec_id, c.c_id AS cell,
-        |           row_number() OVER (PARTITION BY u.vec_id
-        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
-        |    FROM u CROSS JOIN c2 c) t
-        |  WHERE rn = 1)
-        |SELECT a.cell, COUNT(*) AS n_vectors, c.c0, c.c1
-        |FROM a3 a
-        |JOIN (SELECT c_id, round(c_v[1], 4) AS c0, round(c_v[2], 4) AS c1 FROM c2) c
-        |  ON a.cell = c.c_id
-        |GROUP BY a.cell, c.c0, c.c1
-        |ORDER BY a.cell""".stripMargin,
-    // same CTE chain as kmeans_lloyd through the final assignment; the
-    // report is the per-cell posting summary instead of the centroid head
-    "ivf_index_build" ->
-      """WITH ud AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |u AS (
-        |  SELECT vec_id,
-        |         list_transform(e, x -> round(x / sqrt(list_inner_product(e, e)), 6)) AS uv
-        |  FROM ud),
-        |c0 AS (SELECT vec_id AS c_id, uv AS c_v FROM u WHERE vec_id < 8),
-        |a1 AS (
-        |  SELECT vec_id, uv, cell FROM (
-        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
-        |           row_number() OVER (PARTITION BY u.vec_id
-        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
-        |    FROM u CROSS JOIN c0 c) t
-        |  WHERE rn = 1),
-        |s1 AS (
-        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
-        |  FROM a1 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
-        |c1m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s1 GROUP BY cell),
-        |c1 AS (
-        |  SELECT cell AS c_id,
-        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
-        |  FROM c1m),
-        |a2 AS (
-        |  SELECT vec_id, uv, cell FROM (
-        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
-        |           row_number() OVER (PARTITION BY u.vec_id
-        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
-        |    FROM u CROSS JOIN c1 c) t
-        |  WHERE rn = 1),
-        |s2 AS (
-        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
-        |  FROM a2 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
-        |c2m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s2 GROUP BY cell),
-        |c2 AS (
-        |  SELECT cell AS c_id,
-        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
-        |  FROM c2m),
-        |a3 AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT u.vec_id, c.c_id AS cell,
-        |           row_number() OVER (PARTITION BY u.vec_id
-        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
-        |    FROM u CROSS JOIN c2 c) t
-        |  WHERE rn = 1)
-        |SELECT cell, COUNT(*) AS n_vectors,
-        |       MIN(vec_id) AS min_vec, MAX(vec_id) AS max_vec,
-        |       array_to_string(list(vec_id ORDER BY vec_id)[1:8], ',') AS posting_head
-        |FROM a3 GROUP BY cell ORDER BY cell""".stripMargin,
-    "knn_ivf_coarse" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS c_id, embedding AS c_v FROM embeddings WHERE vec_id < 8),
-        |assigned AS (
-        |  SELECT e.vec_id, c.c_id,
-        |         round(list_cosine_similarity(e.embedding, c.c_v), 4) AS csim
-        |  FROM embeddings e CROSS JOIN cent c),
-        |clustered AS (
-        |  SELECT vec_id, c_id AS cell FROM (
-        |    SELECT vec_id, c_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, c_id) AS arn
-        |    FROM assigned) t
-        |  WHERE arn = 1),
-        |sims AS (
-        |  SELECT e.vec_id,
-        |         round(list_cosine_similarity(e.embedding,
-        |           (SELECT embedding FROM embeddings WHERE vec_id = 0)), 4) AS sim
-        |  FROM embeddings e
-        |  JOIN clustered c ON e.vec_id = c.vec_id
-        |  WHERE c.cell = (SELECT cell FROM clustered WHERE vec_id = 0)
-        |    AND e.vec_id <> 0)
-        |SELECT rn, vec_id FROM (
-        |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id) AS rn
-        |  FROM sims) t
-        |WHERE rn <= 10 ORDER BY rn""".stripMargin,
-    // same assignment replay as knn_ivf_coarse; the probe's cell set is
-    // the arn <= 2 ranking instead of arn = 1
-    "knn_ivf_multiprobe" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS c_id, embedding AS c_v FROM embeddings WHERE vec_id < 8),
-        |assigned AS (
-        |  SELECT e.vec_id, c.c_id,
-        |         round(list_cosine_similarity(e.embedding, c.c_v), 4) AS csim
-        |  FROM embeddings e CROSS JOIN cent c),
-        |ranked AS (
-        |  SELECT vec_id, c_id,
-        |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, c_id) AS arn
-        |  FROM assigned),
-        |clustered AS (
-        |  SELECT vec_id, c_id AS cell FROM ranked WHERE arn = 1),
-        |pcells AS (
-        |  SELECT c_id AS cell FROM ranked WHERE vec_id = 0 AND arn <= 2),
-        |sims AS (
-        |  SELECT e.vec_id,
-        |         round(list_cosine_similarity(e.embedding,
-        |           (SELECT embedding FROM embeddings WHERE vec_id = 0)), 4) AS sim
-        |  FROM embeddings e
-        |  JOIN clustered c ON e.vec_id = c.vec_id
-        |  JOIN pcells p ON c.cell = p.cell
-        |  WHERE e.vec_id <> 0)
-        |SELECT rn, vec_id FROM (
-        |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id) AS rn
-        |  FROM sims) t
-        |WHERE rn <= 10 ORDER BY rn""".stripMargin,
-    // the same cent/ranked/clustered CTEs; each nprobe's top-10 replays
-    // the multiprobe oracle with its own pcells cut, the reference is the
-    // knn_cosine_topk exact ranking
-    "knn_ivf_recall_audit" -> {
+    }, oracle =
+      // the same cent/ranked/clustered CTEs; each nprobe's top-10 replays
+      // the multiprobe oracle with its own pcells cut, the reference is the
+      // knn_cosine_topk exact ranking
+      {
       def ivfTop(np: Int): String =
         s"""SELECT $np AS nprobe, vec_id FROM (
            |  SELECT vec_id, row_number() OVER (ORDER BY sim DESC, vec_id)
@@ -2254,6 +1407,831 @@ object Similarity {
          |       MIN(cost.candidates) AS candidates
          |FROM allp a JOIN cost ON a.nprobe = cost.nprobe
          |GROUP BY a.nprobe ORDER BY a.nprobe""".stripMargin
-    }
+    }),
+    // Per-dimension embedding stats (round 14c) — the PCA-lite audit run
+    // before trusting/compressing an embedding column: which dimensions
+    // carry variance and which are dead (a collapsed dim means the
+    // encoder wasted capacity; a dominant one distorts cosine). Runs in
+    // the shared int8 space (quantizedVectors — ONE global symmetric
+    // scale), so every sum is an exact integer and the report is
+    // hash-exact with zero float discipline. Negative-safe q6: the mean
+    // divides the +127-shifted sum (DIV vs // diverge on negatives —
+    // SURVEY §7.4), then shifts back exactly; the variance numerator
+    // n·s2 − s1² is ≥ 0 by Cauchy-Schwarz. DECIMAL(38,0) products (n·s2
+    // passes 2⁶³ near 10⁹ vectors; the mean numerator (s1+127n)·10⁶
+    // would pass it near 3.6·10¹⁰, so it rides DECIMAL too — round-15
+    // advice fix, same discipline for both moments). 100 TB: one
+    // expression-level
+    // posexplode + a 64-group map-side-combinable agg — nothing wider
+    // than (dim, x) shuffles, and only 64 aggregate rows survive.
+    Query("embed_dim_stats", (s, d) => {
+      val per = quantizedVectors(s, d)
+        .select(posexplode(col("qv")).as(Seq("dim", "x")))
+        .select(col("dim"), col("x").cast("long").as("x"))
+      per.groupBy("dim")
+        .agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
+          sum(col("x") * col("x")).as("s2"),
+          min(col("x")).cast("long").as("min_q"),
+          max(col("x")).cast("long").as("max_q"))
+        .select(col("dim"), col("n"), col("s1"), col("s2"),
+          col("min_q"), col("max_q"),
+          expr("CAST(CAST(s1 + 127 * n AS DECIMAL(38,0)) * 1000000 " +
+            "DIV n AS BIGINT) - 1000000 * 127")
+            .as("mean_q6"),
+          expr("CAST((CAST(n AS DECIMAL(38,0)) * s2 - " +
+            "CAST(s1 AS DECIMAL(38,0)) * s1) * 1000000 DIV " +
+            "(CAST(n AS DECIMAL(38,0)) * n) AS BIGINT)").as("var_q6"))
+        .orderBy("dim")
+    }, oracle =
+      // the same quantization CTE; dims unnested by range, the shifted-mean
+      // and Cauchy-Schwarz-non-negative variance forms keep every // on
+      // non-negative operands
+      s"""WITH $OracleInt8Vectors,
+        |per AS (
+        |  SELECT CAST(t.i AS INT) AS dim,
+        |         CAST(qv[CAST(t.i AS INT) + 1] AS BIGINT) AS x
+        |  FROM q, UNNEST(range(0, 64)) AS t(i))
+        |SELECT dim, COUNT(*) AS n,
+        |       CAST(SUM(x) AS BIGINT) AS s1,
+        |       CAST(SUM(x * x) AS BIGINT) AS s2,
+        |       MIN(x) AS min_q, MAX(x) AS max_q,
+        |       CAST((SUM(x) + 127 * COUNT(*)) * 1000000 // COUNT(*)
+        |            - 1000000 * 127 AS BIGINT) AS mean_q6,
+        |       CAST((CAST(COUNT(*) AS HUGEINT) * SUM(x * x)
+        |             - CAST(SUM(x) AS HUGEINT) * SUM(x)) * 1000000
+        |            // (CAST(COUNT(*) AS HUGEINT) * COUNT(*)) AS BIGINT)
+        |         AS var_q6
+        |FROM per GROUP BY dim ORDER BY dim""".stripMargin),
+    // Quantized retrieval — the production serving path embed_quantize
+    // (below) prepares for: top-k by INTEGER dot product over int8
+    // vectors. One GLOBAL symmetric scale (corpus max-abs, a 1-row
+    // broadcast) instead of per-vector scales, so integer scores are
+    // directly comparable and the ranking needs no float correction —
+    // every score is an exact integer (≤ 127²·64), the whole query is
+    // hashable with zero float discipline, and memory/bandwidth drop 4×
+    // vs float32. Scoring runs through the native dot_product kernel over
+    // integer-valued doubles (exact); top-k is TakeOrdered with a PK
+    // tiebreak (integer scores tie often). nullif guards the degenerate
+    // all-zero corpus the same way embed_quantize guards the all-zero row.
+    Query("knn_quantized_topk", (s, d) =>
+      quantizedScores(s, d).orderBy(desc("score"), asc("vec_id")).limit(10), oracle =
+      // every score is an exact integer, so list_dot_product over the
+      // integer-valued quantized lists agrees bit-for-bit
+      s"""WITH $OracleInt8Vectors,
+        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0)
+        |SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
+        |FROM q, p WHERE q.vec_id <> 0
+        |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin),
+    // Radius (range) search — the OTHER similarity-search modality next to
+    // top-k: every vector whose integer quantized dot with the probe
+    // clears a fixed threshold, however many or few that is (dedup wants
+    // "all near-dups", not "the 10 nearest"). Same exact-integer scores as
+    // knn_quantized_topk (ONE shared quantizedScores definition), so the
+    // threshold needs no float gap analysis — any cut is hash-exact; 10000
+    // keeps the top ~5-12% of the fixture corpora (measured p90≈8-12k,
+    // max≈19-23k across sf0.001-0.1, nonempty at every SF). At scale the
+    // filter is map-side on the scored pass (no top-k heap, no global
+    // sort barrier until the bounded survivor set).
+    Query("knn_radius_quantized", (s, d) =>
+      quantizedScores(s, d).filter(col("score") >= 10000)
+        .orderBy(desc("score"), asc("vec_id")), oracle =
+      // same quantization pipeline, threshold filter instead of LIMIT — the
+      // scores are exact integers so the >= 10000 cut cannot straddle noise
+      s"""WITH $OracleInt8Vectors,
+        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
+        |scored AS (
+        |  SELECT q.vec_id,
+        |         CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
+        |  FROM q, p WHERE q.vec_id <> 0)
+        |SELECT vec_id, score FROM scored WHERE score >= 10000
+        |ORDER BY score DESC, vec_id ASC""".stripMargin),
+    // Late-interaction (ColBERT-style) MaxSim retrieval (round 11): the
+    // multi-vector scoring rule modern retrievers use when one pooled
+    // vector per document loses too much — score(doc) = Σ over query
+    // tokens of the MAX dot product against any of the document's
+    // vectors. Here the label groups play the multi-vector documents
+    // (each label owns ~50 member vectors) and vec_ids 0-3 are the 4
+    // query tokens (excluded from the corpus side). Every dot is an
+    // exact long under the shared global-scale int8 quantization
+    // (quantizedVectors — the knn_quantized_topk scale), so MaxSim
+    // ranks are hash-exact with zero float discipline. 100 TB shape:
+    // the 4-row query token table rides a broadcast; per-(doc, token)
+    // max and per-doc sum are both map-side-combinable hash aggs — the
+    // corpus streams through one pass, no shuffle wider than
+    // (label, q_id, long), no global sort until the |labels|-sized
+    // score table.
+    Query("retrieval_maxsim", (s, d) => {
+      val q = quantizedVectors(s, d)
+      val queryToks = q.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("q_id"), col("qv").as("qv_q"))
+      q.filter(col("vec_id") >= 4)
+        .crossJoin(broadcast(queryToks))
+        .select(col("label"), col("q_id"),
+          graft.functions.VectorOps.dot_product(col("qv"), col("qv_q"))
+            .cast("long").as("dot"))
+        .groupBy("label", "q_id").agg(max(col("dot")).as("best"))
+        .groupBy("label").agg(sum(col("best")).as("maxsim"))
+        .orderBy(desc("maxsim"), asc("label"))
+    }, oracle =
+      // same global-scale quantization CTE (labels carried through), then
+      // the MaxSim double aggregation — max per (label, query token), sum
+      // per label; every dot an exact BIGINT
+      s"""WITH $OracleInt8Scale,
+        |q AS (
+        |  SELECT vec_id, label,
+        |         list_transform(embedding,
+        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5)) AS qv
+        |  FROM embeddings, m),
+        |qt AS (SELECT vec_id AS q_id, qv AS qv_q FROM q WHERE vec_id < 4),
+        |dots AS (
+        |  SELECT q.label, qt.q_id,
+        |         CAST(list_dot_product(q.qv, qt.qv_q) AS BIGINT) AS dot
+        |  FROM q, qt WHERE q.vec_id >= 4),
+        |best AS (SELECT label, q_id, MAX(dot) AS best
+        |         FROM dots GROUP BY label, q_id)
+        |SELECT label, CAST(SUM(best) AS BIGINT) AS maxsim
+        |FROM best GROUP BY label
+        |ORDER BY maxsim DESC, label ASC""".stripMargin),
+    // k-center coreset selection (round 11b): greedy farthest-first
+    // traversal (the Gonzalez 2-approximation) — the diversity-maximizing
+    // subset selection training-data curation uses where MMR needs a
+    // query and k-means needs a cell count. Seed = vec_id 0, then k−1 = 3
+    // rounds of "add the point farthest from the chosen set"; output is
+    // every point's assigned nearest center and its exact squared L2
+    // distance. All arithmetic exact longs under the shared int8
+    // quantization: d² = |a|² + |b|² − 2a·b from three integer dot
+    // products, argmax pinned by (d² DESC, vec_id ASC), assignment by
+    // (d² ASC, c_id ASC) — zero floats, so the DuckDB oracle (the same
+    // recurrence as unrolled CTEs — bounded, the LPA precedent) is
+    // hash-exact. 100 TB shape: each round is one broadcast of the ≤k-row
+    // center table, one map-side d²-min pass, and one TakeOrdered(1) —
+    // never a collect; the center table localCheckpoints per round (the
+    // kmeans_lloyd lineage discipline). O(k·N) total like k-means
+    // assignment; k is a small constant.
+    Query("coreset_kcenter", (s, d) =>
+      kcenterAssign(quantizedVectors(s, d)).orderBy("vec_id"), oracle =
+      // the same greedy farthest-first recurrence, 3 unrolled steps (the
+      // bounded-recurrence oracle precedent): every distance an exact
+      // BIGINT, argmax and assignment tie rules spelled identically
+      {
+      val steps = (1 to 3).map { i =>
+        s"""d$i AS (
+           |  SELECT q2.vec_id,
+           |         MIN(q2.n2 + c.cn2
+           |             - 2 * CAST(list_dot_product(q2.qv, c.cv) AS BIGINT))
+           |           AS dmin
+           |  FROM q2, c$i c GROUP BY q2.vec_id),
+           |p${i + 1} AS (SELECT vec_id FROM d$i
+           |        ORDER BY dmin DESC, vec_id ASC LIMIT 1),
+           |c${i + 1} AS (SELECT * FROM c$i UNION ALL
+           |        SELECT q2.vec_id, q2.qv, q2.n2 FROM q2
+           |        JOIN p${i + 1} USING (vec_id))""".stripMargin
+      }.mkString(",\n")
+      s"""WITH $OracleInt8Vectors,
+         |q2 AS (SELECT vec_id, qv,
+         |              CAST(list_dot_product(qv, qv) AS BIGINT) AS n2
+         |       FROM q),
+         |c1 AS (SELECT vec_id AS c_id, qv AS cv, n2 AS cn2
+         |       FROM q2 WHERE vec_id = 0),
+         |$steps,
+         |dist AS (
+         |  SELECT q2.vec_id, c.c_id,
+         |         q2.n2 + c.cn2
+         |         - 2 * CAST(list_dot_product(q2.qv, c.cv) AS BIGINT) AS d2
+         |  FROM q2, c4 c),
+         |r AS (SELECT vec_id, c_id, d2,
+         |        ROW_NUMBER() OVER (PARTITION BY vec_id
+         |                           ORDER BY d2 ASC, c_id ASC) AS rn
+         |      FROM dist)
+         |SELECT vec_id, c_id AS center, d2 FROM r WHERE rn = 1
+         |ORDER BY vec_id""".stripMargin
+    }),
+    // Johnson-Lindenstrauss random projection 64 → 16 dims (round 12): the
+    // dimensionality-reduction step ahead of ANN indexing/clustering —
+    // JL (1984) preserves pairwise distances within (1±ε) under a random
+    // linear map, and Achlioptas (2003) showed iid ±1 entries suffice
+    // ("database-friendly" projections: no Gaussians, integer arithmetic).
+    // Signs are a pure function of (in_dim, out_dim) via md5 parity —
+    // derived identically in Scala (jlSign, driver-side literal matrix)
+    // and in the oracle's SQL (DuckDB md5 of the same "i|j" strings), so
+    // the gate checks the sign derivation itself, not a shared constant.
+    // Inputs are the shared global-scale int8 quantization
+    // (quantizedVectors), so each output coordinate Σᵢ s(i,j)·qᵢ is an
+    // exact integer (|y| ≤ 64·127 ≪ 2⁵³) computed through the native
+    // dot_product kernel — zero floats, hash-exact. Emitted as 16 scalar
+    // long columns (p0..p15), never an array (the embed_quantize
+    // pandas-hash constraint). 100 TB shape: pure per-row map work on one
+    // corpus scan — zero shuffle beyond the 1-row broadcast scale; output
+    // is 4× narrower for every downstream consumer. Fixture-dim 64 is
+    // asserted (a dim mismatch must fail loudly, not zero-pad).
+    Query("embed_random_projection", (s, d) => {
+      val q = quantizedVectors(s, d)
+      val checked = q.withColumn("qv",
+        when(size(col("qv")) === JlInDim, col("qv")).otherwise(
+          raise_error(concat(lit(s"embed_random_projection: dim != $JlInDim: "),
+            size(col("qv")).cast("string")))))
+      val cols = (0 until JlOutDim).map { j =>
+        val signs = array((0 until JlInDim).map(i => lit(jlSign(i, j))): _*)
+        graft.functions.VectorOps.dot_product(col("qv"), signs)
+          .cast("long").as(s"p$j")
+      }
+      checked.select(col("vec_id") +: cols: _*).orderBy("vec_id")
+    }, oracle =
+      // same quantization CTE; the sign matrix is derived IN SQL from md5
+      // parity of "i|j" (the Scala side derives its literal matrix from the
+      // same strings — see jlSign), each projection an exact-integer
+      // list_dot_product
+      {
+      val pCols = (0 until JlOutDim).map { j =>
+        s"""CAST(list_dot_product(qv, list_transform(range(0, $JlInDim),
+           |           i -> CASE WHEN ascii(substr(md5(i || '|' || $j), 1, 1))
+           |                          % 2 = 0
+           |                THEN 1.0 ELSE -1.0 END)) AS BIGINT) AS p$j"""
+          .stripMargin
+      }.mkString(",\n        ")
+      s"""WITH $OracleInt8Vectors
+        |SELECT vec_id,
+        |        $pCols
+        |FROM q ORDER BY vec_id""".stripMargin
+    }),
+    // Product-quantization ADC search (round 12): the Jégou/Douze/Schmid
+    // 2011 scheme behind FAISS's IVFPQ — THE memory lever for
+    // billion-vector ANN: split each vector into M=8 subvectors of 8
+    // dims, learn a K=16-centroid codebook per subspace, store each
+    // vector as 8 four-bit codes (8 bytes vs 256 — 32×), and answer
+    // queries by Asymmetric Distance Computation: precompute the probe's
+    // exact d² to all M·K centroids (a 128-entry table), then each
+    // vector's approximate d² is a SUM OF 8 TABLE LOOKUPS — no vector
+    // math at query time. Training is pinned deterministic: seeds =
+    // subvectors of vec_ids 0..15, ONE Lloyd round (exact-integer d²
+    // argmin with (d², code) tie-break, centroid = component-wise mean),
+    // so the codebook is a pure function of the corpus and the DuckDB
+    // oracle replays it exactly. ALL arithmetic lives in the +127-SHIFTED
+    // non-negative int domain ([0,254] components): squared distances are
+    // shift-invariant, and the centroid mean's integer division is only
+    // cross-engine-deterministic for non-negative operands (Spark DIV
+    // truncates toward zero, DuckDB // floors — they agree iff ≥ 0, the
+    // CommonNeighbors caveat). Zero floats anywhere. 100 TB shape: the
+    // codebook (128 rows) and ADC table (128 rows) ride broadcasts;
+    // training is two corpus passes (seed-assign + recenter), encoding
+    // one more, and the query pass is a broadcast-lookup sum — every agg
+    // map-side-combinable; empty codes just drop out of the argmin
+    // (deterministic in both engines via the inner join).
+    Query("knn_pq_adc", (s, d) =>
+      pqAdcTop10(s, d).select("rn", "vec_id", "adc_d2").orderBy("rn"), oracle =
+      // full replay of the deterministic PQ pipeline in the +127-shifted
+      // integer domain: subvector split, seed assignment, one-round integer
+      // centroids, re-encode, ADC table, lookup-sum top-10 — every distance
+      // an exact BIGINT (CTE prefix shared with retrieval_eval_ndcg)
+      s"""WITH $PqOracleCtes
+        |SELECT row_number() OVER (ORDER BY adc_d2, vec_id) AS rn,
+        |       vec_id, adc_d2
+        |FROM (SELECT * FROM scored ORDER BY adc_d2, vec_id LIMIT 10) t
+        |ORDER BY rn""".stripMargin),
+    // IVF-PQ (round 12e) — the composition production ANN serving actually
+    // deploys (Jégou, Douze & Schmid, "Product Quantization for Nearest
+    // Neighbor Search", TPAMI 2011, §V: coarse inverted index × product
+    // codes): the IVF cell restricts WHICH postings the query scans (1/K
+    // of the corpus — the latency axis) and PQ compresses WHAT each
+    // posting stores (32× — the memory axis); ADC scores the probed
+    // cell's codes with 8 table lookups each. Both halves are the
+    // already-shipped deterministic pieces, single-sourced so they cannot
+    // drift: cells come from ivfCellAssign(unit, 8) — the exact
+    // knn_ivf_coarse / dedup_semantic_cells assignment — and scoring is
+    // pqAdcTop10 with the cell's vec_id set as the postings restriction
+    // (codebook TRAINING stays corpus-wide, like a FAISS index). 100 TB
+    // shape: cells are the partition key, the cell filter is a semi-join
+    // pushed before the ADC lookup join, and everything the probe touches
+    // after assignment is |cell| rows, not |corpus|.
+    Query("knn_ivf_pq", (s, d) => {
+      val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
+      val clustered = ivfCellAssign(unit, 8)
+      val probeCell = clustered.filter(col("vec_id") === 0).select("cell")
+      val members = clustered.join(broadcast(probeCell), Seq("cell"))
+        .filter(col("vec_id") =!= 0).select("vec_id")
+      pqAdcTop10(s, d, Some(members))
+        .select("rn", "vec_id", "adc_d2").orderBy("rn")
+    }, oracle =
+      // the shared PQ CTE prefix restricted to the probe's IVF cell — the
+      // cell CTEs replay knn_ivf_coarse's assignment verbatim
+      s"""WITH $PqOracleCtes,
+        |icent AS (
+        |  SELECT vec_id AS c_id, embedding AS c_v FROM embeddings
+        |  WHERE vec_id < 8),
+        |iassign AS (
+        |  SELECT e.vec_id, c.c_id,
+        |         round(list_cosine_similarity(e.embedding, c.c_v), 4) AS csim
+        |  FROM embeddings e CROSS JOIN icent c),
+        |icl AS (
+        |  SELECT vec_id, c_id AS cell FROM (
+        |    SELECT vec_id, c_id,
+        |           row_number() OVER (PARTITION BY vec_id
+        |                              ORDER BY csim DESC, c_id) AS arn
+        |    FROM iassign) t
+        |  WHERE arn = 1),
+        |mem AS (
+        |  SELECT vec_id FROM icl
+        |  WHERE cell = (SELECT cell FROM icl WHERE vec_id = 0)
+        |    AND vec_id <> 0)
+        |SELECT row_number() OVER (ORDER BY adc_d2, vec_id) AS rn,
+        |       vec_id, adc_d2
+        |FROM (SELECT s.vec_id, s.adc_d2 FROM scored s JOIN mem USING (vec_id)
+        |      ORDER BY adc_d2, vec_id LIMIT 10) t
+        |ORDER BY rn""".stripMargin),
+    // Retrieve-then-rerank (round 12i) — the two-stage serving pattern
+    // every production ANN deploy runs (FAISS/ScaNN docs both prescribe
+    // it; Guo et al., ICML 2020 §4 quantify the recall recovery): the
+    // COMPRESSED index proposes a candidate pool (PQ-ADC top-100 — cheap,
+    // lossy), the EXACT metric re-scores only that pool (100 full-width
+    // distances, not |corpus|) and ships the top-10. ADC's quantization
+    // error costs rank-ordering accuracy precisely AT the top — reranking
+    // buys exact top-k order for a constant extra cost. Both stages are
+    // the already-shipped deterministic pieces (pqAdcTop10 with k=100;
+    // the shiftedVectors exact-L2 kernel retrieval_eval_ndcg grades
+    // with), so the composition cannot drift. 100 TB shape: stage 1 is
+    // the PQ scan (32× smaller than raw vectors), stage 2 touches 100
+    // vectors fetched by a semi-join — the rerank never scans the corpus;
+    // the probe rides a 1-row broadcast.
+    Query("knn_pq_rerank", (s, d) => {
+      val cand = pqAdcTop10(s, d, k = 100).select("vec_id")
+      val sv = shiftedVectors(s, d)
+      val probe = sv.filter(col("vec_id") === 0).select(col("sv0").as("pv"))
+      sv.join(cand, Seq("vec_id"), "left_semi")
+        .crossJoin(broadcast(probe))
+        .select(col("vec_id"), sqdCol(col("sv0"), col("pv")).as("d2"))
+        .orderBy(asc("d2"), asc("vec_id")).limit(10)
+        .withColumn("rn", row_number().over(
+          Window.orderBy(asc("d2"), asc("vec_id"))))
+        .select("rn", "vec_id", "d2").orderBy("rn")
+    }, oracle =
+      // the shared PQ CTE prefix proposes the top-100 pool; the exact
+      // shifted-L2 kernel (the retrieval_eval_ndcg `exd` spelling) reranks
+      // only the pool
+      s"""WITH $PqOracleCtes,
+        |cand AS (
+        |  SELECT vec_id FROM (SELECT * FROM scored
+        |                      ORDER BY adc_d2, vec_id LIMIT 100) t),
+        |exd AS (
+        |  SELECT a.vec_id,
+        |         CAST(list_aggregate(list_transform(range(1, 65),
+        |           i -> (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])
+        |              * (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])),
+        |           'sum') AS BIGINT) AS d2
+        |  FROM q a JOIN cand USING (vec_id),
+        |       (SELECT sv0 FROM q WHERE vec_id = 0) p)
+        |SELECT row_number() OVER (ORDER BY d2, vec_id) AS rn, vec_id, d2
+        |FROM (SELECT * FROM exd ORDER BY d2, vec_id LIMIT 10) t
+        |ORDER BY rn""".stripMargin),
+    // Ranking-quality evaluation (round 12): NDCG@10 of the two lossy
+    // rankings this engine ships — PQ-ADC (the memory axis) and JL-16
+    // (the dimensionality axis) — against the EXACT shifted-L2 top-10,
+    // as a first-class query (the accept/reject readout an ANN rollout
+    // gates on; LlmSpec measures recall for the LSH family, this puts
+    // the graded-relevance metric on the oracle surface). Relevance of
+    // exact-rank i is 11−i; the rank discounts 1/log2(i+1) are TEN
+    // PRECOMPUTED ⌊10⁶/log2(i+1)+0.5⌋ integer constants (the
+    // profile_benford recipe — no transcendental at query time), so DCG,
+    // IDCG and ndcg_q6 = dcg·10⁶ DIV idcg are all exact longs. The PQ
+    // candidate list is the SAME pqAdcTop10 the search key ships
+    // (factored body; the oracle shares the CTE prefix identically), so
+    // the eval can never drift from the thing it grades. 100 TB shape:
+    // two corpus-scan rankings (TakeOrdered heaps) + 10-row broadcast
+    // joins — the eval adds nothing beyond the rankings themselves.
+    Query("retrieval_eval_ndcg", (s, d) => {
+      val w = Seq(1000000L, 630930L, 500000L, 430677L, 386853L,
+        356207L, 333333L, 315465L, 301030L, 289065L)
+      val idcg = (1 to 10).map(i => (11L - i) * w(i - 1)).sum
+      val sv = shiftedVectors(s, d)
+      val probe = sv.filter(col("vec_id") === 0).select(col("sv0").as("pv"))
+      val exTop = sv.filter(col("vec_id") =!= 0).crossJoin(broadcast(probe))
+        .select(col("vec_id"), sqdCol(col("sv0"), col("pv")).as("d2"))
+        .orderBy(asc("d2"), asc("vec_id")).limit(10)
+        .withColumn("ern", row_number().over(
+          Window.orderBy(asc("d2"), asc("vec_id"))))
+        .select(col("vec_id"), (lit(11) - col("ern")).cast("long").as("rel"))
+        .localCheckpoint()
+      val projCols = (0 until 16).map { j =>
+        val signs = array((0 until 64).map(i => lit(jlSign(i, j))): _*)
+        graft.functions.VectorOps.dot_product(col("sv0"), signs)
+          .cast("long").as(s"p$j")
+      }
+      val proj = sv.select(col("vec_id") +: projCols: _*)
+      val probeP = proj.filter(col("vec_id") === 0)
+        .select((0 until 16).map(j => col(s"p$j").as(s"q$j")): _*)
+      val jlTop = proj.filter(col("vec_id") =!= 0)
+        .crossJoin(broadcast(probeP))
+        .select(col("vec_id"),
+          (0 until 16).map(j =>
+            (col(s"p$j") - col(s"q$j")) * (col(s"p$j") - col(s"q$j")))
+            .reduce(_ + _).as("d2"))
+        .orderBy(asc("d2"), asc("vec_id")).limit(10)
+        .withColumn("rn", row_number().over(
+          Window.orderBy(asc("d2"), asc("vec_id"))))
+        .select("rn", "vec_id")
+      val pqTop = pqAdcTop10(s, d).select("rn", "vec_id")
+      val wLit = array(w.map(lit): _*)
+      def grade(cand: DataFrame, name: String): DataFrame =
+        cand.join(broadcast(exTop), Seq("vec_id"), "left")
+          .select(col("rn"), coalesce(col("rel"), lit(0L)).as("rel"))
+          .agg(count(when(col("rel") > 0, 1)).as("n_hits"),
+            sum(col("rel") * element_at(wLit, col("rn"))).as("dcg_q6"))
+          .select(lit(name).as("variant"), col("n_hits"), col("dcg_q6"),
+            lit(idcg).as("idcg_q6"),
+            expr(s"dcg_q6 * 1000000L DIV ${idcg}L").as("ndcg_q6"))
+      grade(jlTop, "jl16").unionAll(grade(pqTop, "pq_adc"))
+        .orderBy("variant")
+    }, oracle =
+      // grades the SAME pq pipeline (shared CTE prefix) and an independent
+      // in-SQL JL-16 ranking against the exact shifted-L2 top-10; discount
+      // weights are the ten precomputed ⌊1e6/log2(i+1)+0.5⌋ constants
+      s"""WITH $PqOracleCtes,
+        |pqtop AS (
+        |  SELECT vec_id, row_number() OVER (ORDER BY adc_d2, vec_id) AS rn
+        |  FROM (SELECT * FROM scored ORDER BY adc_d2, vec_id LIMIT 10) t),
+        |exd AS (
+        |  SELECT a.vec_id,
+        |         CAST(list_aggregate(list_transform(range(1, 65),
+        |           i -> (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])
+        |              * (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])),
+        |           'sum') AS BIGINT) AS d2
+        |  FROM q a, (SELECT sv0 FROM q WHERE vec_id = 0) p
+        |  WHERE a.vec_id <> 0),
+        |extop AS (
+        |  SELECT vec_id, CAST(11 - rn AS BIGINT) AS rel FROM (
+        |    SELECT vec_id, row_number() OVER (ORDER BY d2, vec_id) AS rn
+        |    FROM (SELECT * FROM exd ORDER BY d2, vec_id LIMIT 10) t0) t),
+        |sgn AS (
+        |  SELECT CAST(j AS INT) AS j,
+        |         list_transform(range(0, 64), i ->
+        |           CASE WHEN ascii(substr(md5(i || '|' || j), 1, 1)) % 2 = 0
+        |                THEN 1.0 ELSE -1.0 END) AS sg
+        |  FROM range(0, 16) t(j)),
+        |pj AS (
+        |  SELECT q.vec_id, sgn.j,
+        |         CAST(list_dot_product(q.sv0, sgn.sg) AS BIGINT) AS p
+        |  FROM q, sgn),
+        |jld AS (
+        |  SELECT a.vec_id, SUM((a.p - b.p) * (a.p - b.p)) AS d2
+        |  FROM pj a JOIN (SELECT j, p FROM pj WHERE vec_id = 0) b USING (j)
+        |  WHERE a.vec_id <> 0 GROUP BY 1),
+        |jltop AS (
+        |  SELECT vec_id, row_number() OVER (ORDER BY d2, vec_id) AS rn
+        |  FROM (SELECT * FROM jld ORDER BY d2, vec_id LIMIT 10) t),
+        |w AS (
+        |  SELECT CAST(i AS INT) AS i,
+        |         CAST(CASE i WHEN 1 THEN 1000000 WHEN 2 THEN 630930
+        |           WHEN 3 THEN 500000 WHEN 4 THEN 430677 WHEN 5 THEN 386853
+        |           WHEN 6 THEN 356207 WHEN 7 THEN 333333 WHEN 8 THEN 315465
+        |           WHEN 9 THEN 301030 ELSE 289065 END AS BIGINT) AS w
+        |  FROM range(1, 11) t(i)),
+        |cand AS (
+        |  SELECT 'jl16' AS variant, rn, vec_id FROM jltop
+        |  UNION ALL SELECT 'pq_adc', rn, vec_id FROM pqtop),
+        |graded AS (
+        |  SELECT cand.variant,
+        |         COUNT(e.vec_id) AS n_hits,
+        |         SUM(COALESCE(e.rel, 0) * w.w) AS dcg_q6
+        |  FROM cand JOIN w ON w.i = cand.rn
+        |  LEFT JOIN extop e ON e.vec_id = cand.vec_id
+        |  GROUP BY 1),
+        |idcg AS (SELECT SUM((11 - i) * w) AS idcg_q6 FROM w)
+        |SELECT variant, CAST(n_hits AS BIGINT) AS n_hits,
+        |       CAST(dcg_q6 AS BIGINT) AS dcg_q6,
+        |       CAST(idcg_q6 AS BIGINT) AS idcg_q6,
+        |       CAST(dcg_q6 * 1000000 // idcg_q6 AS BIGINT) AS ndcg_q6
+        |FROM graded, idcg ORDER BY variant""".stripMargin),
+    // MRR + recall@10 eval over a PROBE SET (round 13) — the multi-query
+    // companion of retrieval_eval_ndcg's single-probe grading, and the
+    // two metrics retrieval papers actually lead with: for each of the
+    // 10 probes (vec_id < 10), the truth is the exact shifted-L2 top-10
+    // (the same retrieval_eval_ndcg kernel) and the system under eval is
+    // the JL-16 projected ranking (embed_random_projection's sign
+    // matrix) — rr = 1/rank of the true nearest neighbor in the system
+    // list (0 if absent), recall@10 = |truth ∩ system| / 10, both
+    // averaged over probes as integer q6 (10⁶ DIV rank — every metric an
+    // exact long, zero floats). 100 TB shape: the 10-row probe tables
+    // ride broadcasts onto TWO single-pass scans (64-dim exact, 16-dim
+    // projected); per-probe top-10 via a probe-partitioned window over
+    // the scored stream; everything after lives on ≤200 rows. The oracle
+    // replays both rankings (shared quantize/sign-matrix SQL) and the
+    // same fixed-point fold.
+    Query("retrieval_eval_mrr", (s, d) => {
+      val sv = shiftedVectors(s, d)
+      val probes = sv.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("pid"), col("sv0").as("pv"))
+      val wp = Window.partitionBy("pid").orderBy(asc("d2"), asc("vec_id"))
+      val truth = sv.crossJoin(broadcast(probes))
+        .filter(col("vec_id") =!= col("pid"))
+        .select(col("pid"), col("vec_id"),
+          sqdCol(col("sv0"), col("pv")).as("d2"))
+        .withColumn("ern", row_number().over(wp)).filter(col("ern") <= 10)
+        .select("pid", "vec_id", "ern").localCheckpoint()
+      val projCols = (0 until JlOutDim).map { j =>
+        val signs = array((0 until JlInDim).map(i => lit(jlSign(i, j))): _*)
+        graft.functions.VectorOps.dot_product(col("sv0"), signs)
+          .cast("long").as(s"p$j")
+      }
+      val proj = sv.select(col("vec_id") +: projCols: _*)
+      val probeP = proj.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("pid") +:
+          (0 until JlOutDim).map(j => col(s"p$j").as(s"q$j")): _*)
+      val sys = proj.crossJoin(broadcast(probeP))
+        .filter(col("vec_id") =!= col("pid"))
+        .select(col("pid"), col("vec_id"),
+          (0 until JlOutDim).map(j =>
+            (col(s"p$j") - col(s"q$j")) * (col(s"p$j") - col(s"q$j")))
+            .reduce(_ + _).as("d2"))
+        .withColumn("srn", row_number().over(wp)).filter(col("srn") <= 10)
+        .select("pid", "vec_id", "srn").localCheckpoint()
+      val rr = truth.filter(col("ern") === 1)
+        .join(sys, Seq("pid", "vec_id"), "left")
+        .select(col("pid"),
+          coalesce(expr("1000000L DIV srn"), lit(0L)).as("rr_q6"))
+      val hits = truth.join(sys, Seq("pid", "vec_id"))
+        .groupBy("pid").agg(count(lit(1)).as("h"))
+      rr.join(hits, Seq("pid"), "left")
+        .select(col("pid"), col("rr_q6"),
+          coalesce(col("h"), lit(0L)).as("h"))
+        .agg(count(lit(1)).as("n_probes"),
+          expr("sum(rr_q6) DIV count(1)").as("mrr_q6"),
+          expr("sum(h) * 1000000L DIV (count(1) * 10)").as("recall10_q6"))
+    }, oracle =
+      // both rankings replayed over the probe set (shared quantize/shift +
+      // sign-matrix CTEs), then the same integer q6 MRR/recall fold
+      s"""WITH $OracleInt8Scale,
+        |q AS (
+        |  SELECT vec_id,
+        |         list_transform(embedding,
+        |           x -> floor(CAST(x AS DOUBLE) * (127.0 / m) + 0.5) + 127.0)
+        |           AS sv0
+        |  FROM embeddings, m),
+        |exd AS (
+        |  SELECT p.vec_id AS pid, a.vec_id,
+        |         CAST(list_aggregate(list_transform(range(1, 65),
+        |           i -> (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])
+        |              * (a.sv0[CAST(i AS INT)] - p.sv0[CAST(i AS INT)])),
+        |           'sum') AS BIGINT) AS d2
+        |  FROM q a, (SELECT vec_id, sv0 FROM q WHERE vec_id < 10) p
+        |  WHERE a.vec_id <> p.vec_id),
+        |truth AS (
+        |  SELECT pid, vec_id, ern FROM (
+        |    SELECT pid, vec_id, row_number() OVER (PARTITION BY pid
+        |      ORDER BY d2, vec_id) AS ern FROM exd) t
+        |  WHERE ern <= 10),
+        |sgn AS (
+        |  SELECT CAST(j AS INT) AS j,
+        |         list_transform(range(0, 64), i ->
+        |           CASE WHEN ascii(substr(md5(i || '|' || j), 1, 1)) % 2 = 0
+        |                THEN 1.0 ELSE -1.0 END) AS sg
+        |  FROM range(0, 16) t(j)),
+        |pj AS (
+        |  SELECT q.vec_id, sgn.j,
+        |         CAST(list_dot_product(q.sv0, sgn.sg) AS BIGINT) AS p
+        |  FROM q, sgn),
+        |jld AS (
+        |  SELECT b.pid, a.vec_id, SUM((a.p - b.p) * (a.p - b.p)) AS d2
+        |  FROM pj a JOIN (SELECT vec_id AS pid, j, p FROM pj
+        |                  WHERE vec_id < 10) b ON a.j = b.j
+        |  WHERE a.vec_id <> b.pid GROUP BY 1, 2),
+        |sys AS (
+        |  SELECT pid, vec_id, srn FROM (
+        |    SELECT pid, vec_id, row_number() OVER (PARTITION BY pid
+        |      ORDER BY d2, vec_id) AS srn FROM jld) t
+        |  WHERE srn <= 10),
+        |rr AS (
+        |  SELECT t.pid, COALESCE(1000000 // s.srn, 0) AS rr_q6
+        |  FROM truth t LEFT JOIN sys s
+        |    ON s.pid = t.pid AND s.vec_id = t.vec_id
+        |  WHERE t.ern = 1),
+        |hits AS (
+        |  SELECT t.pid, COUNT(*) AS h
+        |  FROM truth t JOIN sys s ON s.pid = t.pid AND s.vec_id = t.vec_id
+        |  GROUP BY t.pid)
+        |SELECT COUNT(*) AS n_probes,
+        |       CAST(SUM(rr_q6) // COUNT(*) AS BIGINT) AS mrr_q6,
+        |       CAST(SUM(COALESCE(h, 0)) * 1000000 // (COUNT(*) * 10)
+        |         AS BIGINT) AS recall10_q6
+        |FROM rr LEFT JOIN hits USING (pid)""".stripMargin),
+    // Int8 symmetric quantization of the embedding column (training-data
+    // pipeline op): per-vector scale = 127/max|x|, q_i = floor(x·scale+0.5)
+    // — the storage/serving compression step (4× smaller than float32).
+    // Zero shuffle: pure per-row array math; scale and q are exact IEEE
+    // (float→double exact, one multiply, half-up via floor(x+0.5) — the
+    // SAME formula in both engines, because round() half-even vs half-up
+    // conventions differ but floor does not). |q| ≤ 127 by construction:
+    // the max-magnitude component maps to exactly ±127, so no clamp.
+    // The checked output carries the quantized vector as a CSV string
+    // (array_join), not a raw array column: the driver's oracle harness
+    // sorts result frames with pandas before hashing, and array cells are
+    // unhashable there — representation change only, int8 math untouched.
+    Query("embed_quantize", (s, d) => {
+      // nullif guards the all-zero vector (padding row, failed encode):
+      // 127/0 = Inf would make q = floor(0·Inf + 0.5) = NaN, and ANSI
+      // mode's int cast throws on NaN — a null scale nulls q/q_sum instead
+      embeddings(s, d)
+        .withColumn("scale", lit(127.0) /
+          nullif(array_max(transform(col("embedding"),
+            x => abs(x.cast("double")))), lit(0.0)))
+        .withColumn("q", transform(col("embedding"),
+          x => floor(x.cast("double") * col("scale") + 0.5).cast("int")))
+        .select(col("vec_id"), col("scale"),
+          array_join(col("q"), ",").as("q_csv"),
+          aggregate(col("q"), lit(0L), (acc, v) => acc + v).as("q_sum"))
+        .orderBy("vec_id")
+    }, oracle =
+      // exact IEEE agreement: float→double casts, one multiply, floor-half-up
+      // — no round() anywhere, so engine rounding conventions can't diverge
+      """WITH s AS (
+        |  SELECT vec_id, embedding,
+        |         127.0 / nullif(list_max(list_transform(embedding,
+        |                          x -> abs(CAST(x AS DOUBLE)))), 0.0) AS scale
+        |  FROM embeddings),
+        |qq AS (
+        |  SELECT vec_id, scale,
+        |         list_transform(embedding,
+        |           x -> CAST(floor(CAST(x AS DOUBLE) * scale + 0.5) AS INT)) AS q
+        |  FROM s)
+        |SELECT vec_id, scale, array_to_string(q, ',') AS q_csv,
+        |       CAST(list_aggregate(q, 'sum') AS BIGINT) AS q_sum
+        |FROM qq ORDER BY vec_id""".stripMargin),
+    // Spherical k-means (Lloyd) centroid TRAINING — the step knn_ivf_coarse
+    // points at ("a production build would k-means the centroids"): K=8
+    // seeds, two unrolled Lloyd iterations (assign to max-cosine centroid →
+    // recenter to the normalized per-cell mean), then the trained cells'
+    // sizes + leading centroid coordinates as the report. Everything stays
+    // a single lazy plan — no per-iteration collect/count on the driver.
+    // Cross-engine float discipline: unit vectors and centroids are
+    // quantized to 1e-6 (so per-dim mean sums are EXACT decimals in both
+    // engines) and assignment similarity to 1e-4 with the c_id tiebreak
+    // (the knn discipline). 100 TB shape: assignment is a broadcast
+    // cross-join with map-side max-struct combine (N skinny rows cross the
+    // shuffle, not N×K); recentering aggregates 64·K cells. The group key
+    // carries the vector payload here for a one-shuffle plan; production
+    // would keep (id → cell) and co-partitioned vectors.
+    Query("kmeans_lloyd", (s, d) => {
+      val (cents, assigned) = lloydTrain(s, d)
+      assigned
+        .groupBy("cell").agg(count(lit(1)).as("n_vectors"))
+        .join(cents.select(col("c_id").as("cell"),
+          round(element_at(col("c_v"), 1), 4).as("c0"),
+          round(element_at(col("c_v"), 2), 4).as("c1")), "cell")
+        .orderBy("cell")
+    }, oracle =
+      // two unrolled Lloyd iterations; the assignment replays as a per-vector
+      // row_number argmax (semantics, not the Spark plan), the means as exact
+      // DECIMAL(18,6) sums of the 1e-6-quantized unit vectors
+      """WITH ud AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        |  FROM embeddings),
+        |u AS (
+        |  SELECT vec_id,
+        |         list_transform(e, x -> round(x / sqrt(list_inner_product(e, e)), 6)) AS uv
+        |  FROM ud),
+        |c0 AS (SELECT vec_id AS c_id, uv AS c_v FROM u WHERE vec_id < 8),
+        |a1 AS (
+        |  SELECT vec_id, uv, cell FROM (
+        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
+        |           row_number() OVER (PARTITION BY u.vec_id
+        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
+        |    FROM u CROSS JOIN c0 c) t
+        |  WHERE rn = 1),
+        |s1 AS (
+        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
+        |  FROM a1 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
+        |c1m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s1 GROUP BY cell),
+        |c1 AS (
+        |  SELECT cell AS c_id,
+        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
+        |  FROM c1m),
+        |a2 AS (
+        |  SELECT vec_id, uv, cell FROM (
+        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
+        |           row_number() OVER (PARTITION BY u.vec_id
+        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
+        |    FROM u CROSS JOIN c1 c) t
+        |  WHERE rn = 1),
+        |s2 AS (
+        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
+        |  FROM a2 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
+        |c2m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s2 GROUP BY cell),
+        |c2 AS (
+        |  SELECT cell AS c_id,
+        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
+        |  FROM c2m),
+        |a3 AS (
+        |  SELECT vec_id, cell FROM (
+        |    SELECT u.vec_id, c.c_id AS cell,
+        |           row_number() OVER (PARTITION BY u.vec_id
+        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
+        |    FROM u CROSS JOIN c2 c) t
+        |  WHERE rn = 1)
+        |SELECT a.cell, COUNT(*) AS n_vectors, c.c0, c.c1
+        |FROM a3 a
+        |JOIN (SELECT c_id, round(c_v[1], 4) AS c0, round(c_v[2], 4) AS c1 FROM c2) c
+        |  ON a.cell = c.c_id
+        |GROUP BY a.cell, c.c0, c.c1
+        |ORDER BY a.cell""".stripMargin),
+    // The composed ANN-index BUILD: the trained centroids (same lloydTrain
+    // as kmeans_lloyd — one definition, the corpus_curation discipline)
+    // plus per-cell posting lists — sizes, id range, and the sorted head.
+    // This is the artifact knn_ivf_coarse queries against; at 100 TB the
+    // postings write out partitioned BY cell so a probe reads one
+    // partition. Sorted-prefix string keeps the list representation
+    // cross-engine hashable (§7.4.6).
+    Query("ivf_index_build", (s, d) => {
+      val (_, assigned) = lloydTrain(s, d)
+      assigned.groupBy("cell")
+        .agg(count(lit(1)).as("n_vectors"),
+          min(col("vec_id")).as("min_vec"),
+          max(col("vec_id")).as("max_vec"),
+          array_join(transform(
+            slice(sort_array(collect_list(col("vec_id"))), 1, 8),
+            x => x.cast("string")), ",").as("posting_head"))
+        .orderBy("cell")
+    }, oracle =
+      // same CTE chain as kmeans_lloyd through the final assignment; the
+      // report is the per-cell posting summary instead of the centroid head
+      """WITH ud AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        |  FROM embeddings),
+        |u AS (
+        |  SELECT vec_id,
+        |         list_transform(e, x -> round(x / sqrt(list_inner_product(e, e)), 6)) AS uv
+        |  FROM ud),
+        |c0 AS (SELECT vec_id AS c_id, uv AS c_v FROM u WHERE vec_id < 8),
+        |a1 AS (
+        |  SELECT vec_id, uv, cell FROM (
+        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
+        |           row_number() OVER (PARTITION BY u.vec_id
+        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
+        |    FROM u CROSS JOIN c0 c) t
+        |  WHERE rn = 1),
+        |s1 AS (
+        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
+        |  FROM a1 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
+        |c1m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s1 GROUP BY cell),
+        |c1 AS (
+        |  SELECT cell AS c_id,
+        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
+        |  FROM c1m),
+        |a2 AS (
+        |  SELECT vec_id, uv, cell FROM (
+        |    SELECT u.vec_id, u.uv, c.c_id AS cell,
+        |           row_number() OVER (PARTITION BY u.vec_id
+        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
+        |    FROM u CROSS JOIN c1 c) t
+        |  WHERE rn = 1),
+        |s2 AS (
+        |  SELECT cell, i, CAST(SUM(CAST(uv[i] AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
+        |  FROM a2 CROSS JOIN range(1, 65) AS r(i) GROUP BY cell, i),
+        |c2m AS (SELECT cell, list(m ORDER BY i) AS cm FROM s2 GROUP BY cell),
+        |c2 AS (
+        |  SELECT cell AS c_id,
+        |         list_transform(cm, x -> round(x / sqrt(list_inner_product(cm, cm)), 6)) AS c_v
+        |  FROM c2m),
+        |a3 AS (
+        |  SELECT vec_id, cell FROM (
+        |    SELECT u.vec_id, c.c_id AS cell,
+        |           row_number() OVER (PARTITION BY u.vec_id
+        |             ORDER BY round(list_inner_product(u.uv, c.c_v), 4) DESC, c.c_id) AS rn
+        |    FROM u CROSS JOIN c2 c) t
+        |  WHERE rn = 1)
+        |SELECT cell, COUNT(*) AS n_vectors,
+        |       MIN(vec_id) AS min_vec, MAX(vec_id) AS max_vec,
+        |       array_to_string(list(vec_id ORDER BY vec_id)[1:8], ',') AS posting_head
+        |FROM a3 GROUP BY cell ORDER BY cell""".stripMargin),
+    // ANN scale path — banded sign-projection LSH: candidates collide in
+    // any of the 32 bands, then exact cosine re-ranks candidates only
+    // (rows-only check; LlmSpec asserts recall against brute force).
+    // 100 TB story: the bucket join touches candidate pairs, not all pairs;
+    // vectors are NOT replicated per band — only (vec_id, bucket) rows fan
+    // out 32×, and the two vector fetches are equi-joins on vec_id.
+    Query("knn_lsh_bucketed", (s, d) => {
+      val planes = hyperplanes(Bands * BandBits, 64)
+      val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
+        .select(col("vec_id"), col("uv"))
+      val tagged = unit.select(col("vec_id"),
+        explode(lshBandBuckets(col("uv"), planes)).as("bucket"))
+      val cand = tagged.as("x").join(tagged.as("y"), Seq("bucket"))
+        .filter(col("x.vec_id") < col("y.vec_id"))
+        .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
+        .distinct()
+      val pairs = cand
+        .join(unit.select(col("vec_id").as("a_id"), col("uv").as("a_v")), "a_id")
+        .join(unit.select(col("vec_id").as("b_id"), col("uv").as("b_v")), "b_id")
+        .select(col("a_id"), col("b_id"), dotD(col("a_v"), col("b_v")).as("sim"))
+      // top-100 most similar candidate pairs (rank, not threshold: stays
+      // non-empty at any SF; total order via PK tiebreak)
+      pairs.orderBy(desc("sim"), asc("a_id"), asc("b_id")).limit(100)
+        .select("a_id", "b_id")
+    }),
+    // NN-Descent k-NN graph (round 12) — see nnDescent's scaladoc: the
+    // graph-based ANN candidate generator (neighbors-of-neighbors local
+    // joins over a k-best list), the fourth family next to LSH bands, IVF
+    // cells and PQ codes. Engine-local float cosine → unit-only key;
+    // LlmSpec measures recall@10 vs brute force and asserts the descent
+    // property (final recall strictly above the hash-init recall).
+    Query("knn_nndescent", (s, d) =>
+      nnDescent(embeddings(s, d)))
   )
 }

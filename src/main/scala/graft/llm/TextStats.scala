@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.core.Tables._
 import graft.functions.RollingHash.rolling_hash
 
@@ -319,10 +320,10 @@ object TextStats {
     (merges.reduce(_ unionAll _), v.select("w", "c", "seg"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Seq[Query] = Seq(
     // E6 — corpus stats per (lang, source): doc counts, token counts, exact
     // char sums, stable mean chars (int sums + one double division).
-    "text_stats" -> ((s, d) => {
+    Query("text_stats", (s, d) => {
       documents(s, d)
         .withColumn("n_tokens", size(tokens(col("text"))))
         .groupBy("lang", "source")
@@ -332,20 +333,30 @@ object TextStats {
           sum(col("n_tokens").cast("long")).as("sum_tokens"),
           (sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"))
         .orderBy("lang", "source")
-    }),
+    }, oracle =
+      """SELECT lang, source, COUNT(*) AS n_docs,
+        |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+        |       CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS sum_tokens,
+        |       CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars
+        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin),
     // E7 — multimodal equi-join: text table × vector table, predicates on
     // both modalities. doc_id=vec_id is the co-partitioning key at scale.
-    "multimodal_join" -> ((s, d) => {
+    Query("multimodal_join", (s, d) => {
       val doc = documents(s, d); val emb = embeddings(s, d)
       doc.join(emb, doc("doc_id") === emb("vec_id"))
         .filter(col("lang").isin("es", "de") && col("label") < 5)
         .select(doc("doc_id"), col("lang"), col("label"), col("n_chars"),
           size(col("embedding")).as("dim"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, lang, label, n_chars,
+        |       CAST(len(embedding) AS INT) AS dim
+        |FROM documents JOIN embeddings ON doc_id = vec_id
+        |WHERE lang IN ('es','de') AND label < 5
+        |ORDER BY doc_id""".stripMargin),
     // Quality scoring (builder mandate): length/punctuation/stopword ratios
     // + mean token length, all exact-int or single-division arithmetic.
-    "text_quality" -> ((s, d) => {
+    Query("text_quality", (s, d) => {
       val q = qualityStats
       documents(s, d).select(
           col("doc_id"),
@@ -355,11 +366,21 @@ object TextStats {
           (q.nStop.cast("double") / q.nTok).as("stopword_ratio"),
           q.symbolRatio.as("non_alnum_ratio"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, n_chars,
+        |       CAST(len(str_split(text, ' ')) AS INT) AS n_tokens,
+        |       CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
+        |         / len(str_split(text, ' ')) AS mean_token_len,
+        |       CAST(len(list_filter(str_split(text, ' '),
+        |                t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS DOUBLE)
+        |         / len(str_split(text, ' ')) AS stopword_ratio,
+        |       CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+        |         / length(text) AS non_alnum_ratio
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Token counting, whitespace + BPE-ish estimate (~4 chars/subword,
     // ceil per token — deterministic integer math, fused into the
     // TokenStats kernel: ceil(len/4.0) == (len+3)/4 for int lengths).
-    "text_tokens_bpe" -> ((s, d) => {
+    Query("text_tokens_bpe", (s, d) => {
       val stats = graft.functions.TokenStats.token_stats(
         tokens(col("text")), Seq.empty)
       documents(s, d).select(
@@ -367,7 +388,12 @@ object TextStats {
           stats.getField("n_tok").as("ws_tokens"),
           stats.getField("bpe_sum").as("bpe_tokens"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        |       CAST(len(str_split(text, ' ')) AS INT) AS ws_tokens,
+        |       CAST(list_aggregate(list_transform(str_split(text, ' '),
+        |                t -> CAST(ceil(length(t) / 4.0) AS BIGINT)), 'sum') AS BIGINT) AS bpe_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // BPE merge TRAINING (round 12) — the vocabulary LEARNER behind
     // text_tokens_bpe's counting heuristic (Sennrich/Haddow/Birch 2016):
     // greedily merge the most frequent adjacent symbol pair, 8 rounds.
@@ -387,7 +413,12 @@ object TextStats {
     // deterministic; the oracle unrolls the identical 8-round recurrence
     // (the HITS/pagerank precedent) and the fixture yields genuine
     // compositional merges (e+r→er, then m+er→mer).
-    "bpe_train_merges" -> ((s, d) => bpeLearn(s, d)._1.orderBy("step")),
+    Query("bpe_train_merges", (s, d) => bpeLearn(s, d)._1.orderBy("step"), oracle = {
+      val union = (0 until 8).map(k => s"SELECT * FROM m$k")
+        .mkString(" UNION ALL ")
+      s"""WITH $bpeOracleCtes
+         |SELECT step, lhs, rhs, cnt FROM ($union) ORDER BY step""".stripMargin
+    }),
     // BPE ENCODE (round 12) — the inference half of bpe_train_merges,
     // sharing the SAME bpeLearn recurrence (the retrieval_eval_ndcg
     // cannot-drift principle): re-segment every corpus token under the 8
@@ -398,9 +429,20 @@ object TextStats {
     // equi-join → per-doc sum (map-side-combinable). Tokens outside the
     // ^[a-z]+$ segmentation contract count 1 unsegmented (the byte-level
     // pre-tokenizer's job in production).
-    "bpe_apply_encode" -> ((s, d) =>
+    Query("bpe_apply_encode", (s, d) =>
       bpeDocEncode(s, d).select("doc_id", "n_ws", "n_bpe")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      s"""WITH $bpeOracleCtes,
+         |seg8 AS (SELECT w, len(str_split(trim(seg), ' ')) AS n_sub FROM v8),
+         |tok AS (
+         |  SELECT doc_id, w FROM (
+         |    SELECT doc_id, unnest(str_split(text, ' ')) AS w FROM documents)
+         |  WHERE w <> '')
+         |SELECT t.doc_id, COUNT(*) AS n_ws,
+         |       CAST(SUM(CASE WHEN s.n_sub IS NOT NULL THEN s.n_sub
+         |                     ELSE 1 END) AS BIGINT) AS n_bpe
+         |FROM tok t LEFT JOIN seg8 s ON t.w = s.w
+         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin),
     // Tokenizer fertility by language (round 14b): tokens-per-word and
     // OOV share per lang under the corpus's own BPE — THE audit that
     // exposes tokenizer bias before training (a language at fertility 2×
@@ -411,7 +453,7 @@ object TextStats {
     // describes exactly the encoder the engine ships. q6 ratios by
     // integer DIV on exact sums. 100 TB: the per-doc table re-aggregates
     // map-side-combinably to |langs| rows; nothing new scans the corpus.
-    "tokenizer_fertility" -> ((s, d) =>
+    Query("tokenizer_fertility", (s, d) =>
       bpeDocEncode(s, d).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_ws")).as("n_words"),
@@ -420,17 +462,55 @@ object TextStats {
         .select(col("lang"), col("n_docs"), col("n_words"), col("n_tokens"),
           expr("n_tokens * 1000000 DIV n_words").as("fertility_q6"),
           expr("n_oov * 1000000 DIV n_words").as("oov_q6"))
-        .orderBy("lang")),
+        .orderBy("lang"), oracle =
+      // the same vocab/encode CTEs re-aggregated per language; the q6
+      // ratios divide exact sums
+      s"""WITH $bpeOracleCtes,
+         |seg8 AS (SELECT w, len(str_split(trim(seg), ' ')) AS n_sub FROM v8),
+         |tok AS (
+         |  SELECT doc_id, lang, w FROM (
+         |    SELECT doc_id, lang, unnest(str_split(text, ' ')) AS w
+         |    FROM documents)
+         |  WHERE w <> ''),
+         |perdoc AS (
+         |  SELECT doc_id, lang, COUNT(*) AS n_ws,
+         |         SUM(CASE WHEN s.n_sub IS NOT NULL THEN s.n_sub
+         |                  ELSE 1 END) AS n_bpe,
+         |         SUM(CASE WHEN s.n_sub IS NULL THEN 1 ELSE 0 END) AS n_oov
+         |  FROM tok t LEFT JOIN seg8 s ON t.w = s.w
+         |  GROUP BY doc_id, lang)
+         |SELECT lang, COUNT(*) AS n_docs,
+         |       CAST(SUM(n_ws) AS BIGINT) AS n_words,
+         |       CAST(SUM(n_bpe) AS BIGINT) AS n_tokens,
+         |       CAST(SUM(n_bpe) * 1000000 // SUM(n_ws) AS BIGINT)
+         |         AS fertility_q6,
+         |       CAST(SUM(n_oov) * 1000000 // SUM(n_ws) AS BIGINT)
+         |         AS oov_q6
+         |FROM perdoc GROUP BY lang ORDER BY lang""".stripMargin),
     // Language-ID heuristic: argmax of marker-hit counts, 'und' when nothing
     // matches. Oracle-checked — the marker lexicon is spelled out in the
     // DuckDB SQL, and array_max over (hits, lang) structs ties to the
     // lexicographically-largest lang, mirrored by the CASE order fr>es>en>de.
-    "text_langid" -> ((s, d) => {
+    Query("text_langid", (s, d) => {
       documents(s, d).select(
           col("doc_id"), col("lang").as("actual_lang"),
           predictedLang.as("predicted_lang"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH h AS (
+        |  SELECT doc_id, lang AS actual_lang,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['the','and','of','to','in'], x))) AS h_en,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['el','la','de','que','y'], x))) AS h_es,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['der','die','und','das','ist'], x))) AS h_de,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['le','la','et','les','des'], x))) AS h_fr
+        |  FROM documents)
+        |SELECT doc_id, actual_lang,
+        |  CASE WHEN greatest(h_en,h_es,h_de,h_fr) = 0 THEN 'und'
+        |       WHEN h_fr = greatest(h_en,h_es,h_de,h_fr) THEN 'fr'
+        |       WHEN h_es = greatest(h_en,h_es,h_de,h_fr) THEN 'es'
+        |       WHEN h_en = greatest(h_en,h_es,h_de,h_fr) THEN 'en'
+        |       ELSE 'de' END AS predicted_lang
+        |FROM h ORDER BY doc_id""".stripMargin),
     // Language-ID CONFUSION MATRIX (round 12): the model-eval readout for
     // the langid heuristic — per (actual, predicted) cell counts plus the
     // row share n·10⁶ DIV actual-total in q6 integer fixed point (the
@@ -440,7 +520,7 @@ object TextStats {
     // retrieval_eval_ndcg principle applied to the text surface).
     // 100 TB: one TokenStats scan + a |langs|²-bounded map-side agg; row
     // totals via a window over that tiny aggregate.
-    "text_lang_confusion" -> ((s, d) => {
+    Query("text_lang_confusion", (s, d) => {
       val cells = documents(s, d)
         .select(col("lang").as("actual_lang"),
           predictedLang.as("predicted_lang"))
@@ -452,22 +532,60 @@ object TextStats {
         .select(col("actual_lang"), col("predicted_lang"), col("n"),
           expr("n * 1000000 DIV actual_total").as("share_q6"))
         .orderBy("actual_lang", "predicted_lang")
-    }),
+    }, oracle =
+      // same CASE-chain classifier as text_langid's oracle, grouped into
+      // the confusion matrix with q6 row shares
+      """WITH h AS (
+        |  SELECT lang AS actual_lang,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['the','and','of','to','in'], x))) AS h_en,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['el','la','de','que','y'], x))) AS h_es,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['der','die','und','das','ist'], x))) AS h_de,
+        |    len(list_filter(str_split(text,' '), x -> list_contains(['le','la','et','les','des'], x))) AS h_fr
+        |  FROM documents),
+        |p AS (
+        |  SELECT actual_lang,
+        |    CASE WHEN greatest(h_en,h_es,h_de,h_fr) = 0 THEN 'und'
+        |         WHEN h_fr = greatest(h_en,h_es,h_de,h_fr) THEN 'fr'
+        |         WHEN h_es = greatest(h_en,h_es,h_de,h_fr) THEN 'es'
+        |         WHEN h_en = greatest(h_en,h_es,h_de,h_fr) THEN 'en'
+        |         ELSE 'de' END AS predicted_lang
+        |  FROM h),
+        |cells AS (
+        |  SELECT actual_lang, predicted_lang, COUNT(*) AS n
+        |  FROM p GROUP BY 1, 2)
+        |SELECT actual_lang, predicted_lang, n,
+        |       CAST(n * 1000000 // SUM(n) OVER (PARTITION BY actual_lang)
+        |            AS BIGINT) AS share_q6
+        |FROM cells ORDER BY actual_lang, predicted_lang""".stripMargin),
     // Document fingerprint via the custom codegen'd rolling-hash expression
     // (also cross-checked against the interpreted path in a spec). The
     // polynomial-mod-2^64 fold is spelled out in the DuckDB oracle with
     // HUGEINT arithmetic, so even the custom hash is differentially checked.
-    "doc_fingerprint" -> ((s, d) => {
+    Query("doc_fingerprint", (s, d) => {
       documents(s, d)
         .select(col("doc_id"), rolling_hash(col("text")).as("fingerprint"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // h = fold (h*31 + byte) over bytes last-to-first, mod 2^64 via natural
+      // long wraparound — replicated with HUGEINT modular arithmetic and
+      // mapped back to the signed BIGINT range.
+      """SELECT doc_id,
+        |  CAST(CASE WHEN m > 9223372036854775807::HUGEINT
+        |            THEN m - 18446744073709551616::HUGEINT ELSE m END AS BIGINT) AS fingerprint
+        |FROM (
+        |  SELECT doc_id,
+        |    list_reduce(
+        |      list_prepend(0::HUGEINT,
+        |        list_transform(range(length(text), 0, -1), i -> ord(text[i:i])::HUGEINT)),
+        |      (acc, x) -> (acc * 31 + x) % 18446744073709551616::HUGEINT) AS m
+        |  FROM documents) t
+        |ORDER BY doc_id""".stripMargin),
     // Within-doc repetition (the Gopher repetition signal): the share of
     // word-3-gram occurrences that are repeats of an earlier window.
     // Boilerplate/templated docs score high and are drop candidates.
     // Native window hashing (TokenNgramHashes); counts are exact integers,
     // the ratio one IEEE division — fully hashable.
-    "text_repetition" -> ((s, d) => {
+    Query("text_repetition", (s, d) => {
       val grams = graft.functions.TokenNgramHashes.token_ngram_hashes(
         Dedup.tokenHashes(tokens(col("text"))), 3)
       documents(s, d)
@@ -476,20 +594,54 @@ object TextStats {
         .withColumn("dup_ratio",
           (col("n_grams") - col("n_distinct")).cast("double") / col("n_grams"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // The oracle counts distinct PLAIN 3-gram strings; the engine counts
+      // distinct window hashes — equal absent a 64-bit collision.
+      """WITH g AS (
+        |  SELECT doc_id,
+        |         list_transform(range(1, greatest(len(str_split(text,' ')) - 2, 1) + 1),
+        |                        i -> array_to_string(str_split(text,' ')[i:i+2], ' ')) AS grams
+        |  FROM documents)
+        |SELECT doc_id,
+        |       CAST(len(grams) AS INT) AS n_grams,
+        |       CAST(len(list_distinct(grams)) AS INT) AS n_distinct,
+        |       CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / len(grams) AS dup_ratio
+        |FROM g ORDER BY doc_id""".stripMargin),
     // Quality-FILTER verdicts (training-data pipeline op): the keep/drop
     // decision layered on the raw stats, Gopher/C4-style rule stack — token
     // count bounds, mean token length bounds, stopword presence, symbol
     // ratio cap. Emits keep + the first failing rule (the triage a corpus
     // card reports). Rules are exact integer/single-division arithmetic so
     // the verdict is oracle-hashable.
-    "text_quality_filter" -> ((s, d) => {
+    Query("text_quality_filter", (s, d) => {
       val rule = qualityRule
       documents(s, d)
         .select(col("doc_id"), rule.as("verdict"),
           (rule === "pass").as("keep"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH q AS (
+        |  SELECT doc_id,
+        |         len(str_split(text, ' ')) AS n_tok,
+        |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
+        |           / len(str_split(text, ' ')) AS mean_len,
+        |         len(list_filter(str_split(text, ' '),
+        |              t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS n_stop,
+        |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+        |           / length(text) AS symbol_ratio
+        |  FROM documents),
+        |v AS (
+        |  SELECT doc_id,
+        |         CASE WHEN n_tok < 20 THEN 'too_few_tokens'
+        |              WHEN n_tok > 5000 THEN 'too_many_tokens'
+        |              WHEN mean_len < 2.0 THEN 'mean_token_too_short'
+        |              WHEN mean_len > 12.0 THEN 'mean_token_too_long'
+        |              WHEN symbol_ratio > 0.3 THEN 'too_many_symbols'
+        |              WHEN n_stop = 0 THEN 'no_stopwords'
+        |              ELSE 'pass' END AS verdict
+        |  FROM q)
+        |SELECT doc_id, verdict, verdict = 'pass' AS keep
+        |FROM v ORDER BY doc_id""".stripMargin),
     // Deterministic train/val/test split (training-data pipeline op): the
     // split must be a pure function of the stable document id — never
     // rand() — so reruns, retries, and engines agree row-for-row and a doc
@@ -498,21 +650,35 @@ object TextStats {
     // states, biasing train to 80.47%; four digits shrink the bias to
     // ~0.01%) → 80/10/10; output is the per-language stratification report
     // a dataset card needs.
-    "sample_split" -> ((s, d) => {
+    Query("sample_split", (s, d) => {
       val bucket = md5Fold(col("doc_id"), 1) % 10
       documents(s, d)
         .withColumn("split",
           when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test"))
         .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
         .orderBy("lang", "split")
-    }),
+    }, oracle =
+      """WITH h AS (
+        |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
+        |b AS (
+        |  SELECT doc_id, lang,
+        |    ((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 10 AS bucket
+        |  FROM h)
+        |SELECT lang,
+        |       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
+        |            ELSE 'test' END AS split,
+        |       COUNT(*) AS n_docs
+        |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
     // Decontamination (training-data pipeline op): flag corpus docs sharing
     // any word 8-gram with a benchmark set (docs 0-49 stand in for an eval
     // benchmark). 100 TB shape: the benchmark gram set is small and
     // BROADCAST, so the corpus is never shuffled for the match — only the
     // per-doc count aggregates. 8-gram overlap is the standard
     // contamination test; short docs fall back to their full token string.
-    "text_decontaminate" -> ((s, d) => {
+    Query("text_decontaminate", (s, d) => {
       // grams travel as 64-bit window hashes (one fused native pass), never
       // as strings — the string form allocates n× the corpus bytes per scan.
       // The DuckDB oracle intersects the plain string grams; counts agree
@@ -525,7 +691,19 @@ object TextStats {
       corpus.join(broadcast(bench), Seq("g"))
         .groupBy("doc_id").agg(countDistinct(col("g")).as("n_shared"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH toks AS (
+        |  SELECT doc_id, str_split(text, ' ') AS t FROM documents),
+        |grams AS (
+        |  SELECT doc_id,
+        |         unnest(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
+        |                               i -> array_to_string(t[i:i+7], ' '))) AS g
+        |  FROM toks),
+        |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id < 50),
+        |corpus AS (SELECT doc_id, g FROM grams WHERE doc_id >= 50)
+        |SELECT c.doc_id, COUNT(DISTINCT c.g) AS n_shared
+        |FROM corpus c JOIN bench b ON c.g = b.g
+        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin),
     // PII / deny-list scrub (training-data pipeline op): redact emails,
     // long digit runs (phone/account-number shapes) and a configurable
     // deny-list of terms, reporting per-doc match counts + the scrubbed
@@ -534,7 +712,7 @@ object TextStats {
     // digits or '@' (PII counts oracle-match at 0 — LlmSpec exercises the
     // email/number paths on planted PII); the deny-list terms DO occur, so
     // the scrub itself is non-vacuous. One scan, all codegen'd built-ins.
-    "text_scrub_pii" -> ((s, d) => {
+    Query("text_scrub_pii", (s, d) => {
       val email = TextScrub.EmailPattern
       val num = TextScrub.NumberPattern
       val deny = TextScrub.denyPattern(TextScrub.DefaultDenyList)
@@ -545,14 +723,28 @@ object TextStats {
           regexp_count(col("text"), lit(deny)).as("n_denied"),
           length(TextScrub.scrub(col("text"))).as("n_chars_scrubbed"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // Same patterns as TextScrub verbatim (Java and RE2 agree on this
+      // subset); DuckDB regexp_replace needs the 'g' flag to match Spark's
+      // replace-all default. Sequential email→number→deny order preserved.
+      """SELECT doc_id,
+        |  CAST(len(regexp_extract_all(text, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS INT) AS n_email,
+        |  CAST(len(regexp_extract_all(text, '[0-9][0-9 -]{6,}[0-9]')) AS INT) AS n_number,
+        |  CAST(len(regexp_extract_all(text, '\b(customer|dup)\b')) AS INT) AS n_denied,
+        |  CAST(length(
+        |    regexp_replace(
+        |      regexp_replace(
+        |        regexp_replace(text, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '[EMAIL]', 'g'),
+        |        '[0-9][0-9 -]{6,}[0-9]', '[NUM]', 'g'),
+        |      '\b(customer|dup)\b', '[TERM]', 'g')) AS INT) AS n_chars_scrubbed
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Stratified sampling (training-data pipeline op): per-language keep
     // rates applied as a pure function of doc_id (md5 digits 5-8, DISJOINT
     // from sample_split's digits 1-4 so split and sample stay independent)
     // — never rand(), so reruns/engines agree row-for-row and rates can be
     // audited. 100 TB shape: one scan, the verdict is per-row arithmetic
     // with no shuffle before the final small report aggregation.
-    "stratified_sample" -> ((s, d) => {
+    Query("stratified_sample", (s, d) => {
       val rate = when(col("lang") === "en", 60)
         .when(col("lang").isin("es", "de"), 30)
         .when(col("lang") === "zh", 45)
@@ -564,7 +756,26 @@ object TextStats {
         .agg(count(lit(1)).as("n_total"),
           sum(kept.cast("long")).as("n_kept"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      // md5 digits 5-8 (disjoint from sample_split's 1-4); rates must match
+      // the Spark when-chain exactly.
+      """WITH h AS (
+        |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
+        |b AS (
+        |  SELECT lang,
+        |    ((((CASE WHEN ord(hx[5:5]) >= 97 THEN ord(hx[5:5]) - 87 ELSE ord(hx[5:5]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[6:6]) >= 97 THEN ord(hx[6:6]) - 87 ELSE ord(hx[6:6]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[7:7]) >= 97 THEN ord(hx[7:7]) - 87 ELSE ord(hx[7:7]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[8:8]) >= 97 THEN ord(hx[8:8]) - 87 ELSE ord(hx[8:8]) - 48 END)) % 100 AS pct,
+        |    CASE WHEN lang = 'en' THEN 60
+        |         WHEN lang IN ('es','de') THEN 30
+        |         WHEN lang = 'zh' THEN 45
+        |         WHEN lang = 'fr' THEN 15
+        |         ELSE 20 END AS rate
+        |  FROM h)
+        |SELECT lang, COUNT(*) AS n_total,
+        |       CAST(SUM(CASE WHEN pct < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+        |FROM b GROUP BY lang ORDER BY lang""".stripMargin),
     // Sequence packing (training-data pipeline op): the standard pretraining
     // concat-and-chunk — documents are laid out in a deterministic stream
     // per shard and cut into fixed 512-token blocks; a doc is addressed by
@@ -573,7 +784,28 @@ object TextStats {
     // 1-4 folded % 8 here; thousands in production), never a global orderBy — the
     // packing of each shard is independent, so parallelism scales with the
     // shard count while the layout stays a pure function of doc ids.
-    "pack_sequences" -> ((s, d) => packedLayout(s, d).orderBy("doc_id")),
+    Query("pack_sequences", (s, d) => packedLayout(s, d).orderBy("doc_id"), oracle =
+      // Same md5 digits 1-4 fold as sample_split, % 8 for the shard; the
+      // running sum is a per-shard window (ROWS frame, exact BIGINT), and
+      // '//' is DuckDB's integer floor division.
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CAST(((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 8 AS INT) AS shard,
+        |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
+        |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
+        |w AS (
+        |  SELECT doc_id, shard, n_tok,
+        |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
+        |  FROM t)
+        |SELECT doc_id, shard, n_tok,
+        |       stream_end - n_tok AS "offset",
+        |       CAST((stream_end - n_tok) // 512 AS BIGINT) AS block_first,
+        |       CAST((stream_end - 1) // 512 AS BIGINT) AS block_last
+        |FROM w ORDER BY doc_id""".stripMargin),
     // Packing-efficiency report (round 13) — the QA readout run after
     // `pack_sequences` decides the layout (one shared packedLayout
     // derivation, so the report can never describe a different packing
@@ -586,7 +818,7 @@ object TextStats {
     // 100 TB shape: one shard-keyed map-side-combinable agg over the
     // layout — 8 result rows; the layout itself is the pack_sequences
     // per-shard window.
-    "pack_efficiency_report" -> ((s, d) =>
+    Query("pack_efficiency_report", (s, d) =>
       packedLayout(s, d)
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"),
@@ -598,7 +830,35 @@ object TextStats {
           col("n_blocks"), (col("n_blocks") * 512).as("capacity"),
           expr("n_tokens * 1000000L DIV (n_blocks * 512)").as("fill_q6"),
           col("n_straddle"))
-        .orderBy("shard")),
+        .orderBy("shard"), oracle =
+      // same shard/stream CTEs as pack_sequences, aggregated per shard
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CAST(((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 8 AS INT) AS shard,
+        |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
+        |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
+        |w AS (
+        |  SELECT doc_id, shard, n_tok,
+        |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
+        |  FROM t),
+        |lay AS (
+        |  SELECT shard, n_tok,
+        |         CAST((stream_end - n_tok) // 512 AS BIGINT) AS block_first,
+        |         CAST((stream_end - 1) // 512 AS BIGINT) AS block_last
+        |  FROM w)
+        |SELECT shard, COUNT(*) AS n_docs,
+        |       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+        |       CAST(MAX(block_last) + 1 AS BIGINT) AS n_blocks,
+        |       CAST((MAX(block_last) + 1) * 512 AS BIGINT) AS capacity,
+        |       CAST(SUM(n_tok) * 1000000 // ((MAX(block_last) + 1) * 512)
+        |         AS BIGINT) AS fill_q6,
+        |       CAST(SUM(CASE WHEN block_first <> block_last THEN 1 ELSE 0 END)
+        |         AS BIGINT) AS n_straddle
+        |FROM lay GROUP BY shard ORDER BY shard""".stripMargin),
     // Data-mix rebalancing (the "sampling weights" step of training-data
     // assembly): given the per-language corpus histogram and a uniform
     // target mix, derive each language's keep rate and expected post-
@@ -608,7 +868,7 @@ object TextStats {
     // broadcast of the totals — the corpus is scanned once regardless of
     // scale; the actual row sampling would then reuse weighted_sample's
     // md5-digit machinery with these rates.
-    "corpus_mix_rebalance" -> ((s, d) => {
+    Query("corpus_mix_rebalance", (s, d) => {
       val counts = documents(s, d).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
       val totals = counts.agg(sum(col("n_docs")).as("total_docs"),
@@ -619,7 +879,21 @@ object TextStats {
         .select(col("lang"), col("n_docs"), col("n_chars"), col("rate_pct"),
           expr("(n_docs * rate_pct) div 100").as("n_expected"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      """WITH c AS (
+        |  SELECT lang, COUNT(*) AS n_docs,
+        |         CAST(SUM(n_chars) AS BIGINT) AS n_chars
+        |  FROM documents GROUP BY lang),
+        |t AS (
+        |  SELECT CAST(SUM(n_docs) AS BIGINT) AS total_docs,
+        |         COUNT(*) AS n_langs FROM c),
+        |r AS (
+        |  SELECT lang, n_docs, n_chars,
+        |         CAST(least(100, (total_docs * 100) // (n_langs * n_docs)) AS BIGINT) AS rate_pct
+        |  FROM c, t)
+        |SELECT lang, n_docs, n_chars, rate_pct,
+        |       CAST((n_docs * rate_pct) // 100 AS BIGINT) AS n_expected
+        |FROM r ORDER BY lang""".stripMargin),
     // Temperature-scaled language sampling weights (round 12): the data-mix
     // rule multilingual pretraining actually uses (mC4 / XLM-R: p_l ∝
     // (n_l/N)^α flattens the head so low-resource languages survive) —
@@ -634,7 +908,7 @@ object TextStats {
     // a sampler would apply (rate machinery = weighted_sample's md5
     // digits). 100 TB shape: one vocabulary-sized aggregate + a 1-row
     // totals broadcast — the corpus is scanned once.
-    "sample_temperature" -> ((s, d) => {
+    Query("sample_temperature", (s, d) => {
       val counts = documents(s, d).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"))
         .withColumn("w_q6", floor(sqrt(col("n_docs").cast("double"))
@@ -648,7 +922,23 @@ object TextStats {
           expr("((total_docs DIV 2) * w_q6 DIV w_sum) * 1000000 DIV n_docs")
             .as("factor_q6"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      // positions via range() over the split array — an independent bigram
+      // construction (the Spark plan windows with lead())
+      // sqrt is IEEE correctly rounded in both engines, so w_q6 is exact;
+      // everything downstream is integer // arithmetic
+      """WITH c AS (
+        |  SELECT lang, COUNT(*) AS n_docs,
+        |         CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE)) * 1e6) AS BIGINT)
+        |           AS w_q6
+        |  FROM documents GROUP BY lang),
+        |t AS (SELECT SUM(w_q6) AS w_sum, SUM(n_docs) AS total_docs FROM c)
+        |SELECT lang, n_docs, w_q6,
+        |       CAST(w_q6 * 1000000 // w_sum AS BIGINT) AS share_q6,
+        |       CAST((total_docs // 2) * w_q6 // w_sum AS BIGINT) AS quota,
+        |       CAST(((total_docs // 2) * w_q6 // w_sum) * 1000000 // n_docs
+        |            AS BIGINT) AS factor_q6
+        |FROM c, t ORDER BY lang""".stripMargin),
     // Gopher-style per-document quality rules (round 13; Rae et al. 2021
     // §A1.1) — the RULE-SET form of quality filtering next to
     // text_quality's raw ratios and text_quality_filter's composite
@@ -669,7 +959,7 @@ object TextStats {
     // is the one per-token regex (array filter — bounded by tokens per
     // doc, map-only). 100 TB shape: zero shuffles before the final sort —
     // the whole rule set is a projection.
-    "quality_gopher_rules" -> ((s, d) => {
+    Query("quality_gopher_rules", (s, d) => {
       val stopLex = Seq("the", "and", "of", "to", "in",
         "is", "on", "for", "with", "a")
       val st = graft.functions.TokenStats.token_stats(
@@ -694,7 +984,39 @@ object TextStats {
         .withColumn("gopher_pass",
           col("wc_ok") * col("mwl_ok") * col("stop_ok") * col("alpha_ok"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // one fused token pass per doc; every rule is an integer
+      // cross-multiplication — no ratio is materialized in either engine
+      """WITH s AS (
+        |  SELECT doc_id, str_split(text, ' ') AS toks FROM documents),
+        |m AS (
+        |  SELECT doc_id,
+        |         CAST(len(toks) AS BIGINT) AS n_tok,
+        |         CAST(list_aggregate(list_transform(toks, x -> length(x)),
+        |           'sum') AS BIGINT) AS char_sum,
+        |         CAST(len(list_filter(toks, x -> list_contains(
+        |           ['the','and','of','to','in','is','on','for','with','a'],
+        |           x))) AS BIGINT) AS stop_hits,
+        |         CAST(len(list_filter(toks,
+        |           x -> regexp_matches(x, '^[a-z]+$'))) AS BIGINT) AS n_alpha
+        |  FROM s)
+        |SELECT doc_id, n_tok, char_sum, stop_hits, n_alpha,
+        |       CAST(CASE WHEN n_tok BETWEEN 50 AND 100000
+        |            THEN 1 ELSE 0 END AS INT) AS wc_ok,
+        |       CAST(CASE WHEN 3 * n_tok <= char_sum
+        |                  AND char_sum <= 10 * n_tok
+        |            THEN 1 ELSE 0 END AS INT) AS mwl_ok,
+        |       CAST(CASE WHEN stop_hits >= 2 THEN 1 ELSE 0 END AS INT)
+        |         AS stop_ok,
+        |       CAST(CASE WHEN 5 * n_alpha >= 4 * n_tok
+        |            THEN 1 ELSE 0 END AS INT) AS alpha_ok,
+        |       CAST((CASE WHEN n_tok BETWEEN 50 AND 100000 THEN 1 ELSE 0 END)
+        |          * (CASE WHEN 3 * n_tok <= char_sum
+        |                   AND char_sum <= 10 * n_tok THEN 1 ELSE 0 END)
+        |          * (CASE WHEN stop_hits >= 2 THEN 1 ELSE 0 END)
+        |          * (CASE WHEN 5 * n_alpha >= 4 * n_tok THEN 1 ELSE 0 END)
+        |         AS INT) AS gopher_pass
+        |FROM m ORDER BY doc_id""".stripMargin),
     // Per-source epoch schedule under a token budget (round 13) — the
     // step AFTER sample_temperature's weights: production mixes don't
     // just weight sources, they decide how many EPOCHS of each source a
@@ -714,7 +1036,13 @@ object TextStats {
     // divergence class. DIV on decimals still yields an exact BIGINT.
     // 100 TB shape: one vocabulary-sized agg +
     // a 1-row totals broadcast — the corpus is scanned once.
-    "mix_epochs_schedule" -> ((s, d) => epochSchedule(s, d).orderBy("lang")),
+    Query("mix_epochs_schedule", (s, d) => epochSchedule(s, d).orderBy("lang"), oracle =
+      // the sample_temperature sqrt discipline on CHARS + integer fixed
+      // point for quota/epochs/effective
+      s"""WITH $MixScheduleCtes
+         |SELECT lang, n_docs, n_chars, share_q6, quota_chars, epochs_q6,
+         |       effective_chars
+         |FROM sched ORDER BY lang""".stripMargin),
     // MATERIALIZE the epoch schedule into per-document repeat counts
     // (round 14) — the step between mix_epochs_schedule's per-source
     // epochs_q6 and an actual training shard list: each doc repeats
@@ -730,10 +1058,15 @@ object TextStats {
     // Shares epochSchedule with the schedule key — the materialization
     // can never disagree with the published mix. 100 TB: one broadcast
     // |langs|-row schedule join + a per-row hash, zero extra shuffles.
-    "mix_materialize_repeats" -> ((s, d) =>
+    Query("mix_materialize_repeats", (s, d) =>
       materializedRepeats(s, d)
         .select("doc_id", "lang", "n_repeats")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      // the same sched CTE (one spelling) joined onto docs; the fractional
+      // draw is the exact integer cross-multiply on md5 digits 29-32
+      s"""WITH $MaterializeRepeatsCtes
+         |SELECT doc_id, lang, n_repeats FROM rep
+         |ORDER BY doc_id""".stripMargin),
     // SHARD the materialized instances (round 14b) — the last step to an
     // actual training shard list: each (doc, copy) instance lands in one
     // of 8 shards by md5(doc_id||'#'||copy) hex digits 1-4 mod 8, so a
@@ -749,7 +1082,7 @@ object TextStats {
     // expression-level fan-out (≤4 copies/doc by the epoch cap), the
     // shard hash is per-row, and the only shuffles are the 8-group agg
     // and its exact distinct — no instance-level global ordering anywhere.
-    "mix_shard_assignment" -> ((s, d) => {
+    Query("mix_shard_assignment", (s, d) => {
       val inst = materializedRepeats(s, d)
         .filter(col("n_repeats") >= 1)
         .withColumn("copy", explode(sequence(lit(1L), col("n_repeats"))))
@@ -762,7 +1095,20 @@ object TextStats {
           count_distinct(col("doc_id")).as("n_docs"),
           sum(col("n_chars")).as("total_chars"))
         .orderBy("shard")
-    }),
+    }, oracle =
+      // the same rep CTE fanned out by generate_series; the shard hash is
+      // md5 of the NEW 'doc_id#copy' domain, digits 1-4 mod 8
+      s"""WITH $MaterializeRepeatsCtes,
+         |inst AS (
+         |  SELECT doc_id, n_chars, CAST(t.copy AS BIGINT) AS copy
+         |  FROM rep, UNNEST(range(1, CAST(n_repeats AS BIGINT) + 1)) AS t(copy)
+         |  WHERE n_repeats >= 1)
+         |SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#' ||
+         |         CAST(copy AS VARCHAR)), 1, 4)) AS BIGINT) % 8 AS shard,
+         |       COUNT(*) AS n_instances,
+         |       COUNT(DISTINCT doc_id) AS n_docs,
+         |       CAST(SUM(n_chars) AS BIGINT) AS total_chars
+         |FROM inst GROUP BY shard ORDER BY shard""".stripMargin),
     // Per-document bigram log-likelihood (round 12): the CCNet filter
     // SIGNAL — score every doc under the corpus's own add-one-smoothed
     // bigram LM (the text_bigram_lm table, trained on the full corpus) and
@@ -778,7 +1124,7 @@ object TextStats {
     // broadcast onto the instance stream; the doc sum is one
     // map-side-combinable agg keyed by doc_id. Docs shorter than 2 tokens
     // surface as n_bigrams = 0 / ll_q6 = 0 rather than dropping out.
-    "perplexity_bigram_doc" -> ((s, d) => {
+    Query("perplexity_bigram_doc", (s, d) => {
       // r17 optimization (guide §2.4, remove shuffles outright): bigram
       // instances used to come from a per-doc lead() window — posexplode
       // every token, hash-shuffle + sort the full token stream by
@@ -816,7 +1162,30 @@ object TextStats {
           coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
           coalesce(col("ll_q6"), lit(0L)).as("ll_q6"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // per-TYPE ln of an exact rational, q6 half-up (floor(x·1e6+0.5)),
+      // then an integer sum over the doc's bigram instances
+      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+        |big AS (
+        |  SELECT doc_id, ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
+        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
+        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
+        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
+        |v AS (SELECT COUNT(DISTINCT w) AS v
+        |      FROM (SELECT unnest(ws) AS w FROM d) t),
+        |lp AS (
+        |  SELECT w1, w2,
+        |         CAST(floor(ln(CAST(c12 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE))
+        |                    * 1e6 + 0.5) AS BIGINT) AS lp_q6
+        |  FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
+        |score AS (
+        |  SELECT big.doc_id, COUNT(*) AS n_bigrams, SUM(lp.lp_q6) AS ll_q6
+        |  FROM big JOIN lp USING (w1, w2) GROUP BY big.doc_id)
+        |SELECT d.doc_id,
+        |       COALESCE(s.n_bigrams, 0) AS n_bigrams,
+        |       CAST(COALESCE(s.ll_q6, 0) AS BIGINT) AS ll_q6
+        |FROM d LEFT JOIN score s ON d.doc_id = s.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
     // Context-window chunking with overlap (the other pretraining layout,
     // besides pack_sequences' concat-and-chunk): each document's token
     // stream is cut into windows of 64 tokens advancing by a 48-token
@@ -825,7 +1194,7 @@ object TextStats {
     // per-row arithmetic: expression-level, zero shuffle before the final
     // sort, and chunk count/boundaries are a pure function of the token
     // count (ceil division spelled as `div` so no float enters).
-    "text_chunk_overlap" -> ((s, d) => {
+    Query("text_chunk_overlap", (s, d) => {
       val W = 64; val S = 48
       documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -839,7 +1208,25 @@ object TextStats {
           array_join(slice(col("toks"), col("chunk_idx") * S + 1, lit(W)), " ")
             .as("chunk_text"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, oracle =
+      // DuckDB list slicing toks[a:b] is 1-based inclusive and clamps at the
+      // list end — the same semantics as Spark's slice(toks, start, 64)
+      """WITH t AS (
+        |  SELECT doc_id, str_split(text, ' ') AS toks,
+        |         len(str_split(text, ' ')) AS n
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, toks, n,
+        |         CASE WHEN n <= 64 THEN 1 ELSE 1 + (n - 64 + 47) // 48 END AS n_chunks
+        |  FROM t),
+        |x AS (
+        |  SELECT doc_id, toks, n, unnest(range(0, n_chunks)) AS chunk_idx
+        |  FROM c)
+        |SELECT doc_id, chunk_idx,
+        |       chunk_idx * 48 + 1 AS start_tok,
+        |       least(64, n - chunk_idx * 48) AS chunk_len,
+        |       array_to_string(toks[(chunk_idx * 48 + 1):(chunk_idx * 48 + 64)], ' ') AS chunk_text
+        |FROM x ORDER BY doc_id, chunk_idx""".stripMargin),
     // Sub-document dedup (the RefinedWeb line/paragraph-level shape):
     // whole-doc dedup misses the boilerplate CASE — documents that are
     // unique overall but share repeated blocks (headers, nav, license
@@ -852,7 +1239,7 @@ object TextStats {
     // the contract sort — and every row crossing them is (doc_id, 32-byte
     // digest), never text; hashing BEFORE anything moves is what makes
     // sub-document dedup affordable at 100 TB.
-    "dedup_chunk_boilerplate" -> ((s, d) => {
+    Query("dedup_chunk_boilerplate", (s, d) => {
       val W = 64
       val wHash = Window.partitionBy("chunk_hash")
       documents(s, d)
@@ -870,7 +1257,28 @@ object TextStats {
         .withColumn("boilerplate_pct",
           expr("(100 * n_dup_chunks) div n_chunks"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH t AS (
+        |  SELECT doc_id, str_split(text, ' ') AS toks,
+        |         len(str_split(text, ' ')) AS n
+        |  FROM documents),
+        |x AS (
+        |  SELECT doc_id, toks,
+        |         unnest(range(0, (n + 63) // 64)) AS idx
+        |  FROM t),
+        |h AS (
+        |  SELECT doc_id,
+        |         sha256(array_to_string(toks[(idx*64 + 1):(idx*64 + 64)], ' ')) AS chunk_hash
+        |  FROM x),
+        |m AS (
+        |  SELECT doc_id, chunk_hash,
+        |         CASE WHEN COUNT(*) OVER (PARTITION BY chunk_hash) > 1
+        |              THEN 1 ELSE 0 END AS dup
+        |  FROM h)
+        |SELECT doc_id, COUNT(*) AS n_chunks,
+        |       CAST(SUM(dup) AS BIGINT) AS n_dup_chunks,
+        |       (100 * CAST(SUM(dup) AS BIGINT)) // COUNT(*) AS boilerplate_pct
+        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // The capstone: the whole training-data curation pipeline as ONE
     // composed dataflow — quality gate → exact dedup → benchmark
     // decontamination → deterministic split — ending in the (lang, split)
@@ -880,7 +1288,7 @@ object TextStats {
     // composition of the audited operators. 100 TB shape: three scans of
     // the corpus (stats+gate, gram explode, report), one window shuffle
     // keyed by content hash, one broadcast semi-join — no quadratic stage.
-    "corpus_curation" -> ((s, d) => {
+    Query("corpus_curation", (s, d) => {
       val docs = documents(s, d)
       // stage 1: quality gate
       val kept = docs.filter(qualityRule === "pass")
@@ -910,7 +1318,57 @@ object TextStats {
         .agg(count(lit(1)).as("n_docs"),
           sum(size(tokens(col("text"))).cast("long")).as("sum_tokens"))
         .orderBy("lang", "split")
-    }),
+    }, oracle =
+      // Each CTE replays the corresponding standalone oracle verbatim:
+      // quality rule stack (text_quality_filter), sha256 min-per-hash
+      // (dedup_exact_text), string 8-grams vs the engine's 64-bit window
+      // hashes (text_decontaminate — equal absent a collision), md5 digit
+      // fold split (sample_split).
+      """WITH q AS (
+        |  SELECT doc_id,
+        |         len(str_split(text, ' ')) AS n_tok,
+        |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
+        |           / len(str_split(text, ' ')) AS mean_len,
+        |         len(list_filter(str_split(text, ' '),
+        |              t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS n_stop,
+        |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+        |           / length(text) AS symbol_ratio
+        |  FROM documents),
+        |kept AS (
+        |  SELECT d.* FROM documents d JOIN q USING (doc_id)
+        |  WHERE NOT (q.n_tok < 20 OR q.n_tok > 5000 OR q.mean_len < 2.0
+        |             OR q.mean_len > 12.0 OR q.symbol_ratio > 0.3 OR q.n_stop = 0)),
+        |dd AS (
+        |  SELECT * FROM (
+        |    SELECT k.*, row_number() OVER (PARTITION BY sha256(text) ORDER BY doc_id) AS rn
+        |    FROM kept k) t
+        |  WHERE rn = 1),
+        |grams AS (
+        |  SELECT doc_id,
+        |         unnest(list_transform(range(1, greatest(len(str_split(text,' ')) - 7, 1) + 1),
+        |                               i -> array_to_string(str_split(text,' ')[i:i+7], ' '))) AS g
+        |  FROM documents),
+        |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id < 50),
+        |contaminated AS (
+        |  SELECT DISTINCT gr.doc_id
+        |  FROM grams gr JOIN bench b ON gr.g = b.g
+        |  WHERE gr.doc_id >= 50 AND gr.doc_id IN (SELECT doc_id FROM dd)),
+        |clean AS (
+        |  SELECT * FROM dd
+        |  WHERE doc_id >= 50 AND doc_id NOT IN (SELECT doc_id FROM contaminated)),
+        |b AS (
+        |  SELECT doc_id, lang, text,
+        |    ((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 10 AS bucket
+        |  FROM (SELECT doc_id, lang, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM clean))
+        |SELECT lang,
+        |       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
+        |            ELSE 'test' END AS split,
+        |       COUNT(*) AS n_docs,
+        |       CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS sum_tokens
+        |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
     // Vocabulary extraction (training-data pipeline op): the corpus's top-50
     // tokens by occurrence count with document frequency — the first step of
     // any tokenizer/vocab build. 100 TB shape: one explode → one hash agg
@@ -918,7 +1376,7 @@ object TextStats {
     // shuffle), then TakeOrdered per-partition heaps for the top-k — never a
     // global sort of the vocabulary. Ranks are (count desc, token asc) so
     // ties are deterministic.
-    "vocab_topk" -> ((s, d) => {
+    Query("vocab_topk", (s, d) => {
       val tok = documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       val counts = tok.groupBy("token")
@@ -929,7 +1387,18 @@ object TextStats {
         .withColumn("rank", row_number().over(w))
         .select("rank", "token", "n_occurrences", "n_docs")
         .orderBy("rank")
-    }),
+    }, oracle =
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
+        |c AS (
+        |  SELECT token, COUNT(*) AS n_occurrences,
+        |         COUNT(DISTINCT doc_id) AS n_docs
+        |  FROM tok GROUP BY token)
+        |SELECT CAST(rank AS INT) AS rank, token, n_occurrences, n_docs FROM (
+        |  SELECT token, n_occurrences, n_docs,
+        |         row_number() OVER (ORDER BY n_occurrences DESC, token) AS rank
+        |  FROM c) t
+        |WHERE rank <= 50 ORDER BY rank""".stripMargin),
     // Vocabulary coverage curve (round 6) — the "how many tokens does a
     // k-word vocab cover" readout tokenizer sizing is decided from.
     // Coverage at rank k is the EXACT RATIONAL (cum_freq, total_tokens):
@@ -939,7 +1408,7 @@ object TextStats {
     // 30 rows, not |V| (the k-bounded global-window shape, §7.4); the
     // total comes from the pre-limit counts so the rational's denominator
     // is the true corpus size.
-    "vocab_coverage" -> ((s, d) => {
+    Query("vocab_coverage", (s, d) => {
       val tok = documents(s, d)
         .select(explode(tokens(col("text"))).as("token"))
       val counts = tok.groupBy("token").agg(count(lit(1)).as("freq"))
@@ -953,7 +1422,23 @@ object TextStats {
         .crossJoin(broadcast(total))
         .select("rank", "token", "freq", "cum_freq", "total_tokens")
         .orderBy("rank")
-    }),
+    }, oracle =
+      // coverage as the exact rational (cum_freq, total_tokens); the
+      // denominator comes from the pre-limit counts
+      """WITH tok AS (
+        |  SELECT unnest(str_split(text, ' ')) AS token FROM documents),
+        |c AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token),
+        |t AS (SELECT CAST(SUM(freq) AS BIGINT) AS total_tokens FROM c),
+        |r AS (
+        |  SELECT token, freq,
+        |         row_number() OVER (ORDER BY freq DESC, token) AS rank,
+        |         CAST(SUM(freq) OVER (ORDER BY freq DESC, token
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |           AS BIGINT) AS cum_freq
+        |  FROM c)
+        |SELECT CAST(rank AS INT) AS rank, token, freq, cum_freq,
+        |       total_tokens
+        |FROM r CROSS JOIN t WHERE rank <= 30 ORDER BY rank""".stripMargin),
     // Heaps-law vocabulary growth curve (round 12e): how fast the TYPE
     // vocabulary grows as the corpus is consumed in doc_id order — the
     // readout that sizes tokenizer vocabularies and tells a crawl when new
@@ -971,7 +1456,7 @@ object TextStats {
     // band table. 100 TB shape: one explode pass + vocab/band-sized aggs
     // — only (token, min-doc) partials cross the shuffle; the width rides
     // a broadcast 1-row crossJoin.
-    "vocab_growth_curve" -> ((s, d) => {
+    Query("vocab_growth_curve", (s, d) => {
       val docs = documents(s, d)
       val wdt = docs.agg(expr("(MAX(doc_id) + 10) DIV 10").as("w"))
       val tok = docs.select(col("doc_id"),
@@ -995,7 +1480,32 @@ object TextStats {
           coalesce(col("new_types"), lit(0L)).as("new_types"))
         .withColumn("cum_types", sum(col("new_types")).over(wCum))
         .orderBy("band")
-    }),
+    }, oracle =
+      // same band arithmetic ((max+10)//10 width, first-occurrence band via
+      // MIN(doc_id)//w) — every value an exact integer; non-negative ids
+      // keep // and DIV in agreement
+      """WITH w AS (SELECT (MAX(doc_id) + 10) // 10 AS w FROM documents),
+        |tok AS (
+        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token
+        |  FROM documents),
+        |nd AS (
+        |  SELECT doc_id // w AS band, COUNT(*) AS n_docs
+        |  FROM documents, w GROUP BY 1),
+        |inst AS (
+        |  SELECT doc_id // w AS band, COUNT(*) AS n_tokens
+        |  FROM tok, w GROUP BY 1),
+        |fv AS (SELECT token, MIN(doc_id) AS fd FROM tok GROUP BY token),
+        |nt AS (
+        |  SELECT fd // w AS band, COUNT(*) AS new_types
+        |  FROM fv, w GROUP BY 1)
+        |SELECT nd.band, nd.n_docs,
+        |       COALESCE(inst.n_tokens, 0) AS n_tokens,
+        |       COALESCE(nt.new_types, 0) AS new_types,
+        |       CAST(SUM(COALESCE(nt.new_types, 0)) OVER (ORDER BY nd.band
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |         AS BIGINT) AS cum_types
+        |FROM nd LEFT JOIN inst USING (band) LEFT JOIN nt USING (band)
+        |ORDER BY nd.band""".stripMargin),
     // Cross-source quantile normalization (round 12f) — the distribution
     // aligner (Bolstad et al., Bioinformatics 2003, the microarray
     // workhorse) corpus mixing needs when per-source length/quality scales
@@ -1011,7 +1521,7 @@ object TextStats {
     // row-count offsets — the standard distributed-rank move); the bucket
     // table is ≤100 rows × sources and the reference ≤100 rows, joined
     // back by an explicit broadcast.
-    "quantile_normalize_source" -> ((s, d) => {
+    Query("quantile_normalize_source", (s, d) => {
       val docs = documents(s, d)
       val wSrc = Window.partitionBy("source").orderBy("n_chars", "doc_id")
       val ranked = docs.select("doc_id", "source", "n_chars")
@@ -1025,7 +1535,25 @@ object TextStats {
         .select(col("doc_id"), col("source"), col("n_chars"), col("q"),
           expr("(qs * 1000000) DIV qc").as("norm_q6"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // same integer rank/bucket/fixed-point arithmetic; the within-source
+      // count rides a window here vs the engine's groupBy join — same values
+      """WITH r AS (
+        |  SELECT doc_id, source, n_chars,
+        |         ROW_NUMBER() OVER (PARTITION BY source
+        |                            ORDER BY n_chars, doc_id) AS rnk,
+        |         COUNT(*) OVER (PARTITION BY source) AS ns
+        |  FROM documents),
+        |b AS (SELECT doc_id, source, n_chars,
+        |             ((rnk - 1) * 100) // ns AS q
+        |      FROM r),
+        |ref AS (SELECT q, CAST(SUM(n_chars) AS BIGINT) AS qs,
+        |               COUNT(*) AS qc
+        |        FROM b GROUP BY q)
+        |SELECT b.doc_id, b.source, b.n_chars, b.q,
+        |       (ref.qs * 1000000) // ref.qc AS norm_q6
+        |FROM b JOIN ref ON b.q = ref.q
+        |ORDER BY b.doc_id""".stripMargin),
     // KMV distinct-intersection sketch (round 12f) — per-source k-minimum-
     // values sketches of the token-hash space (operators.KmvSketch
     // scaladoc: Bar-Yossef et al. 2002; Beyer et al. SIGMOD 2007), the
@@ -1046,7 +1574,7 @@ object TextStats {
     // after warm-up an insert costs one compare), and the pair matrix is
     // a broadcast theta self-join of the SOURCES-sized sketch table —
     // never the corpus.
-    "sketch_kmv_intersect" -> ((s, d) => {
+    Query("sketch_kmv_intersect", (s, d) => {
       import s.implicits._
       val k = 128
       val agg = new graft.operators.KmvAggregator(k).toColumn
@@ -1094,7 +1622,7 @@ object TextStats {
     // vocab-sized agg); N arrives as a broadcast 1-row cross join, never a
     // collected driver constant; the final per-doc top-3 windows on doc_id
     // (high cardinality — no funnel).
-    "tfidf_topk" -> ((s, d) => {
+    Query("tfidf_topk", (s, d) => {
       val docs = documents(s, d)
       val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
@@ -1108,7 +1636,22 @@ object TextStats {
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select("doc_id", "rn", "token", "tfidf")
         .orderBy("doc_id", "rn")
-    }),
+    }, oracle =
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
+        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
+        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
+        |scored AS (
+        |  SELECT tf.doc_id, tf.token,
+        |         round(tf.tf * ln(CAST((SELECT COUNT(*) FROM documents) AS DOUBLE)
+        |                          / df.df), 4) AS tfidf
+        |  FROM tf JOIN df USING (token))
+        |SELECT doc_id, CAST(rn AS INT) AS rn, token, tfidf FROM (
+        |  SELECT doc_id, token, tfidf,
+        |         row_number() OVER (PARTITION BY doc_id
+        |                            ORDER BY tfidf DESC, token) AS rn
+        |  FROM scored) t
+        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin),
     // χ² term-source association (round 12g) — the classic feature-
     // selection statistic (Yang & Pedersen, ICML 1997 rank it top with IG
     // for text): for every (source, token), the 2×2 document-presence
@@ -1126,7 +1669,7 @@ object TextStats {
     // shuffle; everything after is vocab-sized (a, nt), 3-row (ns)
     // broadcast, and the 1-row n crossJoin; the top-5 window partitions
     // by source over ≤|vocab| rows.
-    "text_chisq_terms" -> ((s, d) => {
+    Query("text_chisq_terms", (s, d) => {
       val docs = documents(s, d)
       val dt = docs.select(col("doc_id"), col("source"),
         explode(tokens(col("text"))).as("token")).distinct()
@@ -1149,7 +1692,38 @@ object TextStats {
         .select(col("source"), col("rn"), col("token"), col("df_in"),
           col("nt"), round(col("chi2"), 6).as("chi2"))
         .orderBy("source", "rn")
-    }),
+    }, oracle =
+      // exact-integer contingency factors (BIGINT products, HUGEINT-safe
+      // sums), ONE double division — the identical deterministic value the
+      // Spark side ranks; the rn window mirrors the tie-break
+      """WITH dt AS (
+        |  SELECT DISTINCT doc_id, source, token FROM (
+        |    SELECT doc_id, source, unnest(str_split(text, ' ')) AS token
+        |    FROM documents) t),
+        |a AS (SELECT source, token, COUNT(*) AS a FROM dt GROUP BY 1, 2),
+        |srcn AS (SELECT source, COUNT(*) AS ns FROM documents GROUP BY 1),
+        |tokn AS (SELECT token, COUNT(*) AS nt FROM dt GROUP BY 1),
+        |n AS (SELECT COUNT(*) AS n FROM documents),
+        |sc AS (
+        |  SELECT a.source, a.token, a.a, ns, nt, n.n,
+        |         a.a * (n.n - ns - nt + a.a) - (ns - a.a) * (nt - a.a)
+        |           AS det
+        |  FROM a JOIN srcn USING (source) JOIN tokn USING (token)
+        |  CROSS JOIN n
+        |  WHERE nt < n.n),
+        |scored AS (
+        |  SELECT source, token, a AS df_in, nt,
+        |         CAST(n * det * det AS DOUBLE)
+        |           / CAST(ns * (n - ns) * nt * (n - nt) AS DOUBLE) AS chi2
+        |  FROM sc)
+        |SELECT source, CAST(rn AS INT) AS rn, token, df_in, nt,
+        |       round(chi2, 6) AS chi2
+        |FROM (
+        |  SELECT source, token, df_in, nt, chi2,
+        |         row_number() OVER (PARTITION BY source
+        |                            ORDER BY chi2 DESC, token) AS rn
+        |  FROM scored) t
+        |WHERE rn <= 5 ORDER BY source, rn""".stripMargin),
     // BM25 retrieval (round 6) — the lexical ranking function every search/
     // RAG pipeline runs before (or fused with) vector retrieval: top-20
     // docs for a fixed 3-term query, Okapi BM25 with k1=1.2, b=0.75,
@@ -1167,7 +1741,38 @@ object TextStats {
     // the shuffle (the filter prunes ~99% of token rows at the map side),
     // df and corpus stats are broadcast 1-to-3-row aggregates, and the
     // global top-20 is a TakeOrdered, never a full sort.
-    "retrieval_bm25" -> ((s, d) => bm25Top20(s, d)),
+    Query("retrieval_bm25", (s, d) => bm25Top20(s, d), oracle =
+      // same float shape as the Spark plan, operation for operation; every
+      // numeric literal CAST to DOUBLE (a bare 2.2 is DECIMAL in DuckDB and
+      // would run the formula in decimal arithmetic — the §7.4c trap);
+      // fixed-order c1+c2+c3 addition mirrors the pivoted Spark aggregate
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
+        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
+        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
+        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
+        |contrib AS (
+        |  SELECT tf.doc_id, tf.token,
+        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
+        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+        |            + CAST(1.0 AS DOUBLE))
+        |         * (tf * CAST(2.2 AS DOUBLE))
+        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
+        |            + CAST(0.75 AS DOUBLE)
+        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
+        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
+        |agg AS (
+        |  SELECT doc_id,
+        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
+        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
+        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
+        |           4) AS score
+        |  FROM contrib GROUP BY doc_id)
+        |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank,
+        |       doc_id, score
+        |FROM agg ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
     // Reciprocal-rank fusion (round 8) — the standard hybrid-retrieval
     // merge (RRF: score = Σ 1/(k0 + rank), k0 = 60) of the two ranking
     // modalities the engine already serves: lexical BM25 (bm25Top20,
@@ -1182,7 +1787,7 @@ object TextStats {
     // constant work regardless of corpus size; the rank window over the
     // vector list runs AFTER the limit (k-bounded, the vocab_coverage
     // pattern).
-    "retrieval_rrf" -> ((s, d) => {
+    Query("retrieval_rrf", (s, d) => {
       val text = bm25Top20(s, d).select(col("doc_id"), col("rank").as("r_text"))
       val vec = Similarity.quantizedScores(s, d)
         .orderBy(desc("score"), asc("vec_id")).limit(20)
@@ -1195,7 +1800,56 @@ object TextStats {
             coalesce(expr("1000000000L DIV (60 + r_vec)"), lit(0L)))
             .as("rrf_q9"))
         .orderBy(desc("rrf_q9"), asc("doc_id")).limit(15)
-    }),
+    }, oracle =
+      // the two component rankings replay their own proven oracles (bm25
+      // CTEs above, the quantized dot from knn_quantized_topk); the fusion
+      // itself is pure integer arithmetic — // and DIV agree on positives
+      s"""WITH tok AS (
+        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
+        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
+        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
+        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
+        |contrib AS (
+        |  SELECT tf.doc_id, tf.token,
+        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
+        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+        |            + CAST(1.0 AS DOUBLE))
+        |         * (tf * CAST(2.2 AS DOUBLE))
+        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
+        |            + CAST(0.75 AS DOUBLE)
+        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
+        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
+        |bm AS (
+        |  SELECT doc_id,
+        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
+        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
+        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
+        |           4) AS score
+        |  FROM contrib GROUP BY doc_id),
+        |atop AS (
+        |  SELECT doc_id,
+        |         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
+        |           AS r_text
+        |  FROM (SELECT doc_id, score FROM bm
+        |        ORDER BY score DESC, doc_id LIMIT 20)),
+        |${Similarity.OracleInt8Vectors},
+        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
+        |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
+        |       FROM q, p WHERE q.vec_id <> 0),
+        |btop AS (
+        |  SELECT vec_id AS doc_id,
+        |         CAST(row_number() OVER (ORDER BY score DESC, vec_id) AS INT)
+        |           AS r_vec
+        |  FROM (SELECT vec_id, score FROM vs
+        |        ORDER BY score DESC, vec_id LIMIT 20))
+        |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id, a.r_text, b.r_vec,
+        |       CAST(COALESCE(CAST(1000000000 AS BIGINT) // (60 + a.r_text), 0)
+        |          + COALESCE(CAST(1000000000 AS BIGINT) // (60 + b.r_vec), 0)
+        |            AS BIGINT) AS rrf_q9
+        |FROM atop a FULL OUTER JOIN btop b ON a.doc_id = b.doc_id
+        |ORDER BY rrf_q9 DESC, doc_id LIMIT 15""".stripMargin),
     // Weighted score fusion (round 11) — the OTHER standard hybrid next to
     // retrieval_rrf's rank fusion: each modality's top-20 scores are
     // min-max normalized WITHIN the retrieved list, then blended at
@@ -1212,7 +1866,7 @@ object TextStats {
     // inputs are TakeOrdered top-20s, the stats are broadcast 1-row aggs
     // over 20 rows, fusion is a full-outer join of two 20-row lists —
     // constant work regardless of corpus size.
-    "retrieval_hybrid_weighted" -> ((s, d) => {
+    Query("retrieval_hybrid_weighted", (s, d) => {
       val text = bm25Top20(s, d)
         .select(col("doc_id"),
           floor(col("score") * 10000 + 0.5).cast("long").as("t"))
@@ -1236,7 +1890,64 @@ object TextStats {
           expr("(coalesce(nt_q6, 0L) * 7 + coalesce(nv_q6, 0L) * 3) DIV 10")
             .as("hybrid_q6"))
         .orderBy(desc("hybrid_q6"), asc("doc_id")).limit(15)
-    }),
+    }, oracle =
+      // the two component scorers replay their proven oracles; quantization
+      // is the floor(s*1e4 + 0.5) half-up idiom (identical doubles in both
+      // engines), normalization and blend are pure integer arithmetic
+      s"""WITH tok AS (
+        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
+        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
+        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
+        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
+        |contrib AS (
+        |  SELECT tf.doc_id, tf.token,
+        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
+        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+        |            + CAST(1.0 AS DOUBLE))
+        |         * (tf * CAST(2.2 AS DOUBLE))
+        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
+        |            + CAST(0.75 AS DOUBLE)
+        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
+        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
+        |bm AS (
+        |  SELECT doc_id,
+        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
+        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
+        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
+        |           4) AS score
+        |  FROM contrib GROUP BY doc_id),
+        |atop AS (
+        |  SELECT doc_id,
+        |         CAST(floor(score * 10000 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS t
+        |  FROM (SELECT doc_id, score FROM bm
+        |        ORDER BY score DESC, doc_id LIMIT 20)),
+        |ts AS (SELECT MIN(t) AS tmin, MAX(t) AS tmax FROM atop),
+        |tn AS (SELECT doc_id,
+        |              CASE WHEN tmax > tmin
+        |                   THEN (t - tmin) * 1000000 // (tmax - tmin)
+        |                   ELSE 1000000 END AS nt_q6
+        |       FROM atop, ts),
+        |${Similarity.OracleInt8Vectors},
+        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
+        |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
+        |       FROM q, p WHERE q.vec_id <> 0),
+        |btop AS (
+        |  SELECT vec_id AS doc_id, score AS v
+        |  FROM (SELECT vec_id, score FROM vs
+        |        ORDER BY score DESC, vec_id LIMIT 20)),
+        |vsx AS (SELECT MIN(v) AS vmin, MAX(v) AS vmax FROM btop),
+        |vn AS (SELECT doc_id,
+        |              CASE WHEN vmax > vmin
+        |                   THEN (v - vmin) * 1000000 // (vmax - vmin)
+        |                   ELSE 1000000 END AS nv_q6
+        |       FROM btop, vsx)
+        |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id, a.nt_q6, b.nv_q6,
+        |       CAST((COALESCE(a.nt_q6, 0) * 7 + COALESCE(b.nv_q6, 0) * 3) // 10
+        |            AS BIGINT) AS hybrid_q6
+        |FROM tn a FULL OUTER JOIN vn b ON a.doc_id = b.doc_id
+        |ORDER BY hybrid_q6 DESC, doc_id LIMIT 15""".stripMargin),
     // Bigram language-model estimation (round 6) — the n-gram-LM counting
     // pass quality filters build their perplexity proxies from. Add-one
     // smoothed conditional probabilities are emitted as EXACT RATIONALS
@@ -1247,7 +1958,7 @@ object TextStats {
     // from one lead() window per doc_id (high-cardinality partition key),
     // counts are map-side-combinable long aggs on the bigram key, V rides
     // as a broadcast 1-row aggregate.
-    "text_bigram_lm" -> ((s, d) => {
+    Query("text_bigram_lm", (s, d) => {
       val toks = documents(s, d).select(col("doc_id"),
         posexplode(tokens(col("text"))).as(Seq("pos", "w")))
       val byDoc = Window.partitionBy("doc_id").orderBy("pos")
@@ -1262,7 +1973,18 @@ object TextStats {
           (col("c12") + 1).as("p_num"),
           (col("c1") + col("v")).as("p_den"))
         .orderBy(desc("c12"), asc("w1"), asc("w2")).limit(30)
-    }),
+    }, oracle =
+      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+        |big AS (
+        |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
+        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
+        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
+        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
+        |v AS (SELECT COUNT(DISTINCT w) AS v
+        |      FROM (SELECT unnest(ws) AS w FROM d) t)
+        |SELECT w1, w2, c12, c12 + 1 AS p_num, c1 + v AS p_den
+        |FROM c12 JOIN c1 USING (w1) CROSS JOIN v
+        |ORDER BY c12 DESC, w1, w2 LIMIT 30""".stripMargin),
     // Collocation extraction by pointwise mutual information (round 6) —
     // the phrase-mining pass behind tokenizer-vocabulary merges and
     // stop-phrase lists. PMI = log lift; log is monotone, so ranking by
@@ -1277,7 +1999,7 @@ object TextStats {
     // skew-free token keys; N rides as a broadcast 1-row aggregate.
     // (lift_num·1e6 needs N·c12·1e6 < 2^63 — at corpus scale swap the
     // 1e6 quantizer for DECIMAL(38) or rank on log-space doubles.)
-    "collocation_pmi" -> ((s, d) => {
+    Query("collocation_pmi", (s, d) => {
       val toks = documents(s, d).select(col("doc_id"),
         posexplode(tokens(col("text"))).as(Seq("pos", "w")))
       val byDoc = Window.partitionBy("doc_id").orderBy("pos")
@@ -1306,7 +2028,23 @@ object TextStats {
             "raise_error('collocation_pmi: lift_q6 denominator overflow'))")
             .as("lift_q6"))
         .orderBy(desc("lift_q6"), asc("w1"), asc("w2")).limit(25)
-    }),
+    }, oracle =
+      // lift as an exact rational + the 1e6 fixed-point quantization used
+      // for the order — DuckDB's // and Spark's DIV agree on non-negative
+      // integer floor division
+      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+        |big AS (
+        |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
+        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
+        |n AS (SELECT COUNT(*) AS n FROM big),
+        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big
+        |        GROUP BY 1, 2 HAVING COUNT(*) >= 5),
+        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
+        |c2 AS (SELECT w2, COUNT(*) AS c2 FROM big GROUP BY 1)
+        |SELECT w1, w2, c12, c12 * n AS lift_num, c1 * c2 AS lift_den,
+        |       (c12 * n * 1000000) // (c1 * c2) AS lift_q6
+        |FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2) CROSS JOIN n
+        |ORDER BY lift_q6 DESC, w1, w2 LIMIT 25""".stripMargin),
     // Importance-weighted sampling (training-data pipeline op): per-doc keep
     // rate proportional to length (clamped 10-90%), applied as a pure
     // function of doc_id — md5 digits 9-12, disjoint from sample_split's
@@ -1316,7 +2054,7 @@ object TextStats {
     // hash vs per-row rate, never rand()) is the point. Integer floor
     // division only — a double→int cast would round in DuckDB but truncate
     // in Spark.
-    "weighted_sample" -> ((s, d) => {
+    Query("weighted_sample", (s, d) => {
       val rate = least(lit(90L), greatest(lit(10L), floor(col("n_chars") / 20)))
       val kept = md5Fold(col("doc_id"), 9) % 100 < rate
       documents(s, d).groupBy("lang")
@@ -1324,7 +2062,24 @@ object TextStats {
           sum(kept.cast("long")).as("n_kept"),
           sum(when(kept, col("n_chars")).otherwise(0).cast("long")).as("kept_chars"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      // md5 digits 9-12 (disjoint from 1-4 split and 5-8 stratified); floor
+      // division for the rate (CAST would round in DuckDB, truncate in Spark)
+      """WITH h AS (
+        |  SELECT doc_id, lang, n_chars,
+        |         md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
+        |b AS (
+        |  SELECT lang, n_chars,
+        |    ((((CASE WHEN ord(hx[9:9]) >= 97 THEN ord(hx[9:9]) - 87 ELSE ord(hx[9:9]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[10:10]) >= 97 THEN ord(hx[10:10]) - 87 ELSE ord(hx[10:10]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[11:11]) >= 97 THEN ord(hx[11:11]) - 87 ELSE ord(hx[11:11]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[12:12]) >= 97 THEN ord(hx[12:12]) - 87 ELSE ord(hx[12:12]) - 48 END)) % 100 AS pct,
+        |    least(90, greatest(10, CAST(floor(n_chars / 20.0) AS BIGINT))) AS rate
+        |  FROM h)
+        |SELECT lang, COUNT(*) AS n_total,
+        |       CAST(SUM(CASE WHEN pct < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |       CAST(SUM(CASE WHEN pct < rate THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
+        |FROM b GROUP BY lang ORDER BY lang""".stripMargin),
     // URL/domain extraction (web-corpus pipeline op): host, path and query
     // params pulled out of URL strings — the inputs to per-domain quotas,
     // domain-level dedup and source filtering. The corpus has no URL
@@ -1332,7 +2087,7 @@ object TextStats {
     // and parsed BACK with Spark's parse_url; the oracle re-parses the
     // same strings with anchored regexes (an independent parser). Pure
     // per-row string work — zero shuffle before the contract orderBy.
-    "url_extract" -> ((s, d) => {
+    Query("url_extract", (s, d) => {
       val url = concat(lit("https://www."),
         lower(regexp_replace(col("s_name"), "#", "-")),
         lit(".example.com/item/"), col("s_suppkey").cast("string"),
@@ -1343,7 +2098,20 @@ object TextStats {
           parse_url(url, lit("PATH")).as("path"),
           parse_url(url, lit("QUERY"), lit("region")).as("region_param"))
         .orderBy("s_suppkey")
-    }),
+    }, oracle =
+      // an independent parser on the same strings: anchored regexes vs
+      // Spark's parse_url
+      """WITH t AS (
+        |  SELECT s_suppkey,
+        |         'https://www.' || lower(replace(s_name, '#', '-'))
+        |           || '.example.com/item/' || CAST(s_suppkey AS VARCHAR)
+        |           || '?region=' || CAST(s_nationkey AS VARCHAR) || '&ok=1' AS url
+        |  FROM supplier)
+        |SELECT s_suppkey, url,
+        |       regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+        |       regexp_extract(url, '^https?://[^/]+([^?#]*)', 1) AS path,
+        |       regexp_extract(url, '[?&]region=([^&#]*)', 1) AS region_param
+        |FROM t ORDER BY s_suppkey""".stripMargin),
     // User-level holdout (the leakage-free eval split): the hash decision
     // is taken on the USER, not the event, so every event of a user lands
     // in the same split — a per-event hash would leak a held-out user's
@@ -1351,7 +2119,7 @@ object TextStats {
     // per-doc sample_split cannot prevent for grouped data. md5 digits
     // 17-20 (next free range; 1-4 split/pack, 5-8 stratified, 9-12
     // weighted, 13-16 negatives), ~20% of users held out.
-    "sample_user_holdout" -> ((s, d) => {
+    Query("sample_user_holdout", (s, d) => {
       val hold = md5Fold(col("user_id"), 17) % 100 < 20
       events(s, d)
         .withColumn("split", when(hold, "holdout").otherwise("train"))
@@ -1360,7 +2128,24 @@ object TextStats {
           count(lit(1)).as("n_events"),
           decSum(col("value")).as("sum_value"))
         .orderBy("split")
-    }),
+    }, oracle =
+      // md5 hex digits 17-20 of the USER id — the same fold discipline as
+      // pack_sequences (digits 1-4); split is a pure function of user_id
+      """WITH h AS (
+        |  SELECT user_id, value, md5(CAST(user_id AS VARCHAR)) AS hx
+        |  FROM events),
+        |b AS (
+        |  SELECT user_id, value,
+        |    ((((CASE WHEN ord(hx[17:17]) >= 97 THEN ord(hx[17:17]) - 87 ELSE ord(hx[17:17]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[18:18]) >= 97 THEN ord(hx[18:18]) - 87 ELSE ord(hx[18:18]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[19:19]) >= 97 THEN ord(hx[19:19]) - 87 ELSE ord(hx[19:19]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[20:20]) >= 97 THEN ord(hx[20:20]) - 87 ELSE ord(hx[20:20]) - 48 END)) % 100 AS pct
+        |  FROM h)
+        |SELECT CASE WHEN pct < 20 THEN 'holdout' ELSE 'train' END AS split,
+        |       COUNT(DISTINCT user_id) AS n_users,
+        |       COUNT(*) AS n_events,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM b GROUP BY 1 ORDER BY split""".stripMargin),
     // A/B experiment readout (round 6) — deterministic variant assignment
     // + funnel conversion, the analysis pass every event pipeline ends in.
     // Assignment hashes the USER (md5 digits 21-24 — next free range;
@@ -1372,7 +2157,7 @@ object TextStats {
     // the z-test the analyst runs on top is driver-side arithmetic over
     // these four longs, not a distributed op. One user_id groupBy, then a
     // 2-key aggregate: the 100 TB shape is a straight two-level rollup.
-    "abtest_conversion" -> ((s, d) => {
+    Query("abtest_conversion", (s, d) => {
       val per = events(s, d).groupBy("user_id")
         .agg(min(when(col("event_type") === "click", col("event_id")))
             .as("first_click"),
@@ -1387,7 +2172,34 @@ object TextStats {
             col("last_purchase") > col("first_click")).cast("long"))
             .as("n_converted"))
         .orderBy("variant")
-    }),
+    }, oracle =
+      // md5 hex digits 21-24 of the USER id; conversion compares event_ids
+      // (never the ns timestamps); the rate is the exact rational
+      // (n_converted, n_clickers)
+      """WITH per AS (
+        |  SELECT user_id,
+        |         MIN(CASE WHEN event_type = 'click' THEN event_id END)
+        |           AS first_click,
+        |         MAX(CASE WHEN event_type = 'purchase' THEN event_id END)
+        |           AS last_purchase
+        |  FROM events GROUP BY user_id),
+        |h AS (
+        |  SELECT *, md5(CAST(user_id AS VARCHAR)) AS hx FROM per),
+        |v AS (
+        |  SELECT first_click, last_purchase,
+        |    CASE WHEN ((((CASE WHEN ord(hx[21:21]) >= 97 THEN ord(hx[21:21]) - 87 ELSE ord(hx[21:21]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[22:22]) >= 97 THEN ord(hx[22:22]) - 87 ELSE ord(hx[22:22]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[23:23]) >= 97 THEN ord(hx[23:23]) - 87 ELSE ord(hx[23:23]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[24:24]) >= 97 THEN ord(hx[24:24]) - 87 ELSE ord(hx[24:24]) - 48 END)) % 2 = 0
+        |      THEN 'A' ELSE 'B' END AS variant
+        |  FROM h)
+        |SELECT variant, COUNT(*) AS n_users,
+        |       CAST(SUM(CASE WHEN first_click IS NOT NULL
+        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_clickers,
+        |       CAST(SUM(CASE WHEN first_click IS NOT NULL
+        |                      AND last_purchase > first_click
+        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
+        |FROM v GROUP BY variant ORDER BY variant""".stripMargin),
     // Training token budget per language (round 14c) — the number the
     // mix actually buys: whitespace tokens per lang × the published
     // epoch factor = effective training tokens, the readout a compute
@@ -1398,7 +2210,7 @@ object TextStats {
     // products ride DECIMAL(38,0) (tokens×epochs_q6 passes 2⁶³ near
     // 10¹³ corpus tokens). One size() pass (no explode) + a |langs| agg
     // + the broadcast schedule join.
-    "mix_token_budget" -> ((s, d) => {
+    Query("mix_token_budget", (s, d) => {
       // filter empty segments so the budget's token unit matches
       // tokenizer_fertility's n_words on identical text (review find:
       // a bare split() counts phantom tokens on doubled spaces)
@@ -1413,7 +2225,21 @@ object TextStats {
           expr("CAST(CAST(n_tokens AS DECIMAL(38,0)) * epochs_q6" +
             " DIV 1000000 AS BIGINT)").as("effective_tokens"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      // the same sched CTE joined onto per-lang token sums; the product
+      // rides HUGEINT
+      s"""WITH $MixScheduleCtes,
+         |tk AS (
+         |  SELECT lang,
+         |         CAST(SUM(len(list_filter(str_split(text, ' '),
+         |                                  x -> x <> ''))) AS BIGINT)
+         |           AS n_tokens
+         |  FROM documents GROUP BY lang)
+         |SELECT tk.lang, tk.n_tokens, sched.epochs_q6,
+         |       CAST(CAST(tk.n_tokens AS HUGEINT) * sched.epochs_q6
+         |            // 1000000 AS BIGINT) AS effective_tokens
+         |FROM tk JOIN sched ON tk.lang = sched.lang
+         |ORDER BY tk.lang""".stripMargin),
     // Sample-ratio-mismatch check (round 14c) — the FIRST gate every
     // experimentation platform runs before reading abtest_conversion's
     // funnel: if the observed A/B user split deviates from the designed
@@ -1426,7 +2252,7 @@ object TextStats {
     // non-negative square; the verdict compares against the χ²₁ 95%
     // critical value 3.841459 carried as the q6 literal 3841459. One
     // distinct pass + a 2-row rollup.
-    "abtest_srm_check" -> ((s, d) => {
+    Query("abtest_srm_check", (s, d) => {
       val counts = events(s, d).select("user_id").distinct()
         .withColumn("variant", abVariant)
         .groupBy("variant").agg(count(lit(1)).as("n"))
@@ -1443,6 +2269,29 @@ object TextStats {
             " * 1000000 DIV (n_a + n_b) AS BIGINT)")
             .as("chi2_q6"))
         .withColumn("srm_detected", col("chi2_q6") > 3841459L)
+    }, oracle =
+      // the same digits-21-24 fold over DISTINCT users; chi2 as the exact
+      // two-equal-cell rational with the q6 critical-value literal
+      {
+      def hv(i: Int) =
+        s"(CASE WHEN ord(hx[$i:$i]) >= 97 THEN ord(hx[$i:$i]) - 87" +
+          s" ELSE ord(hx[$i:$i]) - 48 END)"
+      val fold = s"(((${hv(21)} * 16 + ${hv(22)}) * 16 + ${hv(23)})" +
+        s" * 16 + ${hv(24)})"
+      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
+         |h AS (SELECT md5(CAST(user_id AS VARCHAR)) AS hx FROM u),
+         |v AS (SELECT CASE WHEN $fold % 2 = 0 THEN 'A' ELSE 'B' END
+         |        AS variant FROM h),
+         |c AS (SELECT
+         |        SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS n_a,
+         |        SUM(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS n_b
+         |      FROM v)
+         |SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+         |       CAST(CAST(n_a - n_b AS HUGEINT) * (n_a - n_b) * 1000000
+         |            // (n_a + n_b) AS BIGINT) AS chi2_q6,
+         |       CAST(n_a - n_b AS HUGEINT) * (n_a - n_b) * 1000000
+         |         // (n_a + n_b) > 3841459 AS srm_detected
+         |FROM c""".stripMargin
     }),
     // Mix-diversity profile per language: Gini impurity and Shannon
     // entropy of the source distribution — the "is this slice dominated by
@@ -1454,7 +2303,7 @@ object TextStats {
     // boundary across all terms and SFs is ~2.6e-11, ~5 orders above libm
     // ulp noise (re-measure if the fixture changes). floor(x+0.5), never
     // round(): SURVEY §7.4c.
-    "profile_entropy" -> ((s, d) => {
+    Query("profile_entropy", (s, d) => {
       val c = documents(s, d).groupBy("lang", "source")
         .agg(count(lit(1)).as("c"))
       val n = sum(col("c")).over(Window.partitionBy("lang"))
@@ -1469,7 +2318,24 @@ object TextStats {
             .as("gini"),
           (-sum(col("term")).cast("double") / lit(1.0e8)).as("entropy"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      """WITH c AS (
+        |  SELECT lang, source, COUNT(*) AS c FROM documents GROUP BY 1, 2),
+        |t AS (
+        |  SELECT lang, c,
+        |         CAST(SUM(c) OVER (PARTITION BY lang) AS BIGINT) AS n
+        |  FROM c),
+        |u AS (
+        |  SELECT lang, c, n,
+        |         CAST(floor(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)
+        |           * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
+        |           * 100000000.0 + 0.5) AS BIGINT) AS term
+        |  FROM t)
+        |SELECT lang, MAX(n) AS n_docs, COUNT(*) AS k_sources,
+        |       1.0 - CAST(SUM(c * c) AS DOUBLE)
+        |             / (CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE)) AS gini,
+        |       -CAST(SUM(term) AS DOUBLE) / 100000000.0 AS entropy
+        |FROM u GROUP BY lang ORDER BY lang""".stripMargin),
     // URL canonicalization + dedup (the step BEFORE url-based web-corpus
     // dedup: the same page arrives as http/https, WWW-cased, :443-ported,
     // utm-tagged, fragment-suffixed and trailing-slashed variants).
@@ -1481,7 +2347,7 @@ object TextStats {
     // canonical-key aggregate; non-utm query params (ref=) survive and
     // keep those variants distinct — canonicalization must never merge
     // genuinely different resources.
-    "dedup_url_canonical" -> ((s, d) => {
+    Query("dedup_url_canonical", (s, d) => {
       val item = (col("o_custkey") % 500).cast("string")
       val raw = when(col("o_orderkey") % 5 === 0,
           concat(lit("https://www.shop.example.com/item/"), item))
@@ -1508,7 +2374,35 @@ object TextStats {
         .groupBy("canonical_url")
         .agg(count(lit(1)).as("n_raw"), min(col("o_orderkey")).as("first_key"))
         .orderBy("canonical_url")
-    }),
+    }, oracle =
+      // same regex chain; DuckDB needs the 'g' flag where Spark's
+      // regexp_replace is global by default
+      """WITH raw AS (
+        |  SELECT o_orderkey,
+        |         CASE CAST(o_orderkey % 5 AS INT)
+        |           WHEN 0 THEN 'https://www.shop.example.com/item/' || CAST(o_custkey % 500 AS VARCHAR)
+        |           WHEN 1 THEN 'HTTPS://WWW.SHOP.EXAMPLE.COM/item/' || CAST(o_custkey % 500 AS VARCHAR) || '/'
+        |           WHEN 2 THEN 'https://shop.example.com:443/item/' || CAST(o_custkey % 500 AS VARCHAR) || '?utm_source=x&utm_campaign=y'
+        |           WHEN 3 THEN 'http://shop.example.com/item/' || CAST(o_custkey % 500 AS VARCHAR) || '?ref=abc&utm_medium=z#frag'
+        |           ELSE 'https://shop.example.com/item/' || CAST(o_custkey % 500 AS VARCHAR) || '?utm_source=q&ref=abc'
+        |         END AS u
+        |  FROM orders),
+        |canon AS (
+        |  SELECT o_orderkey,
+        |         regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+        |           regexp_replace(regexp_replace(regexp_replace(lower(
+        |             regexp_replace(u, '#.*$', '')),
+        |           '^http://', 'https://'),
+        |           '://www\.', '://', 'g'),
+        |           ':443/', '/', 'g'),
+        |           '[?&]utm_[^&#]*', '', 'g'),
+        |           '^([^?&]*)&', '\1?'),
+        |           '/$', ''),
+        |           '\?$', '') AS canonical_url
+        |  FROM raw)
+        |SELECT canonical_url, COUNT(*) AS n_raw, MIN(o_orderkey) AS first_key
+        |FROM canon GROUP BY canonical_url
+        |ORDER BY canonical_url""".stripMargin),
     // Per-source quota capping (web-corpus pipeline op): every web corpus
     // caps documents per domain so one crawler-friendly site can't swamp
     // the mix. Keep the first 5 docs per source (rank by doc_id — a pure
@@ -1517,7 +2411,7 @@ object TextStats {
     // the rank window shuffles by source — a hot domain serializes into
     // one task, and the production mitigation is a per-partition
     // pre-count pass that short-circuits sources already over quota.
-    "source_quota_cap" -> ((s, d) => {
+    Query("source_quota_cap", (s, d) => {
       val w = Window.partitionBy("source").orderBy("doc_id")
       documents(s, d)
         .withColumn("rn", row_number().over(w))
@@ -1527,7 +2421,15 @@ object TextStats {
           sum(when(col("rn") <= 5, col("n_chars")).otherwise(0).cast("long"))
             .as("kept_chars"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH r AS (
+        |  SELECT source, n_chars,
+        |         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+        |  FROM documents)
+        |SELECT source, COUNT(*) AS n_total,
+        |       CAST(SUM(CASE WHEN rn <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |       CAST(SUM(CASE WHEN rn <= 5 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
+        |FROM r GROUP BY source ORDER BY source""".stripMargin),
     // Deterministic negative-pair sampling (contrastive-training op): each
     // anchor doc pairs with a pseudo-random partner — md5 digits 13-16 mod
     // the corpus size (disjoint from digits 1-4/5-8/9-12), never rand(),
@@ -1535,7 +2437,7 @@ object TextStats {
     // arrives as a broadcast 1-row cross join; the partner fetch is a
     // plain equi join on the computed id. same_lang marks in-language vs
     // cross-language negatives (the hard/easy split a trainer weights).
-    "negative_pairs" -> ((s, d) => {
+    Query("negative_pairs", (s, d) => {
       val docs = documents(s, d)
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val a = docs.select(col("doc_id"), col("lang"))
@@ -1548,15 +2450,39 @@ object TextStats {
         .select(col("doc_id"), col("neg_id"),
           (col("lang") === col("neg_lang")).as("same_lang"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // md5 digits 13-16 (disjoint from 1-4, 5-8, 9-12)
+      """WITH h AS (
+        |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
+        |a AS (
+        |  SELECT doc_id, lang,
+        |    CAST(((((CASE WHEN ord(hx[13:13]) >= 97 THEN ord(hx[13:13]) - 87 ELSE ord(hx[13:13]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[14:14]) >= 97 THEN ord(hx[14:14]) - 87 ELSE ord(hx[14:14]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[15:15]) >= 97 THEN ord(hx[15:15]) - 87 ELSE ord(hx[15:15]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[16:16]) >= 97 THEN ord(hx[16:16]) - 87 ELSE ord(hx[16:16]) - 48 END))
+        |      % (SELECT COUNT(*) FROM documents) AS BIGINT) AS neg_id
+        |  FROM h)
+        |SELECT a.doc_id, a.neg_id, a.lang = b.lang AS same_lang
+        |FROM a JOIN documents b ON a.neg_id = b.doc_id
+        |WHERE a.neg_id <> a.doc_id
+        |ORDER BY a.doc_id""".stripMargin),
     // Multimodal binary-column plumbing (builder mandate): payloads as
     // opaque binary + typed metadata; "decode" is a deterministic stub
     // (real image/audio libs absent by design) but schema, batching and
     // partition shape are real. See Multimodal.featurize.
-    "multimodal_meta" -> ((s, d) => Multimodal.pipeline(s, d)),
+    Query("multimodal_meta", (s, d) => Multimodal.pipeline(s, d), oracle =
+      // Stub features are (byte & 0xff)/256 — exact dyadic rationals, so the
+      // 8-element sum is order-independent and oracle-safe; ord() == byte on
+      // this ASCII corpus.
+      """SELECT doc_id,
+        |       CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END AS mime,
+        |       CAST(least(length(text), 64) AS BIGINT) AS n_bytes,
+        |       CAST(8 AS INT) AS n_features,
+        |       list_aggregate(list_transform(range(1, 9), i -> ord(text[i:i]) / 256.0), 'sum') AS feature_sum
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Frame-sampling over "video" payloads: one row fans out to n frames
     // (stubbed decode; real explode-shaped batched plumbing).
-    "multimodal_frames" -> ((s, d) => {
+    Query("multimodal_frames", (s, d) => {
       val media = documents(s, d).filter(col("doc_id") < 500).select(
         col("doc_id"),
         encode(substring(col("text"), 1, 64), "UTF-8").as("payload"),
@@ -1564,7 +2490,20 @@ object TextStats {
         length(substring(col("text"), 1, 64)).cast("long").as("n_bytes"))
       Multimodal.frameSample(s, media, stride = 16, frameLen = 8)
         .orderBy("doc_id", "frame")
-    }),
+    }, oracle =
+      // Stub frame features are sums of (byte&0xff)/256 dyadic rationals —
+      // exact and order-independent, so the fan-out is fully hashable; ord()
+      // == byte on this ASCII corpus (same assumption as multimodal_meta).
+      """WITH m AS (
+        |  SELECT doc_id, least(length(text), 64) AS L, text
+        |  FROM documents WHERE doc_id < 500),
+        |frames AS (
+        |  SELECT doc_id, CAST(f.i AS INT) AS frame,
+        |         list_aggregate(list_transform(range(1, least(8, L - 16*f.i) + 1),
+        |             j -> ord(text[CAST(16*f.i + j AS INT):CAST(16*f.i + j AS INT)]) / 256.0), 'sum') AS feature_sum
+        |  FROM m CROSS JOIN range(0, 4) AS f(i)
+        |  WHERE f.i < ceil(L / 16.0))
+        |SELECT doc_id, frame, feature_sum FROM frames ORDER BY doc_id, frame""".stripMargin),
     // Byte-exact payload dedup — the FIRST pass of any multimodal dedup at
     // 100 TB (identical image/audio files re-crawled under different URLs
     // dominate raw-crawl duplication; perceptual hashing only runs on what
@@ -1574,7 +2513,7 @@ object TextStats {
     // bytes_saved = what deleting the copies reclaims. Payloads are the
     // staged first-64-byte stand-ins the other multimodal keys use
     // (fixtures carry no real media by design).
-    "multimodal_dedup_bytes" -> ((s, d) => {
+    Query("multimodal_dedup_bytes", (s, d) => {
       documents(s, d)
         .select(col("doc_id"),
           sha2(encode(substring(col("text"), 1, 64), "UTF-8"), 256).as("h"),
@@ -1587,7 +2526,16 @@ object TextStats {
         .select(col("keeper"), col("h"), col("n_copies"),
           ((col("n_copies") - 1) * col("n_bytes")).as("bytes_saved"))
         .orderBy("keeper")
-    }),
+    }, oracle =
+      // same staged payload bytes (ASCII corpus: chars == bytes, so the
+      // VARCHAR-side sha256/length agree with Spark's binary-side ones)
+      """WITH m AS (
+        |  SELECT doc_id, sha256(text[1:64]) AS h,
+        |         CAST(length(text[1:64]) AS BIGINT) AS n_bytes
+        |  FROM documents)
+        |SELECT MIN(doc_id) AS keeper, h, COUNT(*) AS n_copies,
+        |       (COUNT(*) - 1) * MAX(n_bytes) AS bytes_saved
+        |FROM m GROUP BY h ORDER BY keeper""".stripMargin),
     // Perceptual-hash near-dup dedup over the staged payloads (round 11) —
     // the SECOND pass of multimodal dedup, after multimodal_dedup_bytes
     // removes byte-exact copies: re-encoded / slightly-corrupted files
@@ -1609,13 +2557,27 @@ object TextStats {
     // bucket occupancy flat as the corpus grows — the multi-index-hashing
     // layout. Verdict output (keeper = smallest close earlier doc) keeps
     // rows linear in docs however large a near-dup cluster is.
-    "multimodal_dedup_phash" -> ((s, d) =>
+    Query("multimodal_dedup_phash", (s, d) =>
       // exact pigeonhole pairing — operators.HammingBanding (planted
       // completeness/exclusion fuzz in HammingBandingSpec)
       graft.operators.HammingBanding
         .closeVerdicts(payloadPhash(s, d), "doc_id", "ph",
           bandBits = 16, nBands = 3, maxDist = 2)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      // The phash recurrence is replayed md5-for-md5 (the dedup_minhash_banded
+      // caveat: no independent minwise/majority construction exists), but the
+      // PAIRING is genuinely independent: brute-force all-pairs Hamming —
+      // no bands, no pigeonhole — so the gate proves the banded cover finds
+      // exactly the <=2-ball the quadratic scan finds.
+      // close pairs via the FULL n² cover — the oracle independently
+      // proves the pigeonhole banding loses nothing
+      s"""WITH $PhashOracleCtes,
+         |close_pairs AS (
+         |  SELECT a.doc_id AS d1, b.doc_id AS d2
+         |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id
+         |  WHERE bit_count(xor(a.ph, b.ph)) <= 2)
+         |SELECT d2 AS doc_id, MIN(d1) AS keeper, COUNT(*) AS n_close
+         |FROM close_pairs GROUP BY d2 ORDER BY doc_id""".stripMargin),
     // Hamming-banding calibration audit (round 14c) — the phash family's
     // twin of dedup_minhash_calibration: the exact Hamming-distance
     // histogram of every band-collision candidate pair, on the SAME
@@ -1628,7 +2590,7 @@ object TextStats {
     // width before trusting the layout at a bigger corpus. Candidates
     // are band-bounded (3·n²/2¹⁶ background), the histogram is
     // ≤49 rows, one map-side count agg.
-    "dedup_phash_calibration" -> ((s, d) =>
+    Query("dedup_phash_calibration", (s, d) =>
       graft.operators.HammingBanding
         .candidatePairs(payloadPhash(s, d), "doc_id", "ph",
           bandBits = 16, nBands = 3)
@@ -1636,7 +2598,25 @@ object TextStats {
         .agg(count(lit(1)).as("n_pairs"))
         .select(col("hd"), col("n_pairs"),
           (col("hd") <= 2).as("within_ball"))
-        .orderBy("hd")),
+        .orderBy("hd"), oracle =
+      // the calibration REPLAYS the banding (an audit describes the
+      // production candidate generator), over the same shared ph CTEs
+      s"""WITH $PhashOracleCtes,
+         |banded AS (
+         |  SELECT doc_id, t.k AS band,
+         |         (ph >> (CAST(t.k AS INT) * 16)) & 65535 AS bv
+         |  FROM ph, UNNEST(range(0, 3)) AS t(k)),
+         |cand AS (
+         |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
+         |  FROM banded x JOIN banded y
+         |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
+         |hds AS (
+         |  SELECT bit_count(xor(a.ph, b.ph)) AS hd
+         |  FROM cand JOIN ph a ON cand.d1 = a.doc_id
+         |            JOIN ph b ON cand.d2 = b.doc_id)
+         |SELECT CAST(hd AS INT) AS hd, COUNT(*) AS n_pairs,
+         |       hd <= 2 AS within_ball
+         |FROM hds GROUP BY hd ORDER BY hd""".stripMargin),
     // CROSS-CORPUS overlap matrix (round 11): distinct-word-3-gram Jaccard
     // between every pair of sources — the dataset-level contamination /
     // redundancy measurement run before mixing corpora (is source X
@@ -1650,7 +2630,7 @@ object TextStats {
     // from a self-equi-join on the hash (each posting meets only its own
     // bucket, ≤ |sources| rows) and the per-source totals are a
     // vocabulary-sized broadcast. jaccard_q6 is exact integer fixed point.
-    "corpus_overlap_ngram" -> ((s, d) => {
+    Query("corpus_overlap_ngram", (s, d) => {
       val grams = documents(s, d).select(col("source"),
           explode(graft.functions.TokenNgramHashes.token_ngram_hashes(
             Dedup.tokenHashes(tokens(col("text"))), 3)).as("g"))
@@ -1669,7 +2649,29 @@ object TextStats {
           expr("n_common * 1000000 DIV (n_a + n_b - n_common)"))
         .select("src_a", "src_b", "n_common", "n_a", "n_b", "jaccard_q6")
         .orderBy("src_a", "src_b")
-    }),
+    }, oracle =
+      // independent construction over PLAIN string word-3-grams (no hashing);
+      // the sub-3-token clamp mirrors the kernel's max(len-n+1, 1) fallback
+      // (same slice-clamp idiom as the text_decontaminate oracle); counts
+      // agree absent a 64-bit collision; // matches DIV on non-negatives
+      """WITH toks AS (
+        |  SELECT source, str_split(text, ' ') AS t FROM documents),
+        |g AS (
+        |  SELECT DISTINCT source,
+        |         unnest(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
+        |                               i -> array_to_string(t[i:i+2], ' '))) AS gram
+        |  FROM toks),
+        |c AS (SELECT source, COUNT(*) AS n FROM g GROUP BY source),
+        |common AS (
+        |  SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_common
+        |  FROM g a JOIN g b ON a.gram = b.gram AND a.source < b.source
+        |  GROUP BY 1, 2)
+        |SELECT src_a, src_b, n_common, ca.n AS n_a, cb.n AS n_b,
+        |       n_common * 1000000 // (ca.n + cb.n - n_common) AS jaccard_q6
+        |FROM common
+        |JOIN c ca ON ca.source = src_a
+        |JOIN c cb ON cb.source = src_b
+        |ORDER BY src_a, src_b""".stripMargin),
     // CCNet-style per-language quality tertiles (round 12): CCNet (Wenzek
     // et al. 2020) buckets each language's crawl into head/middle/tail by
     // per-language perplexity percentile, and trains on head+middle —
@@ -1688,7 +2690,7 @@ object TextStats {
     // (lang, fl_q6). The DuckDB oracle is an INDEPENDENT construction —
     // rank()-1 over raw docs — so the gate cross-checks the histogram
     // derivation itself.
-    "quality_buckets_lang" -> ((s, d) => {
+    Query("quality_buckets_lang", (s, d) => {
       val q = qualityStats
       val scored = documents(s, d).select(col("doc_id"), col("lang"),
           q.nStop.cast("long").as("n_stop"), q.nTok.cast("long").as("n_tok"))
@@ -1709,7 +2711,25 @@ object TextStats {
             .when(col("hi") * 3 < col("n") * 2, 2)
             .otherwise(3).as("bucket"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // INDEPENDENT construction: rank()-1 over the raw docs per language
+      // (the engine derives strict-greater counts from the (lang, fl_q6)
+      // histogram instead — the gate cross-checks the two)
+      """WITH s AS (
+        |  SELECT doc_id, lang,
+        |         CAST(len(list_filter(str_split(text, ' '),
+        |                t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS BIGINT)
+        |           * 1000000 // len(str_split(text, ' ')) AS fl_q6
+        |  FROM documents),
+        |r AS (
+        |  SELECT doc_id, lang, fl_q6,
+        |         rank() OVER (PARTITION BY lang ORDER BY fl_q6 DESC) - 1 AS hi,
+        |         COUNT(*) OVER (PARTITION BY lang) AS n
+        |  FROM s)
+        |SELECT doc_id, lang, CAST(fl_q6 AS BIGINT) AS fl_q6,
+        |       CAST(CASE WHEN hi * 3 < n THEN 1
+        |                 WHEN hi * 3 < 2 * n THEN 2 ELSE 3 END AS INT) AS bucket
+        |FROM r ORDER BY doc_id""".stripMargin),
     // DSIR importance weighting (round 12): Data Selection via Importance
     // Resampling (Xie et al. 2023) — score every raw doc by how
     // target-like its hashed-ngram feature distribution is, then sample
@@ -1734,7 +2754,7 @@ object TextStats {
     // the doc score is one map-side-combinable sum keyed by doc_id. The
     // log-ratio table is tiny and static — in production it would be fit
     // once and reused across corpus shards.
-    "dsir_importance" -> ((s, d) => {
+    Query("dsir_importance", (s, d) => {
       val B = 256
       // ONE tokenize+hash pass feeds both the bucket-count agg and the
       // per-doc score join (r17 optimization: without the lineage cut the
@@ -1763,7 +2783,37 @@ object TextStats {
         .groupBy("doc_id").agg(max(col("lang")).as("lang"),
           count(lit(1)).as("n_tok"), sum(col("lr_q8")).as("dsir_q8"))
         .orderBy("doc_id")
-    })
+    }, oracle =
+      // token-bucket fold replays md5Fold at digits 25-28 (the sample_split
+      // idiom, TOKEN namespace); the bucket log-ratio is one ln of an exact
+      // rational, half-up quantized to q8 BEFORE the per-doc integer sum
+      """WITH toks AS (
+        |  SELECT doc_id, lang, unnest(str_split(text, ' ')) AS tok
+        |  FROM documents),
+        |h AS (
+        |  SELECT doc_id, lang, md5(tok) AS hx FROM toks),
+        |bk AS (
+        |  SELECT doc_id, lang,
+        |    ((((CASE WHEN ord(hx[25:25]) >= 97 THEN ord(hx[25:25]) - 87 ELSE ord(hx[25:25]) - 48 END) * 16
+        |      + (CASE WHEN ord(hx[26:26]) >= 97 THEN ord(hx[26:26]) - 87 ELSE ord(hx[26:26]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[27:27]) >= 97 THEN ord(hx[27:27]) - 87 ELSE ord(hx[27:27]) - 48 END)) * 16
+        |      + (CASE WHEN ord(hx[28:28]) >= 97 THEN ord(hx[28:28]) - 87 ELSE ord(hx[28:28]) - 48 END)) % 256 AS b
+        |  FROM h),
+        |counts AS (
+        |  SELECT b, SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_t,
+        |         COUNT(*) AS n_r
+        |  FROM bk GROUP BY b),
+        |tot AS (SELECT SUM(n_t) AS tt, SUM(n_r) AS rr FROM counts),
+        |lr AS (
+        |  SELECT b,
+        |         CAST(floor(ln(CAST((n_t + 1) * (rr + 256) AS DOUBLE)
+        |                       / CAST((n_r + 1) * (tt + 256) AS DOUBLE))
+        |                    * 1e8 + 0.5) AS BIGINT) AS lr_q8
+        |  FROM counts, tot)
+        |SELECT bk.doc_id, MAX(bk.lang) AS lang, COUNT(*) AS n_tok,
+        |       CAST(SUM(lr.lr_q8) AS BIGINT) AS dsir_q8
+        |FROM bk JOIN lr USING (b)
+        |GROUP BY bk.doc_id ORDER BY bk.doc_id""".stripMargin)
   )
 
   /** The bpeLearn recurrence as a DuckDB CTE prefix (words → v0 → … → v8
@@ -1876,1112 +2926,4 @@ object TextStats {
        |                           < (epochs_q6 % 1000000) * 65536
        |                      THEN 1 ELSE 0 END) AS BIGINT) AS n_repeats
        |  FROM h JOIN sched ON h.lang = sched.lang)""".stripMargin
-
-  def oracle: Map[String, String] = Map(
-    "bpe_train_merges" -> {
-      val union = (0 until 8).map(k => s"SELECT * FROM m$k")
-        .mkString(" UNION ALL ")
-      s"""WITH $bpeOracleCtes
-         |SELECT step, lhs, rhs, cnt FROM ($union) ORDER BY step""".stripMargin
-    },
-    "bpe_apply_encode" ->
-      s"""WITH $bpeOracleCtes,
-         |seg8 AS (SELECT w, len(str_split(trim(seg), ' ')) AS n_sub FROM v8),
-         |tok AS (
-         |  SELECT doc_id, w FROM (
-         |    SELECT doc_id, unnest(str_split(text, ' ')) AS w FROM documents)
-         |  WHERE w <> '')
-         |SELECT t.doc_id, COUNT(*) AS n_ws,
-         |       CAST(SUM(CASE WHEN s.n_sub IS NOT NULL THEN s.n_sub
-         |                     ELSE 1 END) AS BIGINT) AS n_bpe
-         |FROM tok t LEFT JOIN seg8 s ON t.w = s.w
-         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    // the same vocab/encode CTEs re-aggregated per language; the q6
-    // ratios divide exact sums
-    "tokenizer_fertility" ->
-      s"""WITH $bpeOracleCtes,
-         |seg8 AS (SELECT w, len(str_split(trim(seg), ' ')) AS n_sub FROM v8),
-         |tok AS (
-         |  SELECT doc_id, lang, w FROM (
-         |    SELECT doc_id, lang, unnest(str_split(text, ' ')) AS w
-         |    FROM documents)
-         |  WHERE w <> ''),
-         |perdoc AS (
-         |  SELECT doc_id, lang, COUNT(*) AS n_ws,
-         |         SUM(CASE WHEN s.n_sub IS NOT NULL THEN s.n_sub
-         |                  ELSE 1 END) AS n_bpe,
-         |         SUM(CASE WHEN s.n_sub IS NULL THEN 1 ELSE 0 END) AS n_oov
-         |  FROM tok t LEFT JOIN seg8 s ON t.w = s.w
-         |  GROUP BY doc_id, lang)
-         |SELECT lang, COUNT(*) AS n_docs,
-         |       CAST(SUM(n_ws) AS BIGINT) AS n_words,
-         |       CAST(SUM(n_bpe) AS BIGINT) AS n_tokens,
-         |       CAST(SUM(n_bpe) * 1000000 // SUM(n_ws) AS BIGINT)
-         |         AS fertility_q6,
-         |       CAST(SUM(n_oov) * 1000000 // SUM(n_ws) AS BIGINT)
-         |         AS oov_q6
-         |FROM perdoc GROUP BY lang ORDER BY lang""".stripMargin,
-    "text_stats" ->
-      """SELECT lang, source, COUNT(*) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |       CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS sum_tokens,
-        |       CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "multimodal_join" ->
-      """SELECT doc_id, lang, label, n_chars,
-        |       CAST(len(embedding) AS INT) AS dim
-        |FROM documents JOIN embeddings ON doc_id = vec_id
-        |WHERE lang IN ('es','de') AND label < 5
-        |ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
-      """SELECT doc_id, n_chars,
-        |       CAST(len(str_split(text, ' ')) AS INT) AS n_tokens,
-        |       CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
-        |         / len(str_split(text, ' ')) AS mean_token_len,
-        |       CAST(len(list_filter(str_split(text, ' '),
-        |                t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS DOUBLE)
-        |         / len(str_split(text, ' ')) AS stopword_ratio,
-        |       CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-        |         / length(text) AS non_alnum_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // INDEPENDENT construction: rank()-1 over the raw docs per language
-    // (the engine derives strict-greater counts from the (lang, fl_q6)
-    // histogram instead — the gate cross-checks the two)
-    "quality_buckets_lang" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |         CAST(len(list_filter(str_split(text, ' '),
-        |                t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS BIGINT)
-        |           * 1000000 // len(str_split(text, ' ')) AS fl_q6
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, lang, fl_q6,
-        |         rank() OVER (PARTITION BY lang ORDER BY fl_q6 DESC) - 1 AS hi,
-        |         COUNT(*) OVER (PARTITION BY lang) AS n
-        |  FROM s)
-        |SELECT doc_id, lang, CAST(fl_q6 AS BIGINT) AS fl_q6,
-        |       CAST(CASE WHEN hi * 3 < n THEN 1
-        |                 WHEN hi * 3 < 2 * n THEN 2 ELSE 3 END AS INT) AS bucket
-        |FROM r ORDER BY doc_id""".stripMargin,
-    // token-bucket fold replays md5Fold at digits 25-28 (the sample_split
-    // idiom, TOKEN namespace); the bucket log-ratio is one ln of an exact
-    // rational, half-up quantized to q8 BEFORE the per-doc integer sum
-    "dsir_importance" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, unnest(str_split(text, ' ')) AS tok
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id, lang, md5(tok) AS hx FROM toks),
-        |bk AS (
-        |  SELECT doc_id, lang,
-        |    ((((CASE WHEN ord(hx[25:25]) >= 97 THEN ord(hx[25:25]) - 87 ELSE ord(hx[25:25]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[26:26]) >= 97 THEN ord(hx[26:26]) - 87 ELSE ord(hx[26:26]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[27:27]) >= 97 THEN ord(hx[27:27]) - 87 ELSE ord(hx[27:27]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[28:28]) >= 97 THEN ord(hx[28:28]) - 87 ELSE ord(hx[28:28]) - 48 END)) % 256 AS b
-        |  FROM h),
-        |counts AS (
-        |  SELECT b, SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_t,
-        |         COUNT(*) AS n_r
-        |  FROM bk GROUP BY b),
-        |tot AS (SELECT SUM(n_t) AS tt, SUM(n_r) AS rr FROM counts),
-        |lr AS (
-        |  SELECT b,
-        |         CAST(floor(ln(CAST((n_t + 1) * (rr + 256) AS DOUBLE)
-        |                       / CAST((n_r + 1) * (tt + 256) AS DOUBLE))
-        |                    * 1e8 + 0.5) AS BIGINT) AS lr_q8
-        |  FROM counts, tot)
-        |SELECT bk.doc_id, MAX(bk.lang) AS lang, COUNT(*) AS n_tok,
-        |       CAST(SUM(lr.lr_q8) AS BIGINT) AS dsir_q8
-        |FROM bk JOIN lr USING (b)
-        |GROUP BY bk.doc_id ORDER BY bk.doc_id""".stripMargin,
-    // Stub features are (byte & 0xff)/256 — exact dyadic rationals, so the
-    // 8-element sum is order-independent and oracle-safe; ord() == byte on
-    // this ASCII corpus.
-    "multimodal_meta" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END AS mime,
-        |       CAST(least(length(text), 64) AS BIGINT) AS n_bytes,
-        |       CAST(8 AS INT) AS n_features,
-        |       list_aggregate(list_transform(range(1, 9), i -> ord(text[i:i]) / 256.0), 'sum') AS feature_sum
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // same staged payload bytes (ASCII corpus: chars == bytes, so the
-    // VARCHAR-side sha256/length agree with Spark's binary-side ones)
-    "multimodal_dedup_bytes" ->
-      """WITH m AS (
-        |  SELECT doc_id, sha256(text[1:64]) AS h,
-        |         CAST(length(text[1:64]) AS BIGINT) AS n_bytes
-        |  FROM documents)
-        |SELECT MIN(doc_id) AS keeper, h, COUNT(*) AS n_copies,
-        |       (COUNT(*) - 1) * MAX(n_bytes) AS bytes_saved
-        |FROM m GROUP BY h ORDER BY keeper""".stripMargin,
-    // The phash recurrence is replayed md5-for-md5 (the dedup_minhash_banded
-    // caveat: no independent minwise/majority construction exists), but the
-    // PAIRING is genuinely independent: brute-force all-pairs Hamming —
-    // no bands, no pigeonhole — so the gate proves the banded cover finds
-    // exactly the <=2-ball the quadratic scan finds.
-    // close pairs via the FULL n² cover — the oracle independently
-    // proves the pigeonhole banding loses nothing
-    "multimodal_dedup_phash" ->
-      s"""WITH $PhashOracleCtes,
-         |close_pairs AS (
-         |  SELECT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.ph, b.ph)) <= 2)
-         |SELECT d2 AS doc_id, MIN(d1) AS keeper, COUNT(*) AS n_close
-         |FROM close_pairs GROUP BY d2 ORDER BY doc_id""".stripMargin,
-    // the calibration REPLAYS the banding (an audit describes the
-    // production candidate generator), over the same shared ph CTEs
-    "dedup_phash_calibration" ->
-      s"""WITH $PhashOracleCtes,
-         |banded AS (
-         |  SELECT doc_id, t.k AS band,
-         |         (ph >> (CAST(t.k AS INT) * 16)) & 65535 AS bv
-         |  FROM ph, UNNEST(range(0, 3)) AS t(k)),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-         |  FROM banded x JOIN banded y
-         |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
-         |hds AS (
-         |  SELECT bit_count(xor(a.ph, b.ph)) AS hd
-         |  FROM cand JOIN ph a ON cand.d1 = a.doc_id
-         |            JOIN ph b ON cand.d2 = b.doc_id)
-         |SELECT CAST(hd AS INT) AS hd, COUNT(*) AS n_pairs,
-         |       hd <= 2 AS within_ball
-         |FROM hds GROUP BY hd ORDER BY hd""".stripMargin,
-    "text_tokens_bpe" ->
-      """SELECT doc_id,
-        |       CAST(len(str_split(text, ' ')) AS INT) AS ws_tokens,
-        |       CAST(list_aggregate(list_transform(str_split(text, ' '),
-        |                t -> CAST(ceil(length(t) / 4.0) AS BIGINT)), 'sum') AS BIGINT) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_langid" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang AS actual_lang,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['the','and','of','to','in'], x))) AS h_en,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['el','la','de','que','y'], x))) AS h_es,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['der','die','und','das','ist'], x))) AS h_de,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['le','la','et','les','des'], x))) AS h_fr
-        |  FROM documents)
-        |SELECT doc_id, actual_lang,
-        |  CASE WHEN greatest(h_en,h_es,h_de,h_fr) = 0 THEN 'und'
-        |       WHEN h_fr = greatest(h_en,h_es,h_de,h_fr) THEN 'fr'
-        |       WHEN h_es = greatest(h_en,h_es,h_de,h_fr) THEN 'es'
-        |       WHEN h_en = greatest(h_en,h_es,h_de,h_fr) THEN 'en'
-        |       ELSE 'de' END AS predicted_lang
-        |FROM h ORDER BY doc_id""".stripMargin,
-    // same CASE-chain classifier as text_langid's oracle, grouped into
-    // the confusion matrix with q6 row shares
-    "text_lang_confusion" ->
-      """WITH h AS (
-        |  SELECT lang AS actual_lang,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['the','and','of','to','in'], x))) AS h_en,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['el','la','de','que','y'], x))) AS h_es,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['der','die','und','das','ist'], x))) AS h_de,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['le','la','et','les','des'], x))) AS h_fr
-        |  FROM documents),
-        |p AS (
-        |  SELECT actual_lang,
-        |    CASE WHEN greatest(h_en,h_es,h_de,h_fr) = 0 THEN 'und'
-        |         WHEN h_fr = greatest(h_en,h_es,h_de,h_fr) THEN 'fr'
-        |         WHEN h_es = greatest(h_en,h_es,h_de,h_fr) THEN 'es'
-        |         WHEN h_en = greatest(h_en,h_es,h_de,h_fr) THEN 'en'
-        |         ELSE 'de' END AS predicted_lang
-        |  FROM h),
-        |cells AS (
-        |  SELECT actual_lang, predicted_lang, COUNT(*) AS n
-        |  FROM p GROUP BY 1, 2)
-        |SELECT actual_lang, predicted_lang, n,
-        |       CAST(n * 1000000 // SUM(n) OVER (PARTITION BY actual_lang)
-        |            AS BIGINT) AS share_q6
-        |FROM cells ORDER BY actual_lang, predicted_lang""".stripMargin,
-    // Stub frame features are sums of (byte&0xff)/256 dyadic rationals —
-    // exact and order-independent, so the fan-out is fully hashable; ord()
-    // == byte on this ASCII corpus (same assumption as multimodal_meta).
-    "multimodal_frames" ->
-      """WITH m AS (
-        |  SELECT doc_id, least(length(text), 64) AS L, text
-        |  FROM documents WHERE doc_id < 500),
-        |frames AS (
-        |  SELECT doc_id, CAST(f.i AS INT) AS frame,
-        |         list_aggregate(list_transform(range(1, least(8, L - 16*f.i) + 1),
-        |             j -> ord(text[CAST(16*f.i + j AS INT):CAST(16*f.i + j AS INT)]) / 256.0), 'sum') AS feature_sum
-        |  FROM m CROSS JOIN range(0, 4) AS f(i)
-        |  WHERE f.i < ceil(L / 16.0))
-        |SELECT doc_id, frame, feature_sum FROM frames ORDER BY doc_id, frame""".stripMargin,
-    // The oracle counts distinct PLAIN 3-gram strings; the engine counts
-    // distinct window hashes — equal absent a 64-bit collision.
-    "text_repetition" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, greatest(len(str_split(text,' ')) - 2, 1) + 1),
-        |                        i -> array_to_string(str_split(text,' ')[i:i+2], ' ')) AS grams
-        |  FROM documents)
-        |SELECT doc_id,
-        |       CAST(len(grams) AS INT) AS n_grams,
-        |       CAST(len(list_distinct(grams)) AS INT) AS n_distinct,
-        |       CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / len(grams) AS dup_ratio
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // Same patterns as TextScrub verbatim (Java and RE2 agree on this
-    // subset); DuckDB regexp_replace needs the 'g' flag to match Spark's
-    // replace-all default. Sequential email→number→deny order preserved.
-    "text_scrub_pii" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS INT) AS n_email,
-        |  CAST(len(regexp_extract_all(text, '[0-9][0-9 -]{6,}[0-9]')) AS INT) AS n_number,
-        |  CAST(len(regexp_extract_all(text, '\b(customer|dup)\b')) AS INT) AS n_denied,
-        |  CAST(length(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(text, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '[EMAIL]', 'g'),
-        |        '[0-9][0-9 -]{6,}[0-9]', '[NUM]', 'g'),
-        |      '\b(customer|dup)\b', '[TERM]', 'g')) AS INT) AS n_chars_scrubbed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_quality_filter" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |         len(str_split(text, ' ')) AS n_tok,
-        |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
-        |           / len(str_split(text, ' ')) AS mean_len,
-        |         len(list_filter(str_split(text, ' '),
-        |              t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS n_stop,
-        |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-        |           / length(text) AS symbol_ratio
-        |  FROM documents),
-        |v AS (
-        |  SELECT doc_id,
-        |         CASE WHEN n_tok < 20 THEN 'too_few_tokens'
-        |              WHEN n_tok > 5000 THEN 'too_many_tokens'
-        |              WHEN mean_len < 2.0 THEN 'mean_token_too_short'
-        |              WHEN mean_len > 12.0 THEN 'mean_token_too_long'
-        |              WHEN symbol_ratio > 0.3 THEN 'too_many_symbols'
-        |              WHEN n_stop = 0 THEN 'no_stopwords'
-        |              ELSE 'pass' END AS verdict
-        |  FROM q)
-        |SELECT doc_id, verdict, verdict = 'pass' AS keep
-        |FROM v ORDER BY doc_id""".stripMargin,
-    "sample_split" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
-        |b AS (
-        |  SELECT doc_id, lang,
-        |    ((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 10 AS bucket
-        |  FROM h)
-        |SELECT lang,
-        |       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
-        |            ELSE 'test' END AS split,
-        |       COUNT(*) AS n_docs
-        |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-    // Each CTE replays the corresponding standalone oracle verbatim:
-    // quality rule stack (text_quality_filter), sha256 min-per-hash
-    // (dedup_exact_text), string 8-grams vs the engine's 64-bit window
-    // hashes (text_decontaminate — equal absent a collision), md5 digit
-    // fold split (sample_split).
-    "corpus_curation" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |         len(str_split(text, ' ')) AS n_tok,
-        |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
-        |           / len(str_split(text, ' ')) AS mean_len,
-        |         len(list_filter(str_split(text, ' '),
-        |              t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS n_stop,
-        |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-        |           / length(text) AS symbol_ratio
-        |  FROM documents),
-        |kept AS (
-        |  SELECT d.* FROM documents d JOIN q USING (doc_id)
-        |  WHERE NOT (q.n_tok < 20 OR q.n_tok > 5000 OR q.mean_len < 2.0
-        |             OR q.mean_len > 12.0 OR q.symbol_ratio > 0.3 OR q.n_stop = 0)),
-        |dd AS (
-        |  SELECT * FROM (
-        |    SELECT k.*, row_number() OVER (PARTITION BY sha256(text) ORDER BY doc_id) AS rn
-        |    FROM kept k) t
-        |  WHERE rn = 1),
-        |grams AS (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(1, greatest(len(str_split(text,' ')) - 7, 1) + 1),
-        |                               i -> array_to_string(str_split(text,' ')[i:i+7], ' '))) AS g
-        |  FROM documents),
-        |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id < 50),
-        |contaminated AS (
-        |  SELECT DISTINCT gr.doc_id
-        |  FROM grams gr JOIN bench b ON gr.g = b.g
-        |  WHERE gr.doc_id >= 50 AND gr.doc_id IN (SELECT doc_id FROM dd)),
-        |clean AS (
-        |  SELECT * FROM dd
-        |  WHERE doc_id >= 50 AND doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |b AS (
-        |  SELECT doc_id, lang, text,
-        |    ((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 10 AS bucket
-        |  FROM (SELECT doc_id, lang, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM clean))
-        |SELECT lang,
-        |       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
-        |            ELSE 'test' END AS split,
-        |       COUNT(*) AS n_docs,
-        |       CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS sum_tokens
-        |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-    // md5 digits 5-8 (disjoint from sample_split's 1-4); rates must match
-    // the Spark when-chain exactly.
-    "stratified_sample" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
-        |b AS (
-        |  SELECT lang,
-        |    ((((CASE WHEN ord(hx[5:5]) >= 97 THEN ord(hx[5:5]) - 87 ELSE ord(hx[5:5]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[6:6]) >= 97 THEN ord(hx[6:6]) - 87 ELSE ord(hx[6:6]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[7:7]) >= 97 THEN ord(hx[7:7]) - 87 ELSE ord(hx[7:7]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[8:8]) >= 97 THEN ord(hx[8:8]) - 87 ELSE ord(hx[8:8]) - 48 END)) % 100 AS pct,
-        |    CASE WHEN lang = 'en' THEN 60
-        |         WHEN lang IN ('es','de') THEN 30
-        |         WHEN lang = 'zh' THEN 45
-        |         WHEN lang = 'fr' THEN 15
-        |         ELSE 20 END AS rate
-        |  FROM h)
-        |SELECT lang, COUNT(*) AS n_total,
-        |       CAST(SUM(CASE WHEN pct < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM b GROUP BY lang ORDER BY lang""".stripMargin,
-    // Same md5 digits 1-4 fold as sample_split, % 8 for the shard; the
-    // running sum is a per-shard window (ROWS frame, exact BIGINT), and
-    // '//' is DuckDB's integer floor division.
-    "pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 8 AS INT) AS shard,
-        |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
-        |w AS (
-        |  SELECT doc_id, shard, n_tok,
-        |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
-        |  FROM t)
-        |SELECT doc_id, shard, n_tok,
-        |       stream_end - n_tok AS "offset",
-        |       CAST((stream_end - n_tok) // 512 AS BIGINT) AS block_first,
-        |       CAST((stream_end - 1) // 512 AS BIGINT) AS block_last
-        |FROM w ORDER BY doc_id""".stripMargin,
-    // same shard/stream CTEs as pack_sequences, aggregated per shard
-    "pack_efficiency_report" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 8 AS INT) AS shard,
-        |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
-        |w AS (
-        |  SELECT doc_id, shard, n_tok,
-        |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
-        |  FROM t),
-        |lay AS (
-        |  SELECT shard, n_tok,
-        |         CAST((stream_end - n_tok) // 512 AS BIGINT) AS block_first,
-        |         CAST((stream_end - 1) // 512 AS BIGINT) AS block_last
-        |  FROM w)
-        |SELECT shard, COUNT(*) AS n_docs,
-        |       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-        |       CAST(MAX(block_last) + 1 AS BIGINT) AS n_blocks,
-        |       CAST((MAX(block_last) + 1) * 512 AS BIGINT) AS capacity,
-        |       CAST(SUM(n_tok) * 1000000 // ((MAX(block_last) + 1) * 512)
-        |         AS BIGINT) AS fill_q6,
-        |       CAST(SUM(CASE WHEN block_first <> block_last THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_straddle
-        |FROM lay GROUP BY shard ORDER BY shard""".stripMargin,
-    "corpus_mix_rebalance" ->
-      """WITH c AS (
-        |  SELECT lang, COUNT(*) AS n_docs,
-        |         CAST(SUM(n_chars) AS BIGINT) AS n_chars
-        |  FROM documents GROUP BY lang),
-        |t AS (
-        |  SELECT CAST(SUM(n_docs) AS BIGINT) AS total_docs,
-        |         COUNT(*) AS n_langs FROM c),
-        |r AS (
-        |  SELECT lang, n_docs, n_chars,
-        |         CAST(least(100, (total_docs * 100) // (n_langs * n_docs)) AS BIGINT) AS rate_pct
-        |  FROM c, t)
-        |SELECT lang, n_docs, n_chars, rate_pct,
-        |       CAST((n_docs * rate_pct) // 100 AS BIGINT) AS n_expected
-        |FROM r ORDER BY lang""".stripMargin,
-    "dedup_chunk_boilerplate" ->
-      """WITH t AS (
-        |  SELECT doc_id, str_split(text, ' ') AS toks,
-        |         len(str_split(text, ' ')) AS n
-        |  FROM documents),
-        |x AS (
-        |  SELECT doc_id, toks,
-        |         unnest(range(0, (n + 63) // 64)) AS idx
-        |  FROM t),
-        |h AS (
-        |  SELECT doc_id,
-        |         sha256(array_to_string(toks[(idx*64 + 1):(idx*64 + 64)], ' ')) AS chunk_hash
-        |  FROM x),
-        |m AS (
-        |  SELECT doc_id, chunk_hash,
-        |         CASE WHEN COUNT(*) OVER (PARTITION BY chunk_hash) > 1
-        |              THEN 1 ELSE 0 END AS dup
-        |  FROM h)
-        |SELECT doc_id, COUNT(*) AS n_chunks,
-        |       CAST(SUM(dup) AS BIGINT) AS n_dup_chunks,
-        |       (100 * CAST(SUM(dup) AS BIGINT)) // COUNT(*) AS boilerplate_pct
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // DuckDB list slicing toks[a:b] is 1-based inclusive and clamps at the
-    // list end — the same semantics as Spark's slice(toks, start, 64)
-    "text_chunk_overlap" ->
-      """WITH t AS (
-        |  SELECT doc_id, str_split(text, ' ') AS toks,
-        |         len(str_split(text, ' ')) AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, toks, n,
-        |         CASE WHEN n <= 64 THEN 1 ELSE 1 + (n - 64 + 47) // 48 END AS n_chunks
-        |  FROM t),
-        |x AS (
-        |  SELECT doc_id, toks, n, unnest(range(0, n_chunks)) AS chunk_idx
-        |  FROM c)
-        |SELECT doc_id, chunk_idx,
-        |       chunk_idx * 48 + 1 AS start_tok,
-        |       least(64, n - chunk_idx * 48) AS chunk_len,
-        |       array_to_string(toks[(chunk_idx * 48 + 1):(chunk_idx * 48 + 64)], ' ') AS chunk_text
-        |FROM x ORDER BY doc_id, chunk_idx""".stripMargin,
-    "text_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, str_split(text, ' ') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
-        |                               i -> array_to_string(t[i:i+7], ' '))) AS g
-        |  FROM toks),
-        |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id < 50),
-        |corpus AS (SELECT doc_id, g FROM grams WHERE doc_id >= 50)
-        |SELECT c.doc_id, COUNT(DISTINCT c.g) AS n_shared
-        |FROM corpus c JOIN bench b ON c.g = b.g
-        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-    // an independent parser on the same strings: anchored regexes vs
-    // Spark's parse_url
-    "url_extract" ->
-      """WITH t AS (
-        |  SELECT s_suppkey,
-        |         'https://www.' || lower(replace(s_name, '#', '-'))
-        |           || '.example.com/item/' || CAST(s_suppkey AS VARCHAR)
-        |           || '?region=' || CAST(s_nationkey AS VARCHAR) || '&ok=1' AS url
-        |  FROM supplier)
-        |SELECT s_suppkey, url,
-        |       regexp_extract(url, '^https?://([^/]+)', 1) AS host,
-        |       regexp_extract(url, '^https?://[^/]+([^?#]*)', 1) AS path,
-        |       regexp_extract(url, '[?&]region=([^&#]*)', 1) AS region_param
-        |FROM t ORDER BY s_suppkey""".stripMargin,
-    // md5 hex digits 17-20 of the USER id — the same fold discipline as
-    // pack_sequences (digits 1-4); split is a pure function of user_id
-    "sample_user_holdout" ->
-      """WITH h AS (
-        |  SELECT user_id, value, md5(CAST(user_id AS VARCHAR)) AS hx
-        |  FROM events),
-        |b AS (
-        |  SELECT user_id, value,
-        |    ((((CASE WHEN ord(hx[17:17]) >= 97 THEN ord(hx[17:17]) - 87 ELSE ord(hx[17:17]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[18:18]) >= 97 THEN ord(hx[18:18]) - 87 ELSE ord(hx[18:18]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[19:19]) >= 97 THEN ord(hx[19:19]) - 87 ELSE ord(hx[19:19]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[20:20]) >= 97 THEN ord(hx[20:20]) - 87 ELSE ord(hx[20:20]) - 48 END)) % 100 AS pct
-        |  FROM h)
-        |SELECT CASE WHEN pct < 20 THEN 'holdout' ELSE 'train' END AS split,
-        |       COUNT(DISTINCT user_id) AS n_users,
-        |       COUNT(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM b GROUP BY 1 ORDER BY split""".stripMargin,
-    // md5 hex digits 21-24 of the USER id; conversion compares event_ids
-    // (never the ns timestamps); the rate is the exact rational
-    // (n_converted, n_clickers)
-    "abtest_conversion" ->
-      """WITH per AS (
-        |  SELECT user_id,
-        |         MIN(CASE WHEN event_type = 'click' THEN event_id END)
-        |           AS first_click,
-        |         MAX(CASE WHEN event_type = 'purchase' THEN event_id END)
-        |           AS last_purchase
-        |  FROM events GROUP BY user_id),
-        |h AS (
-        |  SELECT *, md5(CAST(user_id AS VARCHAR)) AS hx FROM per),
-        |v AS (
-        |  SELECT first_click, last_purchase,
-        |    CASE WHEN ((((CASE WHEN ord(hx[21:21]) >= 97 THEN ord(hx[21:21]) - 87 ELSE ord(hx[21:21]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[22:22]) >= 97 THEN ord(hx[22:22]) - 87 ELSE ord(hx[22:22]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[23:23]) >= 97 THEN ord(hx[23:23]) - 87 ELSE ord(hx[23:23]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[24:24]) >= 97 THEN ord(hx[24:24]) - 87 ELSE ord(hx[24:24]) - 48 END)) % 2 = 0
-        |      THEN 'A' ELSE 'B' END AS variant
-        |  FROM h)
-        |SELECT variant, COUNT(*) AS n_users,
-        |       CAST(SUM(CASE WHEN first_click IS NOT NULL
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_clickers,
-        |       CAST(SUM(CASE WHEN first_click IS NOT NULL
-        |                      AND last_purchase > first_click
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-        |FROM v GROUP BY variant ORDER BY variant""".stripMargin,
-    // the same sched CTE joined onto per-lang token sums; the product
-    // rides HUGEINT
-    "mix_token_budget" ->
-      s"""WITH $MixScheduleCtes,
-         |tk AS (
-         |  SELECT lang,
-         |         CAST(SUM(len(list_filter(str_split(text, ' '),
-         |                                  x -> x <> ''))) AS BIGINT)
-         |           AS n_tokens
-         |  FROM documents GROUP BY lang)
-         |SELECT tk.lang, tk.n_tokens, sched.epochs_q6,
-         |       CAST(CAST(tk.n_tokens AS HUGEINT) * sched.epochs_q6
-         |            // 1000000 AS BIGINT) AS effective_tokens
-         |FROM tk JOIN sched ON tk.lang = sched.lang
-         |ORDER BY tk.lang""".stripMargin,
-    // the same digits-21-24 fold over DISTINCT users; chi2 as the exact
-    // two-equal-cell rational with the q6 critical-value literal
-    "abtest_srm_check" -> {
-      def hv(i: Int) =
-        s"(CASE WHEN ord(hx[$i:$i]) >= 97 THEN ord(hx[$i:$i]) - 87" +
-          s" ELSE ord(hx[$i:$i]) - 48 END)"
-      val fold = s"(((${hv(21)} * 16 + ${hv(22)}) * 16 + ${hv(23)})" +
-        s" * 16 + ${hv(24)})"
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-         |h AS (SELECT md5(CAST(user_id AS VARCHAR)) AS hx FROM u),
-         |v AS (SELECT CASE WHEN $fold % 2 = 0 THEN 'A' ELSE 'B' END
-         |        AS variant FROM h),
-         |c AS (SELECT
-         |        SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS n_a,
-         |        SUM(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS n_b
-         |      FROM v)
-         |SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-         |       CAST(CAST(n_a - n_b AS HUGEINT) * (n_a - n_b) * 1000000
-         |            // (n_a + n_b) AS BIGINT) AS chi2_q6,
-         |       CAST(n_a - n_b AS HUGEINT) * (n_a - n_b) * 1000000
-         |         // (n_a + n_b) > 3841459 AS srm_detected
-         |FROM c""".stripMargin
-    },
-    "profile_entropy" ->
-      """WITH c AS (
-        |  SELECT lang, source, COUNT(*) AS c FROM documents GROUP BY 1, 2),
-        |t AS (
-        |  SELECT lang, c,
-        |         CAST(SUM(c) OVER (PARTITION BY lang) AS BIGINT) AS n
-        |  FROM c),
-        |u AS (
-        |  SELECT lang, c, n,
-        |         CAST(floor(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)
-        |           * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-        |           * 100000000.0 + 0.5) AS BIGINT) AS term
-        |  FROM t)
-        |SELECT lang, MAX(n) AS n_docs, COUNT(*) AS k_sources,
-        |       1.0 - CAST(SUM(c * c) AS DOUBLE)
-        |             / (CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE)) AS gini,
-        |       -CAST(SUM(term) AS DOUBLE) / 100000000.0 AS entropy
-        |FROM u GROUP BY lang ORDER BY lang""".stripMargin,
-    // same regex chain; DuckDB needs the 'g' flag where Spark's
-    // regexp_replace is global by default
-    "dedup_url_canonical" ->
-      """WITH raw AS (
-        |  SELECT o_orderkey,
-        |         CASE CAST(o_orderkey % 5 AS INT)
-        |           WHEN 0 THEN 'https://www.shop.example.com/item/' || CAST(o_custkey % 500 AS VARCHAR)
-        |           WHEN 1 THEN 'HTTPS://WWW.SHOP.EXAMPLE.COM/item/' || CAST(o_custkey % 500 AS VARCHAR) || '/'
-        |           WHEN 2 THEN 'https://shop.example.com:443/item/' || CAST(o_custkey % 500 AS VARCHAR) || '?utm_source=x&utm_campaign=y'
-        |           WHEN 3 THEN 'http://shop.example.com/item/' || CAST(o_custkey % 500 AS VARCHAR) || '?ref=abc&utm_medium=z#frag'
-        |           ELSE 'https://shop.example.com/item/' || CAST(o_custkey % 500 AS VARCHAR) || '?utm_source=q&ref=abc'
-        |         END AS u
-        |  FROM orders),
-        |canon AS (
-        |  SELECT o_orderkey,
-        |         regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |           regexp_replace(regexp_replace(regexp_replace(lower(
-        |             regexp_replace(u, '#.*$', '')),
-        |           '^http://', 'https://'),
-        |           '://www\.', '://', 'g'),
-        |           ':443/', '/', 'g'),
-        |           '[?&]utm_[^&#]*', '', 'g'),
-        |           '^([^?&]*)&', '\1?'),
-        |           '/$', ''),
-        |           '\?$', '') AS canonical_url
-        |  FROM raw)
-        |SELECT canonical_url, COUNT(*) AS n_raw, MIN(o_orderkey) AS first_key
-        |FROM canon GROUP BY canonical_url
-        |ORDER BY canonical_url""".stripMargin,
-    "source_quota_cap" ->
-      """WITH r AS (
-        |  SELECT source, n_chars,
-        |         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents)
-        |SELECT source, COUNT(*) AS n_total,
-        |       CAST(SUM(CASE WHEN rn <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |       CAST(SUM(CASE WHEN rn <= 5 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
-        |FROM r GROUP BY source ORDER BY source""".stripMargin,
-    // md5 digits 13-16 (disjoint from 1-4, 5-8, 9-12)
-    "negative_pairs" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
-        |a AS (
-        |  SELECT doc_id, lang,
-        |    CAST(((((CASE WHEN ord(hx[13:13]) >= 97 THEN ord(hx[13:13]) - 87 ELSE ord(hx[13:13]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[14:14]) >= 97 THEN ord(hx[14:14]) - 87 ELSE ord(hx[14:14]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[15:15]) >= 97 THEN ord(hx[15:15]) - 87 ELSE ord(hx[15:15]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[16:16]) >= 97 THEN ord(hx[16:16]) - 87 ELSE ord(hx[16:16]) - 48 END))
-        |      % (SELECT COUNT(*) FROM documents) AS BIGINT) AS neg_id
-        |  FROM h)
-        |SELECT a.doc_id, a.neg_id, a.lang = b.lang AS same_lang
-        |FROM a JOIN documents b ON a.neg_id = b.doc_id
-        |WHERE a.neg_id <> a.doc_id
-        |ORDER BY a.doc_id""".stripMargin,
-    "vocab_topk" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |c AS (
-        |  SELECT token, COUNT(*) AS n_occurrences,
-        |         COUNT(DISTINCT doc_id) AS n_docs
-        |  FROM tok GROUP BY token)
-        |SELECT CAST(rank AS INT) AS rank, token, n_occurrences, n_docs FROM (
-        |  SELECT token, n_occurrences, n_docs,
-        |         row_number() OVER (ORDER BY n_occurrences DESC, token) AS rank
-        |  FROM c) t
-        |WHERE rank <= 50 ORDER BY rank""".stripMargin,
-    // same band arithmetic ((max+10)//10 width, first-occurrence band via
-    // MIN(doc_id)//w) — every value an exact integer; non-negative ids
-    // keep // and DIV in agreement
-    "vocab_growth_curve" ->
-      """WITH w AS (SELECT (MAX(doc_id) + 10) // 10 AS w FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token
-        |  FROM documents),
-        |nd AS (
-        |  SELECT doc_id // w AS band, COUNT(*) AS n_docs
-        |  FROM documents, w GROUP BY 1),
-        |inst AS (
-        |  SELECT doc_id // w AS band, COUNT(*) AS n_tokens
-        |  FROM tok, w GROUP BY 1),
-        |fv AS (SELECT token, MIN(doc_id) AS fd FROM tok GROUP BY token),
-        |nt AS (
-        |  SELECT fd // w AS band, COUNT(*) AS new_types
-        |  FROM fv, w GROUP BY 1)
-        |SELECT nd.band, nd.n_docs,
-        |       COALESCE(inst.n_tokens, 0) AS n_tokens,
-        |       COALESCE(nt.new_types, 0) AS new_types,
-        |       CAST(SUM(COALESCE(nt.new_types, 0)) OVER (ORDER BY nd.band
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS BIGINT) AS cum_types
-        |FROM nd LEFT JOIN inst USING (band) LEFT JOIN nt USING (band)
-        |ORDER BY nd.band""".stripMargin,
-    // same integer rank/bucket/fixed-point arithmetic; the within-source
-    // count rides a window here vs the engine's groupBy join — same values
-    "quantile_normalize_source" ->
-      """WITH r AS (
-        |  SELECT doc_id, source, n_chars,
-        |         ROW_NUMBER() OVER (PARTITION BY source
-        |                            ORDER BY n_chars, doc_id) AS rnk,
-        |         COUNT(*) OVER (PARTITION BY source) AS ns
-        |  FROM documents),
-        |b AS (SELECT doc_id, source, n_chars,
-        |             ((rnk - 1) * 100) // ns AS q
-        |      FROM r),
-        |ref AS (SELECT q, CAST(SUM(n_chars) AS BIGINT) AS qs,
-        |               COUNT(*) AS qc
-        |        FROM b GROUP BY q)
-        |SELECT b.doc_id, b.source, b.n_chars, b.q,
-        |       (ref.qs * 1000000) // ref.qc AS norm_q6
-        |FROM b JOIN ref ON b.q = ref.q
-        |ORDER BY b.doc_id""".stripMargin,
-    // coverage as the exact rational (cum_freq, total_tokens); the
-    // denominator comes from the pre-limit counts
-    "vocab_coverage" ->
-      """WITH tok AS (
-        |  SELECT unnest(str_split(text, ' ')) AS token FROM documents),
-        |c AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token),
-        |t AS (SELECT CAST(SUM(freq) AS BIGINT) AS total_tokens FROM c),
-        |r AS (
-        |  SELECT token, freq,
-        |         row_number() OVER (ORDER BY freq DESC, token) AS rank,
-        |         CAST(SUM(freq) OVER (ORDER BY freq DESC, token
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           AS BIGINT) AS cum_freq
-        |  FROM c)
-        |SELECT CAST(rank AS INT) AS rank, token, freq, cum_freq,
-        |       total_tokens
-        |FROM r CROSS JOIN t WHERE rank <= 30 ORDER BY rank""".stripMargin,
-    "tfidf_topk" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         round(tf.tf * ln(CAST((SELECT COUNT(*) FROM documents) AS DOUBLE)
-        |                          / df.df), 4) AS tfidf
-        |  FROM tf JOIN df USING (token))
-        |SELECT doc_id, CAST(rn AS INT) AS rn, token, tfidf FROM (
-        |  SELECT doc_id, token, tfidf,
-        |         row_number() OVER (PARTITION BY doc_id
-        |                            ORDER BY tfidf DESC, token) AS rn
-        |  FROM scored) t
-        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin,
-    // exact-integer contingency factors (BIGINT products, HUGEINT-safe
-    // sums), ONE double division — the identical deterministic value the
-    // Spark side ranks; the rn window mirrors the tie-break
-    "text_chisq_terms" ->
-      """WITH dt AS (
-        |  SELECT DISTINCT doc_id, source, token FROM (
-        |    SELECT doc_id, source, unnest(str_split(text, ' ')) AS token
-        |    FROM documents) t),
-        |a AS (SELECT source, token, COUNT(*) AS a FROM dt GROUP BY 1, 2),
-        |srcn AS (SELECT source, COUNT(*) AS ns FROM documents GROUP BY 1),
-        |tokn AS (SELECT token, COUNT(*) AS nt FROM dt GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n FROM documents),
-        |sc AS (
-        |  SELECT a.source, a.token, a.a, ns, nt, n.n,
-        |         a.a * (n.n - ns - nt + a.a) - (ns - a.a) * (nt - a.a)
-        |           AS det
-        |  FROM a JOIN srcn USING (source) JOIN tokn USING (token)
-        |  CROSS JOIN n
-        |  WHERE nt < n.n),
-        |scored AS (
-        |  SELECT source, token, a AS df_in, nt,
-        |         CAST(n * det * det AS DOUBLE)
-        |           / CAST(ns * (n - ns) * nt * (n - nt) AS DOUBLE) AS chi2
-        |  FROM sc)
-        |SELECT source, CAST(rn AS INT) AS rn, token, df_in, nt,
-        |       round(chi2, 6) AS chi2
-        |FROM (
-        |  SELECT source, token, df_in, nt, chi2,
-        |         row_number() OVER (PARTITION BY source
-        |                            ORDER BY chi2 DESC, token) AS rn
-        |  FROM scored) t
-        |WHERE rn <= 5 ORDER BY source, rn""".stripMargin,
-    // same float shape as the Spark plan, operation for operation; every
-    // numeric literal CAST to DOUBLE (a bare 2.2 is DECIMAL in DuckDB and
-    // would run the formula in decimal arithmetic — the §7.4c trap);
-    // fixed-order c1+c2+c3 addition mirrors the pivoted Spark aggregate
-    "retrieval_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
-        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
-        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |            + CAST(1.0 AS DOUBLE))
-        |         * (tf * CAST(2.2 AS DOUBLE))
-        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE)
-        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
-        |agg AS (
-        |  SELECT doc_id,
-        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
-        |           4) AS score
-        |  FROM contrib GROUP BY doc_id)
-        |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank,
-        |       doc_id, score
-        |FROM agg ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    // the two component rankings replay their own proven oracles (bm25
-    // CTEs above, the quantized dot from knn_quantized_topk); the fusion
-    // itself is pure integer arithmetic — // and DIV agree on positives
-    "retrieval_rrf" ->
-      s"""WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
-        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
-        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |            + CAST(1.0 AS DOUBLE))
-        |         * (tf * CAST(2.2 AS DOUBLE))
-        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE)
-        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
-        |bm AS (
-        |  SELECT doc_id,
-        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
-        |           4) AS score
-        |  FROM contrib GROUP BY doc_id),
-        |atop AS (
-        |  SELECT doc_id,
-        |         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
-        |           AS r_text
-        |  FROM (SELECT doc_id, score FROM bm
-        |        ORDER BY score DESC, doc_id LIMIT 20)),
-        |${Similarity.OracleInt8Vectors},
-        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
-        |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
-        |       FROM q, p WHERE q.vec_id <> 0),
-        |btop AS (
-        |  SELECT vec_id AS doc_id,
-        |         CAST(row_number() OVER (ORDER BY score DESC, vec_id) AS INT)
-        |           AS r_vec
-        |  FROM (SELECT vec_id, score FROM vs
-        |        ORDER BY score DESC, vec_id LIMIT 20))
-        |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id, a.r_text, b.r_vec,
-        |       CAST(COALESCE(CAST(1000000000 AS BIGINT) // (60 + a.r_text), 0)
-        |          + COALESCE(CAST(1000000000 AS BIGINT) // (60 + b.r_vec), 0)
-        |            AS BIGINT) AS rrf_q9
-        |FROM atop a FULL OUTER JOIN btop b ON a.doc_id = b.doc_id
-        |ORDER BY rrf_q9 DESC, doc_id LIMIT 15""".stripMargin,
-    // the two component scorers replay their proven oracles; quantization
-    // is the floor(s*1e4 + 0.5) half-up idiom (identical doubles in both
-    // engines), normalization and blend are pure integer arithmetic
-    "retrieval_hybrid_weighted" ->
-      s"""WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
-        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
-        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |            + CAST(1.0 AS DOUBLE))
-        |         * (tf * CAST(2.2 AS DOUBLE))
-        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE)
-        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
-        |bm AS (
-        |  SELECT doc_id,
-        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
-        |           4) AS score
-        |  FROM contrib GROUP BY doc_id),
-        |atop AS (
-        |  SELECT doc_id,
-        |         CAST(floor(score * 10000 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS t
-        |  FROM (SELECT doc_id, score FROM bm
-        |        ORDER BY score DESC, doc_id LIMIT 20)),
-        |ts AS (SELECT MIN(t) AS tmin, MAX(t) AS tmax FROM atop),
-        |tn AS (SELECT doc_id,
-        |              CASE WHEN tmax > tmin
-        |                   THEN (t - tmin) * 1000000 // (tmax - tmin)
-        |                   ELSE 1000000 END AS nt_q6
-        |       FROM atop, ts),
-        |${Similarity.OracleInt8Vectors},
-        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
-        |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
-        |       FROM q, p WHERE q.vec_id <> 0),
-        |btop AS (
-        |  SELECT vec_id AS doc_id, score AS v
-        |  FROM (SELECT vec_id, score FROM vs
-        |        ORDER BY score DESC, vec_id LIMIT 20)),
-        |vsx AS (SELECT MIN(v) AS vmin, MAX(v) AS vmax FROM btop),
-        |vn AS (SELECT doc_id,
-        |              CASE WHEN vmax > vmin
-        |                   THEN (v - vmin) * 1000000 // (vmax - vmin)
-        |                   ELSE 1000000 END AS nv_q6
-        |       FROM btop, vsx)
-        |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id, a.nt_q6, b.nv_q6,
-        |       CAST((COALESCE(a.nt_q6, 0) * 7 + COALESCE(b.nv_q6, 0) * 3) // 10
-        |            AS BIGINT) AS hybrid_q6
-        |FROM tn a FULL OUTER JOIN vn b ON a.doc_id = b.doc_id
-        |ORDER BY hybrid_q6 DESC, doc_id LIMIT 15""".stripMargin,
-    // positions via range() over the split array — an independent bigram
-    // construction (the Spark plan windows with lead())
-    // sqrt is IEEE correctly rounded in both engines, so w_q6 is exact;
-    // everything downstream is integer // arithmetic
-    "sample_temperature" ->
-      """WITH c AS (
-        |  SELECT lang, COUNT(*) AS n_docs,
-        |         CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE)) * 1e6) AS BIGINT)
-        |           AS w_q6
-        |  FROM documents GROUP BY lang),
-        |t AS (SELECT SUM(w_q6) AS w_sum, SUM(n_docs) AS total_docs FROM c)
-        |SELECT lang, n_docs, w_q6,
-        |       CAST(w_q6 * 1000000 // w_sum AS BIGINT) AS share_q6,
-        |       CAST((total_docs // 2) * w_q6 // w_sum AS BIGINT) AS quota,
-        |       CAST(((total_docs // 2) * w_q6 // w_sum) * 1000000 // n_docs
-        |            AS BIGINT) AS factor_q6
-        |FROM c, t ORDER BY lang""".stripMargin,
-    // one fused token pass per doc; every rule is an integer
-    // cross-multiplication — no ratio is materialized in either engine
-    "quality_gopher_rules" ->
-      """WITH s AS (
-        |  SELECT doc_id, str_split(text, ' ') AS toks FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |         CAST(len(toks) AS BIGINT) AS n_tok,
-        |         CAST(list_aggregate(list_transform(toks, x -> length(x)),
-        |           'sum') AS BIGINT) AS char_sum,
-        |         CAST(len(list_filter(toks, x -> list_contains(
-        |           ['the','and','of','to','in','is','on','for','with','a'],
-        |           x))) AS BIGINT) AS stop_hits,
-        |         CAST(len(list_filter(toks,
-        |           x -> regexp_matches(x, '^[a-z]+$'))) AS BIGINT) AS n_alpha
-        |  FROM s)
-        |SELECT doc_id, n_tok, char_sum, stop_hits, n_alpha,
-        |       CAST(CASE WHEN n_tok BETWEEN 50 AND 100000
-        |            THEN 1 ELSE 0 END AS INT) AS wc_ok,
-        |       CAST(CASE WHEN 3 * n_tok <= char_sum
-        |                  AND char_sum <= 10 * n_tok
-        |            THEN 1 ELSE 0 END AS INT) AS mwl_ok,
-        |       CAST(CASE WHEN stop_hits >= 2 THEN 1 ELSE 0 END AS INT)
-        |         AS stop_ok,
-        |       CAST(CASE WHEN 5 * n_alpha >= 4 * n_tok
-        |            THEN 1 ELSE 0 END AS INT) AS alpha_ok,
-        |       CAST((CASE WHEN n_tok BETWEEN 50 AND 100000 THEN 1 ELSE 0 END)
-        |          * (CASE WHEN 3 * n_tok <= char_sum
-        |                   AND char_sum <= 10 * n_tok THEN 1 ELSE 0 END)
-        |          * (CASE WHEN stop_hits >= 2 THEN 1 ELSE 0 END)
-        |          * (CASE WHEN 5 * n_alpha >= 4 * n_tok THEN 1 ELSE 0 END)
-        |         AS INT) AS gopher_pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // the sample_temperature sqrt discipline on CHARS + integer fixed
-    // point for quota/epochs/effective
-    "mix_epochs_schedule" ->
-      s"""WITH $MixScheduleCtes
-         |SELECT lang, n_docs, n_chars, share_q6, quota_chars, epochs_q6,
-         |       effective_chars
-         |FROM sched ORDER BY lang""".stripMargin,
-    // the same sched CTE (one spelling) joined onto docs; the fractional
-    // draw is the exact integer cross-multiply on md5 digits 29-32
-    "mix_materialize_repeats" ->
-      s"""WITH $MaterializeRepeatsCtes
-         |SELECT doc_id, lang, n_repeats FROM rep
-         |ORDER BY doc_id""".stripMargin,
-    // the same rep CTE fanned out by generate_series; the shard hash is
-    // md5 of the NEW 'doc_id#copy' domain, digits 1-4 mod 8
-    "mix_shard_assignment" ->
-      s"""WITH $MaterializeRepeatsCtes,
-         |inst AS (
-         |  SELECT doc_id, n_chars, CAST(t.copy AS BIGINT) AS copy
-         |  FROM rep, UNNEST(range(1, CAST(n_repeats AS BIGINT) + 1)) AS t(copy)
-         |  WHERE n_repeats >= 1)
-         |SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#' ||
-         |         CAST(copy AS VARCHAR)), 1, 4)) AS BIGINT) % 8 AS shard,
-         |       COUNT(*) AS n_instances,
-         |       COUNT(DISTINCT doc_id) AS n_docs,
-         |       CAST(SUM(n_chars) AS BIGINT) AS total_chars
-         |FROM inst GROUP BY shard ORDER BY shard""".stripMargin,
-    // per-TYPE ln of an exact rational, q6 half-up (floor(x·1e6+0.5)),
-    // then an integer sum over the doc's bigram instances
-    "perplexity_bigram_doc" ->
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |big AS (
-        |  SELECT doc_id, ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
-        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT w) AS v
-        |      FROM (SELECT unnest(ws) AS w FROM d) t),
-        |lp AS (
-        |  SELECT w1, w2,
-        |         CAST(floor(ln(CAST(c12 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE))
-        |                    * 1e6 + 0.5) AS BIGINT) AS lp_q6
-        |  FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
-        |score AS (
-        |  SELECT big.doc_id, COUNT(*) AS n_bigrams, SUM(lp.lp_q6) AS ll_q6
-        |  FROM big JOIN lp USING (w1, w2) GROUP BY big.doc_id)
-        |SELECT d.doc_id,
-        |       COALESCE(s.n_bigrams, 0) AS n_bigrams,
-        |       CAST(COALESCE(s.ll_q6, 0) AS BIGINT) AS ll_q6
-        |FROM d LEFT JOIN score s ON d.doc_id = s.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "text_bigram_lm" ->
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |big AS (
-        |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
-        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT w) AS v
-        |      FROM (SELECT unnest(ws) AS w FROM d) t)
-        |SELECT w1, w2, c12, c12 + 1 AS p_num, c1 + v AS p_den
-        |FROM c12 JOIN c1 USING (w1) CROSS JOIN v
-        |ORDER BY c12 DESC, w1, w2 LIMIT 30""".stripMargin,
-    // lift as an exact rational + the 1e6 fixed-point quantization used
-    // for the order — DuckDB's // and Spark's DIV agree on non-negative
-    // integer floor division
-    "collocation_pmi" ->
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |big AS (
-        |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
-        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
-        |n AS (SELECT COUNT(*) AS n FROM big),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big
-        |        GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-        |c2 AS (SELECT w2, COUNT(*) AS c2 FROM big GROUP BY 1)
-        |SELECT w1, w2, c12, c12 * n AS lift_num, c1 * c2 AS lift_den,
-        |       (c12 * n * 1000000) // (c1 * c2) AS lift_q6
-        |FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2) CROSS JOIN n
-        |ORDER BY lift_q6 DESC, w1, w2 LIMIT 25""".stripMargin,
-    // md5 digits 9-12 (disjoint from 1-4 split and 5-8 stratified); floor
-    // division for the rate (CAST would round in DuckDB, truncate in Spark)
-    "weighted_sample" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, n_chars,
-        |         md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
-        |b AS (
-        |  SELECT lang, n_chars,
-        |    ((((CASE WHEN ord(hx[9:9]) >= 97 THEN ord(hx[9:9]) - 87 ELSE ord(hx[9:9]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[10:10]) >= 97 THEN ord(hx[10:10]) - 87 ELSE ord(hx[10:10]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[11:11]) >= 97 THEN ord(hx[11:11]) - 87 ELSE ord(hx[11:11]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[12:12]) >= 97 THEN ord(hx[12:12]) - 87 ELSE ord(hx[12:12]) - 48 END)) % 100 AS pct,
-        |    least(90, greatest(10, CAST(floor(n_chars / 20.0) AS BIGINT))) AS rate
-        |  FROM h)
-        |SELECT lang, COUNT(*) AS n_total,
-        |       CAST(SUM(CASE WHEN pct < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |       CAST(SUM(CASE WHEN pct < rate THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
-        |FROM b GROUP BY lang ORDER BY lang""".stripMargin,
-    // h = fold (h*31 + byte) over bytes last-to-first, mod 2^64 via natural
-    // long wraparound — replicated with HUGEINT modular arithmetic and
-    // mapped back to the signed BIGINT range.
-    "doc_fingerprint" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN m > 9223372036854775807::HUGEINT
-        |            THEN m - 18446744073709551616::HUGEINT ELSE m END AS BIGINT) AS fingerprint
-        |FROM (
-        |  SELECT doc_id,
-        |    list_reduce(
-        |      list_prepend(0::HUGEINT,
-        |        list_transform(range(length(text), 0, -1), i -> ord(text[i:i])::HUGEINT)),
-        |      (acc, x) -> (acc * 31 + x) % 18446744073709551616::HUGEINT) AS m
-        |  FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-    // independent construction over PLAIN string word-3-grams (no hashing);
-    // the sub-3-token clamp mirrors the kernel's max(len-n+1, 1) fallback
-    // (same slice-clamp idiom as the text_decontaminate oracle); counts
-    // agree absent a 64-bit collision; // matches DIV on non-negatives
-    "corpus_overlap_ngram" ->
-      """WITH toks AS (
-        |  SELECT source, str_split(text, ' ') AS t FROM documents),
-        |g AS (
-        |  SELECT DISTINCT source,
-        |         unnest(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-        |                               i -> array_to_string(t[i:i+2], ' '))) AS gram
-        |  FROM toks),
-        |c AS (SELECT source, COUNT(*) AS n FROM g GROUP BY source),
-        |common AS (
-        |  SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_common
-        |  FROM g a JOIN g b ON a.gram = b.gram AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT src_a, src_b, n_common, ca.n AS n_a, cb.n AS n_b,
-        |       n_common * 1000000 // (ca.n + cb.n - n_common) AS jaccard_q6
-        |FROM common
-        |JOIN c ca ON ca.source = src_a
-        |JOIN c cb ON cb.source = src_b
-        |ORDER BY src_a, src_b""".stripMargin
-  )
 }

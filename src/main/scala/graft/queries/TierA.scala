@@ -3,6 +3,7 @@ package graft.queries
 import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.core.Tables._
 import graft.etl._
 
@@ -81,18 +82,20 @@ object TierA {
         "is_current")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Seq[Query] = Seq(
     // A1 — columnar scan (README.md:113 data-store selection). Projection is
     // pruned at the parquet footer; at 100 TB the scan reads 4 columns only.
-    "scan_parquet" -> ((s, d) => {
+    Query("scan_parquet", (s, d) => {
       lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .orderBy("l_orderkey", "l_linenumber")
-    }),
+    }, oracle =
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // A1b/A1c — the other lake text/columnar formats a complete engine
     // ingests: JSON-lines and ORC round-trips (rows-only; format plumbing,
     // not new semantics).
-    "scan_json" -> ((s, d) => {
+    Query("scan_json", (s, d) => {
       val dir = tmp("graft_json")
       nation(s, d).write.mode("overwrite").json(dir)
       // JSON inference widens ints to bigint; restore the catalog types so
@@ -102,17 +105,20 @@ object TierA {
           col("n_name"),
           col("n_regionkey").cast("int").as("n_regionkey"))
         .orderBy("n_nationkey")
-    }),
-    "scan_orc" -> ((s, d) => {
+    }, oracle =
+      """SELECT n_nationkey, n_name, n_regionkey
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    Query("scan_orc", (s, d) => {
       val dir = tmp("graft_orc")
       nation(s, d).write.mode("overwrite").orc(dir)
       s.read.orc(dir).orderBy("n_nationkey")
-    }),
+    }, oracle =
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
     // A1d — raw text-line ingest (the log-file lake format): lines land as
     // a single `value` column and structure is recovered by regex capture —
     // the grep-shaped ingest every lake's logs/ prefix needs before it can
     // become a table. Round-trip oracle like scan_json: parse(write(t)) = t.
-    "scan_text_logs" -> ((s, d) => {
+    Query("scan_text_logs", (s, d) => {
       val dir = tmp("graft_textlog")
       nation(s, d).select(concat(
           lit("key="), col("n_nationkey"),
@@ -127,35 +133,44 @@ object TierA {
           regexp_extract(col("value"), "region=(\\d+)", 1).cast("int")
             .as("n_regionkey"))
         .orderBy("n_nationkey")
-    }),
+    }, oracle =
+      // round-trip: the regex-parsed log lines must reconstruct the table
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
     // A2 — OpenCSVSerde round-trip (README.md:124-131): write with the serde
     // dialect, read back with the same options.
-    "scan_csv_serde" -> ((s, d) => {
+    Query("scan_csv_serde", (s, d) => {
       val dir = tmp("graft_csv")
       CsvSource.write(nation(s, d), dir)
       CsvSource.read(s, dir).orderBy("n_nationkey")
-    }),
+    }, oracle =
+      // ETL round-trips whose results equal a source table (or a pure
+      // transform of one) are oracle-checkable too — the comparison proves
+      // the serde/JDBC/streaming plumbing is lossless, not just non-empty.
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
     // A3 — crawler-style schema inference (README.md:104): types come back
     // from data, not a declared schema.
-    "infer_schema" -> ((s, d) => {
+    Query("infer_schema", (s, d) => {
       val dir = tmp("graft_crawl")
       CsvSource.write(region(s, d), dir)
       new Crawler(s).crawl(dir, s"crawled_region_${System.nanoTime}")
         .orderBy("r_regionkey")
-    }),
+    }, oracle =
+      """SELECT * FROM region ORDER BY r_regionkey"""),
     // A4 — Hive-style partition discovery (README.md:117): key=value dirs
     // become a partition column; per-partition counts prove pruning works.
-    "partition_discovery" -> ((s, d) => {
+    Query("partition_discovery", (s, d) => {
       val dir = tmp("graft_part")
       orders(s, d).write.partitionBy("o_orderstatus").mode("overwrite").parquet(dir)
       s.read.parquet(dir)
         .groupBy("o_orderstatus").agg(count(lit(1)).as("cnt"))
         .orderBy("o_orderstatus")
-    }),
+    }, oracle =
+      """SELECT o_orderstatus, COUNT(*) AS cnt FROM orders
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // A5 — "Add new columns only" evolution across two crawler runs
     // (README.md:117, re-crawl :132): v2 adds a column; the merged schema
     // keeps v1 fields untyped-changed and appends the new one.
-    "schema_evolution_add_only" -> ((s, d) => {
+    Query("schema_evolution_add_only", (s, d) => {
       import s.implicits._
       val dirV1 = tmp("graft_evo1"); val dirV2 = tmp("graft_evo2")
       val crawler = new Crawler(s)
@@ -169,10 +184,15 @@ object TierA {
       val merged = crawler.schemaOf(table).get
       merged.fields.toSeq.map(f => (f.name, f.dataType.simpleString))
         .toDF("field", "type").orderBy("field")
-    }),
+    }, oracle =
+      // The merged schema after an add-only re-crawl is fully determined:
+      // v1 fields keep their CSV-inferred types, the v2-only column appends.
+      """SELECT * FROM (VALUES ('r_comment','string'),('r_name','string'),
+        |                      ('r_regionkey','int')) AS t(field, "type")
+        |ORDER BY field""".stripMargin),
     // A6 — JDBC warehouse load (README.md:134-138, :150): embedded Derby
     // stands in for Redshift; write via JDBC, read back via JDBC.
-    "sink_jdbc" -> ((s, d) => {
+    Query("sink_jdbc", (s, d) => {
       val sink = JdbcSink(s"jdbc:derby:${tmp("graft_derby")}/db;create=true",
         "NATION_WAREHOUSE")
       sink.write(nation(s, d))
@@ -182,11 +202,12 @@ object TierA {
           col("n_name").as("n_name"),
           col("n_regionkey").as("n_regionkey"))
         .orderBy("n_nationkey")
-    }),
+    }, oracle =
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
     // A7 — workflow DAG (README.md:155-166): trigger → crawl → transform
     // (the Glue "Change schema" job, :149) → load (:150), each node gated
     // on the one before it.
-    "workflow_dag" -> ((s, d) => {
+    Query("workflow_dag", (s, d) => {
       val src = tmp("graft_wf_src"); val out = tmp("graft_wf_out")
       CsvSource.write(supplier(s, d), src)
       Workflow.run(Seq(
@@ -200,13 +221,16 @@ object TierA {
           ParquetSink(out).write(up("transform")); up("transform")
         }))
       s.read.parquet(out).orderBy("supplier_id")
-    }),
+    }, oracle =
+      """SELECT s_suppkey AS supplier_id, upper(s_name) AS supplier_name,
+        |       s_acctbal AS balance
+        |FROM supplier ORDER BY supplier_id""".stripMargin),
     // A7b — AND-gate workflow (README.md:164, "start after ALL watched
     // events"): TWO crawlers feed one join job; the job is gated on BOTH
     // crawl events, the load on the job. Nodes are declared out of
     // dependency order on purpose — scheduling follows the watch edges,
     // not the declaration sequence (EtlSpec asserts gating + failure halt).
-    "workflow_fanin" -> ((s, d) => {
+    Query("workflow_fanin", (s, d) => {
       val srcN = tmp("graft_wff_n"); val srcR = tmp("graft_wff_r")
       val out = tmp("graft_wff_out")
       CsvSource.write(nation(s, d), srcN)
@@ -228,14 +252,20 @@ object TierA {
         Workflow.node("crawl_region")(_ =>
           new Crawler(s).crawl(srcR, s"wff_r_$sfx"))))
       s.read.parquet(out).orderBy("nation_id")
-    }),
+    }, oracle =
+      // the AND-gated two-crawler join must equal the plain fixture join —
+      // the comparison proves the whole CSV-crawl-join-load chain is lossless
+      """SELECT n_nationkey AS nation_id, n_name AS nation_name,
+        |       r_name AS region_name
+        |FROM nation JOIN region ON n_regionkey = r_regionkey
+        |ORDER BY nation_id""".stripMargin),
     // A7c — Glue-Studio visual job (round 6): the declarative transform
     // node graph compiled to ONE Catalyst plan (etl/VisualJob.scala). The
     // filter node sits "late" in the graph and the mapping node drops
     // columns mid-graph, yet the compiled plan pushes both to the scans —
     // the design point: node boundaries are invisible to the optimizer
     // because compile() builds plan, never executes per node.
-    "etl_visual_job" -> ((s, d) => {
+    Query("etl_visual_job", (s, d) => {
       import graft.etl.VisualJob._
       val graph = Map[String, Node](
         "orders" -> Source("orders"),
@@ -252,7 +282,15 @@ object TierA {
       compile(graph,
         Map("orders" -> orders(s, d), "customer" -> customer(s, d)),
         "by_segment").orderBy("segment")
-    }),
+    }, oracle =
+      // the compiled node graph must equal the plain relational spelling —
+      // proving the declarative DSL adds no semantics of its own
+      """SELECT c_mktsegment AS segment, COUNT(*) AS n,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |         AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |WHERE o_totalprice > 100000
+        |GROUP BY 1 ORDER BY segment""".stripMargin),
     // A7c-b — the round-8 Studio palette nodes (Union, DropDuplicates,
     // DropFields) through the differential gate, not just unit tests: two
     // row-preserving filter branches of the same table union by name, the
@@ -262,7 +300,7 @@ object TierA {
     // or a dedup that dropped too much/little would hash-diverge). The
     // DropFields node sits before the branch split and must prune the
     // scan; dedup-then-aggregate stays one Catalyst plan.
-    "etl_visual_job_union" -> ((s, d) => {
+    Query("etl_visual_job_union", (s, d) => {
       import graft.etl.VisualJob._
       val graph = Map[String, Node](
         "orders" -> Source("orders"),
@@ -277,10 +315,19 @@ object TierA {
             "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)")))
       compile(graph, Map("orders" -> orders(s, d)), "by_status")
         .orderBy("o_orderstatus")
-    }),
+    }, oracle =
+      // union-distinct of two selections of one table ≡ the OR filter —
+      // the oracle's independent spelling of Union + whole-row
+      // DropDuplicates (orders' PK guarantees no intra-branch dupes)
+      """SELECT o_orderstatus, COUNT(*) AS n,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |         AS revenue
+        |FROM orders
+        |WHERE o_totalprice > 150000 OR o_orderpriority = '1-URGENT'
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
     // A8 — Job-Bookmark increments (README.md:145): two AvailableNow runs
     // over a growing dir; the checkpoint guarantees file-level exactly-once.
-    "bookmark_incremental" -> ((s, d) => {
+    Query("bookmark_incremental", (s, d) => {
       val src = tmp("graft_bm_src"); val ckpt = tmp("graft_bm_ckpt")
       val sink = tmp("graft_bm_sink")
       val n = nation(s, d)
@@ -293,12 +340,13 @@ object TierA {
         .write.options(CsvSource.options).mode("append").csv(src)
       Incremental.runAvailableNow(s, src, n.schema, ckpt, sink)
       s.read.parquet(sink).orderBy("n_nationkey")
-    }),
+    }, oracle =
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
     // A10 — bucketed co-located fact-fact join: both sides persisted
     // pre-hashed on the join key, so the join plans NO Exchange (asserted in
     // ColocateSpec). The once-at-write shuffle is the 100 TB pattern for
     // repeatedly-joined fact tables.
-    "join_bucketed_colocated" -> ((s, d) => {
+    Query("join_bucketed_colocated", (s, d) => {
       val wh = tmp("graft_bucketed")
       val suffix = java.lang.Long.toHexString(System.nanoTime)
       val (ot, lt) = (s"orders_b_$suffix", s"lineitem_b_$suffix")
@@ -312,11 +360,17 @@ object TierA {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_items"), decSum(col("l_quantity")).as("sum_qty"))
         .orderBy("o_orderstatus")
-    }),
+    }, oracle =
+      // Bucketing/salting are physical-layout strategies; results must equal
+      // the plain join — which is exactly what the oracle checks.
+      """SELECT o_orderstatus, COUNT(*) AS n_items,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // A11 — salted join for known key skew: deterministic salt splinters the
     // big side, small side replicated S ways; results identical to the plain
     // join (asserted in ColocateSpec).
-    "join_salted_skew" -> ((s, d) => {
+    Query("join_salted_skew", (s, d) => {
       val big = lineitem(s, d).select("l_orderkey", "l_linenumber", "l_quantity")
       val small = orders(s, d).select("o_orderkey", "o_orderstatus")
         .withColumnRenamed("o_orderkey", "l_orderkey")
@@ -324,7 +378,10 @@ object TierA {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_items"))
         .orderBy("o_orderstatus")
-    }),
+    }, oracle =
+      """SELECT o_orderstatus, COUNT(*) AS n_items
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // A11b — bloom runtime-prefilter join (round 8), the third scale lever
     // of the join family after bucketing (once-at-write co-location) and
     // salting (skew): when a dim-side predicate keeps <1% of keys but the
@@ -343,7 +400,7 @@ object TierA {
     // the optimizer's cost gate declines. estimatedItems is fixture-fixed
     // (65536 covers 56× the sf0.1 build side); production sizes it from
     // table stats — only the FP rate depends on it, never correctness.
-    "join_bloom_prefilter" -> ((s, d) => {
+    Query("join_bloom_prefilter", (s, d) => {
       graft.GraftSession.register(s) // idempotent; a GraftSession has these
       orders(s, d).createOrReplaceTempView("orders")
       lineitem(s, d).createOrReplaceTempView("lineitem")
@@ -358,13 +415,21 @@ object TierA {
           |         WHERE o_totalprice > 480000 AND o_orderpriority = '1-URGENT'),
           |        xxhash64(l_orderkey))
           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
-    }),
+    }, oracle =
+      // the PLAIN join — the bloom prefilter is pure plumbing that must not
+      // change a single row, so the oracle contains no trace of it
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_totalprice > 480000 AND o_orderpriority = '1-URGENT'
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // A13 — SCD-1 upsert (MERGE-by-PK) without a table format: load a base
     // version, apply an update batch where updates win by primary key, and
     // publish as a new version directory (object stores swap versions via
     // manifest/rename; a lakehouse format would do this transactionally).
     // The anti-join keeps untouched rows; updates overwrite matched keys.
-    "etl_upsert_scd1" -> ((s, d) => {
+    Query("etl_upsert_scd1", (s, d) => {
       val out = tmp("graft_upsert")
       val base = customer(s, d).select("c_custkey", "c_name", "c_acctbal")
       base.write.mode("overwrite").parquet(s"$out/v1")
@@ -375,7 +440,11 @@ object TierA {
         current.join(updates.select("c_custkey"), Seq("c_custkey"), "left_anti"))
       merged.write.mode("overwrite").parquet(s"$out/v2")
       s.read.parquet(s"$out/v2").orderBy("c_custkey")
-    }),
+    }, oracle =
+      """SELECT c_custkey, c_name,
+        |       CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100
+        |            ELSE c_acctbal END AS c_acctbal
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // A13b — SCD-2 upsert (history-preserving merge): instead of
     // overwriting matched keys (SCD-1 above), the old row is CLOSED
     // (valid_to = effective date, is_current = false) and the new row
@@ -385,8 +454,21 @@ object TierA {
     // function of the base table. One union of three disjoint linear
     // branches (untouched / closed / opened) — no shuffle beyond the
     // update-key joins, which broadcast (updates ≪ base at scale).
-    "etl_upsert_scd2" -> ((s, d) =>
-      scd2Table(s, d).orderBy("c_custkey", "valid_from")),
+    Query("etl_upsert_scd2", (s, d) =>
+      scd2Table(s, d).orderBy("c_custkey", "valid_from"), oracle =
+      // history rows: untouched keys keep one open row; updated keys get the
+      // original closed at the effective date plus the new open row
+      """SELECT c_custkey, c_name, c_acctbal,
+        |       DATE '2024-01-01' AS valid_from,
+        |       CASE WHEN c_custkey % 10 = 0 THEN DATE '2024-06-01'
+        |            ELSE DATE '9999-12-31' END AS valid_to,
+        |       c_custkey % 10 <> 0 AS is_current
+        |FROM customer
+        |UNION ALL
+        |SELECT c_custkey, c_name, c_acctbal + 100,
+        |       DATE '2024-06-01', DATE '9999-12-31', true
+        |FROM customer WHERE c_custkey % 10 = 0
+        |ORDER BY c_custkey, valid_from""".stripMargin),
     // A13d — POINT-IN-TIME snapshot from the SCD2 table (round 14): the
     // read side of slowly-changing history — reconstruct the dimension AS
     // OF a past instant by version-interval containment
@@ -401,13 +483,23 @@ object TierA {
     // the dimension — with valid_from as a partition/cluster key the scan
     // prunes to versions alive at T; no shuffle (the sort is
     // presentation).
-    "etl_scd2_snapshot_asof" -> ((s, d) => {
+    Query("etl_scd2_snapshot_asof", (s, d) => {
       val t = to_date(lit("2024-07-01"))
       scd2Table(s, d)
         .filter(col("valid_from") <= t && t < col("valid_to"))
         .select("c_custkey", "c_name", "c_acctbal", "valid_from")
         .orderBy("c_custkey")
-    }),
+    }, oracle =
+      // the oracle derives each key's expected version AT the snapshot
+      // instant independently from the change predicates — NOT by replaying
+      // the interval filter — so the differential gate checks the Spark
+      // side's version-interval resolution
+      """SELECT c_custkey, c_name,
+        |       CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100
+        |            ELSE c_acctbal END AS c_acctbal,
+        |       CASE WHEN c_custkey % 10 = 0 THEN DATE '2024-06-01'
+        |            ELSE DATE '2024-01-01' END AS valid_from
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // A13d' — FACT-to-SCD2 as-of join (round 14b): enrich every event with
     // the dimension version valid AT ITS OWN timestamp — the late-binding
     // temporal join every warehouse fact load runs against a versioned
@@ -428,7 +520,7 @@ object TierA {
     // not as a silent oracle divergence (review find).
     // 100 TB: the fact side streams through one broadcast hash join (the
     // dim ships versions, still dimension-sized); no fact shuffle.
-    "etl_dim_asof_join" -> ((s, d) => {
+    Query("etl_dim_asof_join", (s, d) => {
       val dim = scd2Table(s, d, effectiveDay = "2024-01-16")
       events(s, d).select(col("event_id"), col("user_id"), col("ts"))
         .join(broadcast(dim),
@@ -438,7 +530,22 @@ object TierA {
         .select(col("event_id"), col("user_id"), col("c_acctbal"),
           col("valid_from"))
         .orderBy("event_id")
-    }),
+    }, oracle =
+      // the oracle derives each EVENT's expected version from the change
+      // predicates (key%10 + the event-day threshold) — never by replaying
+      // the interval-containment join it checks
+      """SELECT e.event_id, e.user_id,
+        |       CASE WHEN c.c_custkey % 10 = 0
+        |             AND CAST(CAST(e.ts AS TIMESTAMP) AS DATE)
+        |                 >= DATE '2024-01-16'
+        |            THEN c.c_acctbal + 100 ELSE c.c_acctbal END AS c_acctbal,
+        |       CASE WHEN c.c_custkey % 10 = 0
+        |             AND CAST(CAST(e.ts AS TIMESTAMP) AS DATE)
+        |                 >= DATE '2024-01-16'
+        |            THEN DATE '2024-01-16' ELSE DATE '2024-01-01' END
+        |         AS valid_from
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |ORDER BY e.event_id""".stripMargin),
     // A13e — stable pseudonymization with referential integrity (round
     // 14b): the privacy-preserving ETL step a training-data pipeline runs
     // before keys leave the trust boundary — replace the customer key
@@ -453,7 +560,7 @@ object TierA {
     // 100 TB: one hash expression per row, then the identical shuffle the
     // raw-key join would run — pseudonymization adds zero shuffles; the
     // distinct-customer count is the standard two-level exact distinct.
-    "etl_pseudonymize_join" -> ((s, d) => {
+    Query("etl_pseudonymize_join", (s, d) => {
       def tok(c: Column) = md5(concat(lit("cust:"), c.cast("string")))
       val cust = customer(s, d)
         .select(tok(col("c_custkey")).as("cust_token"), col("c_mktsegment"))
@@ -467,7 +574,16 @@ object TierA {
           count_distinct(col("cust_token")).as("n_customers"),
           sum(col("cents")).as("revenue_cents"))
         .orderBy("c_mktsegment")
-    }),
+    }, oracle =
+      // the oracle joins the RAW keys and never hashes — the gate proves
+      // the pseudonym-space join reproduces the real join exactly
+      """SELECT c_mktsegment, COUNT(*) AS n_orders,
+        |       COUNT(DISTINCT o_custkey) AS n_customers,
+        |       CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+        |         AS BIGINT)) AS BIGINT) AS revenue_cents
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment
+        |ORDER BY c_mktsegment""".stripMargin),
     // A13h — schema-DRIFT audit between two published snapshots (round
     // 14c): the crawler-class change report (reference README.md:104 —
     // detecting schema change is the Glue crawler's whole job) one level
@@ -480,7 +596,7 @@ object TierA {
     // driver-side work is the correct design). The oracle is the
     // expected report as a literal — the gate proves the engine derived
     // it from the real written files.
-    "etl_schema_drift_audit" -> ((s, d) => {
+    Query("etl_schema_drift_audit", (s, d) => {
       val out = tmp("graft_drift")
       val v1 = orders(s, d)
       v1.write.mode("overwrite").parquet(s"$out/v1")
@@ -502,7 +618,15 @@ object TierA {
       import s.implicits._
       rows.toDF("column", "status", "type_v1", "type_v2")
         .orderBy("column")
-    }),
+    }, oracle =
+      // the expected drift report as a literal — the gate proves the
+      // engine derived it from the actually-written footers
+      """SELECT * FROM (VALUES
+        |  ('o_channel', 'added', CAST(NULL AS VARCHAR), 'string'),
+        |  ('o_orderpriority', 'removed', 'string', CAST(NULL AS VARCHAR)),
+        |  ('o_totalprice', 'type_changed', 'double', 'decimal(18,2)'))
+        |  AS t("column", status, type_v1, type_v2)
+        |ORDER BY "column"""".stripMargin),
     // A13g — parquet BLOOM-FILTER layout (round 14c): the point-lookup
     // lever that completes the physical-layout family next to
     // etl_zorder_layout (range clustering) and etl_compact_files (file
@@ -523,7 +647,7 @@ object TierA {
     // that one column to exercise the real bloom path; at production NDV
     // the dictionary page overflows to plain on its own and the override
     // is unnecessary.
-    "etl_parquet_bloom_skip" -> ((s, d) => {
+    Query("etl_parquet_bloom_skip", (s, d) => {
       val out = tmp("graft_bloom")
       orders(s, d).write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#o_custkey", "true")
@@ -534,7 +658,11 @@ object TierA {
         .filter(col("o_custkey") === 42)
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
-    }),
+    }, oracle =
+      // the bloom layout must return exactly the plain filter's rows
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders WHERE o_custkey = 42
+        |ORDER BY o_orderkey""".stripMargin),
     // A13f — GDPR-style delete-cascade audit (round 14c): before a
     // right-to-be-forgotten batch lands, the compliance report every
     // regulated pipeline runs — how many dimension keys go, how many fact
@@ -546,7 +674,7 @@ object TierA {
     // aggregates over semi/anti joins against the broadcast victim set —
     // at 100 TB the fact table streams through each check once, and the
     // victim list is deletion-batch-sized by nature.
-    "etl_delete_cascade_audit" -> ((s, d) => {
+    Query("etl_delete_cascade_audit", (s, d) => {
       val victims = customer(s, d).filter(col("c_custkey") % 97 === 0)
         .select(col("c_custkey"))
       val o = orders(s, d)
@@ -566,7 +694,29 @@ object TierA {
           orphansAfter.agg(count(lit(1)).as("n_orphans_after"))))
         .crossJoin(broadcast(
           remaining.agg(count(lit(1)).as("n_orders_remaining"))))
-    }),
+    }, oracle =
+      // every count recomputed from the pure predicates — the orphan check
+      // is the FK-violation count among post-delete survivors
+      """SELECT
+        |  (SELECT COUNT(*) FROM customer WHERE c_custkey % 97 = 0)
+        |    AS n_deleted_customers,
+        |  (SELECT COUNT(*) FROM orders o JOIN customer c
+        |     ON o.o_custkey = c.c_custkey WHERE c.c_custkey % 97 = 0)
+        |    AS n_cascade_orders,
+        |  (SELECT COUNT(*) FROM orders o
+        |   WHERE o.o_custkey IS NOT NULL
+        |     AND NOT EXISTS (SELECT 1 FROM customer c
+        |                     WHERE c.c_custkey = o.o_custkey
+        |                       AND c.c_custkey % 97 = 0)
+        |     AND NOT EXISTS (SELECT 1 FROM customer c
+        |                     WHERE c.c_custkey = o.o_custkey
+        |                       AND c.c_custkey % 97 <> 0))
+        |    AS n_orphans_after,
+        |  (SELECT COUNT(*) FROM orders o
+        |   WHERE NOT EXISTS (SELECT 1 FROM customer c
+        |                     WHERE c.c_custkey = o.o_custkey
+        |                       AND c.c_custkey % 97 = 0))
+        |    AS n_orders_remaining""".stripMargin),
     // A13c — snapshot diff between two published versions: the audit step
     // after any SCD publish ("what did this load change?") — added /
     // deleted / updated / unchanged counts from ONE co-partitioned
@@ -574,7 +724,7 @@ object TierA {
     // v2 applies updates (custkey % 10: +100 balance), deletes (% 97) and
     // inserts (% 103, re-keyed +1e6), so every status is exercised; the
     // oracle recomputes the four counts from the same pure predicates.
-    "etl_snapshot_diff" -> ((s, d) => {
+    Query("etl_snapshot_diff", (s, d) => {
       val out = tmp("graft_snapdiff")
       val base = customer(s, d).select("c_custkey", "c_name", "c_acctbal")
       base.write.mode("overwrite").parquet(s"$out/v1")
@@ -601,7 +751,21 @@ object TierA {
           .otherwise("updated").as("status"))
         .groupBy("status").agg(count(lit(1)).as("n"))
         .orderBy("status")
-    }),
+    }, oracle =
+      // pure functions of c_custkey: the same predicates the publish applied
+      """SELECT * FROM (
+        |  SELECT 'added' AS status, COUNT(*) AS n FROM customer
+        |  WHERE c_custkey % 103 = 0
+        |  UNION ALL
+        |  SELECT 'deleted' AS status, COUNT(*) AS n FROM customer
+        |  WHERE c_custkey % 97 = 0
+        |  UNION ALL
+        |  SELECT 'unchanged' AS status, COUNT(*) AS n FROM customer
+        |  WHERE c_custkey % 10 <> 0 AND c_custkey % 97 <> 0
+        |  UNION ALL
+        |  SELECT 'updated' AS status, COUNT(*) AS n FROM customer
+        |  WHERE c_custkey % 10 = 0 AND c_custkey % 97 <> 0) t
+        |ORDER BY status""".stripMargin),
     // A13d — CDC apply: materialize the current table from a base snapshot
     // plus an ordered change log of full-row images (the Debezium/DMS
     // after-image shape a Glue→Redshift pipeline replicates). Last write
@@ -613,7 +777,7 @@ object TierA {
     // change log is a pure function of the fixture, so the oracle replays
     // the same log and resolves last-write-wins through a window rank — an
     // independent implementation of the apply.
-    "etl_cdc_apply" -> ((s, d) => {
+    Query("etl_cdc_apply", (s, d) => {
       val base = customer(s, d).select("c_custkey", "c_name", "c_acctbal")
       def logRows(f: DataFrame => DataFrame, seq: Int, op: String) =
         f(base).withColumn("seq", lit(seq)).withColumn("op", lit(op))
@@ -633,7 +797,30 @@ object TierA {
         .select(col("c_custkey"), col("last.c_name").as("c_name"),
           col("last.c_acctbal").as("c_acctbal"))
         .orderBy("c_custkey")
-    }),
+    }, oracle =
+      // the oracle replays the same deterministic change log but resolves
+      // last-write-wins through a window rank instead of max_by
+      """WITH log AS (
+        |  SELECT c_custkey, c_name, c_acctbal, 0 AS seq, 'I' AS op FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey, c_name, c_acctbal + 50.0, 1, 'U' FROM customer
+        |  WHERE c_custkey % 7 = 0
+        |  UNION ALL
+        |  SELECT c_custkey, c_name, CAST(NULL AS DOUBLE), 2, 'D' FROM customer
+        |  WHERE c_custkey % 11 = 0
+        |  UNION ALL
+        |  SELECT -(c_custkey + 1), c_name, c_acctbal, 3, 'I' FROM customer
+        |  WHERE c_custkey % 13 = 0
+        |  UNION ALL
+        |  SELECT c_custkey, c_name, c_acctbal + 75.0, 4, 'I' FROM customer
+        |  WHERE c_custkey % 77 = 0),
+        |ranked AS (
+        |  SELECT *, row_number() OVER (PARTITION BY c_custkey
+        |                               ORDER BY seq DESC) AS rn
+        |  FROM log)
+        |SELECT c_custkey, c_name, c_acctbal
+        |FROM ranked WHERE rn = 1 AND op <> 'D'
+        |ORDER BY c_custkey""".stripMargin),
     // A14 — Z-order layout audit: the multi-dimension data-clustering
     // technique behind Delta/Iceberg OPTIMIZE ZORDER. Interleaving the bits
     // of (customer bucket, order month) gives a 1-D sort key whose ranges
@@ -646,7 +833,7 @@ object TierA {
     // would prune on; narrow spans in both columns are the property that
     // makes z-order pay. At 100 TB the write path is repartitionByRange(z)
     // + sortWithinPartitions(z) before etl_compact_files' rewrite.
-    "etl_zorder_layout" -> ((s, d) => {
+    Query("etl_zorder_layout", (s, d) => {
       def spread(c: Column): Column = {
         val a = c.bitwiseOR(shiftleft(c, 8)).bitwiseAND(lit(16711935L))
         val b = a.bitwiseOR(shiftleft(a, 4)).bitwiseAND(lit(252645135L))
@@ -668,7 +855,30 @@ object TierA {
           min(col("x")).as("min_x"), max(col("x")).as("max_x"),
           min(col("ym")).as("min_ym"), max(col("ym")).as("max_ym"))
         .orderBy("zbucket")
-    }),
+    }, oracle =
+      // the same shift-and-mask spread chain, spelled in DuckDB bit operators
+      """WITH base AS (
+        |  SELECT o_custkey % 4096 AS x0,
+        |         (year(o_orderdate) - 1992) * 12 + (month(o_orderdate) - 1) AS ym,
+        |         o_custkey % 4096 AS x,
+        |         (year(o_orderdate) - 1992) * 12 + (month(o_orderdate) - 1) AS y
+        |  FROM orders),
+        |s1 AS (SELECT x0, ym,
+        |              (x | (x << 8)) & 16711935 AS x,
+        |              (y | (y << 8)) & 16711935 AS y FROM base),
+        |s2 AS (SELECT x0, ym,
+        |              (x | (x << 4)) & 252645135 AS x,
+        |              (y | (y << 4)) & 252645135 AS y FROM s1),
+        |s3 AS (SELECT x0, ym,
+        |              (x | (x << 2)) & 858993459 AS x,
+        |              (y | (y << 2)) & 858993459 AS y FROM s2),
+        |s4 AS (SELECT x0, ym,
+        |              (x | (x << 1)) & 1431655765 AS x,
+        |              (y | (y << 1)) & 1431655765 AS y FROM s3)
+        |SELECT (x | (y << 1)) >> 13 AS zbucket, COUNT(*) AS n,
+        |       MIN(x0) AS min_x, MAX(x0) AS max_x,
+        |       MIN(ym) AS min_ym, MAX(ym) AS max_ym
+        |FROM s4 GROUP BY 1 ORDER BY zbucket""".stripMargin),
     // A2b — malformed-record handling (every real CSV lake has bad rows):
     // PERMISSIVE mode quarantines rows that fail the schema into
     // _corrupt_record instead of failing the job or silently nulling;
@@ -676,7 +886,7 @@ object TierA {
     // proves the accounting: good + corrupt = total, dropped = good. The
     // oracle derives all four from the nation count + the 3 planted bad
     // rows (pure function of the fixture).
-    "scan_csv_corrupt" -> ((s, d) => {
+    Query("scan_csv_corrupt", (s, d) => {
       val dir = tmp("graft_corrupt")
       val base = nation(s, d)
       CsvSource.write(base, dir)
@@ -705,7 +915,13 @@ object TierA {
           sum(col("_corrupt_record").isNotNull.cast("long")).as("n_corrupt"),
           sum(col("_corrupt_record").isNull.cast("long")).as("n_good"))
         .crossJoin(dropped.agg(count(lit(1)).as("n_dropmalformed")))
-    }),
+    }, oracle =
+      // counts are a pure function of the fixture: nation rows + 3 planted
+      // bad lines; DROPMALFORMED keeps exactly the good ones
+      """SELECT CAST((SELECT COUNT(*) FROM nation) + 3 AS BIGINT) AS n_rows,
+        |       CAST(3 AS BIGINT) AS n_corrupt,
+        |       CAST((SELECT COUNT(*) FROM nation) AS BIGINT) AS n_good,
+        |       CAST((SELECT COUNT(*) FROM nation) AS BIGINT) AS n_dropmalformed""".stripMargin),
     // A12b — partition backfill with DYNAMIC partition overwrite: recompute
     // ONE year's partition (1996, +10.00 price correction) and overwrite it
     // in place — the other partitions must survive untouched, which is
@@ -713,31 +929,35 @@ object TierA {
     // whole table) and what the oracle catches: every year's count/sum must
     // match, with only 1996 corrected. The daily-backfill primitive of any
     // date-partitioned lake.
-    "etl_backfill_partition" -> ((s, d) => {
+    Query("etl_backfill_partition", (s, d) => {
       val out = tmp("graft_backfill")
       val o = orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .select("o_orderkey", "o_totalprice", "o_year")
       o.write.partitionBy("o_year").mode("overwrite").parquet(out)
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        o.filter(col("o_year") === 1996)
-          .withColumn("o_totalprice", col("o_totalprice") + 10.0)
-          .write.partitionBy("o_year").mode("overwrite").parquet(out)
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // dynamic mode as a per-write option, which outranks the session
+      // conf: a session-wide setting would also reach concurrent writes
+      o.filter(col("o_year") === 1996)
+        .withColumn("o_totalprice", col("o_totalprice") + 10.0)
+        .write.partitionBy("o_year").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(out)
       s.read.parquet(out)
         .groupBy("o_year")
         .agg(count(lit(1)).as("n_orders"), decSum(col("o_totalprice")).as("total"))
         .orderBy("o_year")
-    }),
+    }, oracle =
+      // only 1996 carries the +10.00 correction — a static overwrite would
+      // have clobbered every other year and the counts would diverge
+      """SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+        |       COUNT(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice +
+        |                CASE WHEN year(o_orderdate) = 1996 THEN 10.0 ELSE 0 END
+        |              AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin),
     // A14 — data-quality report (the Glue Data Quality analogue): one pass
     // computing the load-gate metrics a warehouse ingest checks — row count,
     // PK uniqueness/nullability, value-range sanity, freshness bounds.
-    "etl_data_quality" -> ((s, d) => {
+    Query("etl_data_quality", (s, d) => {
       val o = orders(s, d)
       o.agg(
         count(lit(1)).as("n_rows"),
@@ -746,7 +966,14 @@ object TierA {
         sum(when(col("o_totalprice") <= 0, 1).otherwise(0)).as("n_nonpositive_price"),
         min(col("o_orderdate")).as("min_date"),
         max(col("o_orderdate")).as("max_date"))
-    }),
+    }, oracle =
+      """SELECT COUNT(*) AS n_rows,
+        |       COUNT(DISTINCT o_orderkey) AS n_distinct_pk,
+        |       CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_pk,
+        |       CAST(SUM(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_nonpositive_price,
+        |       MIN(o_orderdate) AS min_date,
+        |       MAX(o_orderdate) AS max_date
+        |FROM orders""".stripMargin),
     // A6c — declarative data-quality RULESET evaluation (round 12i): the
     // Glue Data Quality / Deequ shape — a ruleset of named constraints
     // (Completeness, Uniqueness, ColumnValues, RowCount) evaluated in ONE
@@ -760,7 +987,7 @@ object TierA {
     // the one Expand-widened metric — the profile_columns
     // approx_count_distinct caveat applies); the 5-row ruleset explodes
     // from the single result row.
-    "etl_dq_ruleset" -> ((s, d) => {
+    Query("etl_dq_ruleset", (s, d) => {
       val o = orders(s, d)
       val m = o.agg(
         count(lit(1)).as("n"),
@@ -788,7 +1015,40 @@ object TierA {
           (col("r.metric_q6") >= col("r.threshold_q6")).cast("int")
             .as("passed"))
         .orderBy("rule")
-    }),
+    }, oracle =
+      // same single-pass metrics, unpivoted to the 5-rule contract rows
+      """WITH m AS (
+        |  SELECT COUNT(*) AS n,
+        |         COUNT(DISTINCT o_orderkey) AS nd_pk,
+        |         CAST(SUM(CASE WHEN o_custkey IS NOT NULL THEN 1 ELSE 0 END)
+        |              AS BIGINT) AS nn_cust,
+        |         CAST(SUM(CASE WHEN o_totalprice > 0 THEN 1 ELSE 0 END)
+        |              AS BIGINT) AS pos_price,
+        |         CAST(SUM(CASE WHEN o_orderstatus IN ('F','O','P')
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS ok_status
+        |  FROM orders),
+        |rules AS (
+        |  SELECT 'completeness_o_custkey' AS rule,
+        |         CAST(nn_cust * 1000000 // n AS BIGINT) AS metric_q6,
+        |         CAST(990000 AS BIGINT) AS threshold_q6 FROM m
+        |  UNION ALL
+        |  SELECT 'uniqueness_o_orderkey',
+        |         CAST(nd_pk * 1000000 // n AS BIGINT),
+        |         CAST(999000 AS BIGINT) FROM m
+        |  UNION ALL
+        |  SELECT 'values_o_totalprice_positive',
+        |         CAST(pos_price * 1000000 // n AS BIGINT),
+        |         CAST(1000000 AS BIGINT) FROM m
+        |  UNION ALL
+        |  SELECT 'values_o_orderstatus_domain',
+        |         CAST(ok_status * 1000000 // n AS BIGINT),
+        |         CAST(1000000 AS BIGINT) FROM m
+        |  UNION ALL
+        |  SELECT 'rowcount_min', CAST(n AS BIGINT),
+        |         CAST(100 AS BIGINT) FROM m)
+        |SELECT rule, metric_q6, threshold_q6,
+        |       CAST(metric_q6 >= threshold_q6 AS INT) AS passed
+        |FROM rules ORDER BY rule""".stripMargin),
     // The declared 100 TB form of the ruleset (round 13 — r12 verdict #2):
     // identical rules, but the uniqueness metric's exact COUNT(DISTINCT pk)
     // is replaced by approx_count_distinct (HLL++, rsd 2%). The exact
@@ -805,7 +1065,7 @@ object TierA {
     // brackets the approx uniqueness metric within ±5% of the exact key's,
     // and checks the four non-sketch rows are byte-identical to the exact
     // ruleset's.
-    "etl_dq_ruleset_approx" -> ((s, d) => {
+    Query("etl_dq_ruleset_approx", (s, d) => {
       val o = orders(s, d)
       val m = o.agg(
         count(lit(1)).as("n"),
@@ -853,9 +1113,19 @@ object TierA {
     // hashes the full ROW STRING of a different table, a disjoint input
     // domain. 100 TB: one scan, one partial-agg row per partition crosses
     // the shuffle — the cheapest possible full-table integrity check.
-    "etl_table_fingerprint" -> ((s, d) =>
+    Query("etl_table_fingerprint", (s, d) =>
       orders(s, d).select(fingerprintRowHash.as("h"))
-        .agg(fingerprintAggs.head, fingerprintAggs.tail: _*)),
+        .agg(fingerprintAggs.head, fingerprintAggs.tail: _*), oracle =
+      // the identical canonical row string (concat_ws skips no field — every
+      // nullable wraps in an explicit token) hashed via '0x'-literal cast;
+      // the digest aggregates are order-independent by construction
+      s"""WITH h AS (
+         |  SELECT $fingerprintHashSql AS h
+         |  FROM orders)
+         |SELECT COUNT(*) AS n_rows, CAST(SUM(h) AS BIGINT) AS hash_sum,
+         |       CAST(bit_xor(h) AS BIGINT) AS hash_xor,
+         |       MIN(h) AS hash_min, MAX(h) AS hash_max
+         |FROM h""".stripMargin),
     // A15b — PARTITION-grain fingerprint (round 14, r13 verdict #5): the
     // incremental-audit form of A15 — the SAME canonical-row digest
     // recipe (fingerprintRowHash/fingerprintAggs, one definition shared
@@ -868,13 +1138,26 @@ object TierA {
     // roll-up identity). 100 TB: still one scan; the shuffle carries one
     // partial-agg row per (task, year) — years are calendar-bounded, so
     // the digest table is ~|years| rows at any corpus size.
-    "etl_partition_fingerprint" -> ((s, d) =>
+    Query("etl_partition_fingerprint", (s, d) =>
       orders(s, d)
         .select(year(to_date(col("o_orderdate"))).as("part_year"),
           fingerprintRowHash.as("h"))
         .groupBy("part_year")
         .agg(fingerprintAggs.head, fingerprintAggs.tail: _*)
-        .orderBy("part_year")),
+        .orderBy("part_year"), oracle =
+      // the same hash recipe string (fingerprintHashSql) grouped by the
+      // partition key — the roll-up identity to the table digest is what
+      // EtlSpec asserts on the Spark side
+      s"""WITH h AS (
+         |  SELECT CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS INT)
+         |           AS part_year,
+         |         $fingerprintHashSql AS h
+         |  FROM orders)
+         |SELECT part_year,
+         |       COUNT(*) AS n_rows, CAST(SUM(h) AS BIGINT) AS hash_sum,
+         |       CAST(bit_xor(h) AS BIGINT) AS hash_xor,
+         |       MIN(h) AS hash_min, MAX(h) AS hash_max
+         |FROM h GROUP BY part_year ORDER BY part_year""".stripMargin),
     // A15c — fingerprint DIFF (round 14): the audit ACTION the
     // partition-grain digests exist for — given two copies of the table
     // (here: v2 plants a +1.00 price drift on 1995 orders with
@@ -886,7 +1169,7 @@ object TierA {
     // one canonicalization. 100 TB: two one-pass partial-agg scans (the
     // copies usually live on different systems — each side ships only
     // its |years|-row digest table) + a calendar-bounded join.
-    "etl_fingerprint_diff" -> ((s, d) => {
+    Query("etl_fingerprint_diff", (s, d) => {
       val v1 = orders(s, d)
       val v2 = v1.withColumn("o_totalprice",
         when(year(to_date(col("o_orderdate"))) === 1995 &&
@@ -909,269 +1192,9 @@ object TierA {
             col("min_a") === col("min_b") && col("max_a") === col("max_b"))
             .cast("int").as("is_match"))
         .orderBy("part_year")
-    }),
-    // A12 — small-file compaction: the lake-maintenance job every file-based
-    // pipeline needs (crawl output accumulates per-trigger small files; at
-    // 100 TB unbounded file counts kill planning and listing). Rewrite many
-    // small files into count-controlled bigger ones; contents must be
-    // lossless (oracle: equals the source table). EtlSpec asserts the file
-    // counts. At scale the coalesce target comes from size stats
-    // (bytes / target_file_size), not a constant.
-    "etl_compact_files" -> ((s, d) => {
-      val src = tmp("graft_compact_src"); val out = tmp("graft_compact_out")
-      nation(s, d).repartition(12).write.mode("overwrite").parquet(src)
-      s.read.parquet(src).coalesce(1).write.mode("overwrite").parquet(out)
-      s.read.parquet(out).orderBy("n_nationkey")
-    }),
-    // A9 — event trigger with prefix/suffix filters (README.md:196-198):
-    // prefix == watched dir, suffix == pathGlobFilter; the .txt decoy must
-    // not be ingested.
-    "event_trigger_filtered" -> ((s, d) => {
-      val src = tmp("graft_ev_src"); val ckpt = tmp("graft_ev_ckpt")
-      val sink = tmp("graft_ev_sink")
-      CsvSource.write(region(s, d), src)
-      Files.writeString(java.nio.file.Paths.get(s"$src/decoy.txt"),
-        "not,a,csv\n1,2,3\n")
-      val schema = region(s, d).schema
-      Incremental.runAvailableNow(s, src, schema, ckpt, sink,
-        globFilter = Some("*.csv"))
-      s.read.parquet(sink).orderBy("r_regionkey")
-    }),
-    // A7d — scheduled-trigger fire plan (README.md:116: the crawler's
-    // "Frequency" knob — Hourly here). Given the event stream's timestamps
-    // as the poll opportunities and the earliest tick as the schedule
-    // anchor, compute the runs an hourly trigger performs: missed windows
-    // coalesce, so fires are exactly the FIRST tick of each non-empty
-    // hour slot (etl.ScheduledTrigger implements the same recurrence
-    // imperatively; EtlSpec asserts poll-per-tick parity). One shuffle
-    // (the slot groupBy) + a broadcast 1-row anchor — all epoch-second
-    // longs, zero floats, and the shape is linear in ticks at any scale.
-    "workflow_scheduled" -> ((s, d) => {
-      val ticks = events(s, d)
-        .select(unix_timestamp(col("ts")).as("tick")).distinct()
-      val anchor = ticks.agg(min(col("tick")).as("s0"))
-      ticks.crossJoin(broadcast(anchor))
-        .select(col("tick"), col("s0"),
-          expr("(tick - s0) DIV 3600").as("slot"))
-        .groupBy("slot", "s0")
-        .agg(min(col("tick")).as("fire_ts_s"), count(lit(1)).as("n_ticks"))
-        .select(col("slot"), col("fire_ts_s"), col("n_ticks"),
-          (col("s0") + (col("slot") + lit(1L)) * lit(3600L)).as("next_due_s"))
-        .orderBy("slot")
-    })
-  )
-
-  def oracle: Map[String, String] = Map(
-    "scan_parquet" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // ETL round-trips whose results equal a source table (or a pure
-    // transform of one) are oracle-checkable too — the comparison proves
-    // the serde/JDBC/streaming plumbing is lossless, not just non-empty.
-    "scan_csv_serde" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-    "scan_json" ->
-      """SELECT n_nationkey, n_name, n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    // The merged schema after an add-only re-crawl is fully determined:
-    // v1 fields keep their CSV-inferred types, the v2-only column appends.
-    "schema_evolution_add_only" ->
-      """SELECT * FROM (VALUES ('r_comment','string'),('r_name','string'),
-        |                      ('r_regionkey','int')) AS t(field, "type")
-        |ORDER BY field""".stripMargin,
-    // Bucketing/salting are physical-layout strategies; results must equal
-    // the plain join — which is exactly what the oracle checks.
-    "join_bucketed_colocated" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "join_salted_skew" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    // the PLAIN join — the bloom prefilter is pure plumbing that must not
-    // change a single row, so the oracle contains no trace of it
-    "join_bloom_prefilter" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_totalprice > 480000 AND o_orderpriority = '1-URGENT'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "scan_orc" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-    // round-trip: the regex-parsed log lines must reconstruct the table
-    "scan_text_logs" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-    "infer_schema" ->
-      """SELECT * FROM region ORDER BY r_regionkey""",
-    "partition_discovery" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt FROM orders
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "sink_jdbc" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-    "workflow_dag" ->
-      """SELECT s_suppkey AS supplier_id, upper(s_name) AS supplier_name,
-        |       s_acctbal AS balance
-        |FROM supplier ORDER BY supplier_id""".stripMargin,
-    // the AND-gated two-crawler join must equal the plain fixture join —
-    // the comparison proves the whole CSV-crawl-join-load chain is lossless
-    "workflow_fanin" ->
-      """SELECT n_nationkey AS nation_id, n_name AS nation_name,
-        |       r_name AS region_name
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY nation_id""".stripMargin,
-    // the compiled node graph must equal the plain relational spelling —
-    // proving the declarative DSL adds no semantics of its own
-    "etl_visual_job" ->
-      """SELECT c_mktsegment AS segment, COUNT(*) AS n,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |WHERE o_totalprice > 100000
-        |GROUP BY 1 ORDER BY segment""".stripMargin,
-    // union-distinct of two selections of one table ≡ the OR filter —
-    // the oracle's independent spelling of Union + whole-row
-    // DropDuplicates (orders' PK guarantees no intra-branch dupes)
-    "etl_visual_job_union" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS revenue
-        |FROM orders
-        |WHERE o_totalprice > 150000 OR o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-    "bookmark_incremental" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-    "etl_compact_files" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-    // counts are a pure function of the fixture: nation rows + 3 planted
-    // bad lines; DROPMALFORMED keeps exactly the good ones
-    "scan_csv_corrupt" ->
-      """SELECT CAST((SELECT COUNT(*) FROM nation) + 3 AS BIGINT) AS n_rows,
-        |       CAST(3 AS BIGINT) AS n_corrupt,
-        |       CAST((SELECT COUNT(*) FROM nation) AS BIGINT) AS n_good,
-        |       CAST((SELECT COUNT(*) FROM nation) AS BIGINT) AS n_dropmalformed""".stripMargin,
-    // only 1996 carries the +10.00 correction — a static overwrite would
-    // have clobbered every other year and the counts would diverge
-    "etl_backfill_partition" ->
-      """SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-        |       COUNT(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice +
-        |                CASE WHEN year(o_orderdate) = 1996 THEN 10.0 ELSE 0 END
-        |              AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin,
-    // pure functions of c_custkey: the same predicates the publish applied
-    "etl_snapshot_diff" ->
-      """SELECT * FROM (
-        |  SELECT 'added' AS status, COUNT(*) AS n FROM customer
-        |  WHERE c_custkey % 103 = 0
-        |  UNION ALL
-        |  SELECT 'deleted' AS status, COUNT(*) AS n FROM customer
-        |  WHERE c_custkey % 97 = 0
-        |  UNION ALL
-        |  SELECT 'unchanged' AS status, COUNT(*) AS n FROM customer
-        |  WHERE c_custkey % 10 <> 0 AND c_custkey % 97 <> 0
-        |  UNION ALL
-        |  SELECT 'updated' AS status, COUNT(*) AS n FROM customer
-        |  WHERE c_custkey % 10 = 0 AND c_custkey % 97 <> 0) t
-        |ORDER BY status""".stripMargin,
-    "etl_upsert_scd1" ->
-      """SELECT c_custkey, c_name,
-        |       CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100
-        |            ELSE c_acctbal END AS c_acctbal
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    // history rows: untouched keys keep one open row; updated keys get the
-    // original closed at the effective date plus the new open row
-    "etl_upsert_scd2" ->
-      """SELECT c_custkey, c_name, c_acctbal,
-        |       DATE '2024-01-01' AS valid_from,
-        |       CASE WHEN c_custkey % 10 = 0 THEN DATE '2024-06-01'
-        |            ELSE DATE '9999-12-31' END AS valid_to,
-        |       c_custkey % 10 <> 0 AS is_current
-        |FROM customer
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal + 100,
-        |       DATE '2024-06-01', DATE '9999-12-31', true
-        |FROM customer WHERE c_custkey % 10 = 0
-        |ORDER BY c_custkey, valid_from""".stripMargin,
-    // the oracle derives each key's expected version AT the snapshot
-    // instant independently from the change predicates — NOT by replaying
-    // the interval filter — so the differential gate checks the Spark
-    // side's version-interval resolution
-    "etl_scd2_snapshot_asof" ->
-      """SELECT c_custkey, c_name,
-        |       CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100
-        |            ELSE c_acctbal END AS c_acctbal,
-        |       CASE WHEN c_custkey % 10 = 0 THEN DATE '2024-06-01'
-        |            ELSE DATE '2024-01-01' END AS valid_from
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    // the expected drift report as a literal — the gate proves the
-    // engine derived it from the actually-written footers
-    "etl_schema_drift_audit" ->
-      """SELECT * FROM (VALUES
-        |  ('o_channel', 'added', CAST(NULL AS VARCHAR), 'string'),
-        |  ('o_orderpriority', 'removed', 'string', CAST(NULL AS VARCHAR)),
-        |  ('o_totalprice', 'type_changed', 'double', 'decimal(18,2)'))
-        |  AS t("column", status, type_v1, type_v2)
-        |ORDER BY "column"""".stripMargin,
-    // the bloom layout must return exactly the plain filter's rows
-    "etl_parquet_bloom_skip" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders WHERE o_custkey = 42
-        |ORDER BY o_orderkey""".stripMargin,
-    // every count recomputed from the pure predicates — the orphan check
-    // is the FK-violation count among post-delete survivors
-    "etl_delete_cascade_audit" ->
-      """SELECT
-        |  (SELECT COUNT(*) FROM customer WHERE c_custkey % 97 = 0)
-        |    AS n_deleted_customers,
-        |  (SELECT COUNT(*) FROM orders o JOIN customer c
-        |     ON o.o_custkey = c.c_custkey WHERE c.c_custkey % 97 = 0)
-        |    AS n_cascade_orders,
-        |  (SELECT COUNT(*) FROM orders o
-        |   WHERE o.o_custkey IS NOT NULL
-        |     AND NOT EXISTS (SELECT 1 FROM customer c
-        |                     WHERE c.c_custkey = o.o_custkey
-        |                       AND c.c_custkey % 97 = 0)
-        |     AND NOT EXISTS (SELECT 1 FROM customer c
-        |                     WHERE c.c_custkey = o.o_custkey
-        |                       AND c.c_custkey % 97 <> 0))
-        |    AS n_orphans_after,
-        |  (SELECT COUNT(*) FROM orders o
-        |   WHERE NOT EXISTS (SELECT 1 FROM customer c
-        |                     WHERE c.c_custkey = o.o_custkey
-        |                       AND c.c_custkey % 97 = 0))
-        |    AS n_orders_remaining""".stripMargin,
-    // the oracle derives each EVENT's expected version from the change
-    // predicates (key%10 + the event-day threshold) — never by replaying
-    // the interval-containment join it checks
-    "etl_dim_asof_join" ->
-      """SELECT e.event_id, e.user_id,
-        |       CASE WHEN c.c_custkey % 10 = 0
-        |             AND CAST(CAST(e.ts AS TIMESTAMP) AS DATE)
-        |                 >= DATE '2024-01-16'
-        |            THEN c.c_acctbal + 100 ELSE c.c_acctbal END AS c_acctbal,
-        |       CASE WHEN c.c_custkey % 10 = 0
-        |             AND CAST(CAST(e.ts AS TIMESTAMP) AS DATE)
-        |                 >= DATE '2024-01-16'
-        |            THEN DATE '2024-01-16' ELSE DATE '2024-01-01' END
-        |         AS valid_from
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |ORDER BY e.event_id""".stripMargin,
-    // the oracle joins the RAW keys and never hashes — the gate proves
-    // the pseudonym-space join reproduces the real join exactly
-    "etl_pseudonymize_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |       COUNT(DISTINCT o_custkey) AS n_customers,
-        |       CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-        |         AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    // both sides' digests from the one interpolated hash recipe; v2's
-    // drift model is replayed as a CTE
-    "etl_fingerprint_diff" ->
+    }, oracle =
+      // both sides' digests from the one interpolated hash recipe; v2's
+      // drift model is replayed as a CTE
       s"""WITH v2 AS (
          |  SELECT o_orderkey, o_custkey, o_orderstatus,
          |         CASE WHEN EXTRACT(year FROM CAST(o_orderdate AS DATE))
@@ -1202,128 +1225,61 @@ object TierA {
          |                  AND max_a = max_b THEN 1 ELSE 0 END AS INT)
          |         AS is_match
          |FROM fa FULL OUTER JOIN fb USING (part_year)
-         |ORDER BY part_year""".stripMargin,
-    // the oracle replays the same deterministic change log but resolves
-    // last-write-wins through a window rank instead of max_by
-    "etl_cdc_apply" ->
-      """WITH log AS (
-        |  SELECT c_custkey, c_name, c_acctbal, 0 AS seq, 'I' AS op FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, c_name, c_acctbal + 50.0, 1, 'U' FROM customer
-        |  WHERE c_custkey % 7 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, c_name, CAST(NULL AS DOUBLE), 2, 'D' FROM customer
-        |  WHERE c_custkey % 11 = 0
-        |  UNION ALL
-        |  SELECT -(c_custkey + 1), c_name, c_acctbal, 3, 'I' FROM customer
-        |  WHERE c_custkey % 13 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, c_name, c_acctbal + 75.0, 4, 'I' FROM customer
-        |  WHERE c_custkey % 77 = 0),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |                               ORDER BY seq DESC) AS rn
-        |  FROM log)
-        |SELECT c_custkey, c_name, c_acctbal
-        |FROM ranked WHERE rn = 1 AND op <> 'D'
-        |ORDER BY c_custkey""".stripMargin,
-    // the same shift-and-mask spread chain, spelled in DuckDB bit operators
-    "etl_zorder_layout" ->
-      """WITH base AS (
-        |  SELECT o_custkey % 4096 AS x0,
-        |         (year(o_orderdate) - 1992) * 12 + (month(o_orderdate) - 1) AS ym,
-        |         o_custkey % 4096 AS x,
-        |         (year(o_orderdate) - 1992) * 12 + (month(o_orderdate) - 1) AS y
-        |  FROM orders),
-        |s1 AS (SELECT x0, ym,
-        |              (x | (x << 8)) & 16711935 AS x,
-        |              (y | (y << 8)) & 16711935 AS y FROM base),
-        |s2 AS (SELECT x0, ym,
-        |              (x | (x << 4)) & 252645135 AS x,
-        |              (y | (y << 4)) & 252645135 AS y FROM s1),
-        |s3 AS (SELECT x0, ym,
-        |              (x | (x << 2)) & 858993459 AS x,
-        |              (y | (y << 2)) & 858993459 AS y FROM s2),
-        |s4 AS (SELECT x0, ym,
-        |              (x | (x << 1)) & 1431655765 AS x,
-        |              (y | (y << 1)) & 1431655765 AS y FROM s3)
-        |SELECT (x | (y << 1)) >> 13 AS zbucket, COUNT(*) AS n,
-        |       MIN(x0) AS min_x, MAX(x0) AS max_x,
-        |       MIN(ym) AS min_ym, MAX(ym) AS max_ym
-        |FROM s4 GROUP BY 1 ORDER BY zbucket""".stripMargin,
-    // the identical canonical row string (concat_ws skips no field — every
-    // nullable wraps in an explicit token) hashed via '0x'-literal cast;
-    // the digest aggregates are order-independent by construction
-    "etl_table_fingerprint" ->
-      s"""WITH h AS (
-         |  SELECT $fingerprintHashSql AS h
-         |  FROM orders)
-         |SELECT COUNT(*) AS n_rows, CAST(SUM(h) AS BIGINT) AS hash_sum,
-         |       CAST(bit_xor(h) AS BIGINT) AS hash_xor,
-         |       MIN(h) AS hash_min, MAX(h) AS hash_max
-         |FROM h""".stripMargin,
-    // the same hash recipe string (fingerprintHashSql) grouped by the
-    // partition key — the roll-up identity to the table digest is what
-    // EtlSpec asserts on the Spark side
-    "etl_partition_fingerprint" ->
-      s"""WITH h AS (
-         |  SELECT CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS INT)
-         |           AS part_year,
-         |         $fingerprintHashSql AS h
-         |  FROM orders)
-         |SELECT part_year,
-         |       COUNT(*) AS n_rows, CAST(SUM(h) AS BIGINT) AS hash_sum,
-         |       CAST(bit_xor(h) AS BIGINT) AS hash_xor,
-         |       MIN(h) AS hash_min, MAX(h) AS hash_max
-         |FROM h GROUP BY part_year ORDER BY part_year""".stripMargin,
-    "etl_data_quality" ->
-      """SELECT COUNT(*) AS n_rows,
-        |       COUNT(DISTINCT o_orderkey) AS n_distinct_pk,
-        |       CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_pk,
-        |       CAST(SUM(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_nonpositive_price,
-        |       MIN(o_orderdate) AS min_date,
-        |       MAX(o_orderdate) AS max_date
-        |FROM orders""".stripMargin,
-    // same single-pass metrics, unpivoted to the 5-rule contract rows
-    "etl_dq_ruleset" ->
-      """WITH m AS (
-        |  SELECT COUNT(*) AS n,
-        |         COUNT(DISTINCT o_orderkey) AS nd_pk,
-        |         CAST(SUM(CASE WHEN o_custkey IS NOT NULL THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS nn_cust,
-        |         CAST(SUM(CASE WHEN o_totalprice > 0 THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS pos_price,
-        |         CAST(SUM(CASE WHEN o_orderstatus IN ('F','O','P')
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS ok_status
-        |  FROM orders),
-        |rules AS (
-        |  SELECT 'completeness_o_custkey' AS rule,
-        |         CAST(nn_cust * 1000000 // n AS BIGINT) AS metric_q6,
-        |         CAST(990000 AS BIGINT) AS threshold_q6 FROM m
-        |  UNION ALL
-        |  SELECT 'uniqueness_o_orderkey',
-        |         CAST(nd_pk * 1000000 // n AS BIGINT),
-        |         CAST(999000 AS BIGINT) FROM m
-        |  UNION ALL
-        |  SELECT 'values_o_totalprice_positive',
-        |         CAST(pos_price * 1000000 // n AS BIGINT),
-        |         CAST(1000000 AS BIGINT) FROM m
-        |  UNION ALL
-        |  SELECT 'values_o_orderstatus_domain',
-        |         CAST(ok_status * 1000000 // n AS BIGINT),
-        |         CAST(1000000 AS BIGINT) FROM m
-        |  UNION ALL
-        |  SELECT 'rowcount_min', CAST(n AS BIGINT),
-        |         CAST(100 AS BIGINT) FROM m)
-        |SELECT rule, metric_q6, threshold_q6,
-        |       CAST(metric_q6 >= threshold_q6 AS INT) AS passed
-        |FROM rules ORDER BY rule""".stripMargin,
-    "event_trigger_filtered" ->
-      """SELECT * FROM region ORDER BY r_regionkey""",
-    // floor(epoch(..)) truncates to whole seconds exactly like Spark's
-    // unix_timestamp (all fixture timestamps are post-1970, so floor ==
-    // truncate); a bare epoch()::BIGINT would ROUND the µs fraction
-    "workflow_scheduled" ->
+         |ORDER BY part_year""".stripMargin),
+    // A12 — small-file compaction: the lake-maintenance job every file-based
+    // pipeline needs (crawl output accumulates per-trigger small files; at
+    // 100 TB unbounded file counts kill planning and listing). Rewrite many
+    // small files into count-controlled bigger ones; contents must be
+    // lossless (oracle: equals the source table). EtlSpec asserts the file
+    // counts. At scale the coalesce target comes from size stats
+    // (bytes / target_file_size), not a constant.
+    Query("etl_compact_files", (s, d) => {
+      val src = tmp("graft_compact_src"); val out = tmp("graft_compact_out")
+      nation(s, d).repartition(12).write.mode("overwrite").parquet(src)
+      s.read.parquet(src).coalesce(1).write.mode("overwrite").parquet(out)
+      s.read.parquet(out).orderBy("n_nationkey")
+    }, oracle =
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
+    // A9 — event trigger with prefix/suffix filters (README.md:196-198):
+    // prefix == watched dir, suffix == pathGlobFilter; the .txt decoy must
+    // not be ingested.
+    Query("event_trigger_filtered", (s, d) => {
+      val src = tmp("graft_ev_src"); val ckpt = tmp("graft_ev_ckpt")
+      val sink = tmp("graft_ev_sink")
+      CsvSource.write(region(s, d), src)
+      Files.writeString(java.nio.file.Paths.get(s"$src/decoy.txt"),
+        "not,a,csv\n1,2,3\n")
+      val schema = region(s, d).schema
+      Incremental.runAvailableNow(s, src, schema, ckpt, sink,
+        globFilter = Some("*.csv"))
+      s.read.parquet(sink).orderBy("r_regionkey")
+    }, oracle =
+      """SELECT * FROM region ORDER BY r_regionkey"""),
+    // A7d — scheduled-trigger fire plan (README.md:116: the crawler's
+    // "Frequency" knob — Hourly here). Given the event stream's timestamps
+    // as the poll opportunities and the earliest tick as the schedule
+    // anchor, compute the runs an hourly trigger performs: missed windows
+    // coalesce, so fires are exactly the FIRST tick of each non-empty
+    // hour slot (etl.ScheduledTrigger implements the same recurrence
+    // imperatively; EtlSpec asserts poll-per-tick parity). One shuffle
+    // (the slot groupBy) + a broadcast 1-row anchor — all epoch-second
+    // longs, zero floats, and the shape is linear in ticks at any scale.
+    Query("workflow_scheduled", (s, d) => {
+      val ticks = events(s, d)
+        .select(unix_timestamp(col("ts")).as("tick")).distinct()
+      val anchor = ticks.agg(min(col("tick")).as("s0"))
+      ticks.crossJoin(broadcast(anchor))
+        .select(col("tick"), col("s0"),
+          expr("(tick - s0) DIV 3600").as("slot"))
+        .groupBy("slot", "s0")
+        .agg(min(col("tick")).as("fire_ts_s"), count(lit(1)).as("n_ticks"))
+        .select(col("slot"), col("fire_ts_s"), col("n_ticks"),
+          (col("s0") + (col("slot") + lit(1L)) * lit(3600L)).as("next_due_s"))
+        .orderBy("slot")
+    }, oracle =
+      // floor(epoch(..)) truncates to whole seconds exactly like Spark's
+      // unix_timestamp (all fixture timestamps are post-1970, so floor ==
+      // truncate); a bare epoch()::BIGINT would ROUND the µs fraction
       """WITH t AS (SELECT DISTINCT
         |             CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS tick
         |           FROM events),
@@ -1332,6 +1288,6 @@ object TierA {
         |       FROM t CROSS JOIN a)
         |SELECT slot, MIN(tick) AS fire_ts_s, COUNT(*) AS n_ticks,
         |       s0 + (slot + 1) * 3600 AS next_due_s
-        |FROM sl GROUP BY slot, s0 ORDER BY slot""".stripMargin
+        |FROM sl GROUP BY slot, s0 ORDER BY slot""".stripMargin)
   )
 }

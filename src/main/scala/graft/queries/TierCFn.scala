@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.core.Tables._
 
 /** Tier C (continued) — scalar function families (C35-C42) and
@@ -16,9 +17,9 @@ import graft.core.Tables._
   * regexp_replace global flag, 1-indexed substring/split_part.
   */
 object TierCFunctions {
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Seq[Query] = Seq(
     // C35 — string family.
-    "fn_string" -> ((s, d) => {
+    Query("fn_string", (s, d) => {
       customer(s, d).select(
           col("c_custkey"),
           upper(col("c_name")).as("up"),
@@ -31,18 +32,34 @@ object TierCFunctions {
           trim(concat(lit("  "), col("c_name"), lit("  "))).as("trimmed"),
           split_part(col("c_name"), lit("#"), lit(2)).as("id_part"))
         .orderBy("c_custkey")
-    }),
+    }, oracle =
+      """SELECT c_custkey,
+        |       upper(c_name) AS up,
+        |       lower(c_mktsegment) AS lo,
+        |       CAST(length(c_name) AS INT) AS len,
+        |       substring(c_name, 1, 8) AS sub,
+        |       concat(c_name, '-', c_mktsegment) AS cat,
+        |       replace(c_name, 'Customer', 'Cust') AS rep,
+        |       lpad(CAST(c_custkey AS VARCHAR), 12, '0') AS lp,
+        |       trim('  ' || c_name || '  ') AS trimmed,
+        |       split_part(c_name, '#', 2) AS id_part
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // C36 — regexp family.
-    "fn_regexp" -> ((s, d) => {
+    Query("fn_regexp", (s, d) => {
       customer(s, d).select(
           col("c_custkey"),
           regexp_extract(col("c_name"), "([0-9]+)", 1).as("digits"),
           regexp_replace(col("c_name"), "[0-9]", "#").as("masked"),
           col("c_name").rlike("[0-9]{3}").as("has3digits"))
         .orderBy("c_custkey")
-    }),
+    }, oracle =
+      """SELECT c_custkey,
+        |       regexp_extract(c_name, '([0-9]+)', 1) AS digits,
+        |       regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
+        |       regexp_matches(c_name, '[0-9]{3}') AS has3digits
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // C37 — date/time family.
-    "fn_date" -> ((s, d) => {
+    Query("fn_date", (s, d) => {
       orders(s, d).select(
           col("o_orderkey"),
           year(col("o_orderdate")).as("yr"),
@@ -53,11 +70,20 @@ object TierCFunctions {
           date_add(col("o_orderdate"), 30).as("due_date"),
           dayofweek(col("o_orderdate")).as("dow"))
         .orderBy("o_orderkey")
-    }),
+    }, oracle =
+      """SELECT o_orderkey,
+        |       CAST(year(o_orderdate) AS INT) AS yr,
+        |       CAST(month(o_orderdate) AS INT) AS mo,
+        |       CAST(day(o_orderdate) AS INT) AS dom,
+        |       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
+        |       CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS INT) AS days_since_95,
+        |       CAST(o_orderdate AS DATE) + 30 AS due_date,
+        |       CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
     // C38 — math family. Every output is either exact integer math or an
     // IEEE op on identical operands, so bits match across engines; no
     // ln/log (libm implementations differ by ulps — SURVEY §7.4).
-    "fn_math" -> ((s, d) => {
+    Query("fn_math", (s, d) => {
       lineitem(s, d).select(
           col("l_orderkey"), col("l_linenumber"),
           round(col("l_discount") * 100).cast("long").as("disc_pct"),
@@ -69,9 +95,19 @@ object TierCFunctions {
           signum(col("l_quantity") - 25.0).cast("int").as("sgn"),
           sqrt(col("l_quantity")).as("qty_sqrt"))
         .orderBy("l_orderkey", "l_linenumber")
-    }),
+    }, oracle =
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(round(l_discount * 100) AS BIGINT) AS disc_pct,
+        |       abs(l_quantity - 25.0) AS qty_dev,
+        |       CAST(floor(l_quantity) AS BIGINT) AS qty_floor,
+        |       CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
+        |       CAST(power(2, l_linenumber) AS BIGINT) AS pow2,
+        |       l_orderkey % 7 AS mod7,
+        |       CAST(sign(l_quantity - 25.0) AS INT) AS sgn,
+        |       sqrt(l_quantity) AS qty_sqrt
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // C39 — conditional family.
-    "fn_cond" -> ((s, d) => {
+    Query("fn_cond", (s, d) => {
       orders(s, d).select(
           col("o_orderkey"),
           greatest(col("o_totalprice"), lit(50000.0)).as("g"),
@@ -79,10 +115,16 @@ object TierCFunctions {
           coalesce(nullif(col("o_orderstatus"), lit("F")), lit("was_f")).as("c"),
           when(col("o_totalprice") > 50000, "hi").otherwise("lo").as("flag"))
         .orderBy("o_orderkey")
-    }),
+    }, oracle =
+      """SELECT o_orderkey,
+        |       greatest(o_totalprice, 50000.0) AS g,
+        |       least(o_totalprice, 50000.0) AS l,
+        |       coalesce(nullif(o_orderstatus, 'F'), 'was_f') AS c,
+        |       CASE WHEN o_totalprice > 50000 THEN 'hi' ELSE 'lo' END AS flag
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
     // C40 — array family + higher-order functions over tokenized text.
     // Integer-only folds (lengths) so the HOF aggregate is exact.
-    "fn_array" -> ((s, d) => {
+    Query("fn_array", (s, d) => {
       documents(s, d)
         .withColumn("tokens", split(col("text"), " "))
         .select(
@@ -94,18 +136,28 @@ object TierCFunctions {
           aggregate(transform(col("tokens"), x => length(x).cast("long")),
             lit(0L), (acc, x) => acc + x).as("char_sum"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        |       CAST(len(str_split(text, ' ')) AS INT) AS n_tokens,
+        |       array_to_string(str_split(text, ' ')[1:3], ' ') AS first3,
+        |       array_to_string(list_sort(str_split(text, ' '))[1:3], ' ') AS sorted3,
+        |       CAST(len(list_filter(str_split(text, ' '), x -> length(x) > 5)) AS INT) AS n_long,
+        |       CAST(list_aggregate(list_transform(str_split(text, ' '), x -> length(x)), 'sum') AS BIGINT) AS char_sum
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // C41 — table-generating explode (Catalyst Generator / UDTF surface).
     // Bounded to doc_id < 200 to keep the verify dump small; the operator
     // itself streams row-by-row, no memory blowup at scale.
-    "fn_explode" -> ((s, d) => {
+    Query("fn_explode", (s, d) => {
       documents(s, d)
         .filter(col("doc_id") < 200)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
         .orderBy("doc_id", "token")
-    }),
+    }, oracle =
+      """SELECT doc_id, unnest(str_split(text, ' ')) AS token
+        |FROM documents WHERE doc_id < 200
+        |ORDER BY doc_id, token""".stripMargin),
     // C38b — bitwise family (exact integer ops in both engines).
-    "fn_bitwise" -> ((s, d) => {
+    Query("fn_bitwise", (s, d) => {
       lineitem(s, d).select(
           col("l_orderkey"), col("l_linenumber"),
           (col("l_orderkey").bitwiseAND(255)).as("and255"),
@@ -114,12 +166,19 @@ object TierCFunctions {
           shiftleft(col("l_linenumber"), 3).as("shl3"),
           shiftright(col("l_orderkey"), 2).as("shr2"))
         .orderBy("l_orderkey", "l_linenumber")
-    }),
+    }, oracle =
+      """SELECT l_orderkey, l_linenumber,
+        |       l_orderkey & 255 AS and255,
+        |       l_orderkey | l_linenumber AS or_ln,
+        |       xor(l_orderkey, l_linenumber) AS xor_ln,
+        |       CAST(l_linenumber << 3 AS INT) AS shl3,
+        |       l_orderkey >> 2 AS shr2
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // C35b — binary encode/decode family: base64 round-trip and hex over
     // UTF-8 bytes (the wire formats every ingest edge meets). The oracle
     // goes through explicit BLOB casts — DuckDB's base64/hex are
     // bytes-typed where Spark's accept strings directly.
-    "fn_binary" -> ((s, d) => {
+    Query("fn_binary", (s, d) => {
       customer(s, d).select(
           col("c_custkey"),
           base64(col("c_name").cast("binary")).as("b64"),
@@ -127,12 +186,17 @@ object TierCFunctions {
           decode(unbase64(base64(col("c_name").cast("binary"))), "UTF-8")
             .as("roundtrip"))
         .orderBy("c_custkey")
-    }),
+    }, oracle =
+      """SELECT c_custkey,
+        |       to_base64(CAST(c_name AS BLOB)) AS b64,
+        |       hex(CAST(c_name AS BLOB)) AS hx,
+        |       CAST(from_base64(to_base64(CAST(c_name AS BLOB))) AS VARCHAR) AS roundtrip
+        |FROM customer ORDER BY c_custkey""".stripMargin),
     // C14j — presence-bitmap aggregation: one BIGINT mask per group with
     // bit i set iff priority class i occurs — the bitmap-index shape
     // (set-membership questions become bit tests; masks OR together
     // map-side, so 8 bytes per group per partition cross the shuffle).
-    "agg_bitor_presence" -> ((s, d) => {
+    Query("agg_bitor_presence", (s, d) => {
       orders(s, d)
         .withColumn("pidx",
           substring(col("o_orderpriority"), 1, 1).cast("int"))
@@ -141,21 +205,29 @@ object TierCFunctions {
           countDistinct(col("pidx")).as("n_classes"),
           count(lit(1)).as("n"))
         .orderBy("o_orderstatus")
-    }),
+    }, oracle =
+      """SELECT o_orderstatus,
+        |       CAST(bit_or(CAST(1 AS BIGINT) << CAST(substr(o_orderpriority, 1, 1) AS INT)) AS BIGINT) AS present_mask,
+        |       COUNT(DISTINCT CAST(substr(o_orderpriority, 1, 1) AS INT)) AS n_classes,
+        |       COUNT(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // C42 — JSON extraction from events.props.
-    "fn_json" -> ((s, d) => {
+    Query("fn_json", (s, d) => {
       events(s, d).select(
           col("event_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k_val"))
         .orderBy("event_id")
-    }),
+    }, oracle =
+      """SELECT event_id,
+        |       CAST(json_extract_string(props, '$.k') AS INT) AS k_val
+        |FROM events ORDER BY event_id""".stripMargin),
     // C42b — map/struct family: from_json to a typed map, key/value access,
     // entry counting, map_concat, struct build + field access. Map key order
     // is pinned by sort_array before joining (SURVEY §7.4.5: no map-ordering
     // dependence in oracle-checked output). Assumes generator props carry no
     // duplicate JSON keys: from_json dedups into a map while json_keys
     // counts occurrences, so the two engines would diverge on n_entries.
-    "fn_struct_map" -> ((s, d) => {
+    Query("fn_struct_map", (s, d) => {
       import org.apache.spark.sql.types._
       val m = from_json(col("props"), MapType(StringType, IntegerType))
       events(s, d)
@@ -177,93 +249,7 @@ object TierCFunctions {
           struct(col("event_type").as("t"), col("user_id").as("u"))
             .getField("t").as("type_field"))
         .orderBy("event_id")
-    })
-  )
-
-  def oracle: Map[String, String] = Map(
-    "fn_string" ->
-      """SELECT c_custkey,
-        |       upper(c_name) AS up,
-        |       lower(c_mktsegment) AS lo,
-        |       CAST(length(c_name) AS INT) AS len,
-        |       substring(c_name, 1, 8) AS sub,
-        |       concat(c_name, '-', c_mktsegment) AS cat,
-        |       replace(c_name, 'Customer', 'Cust') AS rep,
-        |       lpad(CAST(c_custkey AS VARCHAR), 12, '0') AS lp,
-        |       trim('  ' || c_name || '  ') AS trimmed,
-        |       split_part(c_name, '#', 2) AS id_part
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "fn_regexp" ->
-      """SELECT c_custkey,
-        |       regexp_extract(c_name, '([0-9]+)', 1) AS digits,
-        |       regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
-        |       regexp_matches(c_name, '[0-9]{3}') AS has3digits
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "fn_date" ->
-      """SELECT o_orderkey,
-        |       CAST(year(o_orderdate) AS INT) AS yr,
-        |       CAST(month(o_orderdate) AS INT) AS mo,
-        |       CAST(day(o_orderdate) AS INT) AS dom,
-        |       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
-        |       CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS INT) AS days_since_95,
-        |       CAST(o_orderdate AS DATE) + 30 AS due_date,
-        |       CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "fn_math" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(round(l_discount * 100) AS BIGINT) AS disc_pct,
-        |       abs(l_quantity - 25.0) AS qty_dev,
-        |       CAST(floor(l_quantity) AS BIGINT) AS qty_floor,
-        |       CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
-        |       CAST(power(2, l_linenumber) AS BIGINT) AS pow2,
-        |       l_orderkey % 7 AS mod7,
-        |       CAST(sign(l_quantity - 25.0) AS INT) AS sgn,
-        |       sqrt(l_quantity) AS qty_sqrt
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "fn_bitwise" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       l_orderkey & 255 AS and255,
-        |       l_orderkey | l_linenumber AS or_ln,
-        |       xor(l_orderkey, l_linenumber) AS xor_ln,
-        |       CAST(l_linenumber << 3 AS INT) AS shl3,
-        |       l_orderkey >> 2 AS shr2
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "fn_cond" ->
-      """SELECT o_orderkey,
-        |       greatest(o_totalprice, 50000.0) AS g,
-        |       least(o_totalprice, 50000.0) AS l,
-        |       coalesce(nullif(o_orderstatus, 'F'), 'was_f') AS c,
-        |       CASE WHEN o_totalprice > 50000 THEN 'hi' ELSE 'lo' END AS flag
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "fn_array" ->
-      """SELECT doc_id,
-        |       CAST(len(str_split(text, ' ')) AS INT) AS n_tokens,
-        |       array_to_string(str_split(text, ' ')[1:3], ' ') AS first3,
-        |       array_to_string(list_sort(str_split(text, ' '))[1:3], ' ') AS sorted3,
-        |       CAST(len(list_filter(str_split(text, ' '), x -> length(x) > 5)) AS INT) AS n_long,
-        |       CAST(list_aggregate(list_transform(str_split(text, ' '), x -> length(x)), 'sum') AS BIGINT) AS char_sum
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "fn_explode" ->
-      """SELECT doc_id, unnest(str_split(text, ' ')) AS token
-        |FROM documents WHERE doc_id < 200
-        |ORDER BY doc_id, token""".stripMargin,
-    "fn_json" ->
-      """SELECT event_id,
-        |       CAST(json_extract_string(props, '$.k') AS INT) AS k_val
-        |FROM events ORDER BY event_id""".stripMargin,
-    "fn_binary" ->
-      """SELECT c_custkey,
-        |       to_base64(CAST(c_name AS BLOB)) AS b64,
-        |       hex(CAST(c_name AS BLOB)) AS hx,
-        |       CAST(from_base64(to_base64(CAST(c_name AS BLOB))) AS VARCHAR) AS roundtrip
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "agg_bitor_presence" ->
-      """SELECT o_orderstatus,
-        |       CAST(bit_or(CAST(1 AS BIGINT) << CAST(substr(o_orderpriority, 1, 1) AS INT)) AS BIGINT) AS present_mask,
-        |       COUNT(DISTINCT CAST(substr(o_orderpriority, 1, 1) AS INT)) AS n_classes,
-        |       COUNT(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "fn_struct_map" ->
+    }, oracle =
       """SELECT event_id,
         |       array_to_string(list_sort(json_keys(props)), ',') AS keys,
         |       CAST(json_extract_string(props, '$.k') AS INT) AS k_val,
@@ -272,7 +258,7 @@ object TierCFunctions {
         |            CASE WHEN list_contains(json_keys(props), 'graft_extra')
         |                 THEN 0 ELSE 1 END AS INT) AS n_after_concat,
         |       event_type AS type_field
-        |FROM events ORDER BY event_id""".stripMargin
+        |FROM events ORDER BY event_id""".stripMargin)
   )
 }
 
@@ -287,19 +273,22 @@ object TierCSubquery {
     nation(s, d).createOrReplaceTempView("nation")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Seq[Query] = Seq(
     // C43 — scalar subquery threshold. Mean computed as exact decimal sum /
     // count in BOTH engines so the comparison threshold is bit-identical
     // (a ulp-different AVG(double) could flip boundary rows).
-    "subq_scalar" -> ((s, d) => {
+    Query("subq_scalar", (s, d) => {
       views(s, d)
       s.sql(
         """SELECT o_orderkey, o_totalprice FROM orders
           |WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) FROM orders)
           |ORDER BY o_orderkey""".stripMargin)
-    }),
+    }, oracle =
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) FROM orders)
+        |ORDER BY o_orderkey""".stripMargin),
     // C44 — IN subquery + correlated EXISTS.
-    "subq_in_correlated" -> ((s, d) => {
+    Query("subq_in_correlated", (s, d) => {
       views(s, d)
       s.sql(
         """SELECT c_custkey, c_name FROM customer c
@@ -307,9 +296,14 @@ object TierCSubquery {
           |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
           |  AND c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
           |ORDER BY c_custkey""".stripMargin)
-    }),
+    }, oracle =
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
+        |  AND c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
+        |ORDER BY c_custkey""".stripMargin),
     // C45 — WITH CTE, full SQL entry.
-    "cte_sql_entry" -> ((s, d) => {
+    Query("cte_sql_entry", (s, d) => {
       views(s, d)
       s.sql(
         """WITH co AS (
@@ -320,7 +314,15 @@ object TierCSubquery {
           |FROM customer c JOIN co ON co.o_custkey = c.c_custkey
           |WHERE co.n_orders >= 5
           |ORDER BY c.c_custkey""".stripMargin)
-    }),
+    }, oracle =
+      """WITH co AS (
+        |  SELECT o_custkey, COUNT(*) AS n_orders,
+        |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT c.c_custkey, c.c_name, co.n_orders, co.total_spent
+        |FROM customer c JOIN co ON co.o_custkey = c.c_custkey
+        |WHERE co.n_orders >= 5
+        |ORDER BY c.c_custkey""".stripMargin),
     // C45b — RECURSIVE CTE (Spark 4's iterative-plan support): ancestor
     // walk over the synthetic halving hierarchy parent(s) = s DIV 2 —
     // per-supplier depth and ancestor count down to root 0. The
@@ -330,7 +332,7 @@ object TierCSubquery {
     // pointer jumping + frontier deltas + lineage checkpoints) is the
     // production path — this covers the SQL surface itself. DuckDB
     // replays it verbatim (its // is Spark's DIV).
-    "cte_recursive" -> ((s, d) => {
+    Query("cte_recursive", (s, d) => {
       supplier(s, d).createOrReplaceTempView("rc_supplier")
       s.sql(
         """WITH RECURSIVE up(s_suppkey, anc, depth) AS (
@@ -340,13 +342,20 @@ object TierCSubquery {
           |  SELECT s_suppkey, anc DIV 2, depth + 1 FROM up WHERE anc > 0)
           |SELECT s_suppkey, MAX(depth) AS depth, COUNT(*) AS n_ancestors
           |FROM up GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin)
-    }),
+    }, oracle =
+      """WITH RECURSIVE up(s_suppkey, anc, depth) AS (
+        |  SELECT s_suppkey, CAST(s_suppkey AS BIGINT) AS anc, 0 AS depth
+        |  FROM supplier
+        |  UNION ALL
+        |  SELECT s_suppkey, anc // 2, depth + 1 FROM up WHERE anc > 0)
+        |SELECT s_suppkey, MAX(depth) AS depth, COUNT(*) AS n_ancestors
+        |FROM up GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin),
     // C46 — LATERAL correlated subquery in FROM: top-2 account balances per
     // nation. The lateral body is per-outer-row correlated with its own
     // ORDER BY/LIMIT — the "top-n related rows per driving row" shape that
     // plain IN/EXISTS subqueries can't express. Catalyst decorrelates it
     // into a ranked join (no per-row re-execution).
-    "subq_lateral" -> ((s, d) => {
+    Query("subq_lateral", (s, d) => {
       views(s, d)
       s.sql(
         """SELECT n.n_name, t.c_custkey, t.c_acctbal
@@ -355,43 +364,12 @@ object TierCSubquery {
           |  WHERE c_nationkey = n.n_nationkey
           |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
           |ORDER BY n.n_name, t.c_acctbal DESC, t.c_custkey""".stripMargin)
-    })
-  )
-
-  def oracle: Map[String, String] = Map(
-    "subq_scalar" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "subq_in_correlated" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-        |  AND c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
-        |ORDER BY c_custkey""".stripMargin,
-    "cte_recursive" ->
-      """WITH RECURSIVE up(s_suppkey, anc, depth) AS (
-        |  SELECT s_suppkey, CAST(s_suppkey AS BIGINT) AS anc, 0 AS depth
-        |  FROM supplier
-        |  UNION ALL
-        |  SELECT s_suppkey, anc // 2, depth + 1 FROM up WHERE anc > 0)
-        |SELECT s_suppkey, MAX(depth) AS depth, COUNT(*) AS n_ancestors
-        |FROM up GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin,
-    "cte_sql_entry" ->
-      """WITH co AS (
-        |  SELECT o_custkey, COUNT(*) AS n_orders,
-        |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT c.c_custkey, c.c_name, co.n_orders, co.total_spent
-        |FROM customer c JOIN co ON co.o_custkey = c.c_custkey
-        |WHERE co.n_orders >= 5
-        |ORDER BY c.c_custkey""".stripMargin,
-    "subq_lateral" ->
+    }, oracle =
       """SELECT n.n_name, t.c_custkey, t.c_acctbal
         |FROM nation n, LATERAL (
         |  SELECT c_custkey, c_acctbal FROM customer
         |  WHERE c_nationkey = n.n_nationkey
         |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-        |ORDER BY n.n_name, t.c_acctbal DESC, t.c_custkey""".stripMargin
+        |ORDER BY n.n_name, t.c_acctbal DESC, t.c_custkey""".stripMargin)
   )
 }

@@ -12,21 +12,15 @@ class ContractSpec extends SparkSpec {
   }
 
   test("tier maps have no colliding query keys") {
-    import graft.queries._
-    import graft.llm.{Dedup, Similarity, TextStats}
-    val parts = Seq(
-      "TierA" -> TierA.queries, "TierB" -> TierB.queries,
-      "TierCFilters" -> TierCFilters.queries, "TierCJoins" -> TierCJoins.queries,
-      "TierCAgg" -> TierCAgg.queries, "TierCWindow" -> TierCWindow.queries,
-      "TierCSortSet" -> TierCSortSet.queries,
-      "TierCFunctions" -> TierCFunctions.queries,
-      "TierCSubquery" -> TierCSubquery.queries, "TierD" -> TierD.queries,
-      "Dedup" -> Dedup.queries, "Similarity" -> Similarity.queries,
-      "TextStats" -> TextStats.queries)
-    val dups = parts.flatMap { case (n, m) => m.keys.map(_ -> n) }
-      .groupBy(_._1).filter(_._2.size > 1)
-    assert(dups.isEmpty, s"colliding keys: ${dups.view.mapValues(_.map(_._2)).toMap}")
-    assert(SparkEntry.queries.size == parts.map(_._2.size).sum)
+    // a Map literal silently keeps the last of two equal keys; the registry
+    // index refuses the list instead, naming the key declared twice
+    val build: Query.Build = (s, _) => s.emptyDataFrame
+    val err = intercept[IllegalArgumentException](Query.index(Seq(
+      Query("kept_once", build), Query("declared_twice", build, "SELECT 1"),
+      Query("declared_twice", build))))
+    assert(err.getMessage.contains("declared_twice"), err.getMessage)
+    assert(!err.getMessage.contains("kept_once"), err.getMessage)
+    assert(SparkEntry.queries.keySet.size == 325)
   }
 
   test("fixture canary: every table's physical types are ones the readers handle") {
@@ -178,6 +172,8 @@ class ContractSpec extends SparkSpec {
     assert(tree.get("bcast_violations").get(0).asText == "join \"x\"\tbig")
     assert(tree.get("errors").get("plain").asText == cause)
     assert(tree.get("sf").asText == "/sf\"x")
+    assert(tree.get("cpus").asInt == GraftSession.cpus)
+    assert(tree.get("nproc").asInt == Runtime.getRuntime.availableProcessors())
   }
 
   test("build.sbt keeps the bench's stdout shape driver-parseable") {
@@ -221,6 +217,9 @@ class ContractSpec extends SparkSpec {
       s"README oracle count is stale (code has $oracled)")
     assert(read("ARCHITECTURE.md").contains(s"$oracled/$total queries"),
       s"ARCHITECTURE gate count is stale (code has $oracled/$total)")
+    val unnamed = GraftFunctions.builders.map(_._1)
+      .filterNot(f => readme.contains(s"`$f`"))
+    assert(unnamed.isEmpty, s"SQL functions missing from README: $unnamed")
   }
 
   test("no oracle-checked query returns a top-level array/map column") {
