@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.GraftBridge
+
 /** Hypervisor-steal measurement for the bench launch (r16 verdict #4).
   * Round 16 measured that this host's steal is DEMAND-TRIGGERED: an
   * 8-core probe reads ~0% while 32-core saturation reads ~7% (commit
@@ -250,7 +252,7 @@ object Bench {
     }
     val loadEnd = loadAvg() // 1-min window ≈ the run itself at 32 threads
     val (stealRun, stealTicks) = sampler.finish()
-    Thread.sleep(1000) // execution-listener bus is async — let it drain
+    GraftBridge.drainListeners(spark) // the audit hears executions asynchronously
     val bcast = auditor.violations.map { case (action, b) =>
       s"$action ${b.desc} rows=${b.rows} bytes=${b.bytes}"
     }

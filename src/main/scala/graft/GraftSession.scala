@@ -187,6 +187,10 @@ object GraftSession {
       // repeated plans reuse their compiled classes (see [[CodegenCacheEntries]])
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.ts shipped as INT64 TIMESTAMP(NANOS) in one vintage: read it
+      // as raw longs, which Tables.events truncates to µs (set here, not
+      // per read, so query functions never write the session's conf)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   def build(): SparkSession = builder().getOrCreate()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: measures rows-vs-seconds scaling curves for the
@@ -555,10 +555,6 @@ object Scaling {
       inflateDocs: Boolean, inflateEmbEvents: Boolean,
       inflateTpch: Boolean = false): String = {
     val dir = graft.core.Tables.scratchDir(s"graft_scale_x$m")
-    // match Tables.events' read posture so a NANOS-vintage fixture stages
-    // as raw longs (which the reader dispatch then handles) instead of
-    // failing the plain read
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val base = java.nio.file.Paths.get(baseDir)
     val inflated =
       (if (inflateDocs) Set("documents") else Set.empty[String]) ++

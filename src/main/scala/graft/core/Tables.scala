@@ -37,7 +37,7 @@ object Tables {
   private val scratchCreated =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
 
-  private val _cleanupHook: Unit = Runtime.getRuntime.addShutdownHook(
+  Runtime.getRuntime.addShutdownHook(
     new Thread(() => {
       import scala.jdk.CollectionConverters._
       scratchCreated.asScala.foreach { p =>
@@ -66,7 +66,8 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   /** events.ts has shipped in two physical vintages: INT64 TIMESTAMP(NANOS)
-    * (read as raw nanos via the legacy flag, then floor-truncated to µs —
+    * (read as raw nanos via the `nanosAsLong` flag that GraftSession.builder
+    * sets, then floor-truncated to µs —
     * the same floor DuckDB applies casting TIMESTAMP_NS → TIMESTAMP) and
     * TIMESTAMP_MICROS with isAdjustedToUTC=0 (arrives as TIMESTAMP_NTZ;
     * with the session pinned to UTC the NTZ→LTZ cast is instant-preserving,
@@ -82,7 +83,6 @@ object Tables {
   }
 
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
     raw.withColumn("ts", tsToTimestamp(raw.schema("ts").dataType))
   }
@@ -138,7 +138,6 @@ object Tables {
     * tracks whichever physical vintage is there. */
   private[graft] def eventsStreamFromDir(s: SparkSession, dir: String)
       : DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(dir).schema
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(dir)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Query
 import graft.core.Tables._
+import graft.functions.BloomPrefilter.{bloom_agg, bloom_might_contain}
 import graft.functions.SortedIntersectCount.sorted_intersect_count
 
 /** Tier E dedup operators (SURVEY.md §2 E1-E3 + builder-mandated extras):
@@ -896,30 +897,28 @@ object Dedup {
     // ~50× the sf0.1 batch; production sizes it from ingest stats, and
     // only the FP rate (extra shuffled rows) depends on it, never
     // correctness.
-    Query("dedup_incremental_bloom", (s, d) => {
-      graft.GraftSession.register(s) // idempotent; brings bloom_agg into SQL
-      documents(s, d)
-        .select(col("doc_id"), sha2(col("text"), 256).as("h"))
-        .createOrReplaceTempView("graft_incr_docs")
-      s.sql(
-        """WITH corpus AS (
-          |  SELECT DISTINCT h FROM graft_incr_docs
+    Query("dedup_incremental_bloom", (s, d) =>
+      Query.runSql(s, d, Seq("documents"),
+        """WITH hashed AS (
+          |  SELECT doc_id, sha2(text, 256) AS h FROM documents),
+          |corpus AS (
+          |  SELECT DISTINCT h FROM hashed
           |  WHERE doc_id % 5 <> 0
           |    AND bloom_might_contain(
           |          (SELECT bloom_agg(xxhash64(h), 65536L)
-          |           FROM graft_incr_docs WHERE doc_id % 5 = 0),
+          |           FROM hashed WHERE doc_id % 5 = 0),
           |          xxhash64(h))),
           |batch AS (
           |  SELECT doc_id, h,
           |         row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
-          |  FROM graft_incr_docs WHERE doc_id % 5 = 0)
+          |  FROM hashed WHERE doc_id % 5 = 0)
           |SELECT b.doc_id,
           |       CASE WHEN c.h IS NOT NULL THEN 'dup_corpus'
           |            WHEN b.rn > 1 THEN 'dup_batch'
           |            ELSE 'new' END AS verdict
           |FROM batch b LEFT JOIN corpus c ON b.h = c.h
-          |ORDER BY b.doc_id""".stripMargin)
-    }, oracle =
+          |ORDER BY b.doc_id""".stripMargin),
+      oracle =
       // the bloom variant is exact by construction (the confirm join clears
       // false positives), so its oracle IS the plain incremental semantics —
       // no bloom anywhere in it, same text as dedup_incremental's
@@ -1008,15 +1007,12 @@ object Dedup {
       // filtered sides are batch-bounded in expectation but their
       // ESTIMATES remain corpus-sized, and a sort of the surviving rows
       // is cheap while an oversize broadcast build is an executor OOM.
-      graft.GraftSession.register(s) // idempotent; bloom_* into SQL
       val docs = documents(s, d).select(col("doc_id"),
           graft.functions.CharNgramHashes.ngram_hashes(col("text"), 3).as("g"))
         .withColumn("n", size(col("g")))
       val batch = docs.filter(col("doc_id") % 10 === 7 && col("n") >= 10)
-      batch.select(explode(col("g")).as("gh"))
-        .createOrReplaceTempView("graft_cont_batch_gh")
-      val bfBatch = expr("bloom_might_contain((SELECT bloom_agg(gh, " +
-        "4194304L) FROM graft_cont_batch_gh), gh)")
+      val bfBatch = bloom_might_contain(batch.select(explode(col("g")).as("gh"))
+        .select(bloom_agg(col("gh"), 4194304L)).scalar(), col("gh"))
       // corpus document frequency per gram hash — vocabulary-sized result;
       // the vocabulary grows with the corpus (bounded only by the gram
       // domain), so it must never be a broadcast build
@@ -1034,9 +1030,8 @@ object Dedup {
         .filter(col("rn") <= col("n") - expr("(9 * n + 9) DIV 10") + 1)
         .select("d_new", "gh")
         .localCheckpoint()
-      prefix.createOrReplaceTempView("graft_cont_prefix_gh")
-      val bfPrefix = expr("bloom_might_contain((SELECT bloom_agg(gh, " +
-        "1048576L) FROM graft_cont_prefix_gh), gh)")
+      val bfPrefix = bloom_might_contain(
+        prefix.select(bloom_agg(col("gh"), 1048576L)).scalar(), col("gh"))
       val postings = docs.select(col("doc_id").as("d_src"), explode(col("g")).as("gh"))
         .filter(bfPrefix)
       // build side = the batch-bounded prefix (shuffled hash, r18): the

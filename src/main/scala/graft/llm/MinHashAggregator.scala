@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.unsafe.types.UTF8String

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Aggregation-based per-group top-k — the scale path for low-cardinality

@@ -400,11 +400,8 @@ object TierA {
     // the optimizer's cost gate declines. estimatedItems is fixture-fixed
     // (65536 covers 56× the sf0.1 build side); production sizes it from
     // table stats — only the FP rate depends on it, never correctness.
-    Query("join_bloom_prefilter", (s, d) => {
-      graft.GraftSession.register(s) // idempotent; a GraftSession has these
-      orders(s, d).createOrReplaceTempView("orders")
-      lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
+    Query("join_bloom_prefilter", (s, d) =>
+      Query.runSql(s, d, Seq("orders", "lineitem"),
         """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
           |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
           |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
@@ -414,8 +411,8 @@ object TierA {
           |        (SELECT bloom_agg(xxhash64(o_orderkey), 65536L) FROM orders
           |         WHERE o_totalprice > 480000 AND o_orderpriority = '1-URGENT'),
           |        xxhash64(l_orderkey))
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
-    }, oracle =
+          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      oracle =
       // the PLAIN join — the bloom prefilter is pure plumbing that must not
       // change a single row, so the oracle contains no trace of it
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,

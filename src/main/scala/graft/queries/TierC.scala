@@ -705,16 +705,7 @@ object TierCAgg {
         |GROUP BY CUBE (l_returnflag, l_linestatus)
         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
     // C20 — explicit GROUPING SETS + GROUPING() id via the SQL entry point.
-    Query("agg_grouping_sets", (s, d) => {
-      lineitem(s, d).createOrReplaceTempView("gs_lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-          |       CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-          |       CAST(GROUPING(l_linestatus) AS INT) AS g_ls
-          |FROM gs_lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-          |ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
-    }, oracle =
+    Query.sql("agg_grouping_sets", Seq("lineitem"),
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
         |       CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
         |       CAST(GROUPING(l_linestatus) AS INT) AS g_ls
@@ -1728,20 +1719,7 @@ object TierCAgg {
     // grand-total grouping-sets pyramid every calendar dashboard issues.
     // One pass — Spark expands grouping sets before the partial aggregate,
     // so the shuffle carries |groups| × 3 rows, not raw data per grain.
-    Query("rollup_time_grain", (s, d) => {
-      orders(s, d).createOrReplaceTempView("tg_orders")
-      s.sql(
-        """SELECT CAST(year(o_orderdate) AS INT) AS yr,
-          |       CAST(month(o_orderdate) AS INT) AS mon,
-          |       COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-          |       CAST(GROUPING(year(o_orderdate)) AS INT) AS g_yr,
-          |       CAST(GROUPING(month(o_orderdate)) AS INT) AS g_mon
-          |FROM tg_orders
-          |GROUP BY GROUPING SETS ((year(o_orderdate), month(o_orderdate)),
-          |                        (year(o_orderdate)), ())
-          |ORDER BY g_yr, g_mon, yr ASC NULLS FIRST, mon ASC NULLS FIRST""".stripMargin)
-    }, oracle =
+    Query.sql("rollup_time_grain", Seq("orders"),
       """SELECT CAST(year(o_orderdate) AS INT) AS yr,
         |       CAST(month(o_orderdate) AS INT) AS mon,
         |       COUNT(*) AS n,
@@ -2419,17 +2397,9 @@ object TierCWindow {
     // RANGE frames bound by an interval over the ORDER BY column are the
     // time-series form row frames can't express (peer rows with equal
     // timestamps aggregate together). DataFrame rangeBetween only takes
-    // longs, so this goes through the SQL entry point — same Catalyst plan.
-    Query("win_range_frame", (s, d) => {
-      orders(s, d).createOrReplaceTempView("wr_orders")
-      s.sql(
-        """SELECT o_orderkey, o_custkey,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-          |         PARTITION BY o_custkey ORDER BY o_orderdate
-          |         RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW)
-          |         AS DOUBLE) AS spend_7d
-          |FROM wr_orders ORDER BY o_orderkey""".stripMargin)
-    }, oracle =
+    // longs, so this goes through the SQL entry point — same Catalyst plan,
+    // and the same text as the oracle (both engines read `INTERVAL 7 DAY`).
+    Query.sql("win_range_frame", Seq("orders"),
       """SELECT o_orderkey, o_custkey,
         |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
         |         PARTITION BY o_custkey ORDER BY o_orderdate

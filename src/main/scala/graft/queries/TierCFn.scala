@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Query
 import graft.core.Tables._
@@ -267,54 +266,25 @@ object TierCFunctions {
   * semi-joins (RewriteCorrelatedScalarSubquery etc.) — asserted good enough
   * by the oracle match; no hand-rolled rewrite needed. */
 object TierCSubquery {
-  private def views(s: SparkSession, d: String): Unit = {
-    orders(s, d).createOrReplaceTempView("orders")
-    customer(s, d).createOrReplaceTempView("customer")
-    nation(s, d).createOrReplaceTempView("nation")
-  }
+  private val tpch = Seq("orders", "customer", "nation")
 
   def queries: Seq[Query] = Seq(
     // C43 — scalar subquery threshold. Mean computed as exact decimal sum /
     // count in BOTH engines so the comparison threshold is bit-identical
     // (a ulp-different AVG(double) could flip boundary rows).
-    Query("subq_scalar", (s, d) => {
-      views(s, d)
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) FROM orders)
-          |ORDER BY o_orderkey""".stripMargin)
-    }, oracle =
+    Query.sql("subq_scalar", tpch,
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) FROM orders)
         |ORDER BY o_orderkey""".stripMargin),
     // C44 — IN subquery + correlated EXISTS.
-    Query("subq_in_correlated", (s, d) => {
-      views(s, d)
-      s.sql(
-        """SELECT c_custkey, c_name FROM customer c
-          |WHERE EXISTS (SELECT 1 FROM orders o
-          |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-          |  AND c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
-          |ORDER BY c_custkey""".stripMargin)
-    }, oracle =
+    Query.sql("subq_in_correlated", tpch,
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
         |  AND c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
         |ORDER BY c_custkey""".stripMargin),
     // C45 — WITH CTE, full SQL entry.
-    Query("cte_sql_entry", (s, d) => {
-      views(s, d)
-      s.sql(
-        """WITH co AS (
-          |  SELECT o_custkey, COUNT(*) AS n_orders,
-          |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
-          |  FROM orders GROUP BY o_custkey)
-          |SELECT c.c_custkey, c.c_name, co.n_orders, co.total_spent
-          |FROM customer c JOIN co ON co.o_custkey = c.c_custkey
-          |WHERE co.n_orders >= 5
-          |ORDER BY c.c_custkey""".stripMargin)
-    }, oracle =
+    Query.sql("cte_sql_entry", tpch,
       """WITH co AS (
         |  SELECT o_custkey, COUNT(*) AS n_orders,
         |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
@@ -331,18 +301,16 @@ object TierCSubquery {
     // scale the hand-tuned operator (graft.operators.ConnectedComponents:
     // pointer jumping + frontier deltas + lineage checkpoints) is the
     // production path — this covers the SQL surface itself. DuckDB
-    // replays it verbatim (its // is Spark's DIV).
-    Query("cte_recursive", (s, d) => {
-      supplier(s, d).createOrReplaceTempView("rc_supplier")
-      s.sql(
-        """WITH RECURSIVE up(s_suppkey, anc, depth) AS (
-          |  SELECT s_suppkey, CAST(s_suppkey AS BIGINT) AS anc, 0 AS depth
-          |  FROM rc_supplier
-          |  UNION ALL
-          |  SELECT s_suppkey, anc DIV 2, depth + 1 FROM up WHERE anc > 0)
-          |SELECT s_suppkey, MAX(depth) AS depth, COUNT(*) AS n_ancestors
-          |FROM up GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin)
-    }, oracle =
+    // replays it with its // for Spark's DIV.
+    Query("cte_recursive", (s, d) => Query.runSql(s, d, Seq("supplier"),
+      """WITH RECURSIVE up(s_suppkey, anc, depth) AS (
+        |  SELECT s_suppkey, CAST(s_suppkey AS BIGINT) AS anc, 0 AS depth
+        |  FROM supplier
+        |  UNION ALL
+        |  SELECT s_suppkey, anc DIV 2, depth + 1 FROM up WHERE anc > 0)
+        |SELECT s_suppkey, MAX(depth) AS depth, COUNT(*) AS n_ancestors
+        |FROM up GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin),
+      oracle =
       """WITH RECURSIVE up(s_suppkey, anc, depth) AS (
         |  SELECT s_suppkey, CAST(s_suppkey AS BIGINT) AS anc, 0 AS depth
         |  FROM supplier
@@ -355,16 +323,7 @@ object TierCSubquery {
     // ORDER BY/LIMIT — the "top-n related rows per driving row" shape that
     // plain IN/EXISTS subqueries can't express. Catalyst decorrelates it
     // into a ranked join (no per-row re-execution).
-    Query("subq_lateral", (s, d) => {
-      views(s, d)
-      s.sql(
-        """SELECT n.n_name, t.c_custkey, t.c_acctbal
-          |FROM nation n, LATERAL (
-          |  SELECT c_custkey, c_acctbal FROM customer
-          |  WHERE c_nationkey = n.n_nationkey
-          |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-          |ORDER BY n.n_name, t.c_acctbal DESC, t.c_custkey""".stripMargin)
-    }, oracle =
+    Query.sql("subq_lateral", tpch,
       """SELECT n.n_name, t.c_custkey, t.c_acctbal
         |FROM nation n, LATERAL (
         |  SELECT c_custkey, c_acctbal FROM customer

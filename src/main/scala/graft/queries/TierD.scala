@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.Query
 import graft.core.Tables._
@@ -568,22 +569,24 @@ object TierD {
     // source with checkpoint processes each file exactly once; the second
     // AvailableNow run emits only newly-landed files. EtlSpec asserts the
     // no-reprocess property; here one pass over the events file.
-    Query("stream_foreachbatch_pipeline", (s, d) => withFewStatePartitions(s) {
+    Query("stream_foreachbatch_pipeline", (s, d) => {
       val sink = scratchDir("graft_fb_sink")
-      val q = eventsStream(s, d)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // The micro-batch is materialized to the sink inside the batch —
-          // the Glue-job "load" step of the incremental pipeline.
-          batch.groupBy("event_type").agg(count(lit(1)).as("cnt"))
-            .write.mode("append").parquet(sink)
-          ()
-        }
-        .option("checkpointLocation",
-          scratchDir("graft_fb_ckpt"))
-        .start()
-      q.awaitTermination()
+      withStateScope(s) { c =>
+        val q = eventsStream(c, d)
+          .writeStream.trigger(Trigger.AvailableNow())
+          .outputMode("append")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            // The micro-batch is materialized to the sink inside the batch —
+            // the Glue-job "load" step of the incremental pipeline.
+            batch.groupBy("event_type").agg(count(lit(1)).as("cnt"))
+              .write.mode("append").parquet(sink)
+            ()
+          }
+          .option("checkpointLocation",
+            scratchDir("graft_fb_ckpt"))
+          .start()
+        q.awaitTermination()
+      }
       s.read.parquet(sink).groupBy("event_type")
         .agg(sum("cnt").as("cnt")).orderBy("event_type")
     }, oracle =
@@ -630,53 +633,47 @@ object TierD {
       "left_outer")
   }
 
-  /** Stateful local streams want few state-store partitions: each partition
-    * is a store instance with per-batch commit overhead, so 32 partitions for
-    * a 100k-row demo stream triples its cost. Temporarily cap the shuffle
-    * partitions for the streaming run (state partitioning is fixed at the
-    * first checkpoint anyway), restore afterwards. Cap measured at sf0.1
-    * (quiet, 3 runs each): stateful dedup 2.2s/1.75s/1.55s and the
+  /** Runs `body` on a private clone of `s` (GraftBridge.scopedStreams)
+    * with at most 4 shuffle partitions, so a stream started there has few
+    * state-store partitions while `s` keeps its own count. Each partition
+    * is a store instance with per-batch commit overhead. Cap measured at
+    * sf0.1 (quiet, 3 runs each): stateful dedup 2.2s/1.75s/1.55s and the
     * stream-stream join 3.6s/2.7s/2.26s at 8/4/2 partitions — commit
-    * overhead, not parallelism, dominates a local demo stream. 4 keeps most
-    * of the win without collapsing the demo to near-serial; a cluster run
-    * would size this by key cardinality instead of using this helper. */
-  private def withFewStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try body finally s.conf.set(key, prev)
-  }
+    * overhead, not parallelism, dominates a local demo stream; a cluster
+    * run would size this by key cardinality instead. */
+  private def withStateScope[T](s: SparkSession)(body: SparkSession => T): T =
+    GraftBridge.scopedStreams(s) { c =>
+      c.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
+        math.min(s.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt, 4).toLong)
+      body(c)
+    }
 
   /** The one way a Tier D key runs a stream to a memory sink: synchronously
     * under AvailableNow (process the full backlog, then stop — the
-    * Job-Bookmark execution mode), into a sink named `<tag>_out_<nanoTime
-    * hex>` so repeat calls never collide, checkpointed to a fresh
-    * `graft_<tag>_ckpt` scratch dir. Returns the sink table.
-    *
-    * Only start and await run under [[withFewStatePartitions]]: Spark clones
-    * the session conf into the StreamExecution at start(), so the cap sizes
-    * the stream's state store while input built before the call (dim
-    * checkpoints, chunk staging) runs uncapped.
+    * Job-Bookmark execution mode), checkpointed to a fresh
+    * `graft_<tag>_ckpt` scratch dir. The stream's plan is rebound into a
+    * [[withStateScope]] clone, so only the stream runs capped: input built
+    * before the call (dim checkpoints, chunk staging) ran uncapped in `s`.
+    * The sink, named `tag`, lives in the clone; the returned table is
+    * rebound to `s`, which gains no view.
     *
     * `minBatches` is the multi-batch contract of the chunked-source keys: at
     * least that many micro-batches must have read data, or the cross-batch
     * state carry was never exercised on the gated path. */
   private[graft] def runToMemory(s: SparkSession, df: Dataset[_], tag: String,
-      mode: OutputMode = OutputMode.Append, minBatches: Int = 0): DataFrame = {
-    val name = s"${tag}_out_${java.lang.Long.toHexString(System.nanoTime)}"
-    val q = withFewStatePartitions(s) {
-      val q = df.writeStream.format("memory").queryName(name)
+      mode: OutputMode = OutputMode.Append, minBatches: Int = 0): DataFrame =
+    withStateScope(s) { c =>
+      val q = GraftBridge.ofRows(c, df.queryExecution.analyzed)
+        .writeStream.format("memory").queryName(tag)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", scratchDir(s"graft_${tag}_ckpt"))
         .start()
       q.awaitTermination()
-      q
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      require(batches >= minBatches,
+        s"$tag: multi-batch contract violated: $batches data batch(es) ran, " +
+          s"$minBatches required — the cross-batch state carry was not exercised")
+      GraftBridge.ofRows(s, c.table(tag).queryExecution.analyzed)
     }
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= minBatches,
-      s"$tag: multi-batch contract violated: $batches data batch(es) ran, " +
-        s"$minBatches required — the cross-batch state carry was not exercised")
-    s.table(name)
-  }
 }

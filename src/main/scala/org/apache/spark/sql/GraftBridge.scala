@@ -1,12 +1,16 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Minimal bridge into `private[sql]` API: converts between the public
   * `Column` and catalyst `Expression` so graft's native expressions (e.g.
-  * graft.functions.RollingHash) can be exposed as Columns. Lives in the
-  * org.apache.spark.sql package solely for access; no Spark internals are
-  * modified. */
+  * graft.functions.RollingHash) can be exposed as Columns, and gives query
+  * functions a private session scope. Lives in the org.apache.spark.sql
+  * package solely for access; no Spark internals are modified. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -17,4 +21,58 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** A private copy of `s`, where a query function sets a conf or names a
+    * view: the same conf, temp views, functions and, unlike `newSession`,
+    * `QueryExecutionListener`s (BroadcastAudit keeps hearing it). */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `plan` as a frame of session `s`. */
+  def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+
+  /** Runs `body` on a clone of `s` and rebinds the frame it returns to `s`. */
+  def scoped(s: SparkSession)(body: SparkSession => Dataset[_]): DataFrame =
+    ofRows(s, body(cloneSession(s)).queryExecution.analyzed)
+
+  /** Runs `body`, which starts and awaits streams, on a clone of `s` that
+    * carries `s`'s streaming listeners. Spark attaches a streaming listener
+    * bus to the context for every session that starts a stream and never
+    * detaches it; once the clone's streams' last events are heard, this
+    * detaches the clone's. */
+  def scopedStreams[T](s: SparkSession)(body: SparkSession => T): T = {
+    val clone = cloneSession(s)
+    s.streams.listListeners().foreach(clone.streams.addListener)
+    val tail = new StreamsTail // added last: hears each event after the rest
+    clone.streams.addListener(tail)
+    try body(clone)
+    finally {
+      tail.awaitIdle(timeoutMs = 10000)
+      val bus = s.sparkContext.listenerBus
+      bus.findListenersByClass[StreamingQueryListenerBus]()
+        .filter(_.listeners.contains(tail)).foreach(bus.removeListener)
+    }
+  }
+
+  /** Counts its session's running streams. A started event is heard before
+    * `start()` returns; a terminated event, asynchronously, after the
+    * stream's last progress event. */
+  private final class StreamsTail extends StreamingQueryListener {
+    private var running = 0
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      synchronized { running += 1 }
+    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      synchronized { running -= 1; notifyAll() }
+    def awaitIdle(timeoutMs: Long): Unit = synchronized {
+      val deadline = System.currentTimeMillis + timeoutMs
+      while (running > 0 && System.currentTimeMillis < deadline)
+        wait(math.max(1L, deadline - System.currentTimeMillis))
+    }
+  }
+
+  /** Block until every event posted so far has reached every listener. */
+  def drainListeners(s: SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
 }

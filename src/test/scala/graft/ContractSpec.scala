@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** The driver contract: every declared query runs and every oracle-checked
   * query returns rows (a 0-row oracle query would vacuously "match" while

@@ -20,6 +20,11 @@ class GraftSessionSpec extends SparkSpec {
     assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    // the builder sets it for every session of the context; no events read
+    // sets it on the session it was handed
+    assert(spark.sparkContext.getConf
+      .getOption("spark.sql.legacy.parquet.nanosAsLong") == Some("true"))
+    assert(spark.newSession().conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     // split so this file does not match its own search string
     val call = "SparkSession" + ".builder()"
     val walk = Files.walk(Paths.get("src"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The operator's contract is an exact integer recurrence, so the spec can
   * demand bit-equality against a sequential reference implementation — no

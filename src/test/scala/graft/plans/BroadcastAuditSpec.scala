@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** The broadcast build-size guard (r15 verdict #2): the star-join study
@@ -105,7 +106,7 @@ class BroadcastAuditSpec extends SparkSpec {
       val smallDim = (1L to 20L).map(i => (i, s"s$i")).toDF("k", "name")
       val smallFact = (1L to 200L).map(i => (i % 20L, i)).toDF("k", "v")
       smallFact.join(broadcast(smallDim), "k").collect()
-      Thread.sleep(1000) // let the async bus drain
+      GraftBridge.drainListeners(spark) // every build so far has been heard
       assert(listener.violations.size == v.size,
         s"the in-bound build was wrongly recorded: ${listener.violations}")
     } finally spark.listenerManager.unregister(listener)

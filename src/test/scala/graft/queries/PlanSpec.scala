@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.core.Tables
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Plan-shape assertions (SURVEY §4): the scale properties the engine relies
@@ -923,7 +924,7 @@ class PlanSpec extends SparkSpec {
     val listener = graft.plans.BroadcastAudit.install(spark, k = 0.0)
     try {
       graft.SparkEntry.queries("knn_nndescent")(spark, sf).collect()
-      Thread.sleep(1000) // async listener bus
+      GraftBridge.drainListeners(spark) // every build so far has been heard
       val pairBuilds = listener.violations
         .filter(_._2.desc == "bcast[p1,p2]")
       assert(pairBuilds.isEmpty,

@@ -92,4 +92,22 @@ object QuerySets {
     // graph_covisitation checkpoints the (user, page) incidence its
     // degree agg and both self-join sides consume
     "graph_component_sizes", "graph_covisitation")
+
+  /** Keys whose query functions once wrote the session they were handed:
+    * the 14 memory-sink stream keys and the foreachBatch pipeline (a
+    * session-wide partition cap and a sink view per run), the SQL-text and
+    * bloom keys (fixed-name views, function registration) and one events
+    * reader (the nanosAsLong flag). SessionHygieneSpec and ConcurrencySpec
+    * run them. */
+  val sessionScoped: Seq[String] = Seq(
+    "stream_watermark_late", "stream_window_topn", "stream_hll_window",
+    "stream_stream_outer_join", "stream_dedup_stateful", "stream_custom_state",
+    "stream_stream_join", "stream_dim_asof", "stream_static_join",
+    "stream_sessionize_flatmap", "stream_sessionize_final",
+    "stream_ewma_anomaly", "stream_spacesaving_topk",
+    "stream_spacesaving_global", "stream_foreachbatch_pipeline",
+    "join_bloom_prefilter", "subq_scalar", "subq_in_correlated",
+    "cte_sql_entry", "cte_recursive", "subq_lateral", "agg_grouping_sets",
+    "rollup_time_grain", "win_range_frame", "dedup_incremental_bloom",
+    "dedup_containment", "stream_tumbling")
 }

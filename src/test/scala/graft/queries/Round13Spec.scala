@@ -45,7 +45,6 @@ class Round13Spec extends SparkSpec {
   }
 
   test("packing report reconciles exactly with the shipped layout") {
-    import spark.implicits._
     val layout = q("pack_sequences")
       .select("shard", "n_tok", "block_first", "block_last")
       .collect()

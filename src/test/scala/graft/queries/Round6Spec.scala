@@ -21,7 +21,7 @@ class Round6Spec extends SparkSpec {
       assert(s.head._4 == s.head._3 * 1000000L,
         "first EWMA must equal the seed x*1e6")
       s.sliding(2).foreach {
-        case Array((_, _, cents, e), (_, _, cents2, e2)) =>
+        case Array((_, _, _, e), (_, _, cents2, e2)) =>
           val x2 = cents2 * 1000000L
           assert(e2 == (3L * e + x2) / 4L, "fold must replay the recurrence")
           assert(e2 >= math.min(e, x2) && e2 <= math.max(e, x2),

@@ -1,11 +1,14 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.core.Tables
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
 
 /** Tier D stateful-streaming assertions (SURVEY §5.2/§7.3 hard #4):
   * event-time injected through MemoryStream, never wall-clock sleeps. */
@@ -180,16 +183,50 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("runToMemory: a short stream fails naming its tag and restores the partition cap") {
+    // the cap sizes the stream's state in a private clone: the caller's
+    // count never changes, and the caller gains no sink view
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    // one file at one file per trigger is one data batch, short of two
-    val err = intercept[IllegalArgumentException] {
-      TierD.runToMemory(spark, Tables.eventsStream(spark, sf), "runner_spec",
-        minBatches = 2)
+    assert(before.toInt > 4, s"the suite's $before partitions must exceed the cap")
+    val scratch = Paths.get(Tables.scratchDir("graft_runner_probe")).getParent
+    def checkpoints(): Set[Path] = {
+      val listing = Files.list(scratch)
+      try listing.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("graft_runner_spec_ckpt")).toSet
+      finally listing.close()
     }
+    val earlier = checkpoints()
+    val progress = new AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    // one file at one file per trigger is one data batch, short of two
+    val err =
+      try intercept[IllegalArgumentException] {
+        TierD.runToMemory(spark,
+          Tables.eventsStream(spark, sf).groupBy("event_type").count(),
+          "runner_spec", OutputMode.Complete, minBatches = 2)
+      } finally spark.streams.removeListener(listener)
     assert(err.getMessage.contains("runner_spec"), err.getMessage)
     assert(spark.conf.get(key) == before,
       s"$key reads ${spark.conf.get(key)} after the runner, $before before")
+    val ckpt = (checkpoints() -- earlier).toSeq
+    assert(ckpt.size == 1, s"expected one new runner checkpoint, got $ckpt")
+    val listing = Files.list(ckpt.head.resolve("state").resolve("0"))
+    val parts = try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.forall(_.isDigit)).toSeq // beside `_metadata`
+      finally listing.close()
+    assert(parts.nonEmpty && parts.size <= 4,
+      s"the stream wrote state partitions ${parts.sorted}, at most 4 expected")
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(!views.exists(_.startsWith("runner_spec")),
+      s"the runner left a sink view in the caller: ${views.mkString(", ")}")
+    assert(progress.get > 0,
+      "the caller's streaming listener heard no progress of the runner's stream")
   }
 
   test("D1: streaming tumbling counts equal the batch form") {

@@ -128,8 +128,6 @@ class RecoverySpec extends SparkSpec {
     // can. A restart that lost state re-emits all 50 and fails the
     // duplicate-free assertion below.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNanos =
-      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
       val allDir = Paths.get(
@@ -146,7 +144,6 @@ class RecoverySpec extends SparkSpec {
 
       // synthesize chunk 3' with the planted duplicates (raw schema —
       // eventsStreamFromDir applies the ts dispatch on read)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val c2 = spark.read.parquet(chunkFiles(1).toString)
       val c3 = spark.read.parquet(chunkFiles(2).toString)
       val planted = c2.orderBy(desc("ts"), desc("event_id")).limit(50)
@@ -213,14 +210,6 @@ class RecoverySpec extends SparkSpec {
         "restarted dedup output diverged from the uninterrupted run")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      // restore the reader flag the duplicate staging set (review
-      // finding: leaving it flipped makes later suites order-dependent)
-      prevNanos match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None =>
-          spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
     }
   }
 
@@ -254,8 +243,6 @@ class RecoverySpec extends SparkSpec {
     // emits watermark-finalized sessions, identically in both runs, so
     // the trailing unfinalized sessions drop out of BOTH sides equally.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNanos =
-      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
       val allDir = Paths.get(
@@ -296,7 +283,6 @@ class RecoverySpec extends SparkSpec {
       // pre-crash session state rather than only finalizing old state.
       // Boundary read handles both fixture ts vintages (raw ns longs /
       // timestamp) at second precision — far finer than the 30-min gap.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val c2 = spark.read.parquet(chunkFiles(1).toString)
       val tsCol = c2.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -312,12 +298,6 @@ class RecoverySpec extends SparkSpec {
           "the merge path was not exercised; re-chunk or widen the gap")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNanos match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None =>
-          spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
     }
   }
 
@@ -480,8 +460,6 @@ class RecoverySpec extends SparkSpec {
     // the gap, so the restart must extend that user's restored OpenTail
     // across the crash boundary.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNanos =
-      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
       val chunkFiles = stagedChunks()
@@ -489,7 +467,6 @@ class RecoverySpec extends SparkSpec {
 
       // synthesize chunk 3' (raw schema — the stream source applies the
       // ts dispatch on read)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val c2 = spark.read.parquet(chunkFiles(1).toString)
       val c3 = spark.read.parquet(chunkFiles(2).toString)
       val isRawLong = c2.schema("ts").dataType ==
@@ -571,12 +548,6 @@ class RecoverySpec extends SparkSpec {
           "restored pre-crash session")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNanos match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None =>
-          spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
     }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** flatMapGroupsWithState emits a VARIABLE number of rows per key per batch
   * (one per closed session) and carries the open tail across batches —
