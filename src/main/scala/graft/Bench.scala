@@ -169,26 +169,28 @@ object Bench {
     }
   }
 
+  /** The steal-probe gate (%) and its retry budget. */
+  private val StealMaxPct = 3.0
+  private val StealTries = 10
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Steal-aware launch (r16 verdict #4): saturate the benched width and
     // retry until the hypervisor-steal window is quiet, so the OFFICIAL
     // per-round artifact is itself a quiet point rather than needing a
-    // parallel quiet-run trail. Defaults: gate 3%, 10 retries spaced 60 s
-    // (≈11 min worst case, then run anyway — the driver must always get
-    // its artifact; the recorded probe value flags a forced-through run).
-    val stealMax = sys.env.getOrElse("SPARK_GRAFT_STEAL_MAX", "3.0").toDouble
-    val stealTries = sys.env.getOrElse("SPARK_GRAFT_STEAL_TRIES", "10").toInt
+    // parallel quiet-run trail. Retries are spaced 60 s (≈11 min worst
+    // case, then run anyway — the driver must always get its artifact;
+    // the recorded probe value flags a forced-through run).
     var probeSteal = -1.0
     var attempt = 0
     var quiet = false
-    while (!quiet && attempt < stealTries) {
+    while (!quiet && attempt < StealTries) {
       attempt += 1
       probeSteal = Steal.probe(GraftSession.cpus, 8)
       System.err.println(
-        s"[bench] full-width steal probe $attempt/$stealTries: " +
-          s"$probeSteal% (gate $stealMax%)")
-      if (probeSteal < 0 || probeSteal <= stealMax) quiet = true
+        s"[bench] full-width steal probe $attempt/$StealTries: " +
+          s"$probeSteal% (gate $StealMaxPct%)")
+      if (probeSteal < 0 || probeSteal <= StealMaxPct) quiet = true
       else Thread.sleep(60000)
     }
     val spark = GraftSession.forMain()

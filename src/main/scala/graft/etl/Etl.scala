@@ -206,17 +206,16 @@ class ScheduledTrigger(nodes: Seq[Workflow.Node], startAt: Long, period: Long) {
 object Incremental {
   /** One bookmark-semantics run. `multiLine` parses embedded newlines
     * inside quoted fields (OpenCSVSerde fidelity — CsvSource.write
-    * legitimately emits them, so the default stays on); sources KNOWN to be
-    * newline-free can pass false to keep files splittable — multiLine
-    * forces whole-file reads, which at 100 TB means one task per object
-    * instead of one per 128 MB split. (A/B-measured on this corpus the
-    * parser-level cost at equal splits is small — see SURVEY §7.4b.) */
+    * legitimately emits them); it forces whole-file reads, which at 100 TB
+    * means one task per object instead of one per 128 MB split. (A/B-measured
+    * on this corpus the parser-level cost at equal splits is small — see
+    * SURVEY §7.4b.) */
   def runAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
-      checkpoint: String, sinkDir: String, globFilter: Option[String] = None,
-      multiLine: Boolean = true): Unit = {
+      checkpoint: String, sinkDir: String,
+      globFilter: Option[String] = None): Unit = {
     var reader = spark.readStream.schema(schema)
       .options(CsvSource.options)
-      .option("multiLine", multiLine.toString)
+      .option("multiLine", "true")
       .option("maxFilesPerTrigger", "1000")
     globFilter.foreach(g => reader = reader.option("pathGlobFilter", g))
     val q = reader.csv(srcDir)

@@ -35,7 +35,6 @@ object Dedup {
   // threshold or LSH degenerates toward the quadratic join it exists to avoid.)
   val NumHashes = 32
   val Bands = 4
-  val RowsPerBand: Int = NumHashes / Bands // 8
 
   /** One strong 64-bit hash per token — the expensive string pass, done
     * exactly once per document. */
@@ -89,10 +88,13 @@ object Dedup {
       graft.functions.SimHash64.simhash64(tokenHashes(tokenSet(text)))
         .as("simhash"))
 
+  /** Rows per salted sub-block task of every adaptive pair grid. */
+  val RowsPerTask = 256
+
   /** Per-block salt factors for an ADAPTIVE pair grid: one tiny aggregate
     * over just the blocking keys (Catalyst prunes every payload column out
     * of this branch — only keys + a count shuffle) yields each block's row
-    * count `bn` and its salt factor `bg` = ceil(bn / rowsPerTask).
+    * count `bn` and its salt factor `bg` = ceil(bn / RowsPerTask).
     *
     * Joined back (broadcast — the stats table is one row per DISTINCT
     * block, vocabulary-sized, not corpus-sized; at a scale where even that
@@ -104,21 +106,19 @@ object Dedup {
     * tasks), and only a genuinely hot block fans out, by exactly the
     * factor its size demands. Every pair is still examined exactly once —
     * results identical, oracles unchanged. */
-  def blockSaltStats(docs: DataFrame, keys: Seq[String],
-      rowsPerTask: Int): DataFrame =
+  def blockSaltStats(docs: DataFrame, keys: Seq[String]): DataFrame =
     docs.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bn"))
       .withColumn("bg", greatest(lit(1),
-        ceil(col("bn") / lit(rowsPerTask.toDouble))).cast("int"))
+        ceil(col("bn") / lit(RowsPerTask.toDouble))).cast("int"))
 
   /** The salt idiom shared by every pair-join site: annotate each row with
     * its block's (bn, bg) and drop singleton blocks before any payload
     * enters a shuffle. Keeping the join-broadcast-filter in ONE place means
-    * the singleton predicate and the rowsPerTask default cannot drift
-    * between the token, n-gram, and embedding pair grids. */
-  def withAdaptiveSalt(docs: DataFrame, keys: Seq[String],
-      rowsPerTask: Int = 256): DataFrame =
-    docs.join(broadcast(blockSaltStats(docs, keys, rowsPerTask)), keys)
+    * the singleton predicate and the sub-block size cannot drift between
+    * the token, n-gram, and embedding pair grids. */
+  def withAdaptiveSalt(docs: DataFrame, keys: Seq[String]): DataFrame =
+    docs.join(broadcast(blockSaltStats(docs, keys)), keys)
       .filter(col("bn") >= 2)
 
   /** Exact blocked near-dup pairs (the E2 semantics, shared by the pair
@@ -134,15 +134,14 @@ object Dedup {
     * exactly once (results identical, oracle unchanged), but a hot block
     * (every doc sharing a boilerplate first token) spreads over bg tasks
     * instead of dying on one, and cold blocks pay no fan-out at all. */
-  def nearDupPairs(docs0: DataFrame, minJac: Double,
-      rowsPerTask: Int = 256): DataFrame = {
+  def nearDupPairs(docs0: DataFrame, minJac: Double): DataFrame = {
     val keys = Seq("blk_tok", "blk_len")
     val docs = docs0.select(
       col("doc_id"), sort_array(tokenSet(col("text"))).as("toks"),
       split_part(col("text"), lit(" "), lit(1)).as("blk_tok"),
       floor(col("n_chars") / 100.0).as("blk_len"))
       .withColumn("nt", size(col("toks")))
-    val blocked = withAdaptiveSalt(docs, keys, rowsPerTask)
+    val blocked = withAdaptiveSalt(docs, keys)
     val a = blocked.select(col("doc_id").as("d1"), col("toks").as("t1"),
       col("nt").as("n1"), col("blk_tok"), col("blk_len"), col("bg"))
       .withColumn("g", explode(sequence(lit(0), col("bg") - 1)))

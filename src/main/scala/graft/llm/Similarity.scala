@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Query
+import graft.operators.Graph
 import graft.core.Tables._
 
 /** Tier E similarity search over the 64-dim `embeddings.embedding` column
@@ -80,7 +81,7 @@ object Similarity {
     * them, so every (a, b) pair is examined exactly once but no single task
     * ever holds a whole label block — the shape that kills a 1000-executor
     * job when one label is hot. The salt factor is ADAPTIVE per block
-    * (Dedup.blockSaltStats): bg = ceil(label_rows / rowsPerTask), so cold
+    * (Dedup.blockSaltStats): bg = ceil(label_rows / RowsPerTask), so cold
     * labels pay no fan-out and singleton labels never enter the shuffle.
     *
     * Composing LSH bucket candidates instead (the sub-quadratic shape used
@@ -95,10 +96,9 @@ object Similarity {
     * regime (≥0.9 cosine, the production dedup setting); at a low threshold
     * the exact grid is the honest plan, and dedup_embedding_ann is the
     * documented approximate alternative. */
-  def embeddingCosineDedup(emb: DataFrame, threshold: Double,
-      rowsPerTask: Int = 256): DataFrame = {
+  def embeddingCosineDedup(emb: DataFrame, threshold: Double): DataFrame = {
     val unit = withUnitVec(emb, "embedding", "uv")
-    val blocked = Dedup.withAdaptiveSalt(unit, Seq("label"), rowsPerTask)
+    val blocked = Dedup.withAdaptiveSalt(unit, Seq("label"))
     val a = blocked.select(col("vec_id").as("a_id"), col("uv").as("a_v"),
         col("label"), col("bg"))
       .withColumn("g", explode(sequence(lit(0), col("bg") - 1)))
@@ -772,14 +772,10 @@ object Similarity {
     val initScored = scorePairs(initPairs).localCheckpoint()
     var scoredParts = List(initScored)
     def scored: DataFrame = scoredParts.reduce(_ unionAll _)
-    var nbr = topK(initScored
-      .select(col("p1").as("v"), col("p2").as("u"), col("sim"))
-      .unionAll(initScored.select(col("p2").as("v"), col("p1").as("u"), col("sim"))))
-      .localCheckpoint()
+    var nbr = topK(Graph.sym(initScored, "p1", "p2", "sim")
+      .toDF("v", "u", "sim")).localCheckpoint()
     for (r <- 1 to rounds) {
-      val adj = nbr.select("v", "u", "sim")
-        .unionAll(nbr.select(col("u").as("v"), col("v").as("u"), col("sim")))
-        .dropDuplicates("v", "u")
+      val adj = Graph.sym(nbr, "v", "u", "sim").dropDuplicates("v", "u")
       val wS = Window.partitionBy("v")
         .orderBy(xxhash64(col("u"), lit(r.toLong)), col("u"))
       val sampled = adj.withColumn("srn", row_number().over(wS))
@@ -801,9 +797,8 @@ object Similarity {
         Seq("p1", "p2"), "left_anti")
       val freshScored = scorePairs(fresh).localCheckpoint()
       scoredParts ::= freshScored
-      nbr = topK(
-        nbr.unionAll(freshScored.select(col("p1").as("v"), col("p2").as("u"), col("sim")))
-           .unionAll(freshScored.select(col("p2").as("v"), col("p1").as("u"), col("sim"))))
+      nbr = topK(nbr.unionAll(
+          Graph.sym(freshScored, "p1", "p2", "sim").toDF("v", "u", "sim")))
         .localCheckpoint()
     }
     val wOut = Window.partitionBy("v").orderBy(desc("sim"), asc("u"))

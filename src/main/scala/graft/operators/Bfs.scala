@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   * construction). The three per-round ops are one equi-join on the frontier
   * id, one distinct, one left-anti against visited — all hash-partitioned
   * on vertex id, so a cluster run co-locates them under one exchange
-  * reused round to round. `localCheckpoint` truncates loop lineage (the CC
-  * lesson: unbounded iterative lineage makes codegen re-planning, not
-  * data, the bottleneck).
+  * reused round to round. Loop frames are [[Graph.loopFrame]]s.
   *
   * Determinism: the (id, dist) fixpoint is unique for a given graph + seed
   * set — no tie-breaks exist to get wrong, which is what makes the
@@ -42,24 +40,12 @@ object Bfs {
     * @return (id, dist) for every vertex within maxHops of a seed
     */
   def run(edges: DataFrame, src: String, dst: String,
-      seeds: DataFrame, id: String, maxHops: Int,
-      loopShufflePartitions: Int = 8): DataFrame = {
-    // loop shuffles move skinny (id) / (id, dist) rows — size partitions
-    // to the frontier, not the session's full-scan default (every surplus
-    // partition is a task per stage per round; scheduling is the local
-    // floor). Pinned per-frame with explicit hash repartition rather than
-    // a session-conf mutation, so a concurrently-shared session is never
-    // affected; localCheckpoint preserves the partitioning (LogicalRDD
-    // keeps outputPartitioning), so each round's join / distinct /
-    // anti-join all run under the one narrow exchange.
-    val p = loopShufflePartitions
-    val sym = edges.select(col(src).as("bfs_u"), col(dst).as("bfs_v"))
-      .union(edges.select(col(dst).as("bfs_u"), col(src).as("bfs_v")))
-      .repartition(p, col("bfs_u"))
-      .localCheckpoint() // traversed every round — compute once
-    var visited = seeds.select(col(id).as("bfs_id")).distinct()
-      .withColumn("dist", lit(0L))
-      .repartition(p, col("bfs_id")).localCheckpoint()
+      seeds: DataFrame, id: String, maxHops: Int): DataFrame = {
+    // traversed every round — compute once
+    val sym = Graph.loopFrame(
+      Graph.sym(edges, src, dst).toDF("bfs_u", "bfs_v"), "bfs_u")
+    var visited = Graph.loopFrame(seeds.select(col(id).as("bfs_id"))
+      .distinct().withColumn("dist", lit(0L)), "bfs_id")
     var frontier = visited.select("bfs_id")
     var hop = 0L
     var frontierSize = frontier.count()
@@ -67,21 +53,20 @@ object Bfs {
       hop += 1
       // expand ONLY the frontier; anti-join drops anything already
       // settled (including frontier-internal edges and back-edges).
-      // frontier carries hash(bfs_id, p) and sym hash(bfs_u, p), so the
-      // expand join needs no new exchange; the one repartition after the
-      // neighbour projection re-keys survivors for the distinct AND the
-      // anti-join (visited is hash(bfs_id, p) too) in a single p-wide
+      // frontier and sym are both hashed on the vertex at the loop width,
+      // so the expand join needs no new exchange; the one repartition
+      // after the neighbour projection re-keys survivors for the distinct
+      // AND the anti-join (visited is hashed on bfs_id too) in a single
       // shuffle of bare ids.
       val next = frontier
         .join(sym, frontier("bfs_id") === sym("bfs_u"))
         .select(col("bfs_v").as("bfs_id"))
-        .repartition(p, col("bfs_id")).distinct()
+        .repartition(Graph.LoopWidth, col("bfs_id")).distinct()
         .join(visited, Seq("bfs_id"), "left_anti")
         .withColumn("dist", lit(hop))
         .localCheckpoint()
       frontierSize = next.count() // the round's one job
-      visited = visited.union(next)
-        .repartition(p, col("bfs_id")).localCheckpoint()
+      visited = Graph.loopFrame(visited.union(next), "bfs_id")
       frontier = next.select("bfs_id")
     }
     visited.select(col("bfs_id").as(id), col("dist"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Degree-capped common-neighbor link prediction over an undirected edge
@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Wedge enumeration from the shared neighbor is the standard exact CN
   * algorithm and is Σd² by construction; `maxDegree` is the 100 TB lever:
-  * wedge CENTERS with degree above the cap are dropped (semi-join against
-  * the low-degree node set) before the self-join, so the per-center pair
+  * wedge CENTERS with degree above the cap are dropped (a join against
+  * the low-degree nodes, which carries each center's degree) before the
+  * self-join, so the per-center pair
   * space is bounded by cap²/2 and total candidate work by cap·|E| instead
   * of one hub of degree 10⁵ emitting 5×10⁹ pairs in a single task group.
   * Dropping hubs as wedge centers is principled, not just cheap: a
@@ -29,49 +30,55 @@ import org.apache.spark.sql.functions._
   */
 object CommonNeighbors {
 
-  /** Both edge directions as (w, x) plus per-node degree — derived ONCE and
-    * shared by [[wedgePairs]] and [[run]] (r7 verdict #4: run() used to
-    * rebuild what wedgePairs re-derived).
-    *
-    * Both are eagerly localCheckpointed (the PageRank/ConnectedComponents
-    * lineage-cut pattern): without it the caller's whole edge derivation —
-    * in the click-graph query a parquet scan + lag window + distinct — is
-    * re-planned once per consumer (the cap semi-join, both self-join
-    * sides, both degree joins: ~6 recomputes observed in the executed
-    * plan), and per-branch inferred IsNotNull filters make the subtrees
-    * non-identical so ReuseExchange cannot collapse them. One materialized
-    * copy of the (small) adjacency and degree tables is the plan you'd
-    * want at any scale — every downstream consumer reads checkpointed
-    * blocks instead of re-running the upstream pipeline. */
-  private def adjDeg(und: DataFrame): (DataFrame, DataFrame) = {
-    val adj = und.select(col("u").as("w"), col("v").as("x"))
-      .unionAll(und.select(col("v").as("w"), col("u").as("x")))
-      .localCheckpoint()
-    val deg = adj.groupBy("w").agg(count(lit(1)).as("d")).localCheckpoint()
-    (adj, deg)
-  }
-
-  /** Candidate (a, b) wedge endpoints, one row per (center, pair) wedge —
-    * the pre-aggregation pair stream, exposed so tests can assert the
-    * O(cap·|E|) bound on the enumerated pair count directly.
+  /** Candidate (a, b) wedge endpoints, one row per (center, pair) wedge,
+    * with the center's degree `d` — the pre-aggregation pair stream,
+    * exposed so tests can assert the O(cap·|E|) bound on the enumerated
+    * pair count directly. Every center has d >= 2 (it closes a wedge).
     *
     * @param und distinct undirected edges as (u, v) with u < v
     */
-  def wedgePairs(und: DataFrame, maxDegree: Long): DataFrame = {
-    val (adj, deg) = adjDeg(und)
-    wedgePairsFrom(adj, deg, maxDegree)
+  def wedgePairs(und: DataFrame, maxDegree: Long): DataFrame =
+    wedges(und, Graph.degrees(und), maxDegree)
+
+  /** The adjacency is eagerly localCheckpointed (the PageRank /
+    * ConnectedComponents lineage-cut pattern): without it the caller's
+    * whole edge derivation — in the click-graph keys a parquet scan + lag
+    * window + distinct — is re-planned once per consumer, and per-branch
+    * inferred IsNotNull filters make the subtrees non-identical so
+    * ReuseExchange cannot collapse them. */
+  private def wedges(und: DataFrame, deg: DataFrame,
+      maxDegree: Long): DataFrame = {
+    val adj = Graph.sym(und, "u", "v").toDF("w", "x").localCheckpoint()
+    // the cap: only low-degree nodes survive as wedge centers
+    val capped = adj.join(deg.filter(col("d") <= lit(maxDegree))
+      .withColumnRenamed("node", "w"), Seq("w"))
+    capped.as("e1").join(capped.as("e2").drop("d"), "w")
+      .filter(col("e1.x") < col("e2.x"))
+      .select(col("e1.x").as("a"), col("e2.x").as("b"), col("d"))
   }
 
-  private def wedgePairsFrom(adj: DataFrame, deg: DataFrame,
-      maxDegree: Long): DataFrame = {
-    // the cap: only low-degree nodes survive as wedge centers; the
-    // semi-join shares the adj-on-w partitioning the self-join needs
-    val capped = adj.join(
-      deg.filter(col("d") <= lit(maxDegree)).select("w"), Seq("w"), "left_semi")
-    capped.as("e1").join(capped.as("e2"), "w")
-      .filter(col("e1.x") < col("e2.x"))
-      .select(col("e1.x").as("a"), col("e2.x").as("b"))
+  /** The one candidate frame of all four scorers: every unlinked pair at
+    * distance 2 as (a, b, cn, w_sum, da, db) — its common-neighbor count,
+    * the sum of `weight` (a column of the wedge center's degree `d`) over
+    * its wedges, and both endpoint degrees. The four rankings are
+    * comparable row-for-row on it. `und` and the degree table are
+    * checkpointed first: they feed the wedges, the existing-edge anti-join
+    * and both degree joins, so the caller's edge derivation runs once. */
+  private def candidates(und: DataFrame, maxDegree: Long,
+      weight: Column): DataFrame = {
+    val u = und.localCheckpoint()
+    val deg = Graph.degrees(u).localCheckpoint()
+    val scored = wedges(u, deg, maxDegree)
+      .groupBy("a", "b")
+      .agg(count(lit(1)).as("cn"), sum(weight).as("w_sum"))
+    scored.join(u, scored("a") === u("u") && scored("b") === u("v"),
+        "left_anti")
+      .join(deg.select(col("node").as("a"), col("d").as("da")), "a")
+      .join(deg.select(col("node").as("b"), col("d").as("db")), "b")
   }
+
+  private def top(scored: DataFrame, score: String, topK: Int): DataFrame =
+    scored.orderBy(desc(score), asc("a"), asc("b")).limit(topK)
 
   /** Resource-Allocation link prediction (Zhou, Lü & Zhang, "Predicting
     * missing links via local information", Eur. Phys. J. B 71, 2009 — the
@@ -83,8 +90,7 @@ object CommonNeighbors {
     * the per-pair score Σ⌊10⁶/d_z⌋ is an order-independent exact long in
     * both engines — zero floats, the markov_next_page q6 discipline.
     *
-    * Same Σd² wedge enumeration and `maxDegree` center cap as [[run]]
-    * (shared adjDeg); the cap is even more principled here — a center
+    * The `maxDegree` center cap is even more principled here — a center
     * above the cap contributes < 10⁶/cap per wedge, i.e. the pairs it
     * would add are exactly the ones RA already down-weights toward zero.
     *
@@ -92,83 +98,45 @@ object CommonNeighbors {
     * @return (a, b, cn, ra_q6) ordered by ra_q6 desc, a, b
     */
   def resourceAllocation(und: DataFrame, maxDegree: Long,
-      topK: Int): DataFrame = {
-    val u = und.localCheckpoint()
-    val (adj, deg) = adjDeg(u)
-    // wedge enumeration with the center's degree riding along: every
-    // center has deg >= 2 by construction (it closes a wedge), so the
-    // integer division is never by zero
-    val capped = adj
-      .join(deg.filter(col("d") <= lit(maxDegree)), Seq("w"))
-    val wedges = capped.as("e1")
-      .join(capped.as("e2").drop("d"), "w")
-      .filter(col("e1.x") < col("e2.x"))
-      .select(col("e1.x").as("a"), col("e2.x").as("b"),
-        expr("1000000L DIV d").as("ra_w"))
-    val scored = wedges.groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"), sum(col("ra_w")).as("ra_q6"))
-    scored.join(u, scored("a") === u("u") && scored("b") === u("v"),
-        "left_anti")
-      .select("a", "b", "cn", "ra_q6")
-      .orderBy(desc("ra_q6"), asc("a"), asc("b")).limit(topK)
-  }
+      topK: Int): DataFrame =
+    top(candidates(und, maxDegree, expr("1000000L DIV d"))
+      .select(col("a"), col("b"), col("cn"), col("w_sum").as("ra_q6")),
+      "ra_q6", topK)
 
   /** Top-k unlinked pairs by neighborhood Jaccard.
     *
     * @param und distinct undirected edges as (u, v) with u < v
     * @return (a, b, cn, jac_den, jac_q6) ordered by jac_q6 desc, a, b
     */
-  def run(und: DataFrame, maxDegree: Long, topK: Int): DataFrame = {
-    // und feeds both adjDeg and the left-anti existing-edge filter below —
-    // checkpoint it first so the caller's edge derivation runs exactly once
-    val u = und.localCheckpoint()
-    val (adj, deg) = adjDeg(u)
-    val cn = wedgePairsFrom(adj, deg, maxDegree)
-      .groupBy("a", "b").agg(count(lit(1)).as("cn"))
-    val cand = cn.join(u,
-      cn("a") === u("u") && cn("b") === u("v"), "left_anti")
-    cand
-      .join(deg.select(col("w").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("w").as("b"), col("d").as("db")), "b")
+  def run(und: DataFrame, maxDegree: Long, topK: Int): DataFrame =
+    top(candidates(und, maxDegree, lit(0L))
       .select(col("a"), col("b"), col("cn"),
         (col("da") + col("db") - col("cn")).as("jac_den"),
         // checked multiply: cn·1e6 wraps silently past ~9.2e12 while the
         // DuckDB oracle's HUGEINT stays exact — fail loudly instead
         expr("coalesce(try_multiply(cn, 1000000L), " +
           "raise_error('common_neighbors: jac_q6 long overflow')) " +
-          "DIV (da + db - cn)").as("jac_q6"))
-      .orderBy(desc("jac_q6"), asc("a"), asc("b")).limit(topK)
-  }
+          "DIV (da + db - cn)").as("jac_q6")),
+      "jac_q6", topK)
 
   /** Top-k unlinked wedge pairs by preferential attachment deg(a)·deg(b)
     * (Barabási & Albert 1999's growth rule read as a link predictor;
     * Liben-Nowell & Kleinberg CIKM 2003 establish it as the degree-only
-    * baseline CN/Jaccard/RA are judged against). Candidates are the SAME
-    * capped wedge enumeration as `run` — PA is defined on any non-adjacent
-    * pair, but ranking the full |V|² non-edge space is neither tractable
-    * nor useful; production candidate generation restricts to pairs with
-    * ≥1 common neighbor exactly as here, and the shared candidate set is
-    * what makes the three scores comparable row-for-row. Score is an
-    * exact long (d ≤ |V| ⇒ da·db ≤ |V|² stays under 2⁶³ to |V| ≈ 3·10⁹).
+    * baseline CN/Jaccard/RA are judged against). PA is defined on any
+    * non-adjacent pair, but ranking the full |V|² non-edge space is neither
+    * tractable nor useful; production candidate generation restricts to
+    * pairs with ≥1 common neighbor exactly as here. Score is an exact long
+    * (d ≤ |V| ⇒ da·db ≤ |V|² stays under 2⁶³ to |V| ≈ 3·10⁹).
     *
     * @param und distinct undirected edges as (u, v) with u < v
     * @return (a, b, cn, pa) ordered by pa desc, a, b
     */
   def preferentialAttachment(und: DataFrame, maxDegree: Long,
-      topK: Int): DataFrame = {
-    val u = und.localCheckpoint()
-    val (adj, deg) = adjDeg(u)
-    val cn = wedgePairsFrom(adj, deg, maxDegree)
-      .groupBy("a", "b").agg(count(lit(1)).as("cn"))
-    val cand = cn.join(u,
-      cn("a") === u("u") && cn("b") === u("v"), "left_anti")
-    cand
-      .join(deg.select(col("w").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("w").as("b"), col("d").as("db")), "b")
+      topK: Int): DataFrame =
+    top(candidates(und, maxDegree, lit(0L))
       .select(col("a"), col("b"), col("cn"),
-        (col("da") * col("db")).as("pa"))
-      .orderBy(desc("pa"), asc("a"), asc("b")).limit(topK)
-  }
+        (col("da") * col("db")).as("pa")),
+      "pa", topK)
 
   /** Adamic-Adar link prediction (Adamic & Adar, "Friends and neighbors
     * on the Web", Social Networks 25, 2003) — the fourth classic next to
@@ -182,31 +150,15 @@ object CommonNeighbors {
     * reproduces the sweep's quantized values exactly (PropertySpec pins
     * the Java-side margin), so the per-pair score Σ⌊10⁶/ln d_z + 0.5⌋ is
     * an order-independent exact long in both engines. ln(d) > 0 always:
-    * a wedge center has degree ≥ 2.
-    *
-    * Same Σd² wedge enumeration and `maxDegree` center cap as its three
-    * siblings (shared adjDeg — the four rankings are comparable
-    * row-for-row on one candidate set); the cap drops exactly the wedges
-    * AA already tempers toward zero.
+    * a wedge center has degree ≥ 2. The cap drops exactly the wedges AA
+    * already tempers toward zero.
     *
     * @param und distinct undirected edges as (u, v) with u < v
     * @return (a, b, cn, aa_q6) ordered by aa_q6 desc, a, b
     */
-  def adamicAdar(und: DataFrame, maxDegree: Long, topK: Int): DataFrame = {
-    val u = und.localCheckpoint()
-    val (adj, deg) = adjDeg(u)
-    val capped = adj
-      .join(deg.filter(col("d") <= lit(maxDegree)), Seq("w"))
-    val wedges = capped.as("e1")
-      .join(capped.as("e2").drop("d"), "w")
-      .filter(col("e1.x") < col("e2.x"))
-      .select(col("e1.x").as("a"), col("e2.x").as("b"),
-        expr("CAST(floor(1000000.0 / ln(d) + 0.5) AS BIGINT)").as("aa_w"))
-    val scored = wedges.groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"), sum(col("aa_w")).as("aa_q6"))
-    scored.join(u, scored("a") === u("u") && scored("b") === u("v"),
-        "left_anti")
-      .select("a", "b", "cn", "aa_q6")
-      .orderBy(desc("aa_q6"), asc("a"), asc("b")).limit(topK)
-  }
+  def adamicAdar(und: DataFrame, maxDegree: Long, topK: Int): DataFrame =
+    top(candidates(und, maxDegree,
+        expr("CAST(floor(1000000.0 / ln(d) + 0.5) AS BIGINT)"))
+      .select(col("a"), col("b"), col("cn"), col("w_sum").as("aa_q6")),
+      "aa_q6", topK)
 }

@@ -28,9 +28,7 @@ import org.apache.spark.sql.functions._
   *    edges touching the frontier (measured on sf0.1: 2681→386→95→24→7→0
   *    changes), not the whole graph — the property that matters when the
   *    graph is 100 TB and the frontier collapses after two rounds.
-  * `localCheckpoint` truncates the growing lineage each round (otherwise
-  * every iteration re-plans the whole history and codegen compile time,
-  * not data, becomes the bottleneck).
+  * Each round's labels are checkpointed at [[Graph.LoopWidth]].
   */
 object ConnectedComponents {
 
@@ -46,35 +44,13 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, src: String, dst: String,
       vertices: DataFrame, id: String, maxIter: Int = 25,
-      loopShufflePartitions: Int = 8,
       onRound: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
-    // The loop's shuffles move at most |V| skinny rows per round — size
-    // their partition count to that, not the session default meant for
-    // full-table scans: every extra partition is an extra task PER STAGE
-    // PER ROUND, and scheduling, not data, is the loop's local floor. At
-    // cluster scale callers pass a larger value sized to |V|/executor.
-    // Pinned by EXPLICIT per-frame hash repartition (sym on its join key,
-    // labels/delta on vertex id — localCheckpoint preserves the
-    // partitioning, so each round's joins reuse the exchanges), never by
-    // mutating session-global shuffle.partitions: a concurrently-shared
-    // session must not observe the narrow setting. The per-round
-    // aggregation exchange stays at the session default and is
-    // size-coalesced by AQE (parallelismFirst=false in every builder).
-    runLoop(edges, src, dst, vertices, id, maxIter,
-      loopShufflePartitions, onRound)
-  }
-
-  private def runLoop(edges: DataFrame, src: String, dst: String,
-      vertices: DataFrame, id: String, maxIter: Int, p: Int,
-      onRound: (Int, Long) => Unit): DataFrame = {
-    // symmetric orientation so min labels flow both ways
-    val sym = edges.select(col(src).as("cc_src"), col(dst).as("cc_dst"))
-      .union(edges.select(col(dst).as("cc_src"), col(src).as("cc_dst")))
-      .repartition(p, col("cc_src"))
-      .localCheckpoint() // edges are reused every iteration — compute once
-    var labels = vertices.select(col(id).as("cc_id"), col(id).as("cc_comp"))
-      .repartition(p, col("cc_id"))
-      .localCheckpoint()
+    // symmetric orientation so min labels flow both ways; reused every
+    // iteration, so computed once
+    val sym = Graph.loopFrame(
+      Graph.sym(edges, src, dst).toDF("cc_src", "cc_dst"), "cc_src")
+    var labels = Graph.loopFrame(
+      vertices.select(col(id).as("cc_id"), col(id).as("cc_comp")), "cc_id")
     // the frontier: vertices whose label changed last round (round 1: all —
     // nothing has propagated yet). A vertex changed by EITHER mechanism
     // (edge min or pointer jump) re-enters the frontier.
@@ -96,8 +72,8 @@ object ConnectedComponents {
     // a full-fleet sync barrier, and halving barrier count halves the
     // straggler-tail exposure that local[32] cannot exhibit.
     while (changed > 0 && iter < maxIter) {
-      val (s1, d1) = halfStep(sym, labels, delta, p)
-      val (s2, d2) = halfStep(sym, s1, d1, p)
+      val (s1, d1) = halfStep(sym, labels, delta)
+      val (s2, d2) = halfStep(sym, s1, d1)
       delta = d2
       // the delta count is the round's ONE job — it materializes both
       // halves' lazy checkpoints as a side effect (an eager checkpoint
@@ -131,7 +107,7 @@ object ConnectedComponents {
     * restriction directly (an empty delta must change NOTHING, even on
     * labels that a full-graph build side would rewrite). */
   private[operators] def halfStep(sym: DataFrame, labels: DataFrame,
-      delta: DataFrame, p: Int = 8): (DataFrame, DataFrame) = {
+      delta: DataFrame): (DataFrame, DataFrame) = {
     val nbrMin = sym.join(delta.withColumnRenamed("cc_id", "cc_did")
         .withColumnRenamed("cc_comp", "cc_dcomp"),
         col("cc_src") === col("cc_did"))
@@ -144,13 +120,12 @@ object ConnectedComponents {
       .select(col("cc_id").as("m_id"), col("cc_p").as("m_comp"))
     // re-key the half-step's output on vertex id at the loop width before
     // it checkpoints: the next half's delta join and labels join then both
-    // reuse this one p-wide exchange of skinny rows (the conf-clamp this
-    // replaces paid the same exchange implicitly, session-globally)
+    // reuse this one exchange of skinny rows
     val step = prop.join(m, col("cc_p") === col("m_id"), "left")
       .select(col("cc_id"), col("cc_old"),
         least(col("cc_p"), coalesce(col("m_comp"), col("cc_p")))
           .as("cc_comp"))
-      .repartition(p, col("cc_id"))
+      .repartition(Graph.LoopWidth, col("cc_id"))
       .localCheckpoint(eager = false)
     (step.select("cc_id", "cc_comp"),
       step.filter(col("cc_comp") =!= col("cc_old"))

@@ -33,9 +33,8 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB design: per round two hash joins of scores to edges and two
   * map-side-combinable LONG-sum aggregations — linear in |E|; the max
-  * rides a broadcast 1-row aggregate; score frames are repartitioned to
-  * the loop width and localCheckpointed per round (the
-  * ConnectedComponents lineage discipline).
+  * rides a broadcast 1-row aggregate; score frames are a
+  * [[Graph.loopFrame]] per round.
   */
 object Hits {
   val Scale = 1000000L
@@ -43,13 +42,10 @@ object Hits {
   /** @param edges directed edges (caller dedups)
     * @return (id, auth_q6, hub_q6) */
   def run(edges: DataFrame, src: String, dst: String,
-      nodes: DataFrame, id: String, iters: Int,
-      loopShufflePartitions: Int = 8): DataFrame = {
-    val p = loopShufflePartitions
-    val e = edges.select(col(src).as("ht_src"), col(dst).as("ht_dst"))
-      .repartition(p, col("ht_src")).localCheckpoint()
-    val v = nodes.select(col(id).as("ht_id"))
-      .repartition(p, col("ht_id")).localCheckpoint()
+      nodes: DataFrame, id: String, iters: Int): DataFrame = {
+    val e = Graph.loopFrame(
+      edges.select(col(src).as("ht_src"), col(dst).as("ht_dst")), "ht_src")
+    val v = Graph.loopFrame(nodes.select(col(id).as("ht_id")), "ht_id")
     def checkedNorm(sumCol: String, maxCol: String): org.apache.spark.sql.Column =
       when(col(maxCol) > 0L,
         expr(s"coalesce(try_multiply($sumCol, ${Scale}L), " +
@@ -61,14 +57,14 @@ object Hits {
         .select(col(groupSide).as("ht_id"), col("ht_x"))
         .groupBy("ht_id").agg(sum("ht_x").as("ht_s"))
       val m = raw.agg(max("ht_s").as("ht_m"))
-      v.join(raw, Seq("ht_id"), "left")
+      Graph.loopFrame(v.join(raw, Seq("ht_id"), "left")
         .select(col("ht_id"), coalesce(col("ht_s"), lit(0L)).as("ht_s"))
         .crossJoin(broadcast(m))
-        .select(col("ht_id"), checkedNorm("ht_s", "ht_m").as("ht_x"))
-        .repartition(p, col("ht_id")).localCheckpoint()
+        .select(col("ht_id"), checkedNorm("ht_s", "ht_m").as("ht_x")),
+        "ht_id")
     }
-    var hub = v.select(col("ht_id"), lit(Scale).as("ht_x"))
-      .repartition(p, col("ht_id")).localCheckpoint()
+    var hub = Graph.loopFrame(
+      v.select(col("ht_id"), lit(Scale).as("ht_x")), "ht_id")
     var auth = hub
     for (_ <- 1 to iters) {
       auth = halfStep(hub, "ht_src", "ht_dst")

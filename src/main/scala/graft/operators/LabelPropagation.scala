@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * the |V|-row label table + one (vertex, label) count + one per-vertex
   * arg-max window — all hash-partitioned on vertex id, per-round work
   * O(|E|) with no per-community materialization anywhere. The arg-max
-  * window partitions by vertex id (|V| keys, no funnel). Labels are
-  * `localCheckpoint`ed per round (the ConnectedComponents lineage lesson).
+  * window partitions by vertex id (|V| keys, no funnel). Labels are a
+  * [[Graph.loopFrame]] per round.
   */
 object LabelPropagation {
 
@@ -36,22 +36,14 @@ object LabelPropagation {
     * @return (id, label) after exactly `rounds` synchronous rounds
     */
   def run(edges: DataFrame, src: String, dst: String,
-      vertices: DataFrame, id: String, rounds: Int,
-      loopShufflePartitions: Int = 8): DataFrame = {
-    // loop shuffles are sized per-frame with explicit hash repartition —
-    // never via a session-conf mutation (a shared session must not see the
-    // narrow setting). localCheckpoint preserves partitioning, so the
-    // vote join reuses sym's hash(lpa_v, p) and labels' hash(lpa_id, p)
-    // exchanges round after round; the arg-max window gets hash(lpa_u, p)
-    // from the one explicit repartition per round.
-    val p = loopShufflePartitions
-    val sym = edges.select(col(src).as("lpa_u"), col(dst).as("lpa_v"))
-      .union(edges.select(col(dst).as("lpa_u"), col(src).as("lpa_v")))
-      .repartition(p, col("lpa_v"))
-      .localCheckpoint()
-    var labels = vertices.select(col(id).as("lpa_id"), col(id).as("lpa_lab"))
-      .repartition(p, col("lpa_id"))
-      .localCheckpoint()
+      vertices: DataFrame, id: String, rounds: Int): DataFrame = {
+    // the vote join reuses sym's and labels' exchanges round after round;
+    // the arg-max window gets hash(lpa_u) from the one explicit
+    // repartition per round
+    val sym = Graph.loopFrame(
+      Graph.sym(edges, src, dst).toDF("lpa_u", "lpa_v"), "lpa_v")
+    var labels = Graph.loopFrame(
+      vertices.select(col(id).as("lpa_id"), col(id).as("lpa_lab")), "lpa_id")
     val win = Window.partitionBy("lpa_u")
       .orderBy(desc("lpa_n"), asc("lpa_lab"))
     var r = 0
@@ -60,16 +52,15 @@ object LabelPropagation {
         .join(labels, sym("lpa_v") === labels("lpa_id"))
         .groupBy("lpa_u", "lpa_lab").agg(count(lit(1)).as("lpa_n"))
       val winner = votes
-        .repartition(p, col("lpa_u"))
+        .repartition(Graph.LoopWidth, col("lpa_u"))
         .withColumn("lpa_rn", row_number().over(win))
         .filter(col("lpa_rn") === 1)
         .select(col("lpa_u").as("lpa_id"), col("lpa_lab"))
       // vertices with no neighbours never appear in votes — keep their
       // previous (= initial) label via the anti side of the old table
-      labels = winner
-        .union(labels.join(winner, Seq("lpa_id"), "left_anti"))
-        .repartition(p, col("lpa_id"))
-        .localCheckpoint()
+      labels = Graph.loopFrame(
+        winner.union(labels.join(winner, Seq("lpa_id"), "left_anti")),
+        "lpa_id")
       r += 1
     }
     labels.select(col("lpa_id").as(id), col("lpa_lab").as("label"))

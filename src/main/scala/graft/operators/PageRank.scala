@@ -3,31 +3,38 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Fixed-point integer PageRank over a directed edge list — the
+/** Fixed-point integer PageRank with restart on a seed set S — the
   * quality-propagation operator large-scale corpus curation runs over
   * link/click graphs (domain authority for crawl prioritization, source
-  * weighting for mixture rebalance).
+  * weighting for mixture rebalance). With S = every node it is classic
+  * PageRank; with a smaller S it is personalized PageRank (random walk with
+  * restart: Page et al. 1999 §6's personalized vector; Jeh & Widom, WWW
+  * 2003), the "relevance to THESE pages" ranking recommendation and
+  * related-content pipelines run.
   *
   * Ranks live in INTEGER fixed-point (SCALE = 10^12): every step is an
   * integer division, multiplication or sum, so the result is bit-exact and
   * engine-agnostic BY CONSTRUCTION — no float-sum ordering, no libm, no
-  * measured margins (the DuckDB oracle replays the identical integer
+  * measured margins (the DuckDB oracles replay the identical integer
   * recurrence with `//`). The truncation is part of the DEFINED algorithm,
   * not an approximation error to argue about:
   *
-  *   r_0(i)     = SCALE DIV N
-  *   r_{t+1}(i) = (150000000000 DIV N)                     // 0.15·SCALE
+  *   r_0(i)     = [i ∈ S] · (SCALE DIV |S|)
+  *   r_{t+1}(i) = [i ∈ S] · (150000000000 DIV |S|)        // 0.15·SCALE
   *              + (85 * Σ_{j→i} (r_t(j) DIV od(j))) DIV 100
   *
   * Dangling mass (nodes without out-edges) leaks, as in the classic
-  * simplified formulation — both engines implement the same choice.
+  * simplified formulation — both engines implement the same choice. Nodes
+  * unreachable from S stay at exactly 0 — the property that makes PPR a
+  * seed-locality score.
   *
   * 100 TB design: per iteration one hash join of ranks to edges on src and
   * one groupBy dst — both linear shuffles over the edge list (the sum is a
-  * LONG sum: exact, order-independent, map-side combinable). Ranks are
-  * localCheckpointed each round (the ConnectedComponents lineage-truncation
-  * reasoning) and the loop's shuffles are sized to the graph, not the
-  * session default meant for full-table scans.
+  * LONG sum: exact, order-independent, map-side combinable). |S| rides a
+  * broadcast 1-row aggregate, and the seed flag is a left-join-derived 0/1
+  * column carried on the rank frame, so seeding adds no shuffle. The
+  * caller's upstream pipelines materialize at ambient parallelism; only the
+  * loop frames run at [[Graph.LoopWidth]].
   */
 object PageRank {
   val Scale = 1000000000000L
@@ -36,62 +43,21 @@ object PageRank {
     *              should not weight the walk)
     * @param nodes one id column; nodes without in-edges keep the teleport
     *              mass only
+    * @param seeds one column named like `id`, distinct — the restart set
     * @return (id, rank) — rank in SCALE-relative fixed point
     */
   def run(edges: DataFrame, src: String, dst: String,
-      nodes: DataFrame, id: String, iters: Int,
-      loopShufflePartitions: Int = 8): DataFrame = {
-    // Materialize the caller's upstream pipelines (corpus-scale work — in
-    // pagerank_clicks a window over the whole events table) at AMBIENT
-    // parallelism: only the graph-skinny loop frames below are narrowed,
-    // via explicit per-frame hash repartition (localCheckpoint preserves
-    // the partitioning, so each iteration's joins reuse the exchanges) —
-    // never via a session-global shuffle.partitions mutation, which a
-    // concurrently-shared session would observe. The per-iteration
-    // contribution aggregation stays at the session default and is
-    // size-coalesced by AQE.
-    val p = loopShufflePartitions
+      nodes: DataFrame, id: String, seeds: DataFrame,
+      iters: Int): DataFrame = {
     val e = edges.select(col(src).as("pr_src"), col(dst).as("pr_dst"))
-    val eo = e.join(e.groupBy("pr_src").agg(count(lit(1)).as("pr_od")),
-      "pr_src").repartition(p, col("pr_src")).localCheckpoint()
-    val v = nodes.select(col(id).as("pr_id"))
-      .repartition(p, col("pr_id")).localCheckpoint()
-    runLoop(eo, v, id, iters, p)
-  }
-
-  /** Personalized PageRank (random walk with restart): the teleport mass
-    * lands ONLY on the seed set S instead of uniformly — the "relevance to
-    * THESE pages" ranking recommendation and related-content pipelines run
-    * (Page et al. 1999 §6's personalized vector; Jeh & Widom, WWW 2003).
-    * Same integer fixed-point discipline as [[run]] (SCALE = 10^12, every
-    * step DIV/×/sum on longs, bit-exact cross-engine by construction):
-    *
-    *   r_0(i)     = [i ∈ S] · (SCALE DIV |S|)
-    *   r_{t+1}(i) = [i ∈ S] · (150000000000 DIV |S|)
-    *              + (85 * Σ_{j→i} (r_t(j) DIV od(j))) DIV 100
-    *
-    * Dangling mass leaks as in [[run]]; nodes unreachable from S stay at
-    * exactly 0 — the property that makes PPR a seed-locality score.
-    *
-    * 100 TB design: identical loop shape to [[run]] (one src-hash join +
-    * one dst groupBy per round, both linear in |E|); |S| rides a broadcast
-    * 1-row aggregate, and the seed flag is a left-semi-derived 0/1 column
-    * carried on the rank frame, so seeding adds NO extra shuffle.
-    *
-    * @param seeds one column named like `id` — the restart set
-    */
-  def runPersonalized(edges: DataFrame, src: String, dst: String,
-      nodes: DataFrame, id: String, seeds: DataFrame, iters: Int,
-      loopShufflePartitions: Int = 8): DataFrame = {
-    val p = loopShufflePartitions
-    val e = edges.select(col(src).as("pr_src"), col(dst).as("pr_dst"))
-    val eo = e.join(e.groupBy("pr_src").agg(count(lit(1)).as("pr_od")),
-      "pr_src").repartition(p, col("pr_src")).localCheckpoint()
+    val eo = Graph.loopFrame(
+      e.join(e.groupBy("pr_src").agg(count(lit(1)).as("pr_od")), "pr_src"),
+      "pr_src")
     val sd = seeds.select(col(id).as("pr_id"), lit(1).as("pr_seed"))
-    val v = nodes.select(col(id).as("pr_id"))
+    val v = Graph.loopFrame(nodes.select(col(id).as("pr_id"))
       .join(sd, Seq("pr_id"), "left")
-      .select(col("pr_id"), coalesce(col("pr_seed"), lit(0)).as("pr_seed"))
-      .repartition(p, col("pr_id")).localCheckpoint()
+      .select(col("pr_id"), coalesce(col("pr_seed"), lit(0)).as("pr_seed")),
+      "pr_id")
     // |S| as a broadcast 1-row aggregate, never a driver constant
     val nsRow = v.agg(sum(col("pr_seed")).cast("long").as("pr_ns"))
     var ranks = v
@@ -103,39 +69,13 @@ object PageRank {
       val contrib = ranks.join(eo, col("pr_id") === col("pr_src"))
         .select(col("pr_dst"), expr("pr_r DIV pr_od").as("pr_c"))
         .groupBy("pr_dst").agg(sum("pr_c").as("pr_s"))
-      ranks = ranks.join(contrib, col("pr_id") === col("pr_dst"), "left")
-        .select(col("pr_id"), col("pr_seed"),
-          (expr(s"pr_seed * (${Scale / 100 * 15}L DIV pr_ns)") +
-            expr("(85 * coalesce(pr_s, 0L)) DIV 100")).as("pr_r"),
-          col("pr_ns"))
-        .repartition(p, col("pr_id"))
-        .localCheckpoint()
-    }
-    ranks.select(col("pr_id").as(id), col("pr_r").as("rank"))
-  }
-
-  /** @param eo edges pre-annotated with src out-degree, checkpointed
-    * @param v  node ids, checkpointed */
-  private def runLoop(eo: DataFrame, v: DataFrame, id: String,
-      iters: Int, p: Int): DataFrame = {
-    // N rides along as a broadcast 1-row aggregate, never a driver constant
-    val nRow = v.agg(count(lit(1)).as("pr_n"))
-    var ranks = v
-      .crossJoin(broadcast(nRow))
-      .select(col("pr_id"), expr(s"${Scale}L DIV pr_n").as("pr_r"),
-        col("pr_n"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contrib = ranks.join(eo, col("pr_id") === col("pr_src"))
-        .select(col("pr_dst"), expr("pr_r DIV pr_od").as("pr_c"))
-        .groupBy("pr_dst").agg(sum("pr_c").as("pr_s"))
-      ranks = ranks.join(contrib, col("pr_id") === col("pr_dst"), "left")
-        .select(col("pr_id"),
-          (expr(s"${Scale / 100 * 15}L DIV pr_n") +
-            expr("(85 * coalesce(pr_s, 0L)) DIV 100")).as("pr_r"),
-          col("pr_n"))
-        .repartition(p, col("pr_id"))
-        .localCheckpoint()
+      ranks = Graph.loopFrame(
+        ranks.join(contrib, col("pr_id") === col("pr_dst"), "left")
+          .select(col("pr_id"), col("pr_seed"),
+            (expr(s"pr_seed * (${Scale / 100 * 15}L DIV pr_ns)") +
+              expr("(85 * coalesce(pr_s, 0L)) DIV 100")).as("pr_r"),
+            col("pr_ns")),
+        "pr_id")
     }
     ranks.select(col("pr_id").as(id), col("pr_r").as("rank"))
   }

@@ -34,9 +34,7 @@ object Triangles {
     * @return one row per triangle: (a, b, c) with a < b < c */
   def enumerate(und: DataFrame, u: String = "u", v: String = "v"): DataFrame = {
     val e = und.select(col(u).as("u"), col(v).as("v"))
-    val deg = e.select(col("u").as("node"))
-      .unionAll(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = Graph.degrees(e)
     val ranked = e
       .join(deg.select(col("node").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("d").as("dv")), "v")

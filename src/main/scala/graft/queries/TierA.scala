@@ -1,7 +1,7 @@
 package graft.queries
 
 import java.nio.file.Files
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Query
 import graft.core.Tables._
@@ -149,11 +149,10 @@ object TierA {
       """SELECT * FROM nation ORDER BY n_nationkey"""),
     // A3 — crawler-style schema inference (README.md:104): types come back
     // from data, not a declared schema.
-    Query("infer_schema", (s, d) => {
+    Query("infer_schema", (s, d) => GraftBridge.scoped(s) { c =>
       val dir = tmp("graft_crawl")
-      CsvSource.write(region(s, d), dir)
-      new Crawler(s).crawl(dir, s"crawled_region_${System.nanoTime}")
-        .orderBy("r_regionkey")
+      CsvSource.write(region(c, d), dir)
+      new Crawler(c).crawl(dir, "crawled_region").orderBy("r_regionkey")
     }, oracle =
       """SELECT * FROM region ORDER BY r_regionkey"""),
     // A4 — Hive-style partition discovery (README.md:117): key=value dirs
@@ -170,15 +169,15 @@ object TierA {
     // A5 — "Add new columns only" evolution across two crawler runs
     // (README.md:117, re-crawl :132): v2 adds a column; the merged schema
     // keeps v1 fields untyped-changed and appends the new one.
-    Query("schema_evolution_add_only", (s, d) => {
-      import s.implicits._
+    Query("schema_evolution_add_only", (s, d) => GraftBridge.scoped(s) { c =>
+      import c.implicits._
       val dirV1 = tmp("graft_evo1"); val dirV2 = tmp("graft_evo2")
-      val crawler = new Crawler(s)
-      val table = s"evolving_${System.nanoTime}"
-      CsvSource.write(region(s, d), dirV1)
+      val crawler = new Crawler(c)
+      val table = "evolving"
+      CsvSource.write(region(c, d), dirV1)
       crawler.crawl(dirV1, table)
       CsvSource.write(
-        region(s, d).withColumn("r_comment", concat(lit("about "), col("r_name"))),
+        region(c, d).withColumn("r_comment", concat(lit("about "), col("r_name"))),
         dirV2)
       crawler.crawl(dirV2, table)
       val merged = crawler.schemaOf(table).get
@@ -207,12 +206,12 @@ object TierA {
     // A7 — workflow DAG (README.md:155-166): trigger → crawl → transform
     // (the Glue "Change schema" job, :149) → load (:150), each node gated
     // on the one before it.
-    Query("workflow_dag", (s, d) => {
+    Query("workflow_dag", (s, d) => GraftBridge.scoped(s) { c =>
       val src = tmp("graft_wf_src"); val out = tmp("graft_wf_out")
-      CsvSource.write(supplier(s, d), src)
+      CsvSource.write(supplier(c, d), src)
       Workflow.run(Seq(
         Workflow.node("crawl")(_ =>
-          new Crawler(s).crawl(src, s"wf_supplier_${System.nanoTime}")),
+          new Crawler(c).crawl(src, "wf_supplier")),
         Workflow.node("transform", "crawl")(up => up("crawl").select(
           col("s_suppkey").as("supplier_id"),
           upper(col("s_name")).as("supplier_name"),
@@ -220,7 +219,7 @@ object TierA {
         Workflow.node("load", "transform") { up =>
           ParquetSink(out).write(up("transform")); up("transform")
         }))
-      s.read.parquet(out).orderBy("supplier_id")
+      c.read.parquet(out).orderBy("supplier_id")
     }, oracle =
       """SELECT s_suppkey AS supplier_id, upper(s_name) AS supplier_name,
         |       s_acctbal AS balance
@@ -230,12 +229,11 @@ object TierA {
     // crawl events, the load on the job. Nodes are declared out of
     // dependency order on purpose — scheduling follows the watch edges,
     // not the declaration sequence (EtlSpec asserts gating + failure halt).
-    Query("workflow_fanin", (s, d) => {
+    Query("workflow_fanin", (s, d) => GraftBridge.scoped(s) { c =>
       val srcN = tmp("graft_wff_n"); val srcR = tmp("graft_wff_r")
       val out = tmp("graft_wff_out")
-      CsvSource.write(nation(s, d), srcN)
-      CsvSource.write(region(s, d), srcR)
-      val sfx = java.lang.Long.toHexString(System.nanoTime)
+      CsvSource.write(nation(c, d), srcN)
+      CsvSource.write(region(c, d), srcR)
       Workflow.run(Seq(
         Workflow.node("load", "join_job") { up =>
           ParquetSink(out).write(up("join_job")); up("join_job")
@@ -248,10 +246,10 @@ object TierA {
               col("r_name").as("region_name"))
         },
         Workflow.node("crawl_nation")(_ =>
-          new Crawler(s).crawl(srcN, s"wff_n_$sfx")),
+          new Crawler(c).crawl(srcN, "wff_n")),
         Workflow.node("crawl_region")(_ =>
-          new Crawler(s).crawl(srcR, s"wff_r_$sfx"))))
-      s.read.parquet(out).orderBy("nation_id")
+          new Crawler(c).crawl(srcR, "wff_r"))))
+      c.read.parquet(out).orderBy("nation_id")
     }, oracle =
       // the AND-gated two-crawler join must equal the plain fixture join —
       // the comparison proves the whole CSV-crawl-join-load chain is lossless

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Query
+import graft.operators.Graph
 import graft.core.Tables._
 
 /** Tier C — the relational query surface (SURVEY.md §2 Tier C).
@@ -3619,10 +3620,12 @@ object TierCWindow {
     // (operators.PageRank): every step integer DIV/sum, so the iterative
     // operator is differentially checked bit-for-bit against a DuckDB
     // replay of the same recurrence — no float discipline needed at all.
-    Query("pagerank_clicks", (s, d) =>
+    Query("pagerank_clicks", (s, d) => {
+      val pages = ClickGraph.pages(s, d)
       graft.operators.PageRank.run(ClickGraph.directed(s, d), "src", "dst",
-        ClickGraph.pages(s, d), "page", 5)
-        .orderBy(desc("rank"), asc("page")), oracle = {
+        pages, "page", pages, 5)
+        .orderBy(desc("rank"), asc("page"))
+    }, oracle = {
       val iterCte = (1 to 5).map { i =>
         s"""r$i AS (
            |  SELECT nodes.page,
@@ -3653,12 +3656,10 @@ object TierCWindow {
     // fixed-point recurrence as pagerank_clicks (operators.PageRank
     // scaladoc: SCALE=10^12, every step DIV/×/long-sum — bit-exact
     // cross-engine by construction); the oracle unrolls the identical
-    // seeded recurrence. 100 TB: the run() loop shape unchanged — one
-    // |E|-linear src join + dst groupBy per round; the seed flag is a
-    // carried 0/1 column and |S| a broadcast 1-row aggregate, so
-    // personalization adds zero shuffles.
+    // seeded recurrence; pagerank_clicks is the same loop with every page
+    // a seed.
     Query("pagerank_personalized", (s, d) =>
-      graft.operators.PageRank.runPersonalized(
+      graft.operators.PageRank.run(
         ClickGraph.directed(s, d), "src", "dst",
         ClickGraph.pages(s, d), "page",
         ClickGraph.pages(s, d).filter(col("page") < 10), 5)
@@ -3987,9 +3988,7 @@ object TierCWindow {
       // (r17 optimization) for the same reason as there: five consumers
       // otherwise re-derive the edge list from raw events
       val und = ClickGraph.und(s, d).localCheckpoint()
-      val deg = und.select(col("u").as("node"))
-        .unionAll(und.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
+      val deg = Graph.degrees(und)
       val tri = graft.operators.Triangles.enumerate(und)
       val totals = und.agg(count(lit(1)).as("n_edges")).crossJoin(
         deg.agg(count(lit(1)).as("n_nodes"),
@@ -4036,9 +4035,7 @@ object TierCWindow {
       // the events scan + per-user window + distinct without the lineage
       // cut (the graph_modularity precedent)
       val und = ClickGraph.und(s, d).localCheckpoint()
-      val deg = und.select(col("u").as("node"))
-        .unionAll(und.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
+      val deg = Graph.degrees(und)
       val corners = graft.operators.Triangles.enumerate(und)
         .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("t"))
@@ -4271,8 +4268,8 @@ object TierCWindow {
     // empirically beats CN and Adamic-Adar on most link-prediction
     // benchmarks; its 1/d weight is exact-integer-quantizable directly,
     // where AA's 1/ln d needs the measured-margin half-up discipline —
-    // landed round 14 as graph_adamic_adar). Same capped wedge enumeration as CN (shared
-    // operators.CommonNeighbors.adjDeg); score is an order-independent
+    // landed round 14 as graph_adamic_adar). Same candidate frame as CN
+    // (operators.CommonNeighbors); score is an order-independent
     // exact long — zero floats. 100 TB: cap·|E| wedge work, two
     // map-side-combinable aggs, TakeOrdered top-k; the cap drops exactly
     // the wedges RA already down-weights toward zero.
@@ -4472,12 +4469,9 @@ object TierCWindow {
         ClickGraph.pages(s, d), "page", 4)
       val mm = und.agg(count(lit(1)).as("m"))
       val comm = labels.groupBy("label").agg(count(lit(1)).as("n_nodes"))
-      val deg = und.select(col("u").as("node"))
-        .unionAll(und.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("dg"))
-      val degc = deg
+      val degc = Graph.degrees(und)
         .join(labels.select(col("page").as("node"), col("label")), "node")
-        .groupBy("label").agg(sum("dg").as("d_c"))
+        .groupBy("label").agg(sum("d").as("d_c"))
       val intra = und
         .join(labels.select(col("page").as("u"), col("label").as("lu")), "u")
         .join(labels.select(col("page").as("v"), col("label").as("lv")), "v")
@@ -4533,9 +4527,7 @@ object TierCWindow {
     // wider than (node, d) ever shuffles.
     Query("graph_degree_stats", (s, d) => {
       val und = ClickGraph.und(s, d)
-      val deg = und.select(col("u").as("node"))
-        .unionAll(und.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
+      val deg = Graph.degrees(und)
       deg.groupBy("d")
         .agg(count(lit(1)).as("n_nodes"),
           min(col("node")).as("min_node"), max(col("node")).as("max_node"))
@@ -4693,14 +4685,10 @@ object TierCWindow {
     // map-side into one row.
     Query("graph_assortativity", (s, d) => {
       val und = ClickGraph.und(s, d).localCheckpoint()
-      val deg = und.select(col("u").as("node"))
-        .unionAll(und.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("dg"))
-      val adj = und.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(und.select(col("v").as("a"), col("u").as("b")))
-      val pairs = adj
-        .join(deg.select(col("node").as("a"), col("dg").as("x")), Seq("a"))
-        .join(deg.select(col("node").as("b"), col("dg").as("y")), Seq("b"))
+      val deg = Graph.degrees(und)
+      val pairs = Graph.sym(und, "u", "v").toDF("a", "b")
+        .join(deg.select(col("node").as("a"), col("d").as("x")), Seq("a"))
+        .join(deg.select(col("node").as("b"), col("d").as("y")), Seq("b"))
       val n = count(lit(1))
       val sx = sum(col("x")).cast("double")
       val sy = sum(col("y")).cast("double")
@@ -4761,11 +4749,9 @@ object TierCWindow {
       val kdf = und.agg(count(lit(1)).as("ne"))
         .crossJoin(pg.agg(count(lit(1)).as("nv")))
         .select(expr("2 * ne DIV nv").as("k"))
-      def deg(e: DataFrame) =
-        e.select(col("u").as("page")).unionAll(e.select(col("v").as("page")))
-          .groupBy("page").agg(count(lit(1)).as("dg"))
+      def deg(e: DataFrame) = Graph.degrees(e).withColumnRenamed("node", "page")
       def alive(e: DataFrame) =
-        deg(e).crossJoin(broadcast(kdf)).filter(col("dg") >= col("k"))
+        deg(e).crossJoin(broadcast(kdf)).filter(col("d") >= col("k"))
           .select("page").localCheckpoint()
       def prune(e: DataFrame, a: DataFrame) =
         e.join(a.select(col("page").as("u")), Seq("u"), "left_semi")
@@ -4782,7 +4768,7 @@ object TierCWindow {
         .select(col("page"), lit(3).as("removed_round"), lit(0L).as("core_deg"))
       val core = a3.join(deg(e3), Seq("page"), "left")
         .select(col("page"), lit(0).as("removed_round"),
-          coalesce(col("dg"), lit(0L)).as("core_deg"))
+          coalesce(col("d"), lit(0L)).as("core_deg"))
       r1.unionByName(r2).unionByName(r3).unionByName(core).orderBy("page")
     }, oracle =
       // independent unrolled 3-round peel over the shared edge derivation;

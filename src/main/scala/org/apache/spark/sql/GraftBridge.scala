@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.execution.streaming.runtime.{StreamingQueryListenerBus, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -38,30 +38,42 @@ object GraftBridge {
 
   /** Runs `body`, which starts and awaits streams, on a clone of `s` that
     * carries `s`'s streaming listeners. Spark attaches a streaming listener
-    * bus to the context for every session that starts a stream and never
-    * detaches it; once the clone's streams' last events are heard, this
-    * detaches the clone's. */
+    * bus to the context for every session that starts a stream, and for
+    * the session each stream runs on (`StreamExecution`'s own clone), and
+    * never detaches them; once the clone's streams' last events are heard,
+    * this detaches both kinds. */
   def scopedStreams[T](s: SparkSession)(body: SparkSession => T): T = {
     val clone = cloneSession(s)
     s.streams.listListeners().foreach(clone.streams.addListener)
-    val tail = new StreamsTail // added last: hears each event after the rest
+    // added last: hears each event after the rest
+    val tail = new StreamsTail(clone)
     clone.streams.addListener(tail)
     try body(clone)
     finally {
       tail.awaitIdle(timeoutMs = 10000)
+      // the tail marks every bus to detach
+      tail.streamSessions.foreach(_.streams.addListener(tail))
       val bus = s.sparkContext.listenerBus
       bus.findListenersByClass[StreamingQueryListenerBus]()
         .filter(_.listeners.contains(tail)).foreach(bus.removeListener)
     }
   }
 
-  /** Counts its session's running streams. A started event is heard before
-    * `start()` returns; a terminated event, asynchronously, after the
-    * stream's last progress event. */
-  private final class StreamsTail extends StreamingQueryListener {
+  /** Counts the running streams of `s`, and keeps the session each of them
+    * runs on. A started event is heard on the stream's thread before
+    * `start()` returns, while the query is active; a terminated event,
+    * asynchronously, after the stream's last progress event. */
+  private final class StreamsTail(s: SparkSession)
+      extends StreamingQueryListener {
     private var running = 0
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      synchronized { running += 1 }
+    private var sessions = List.empty[SparkSession]
+    override def onQueryStarted(e: QueryStartedEvent): Unit = {
+      val own = Option(s.streams.get(e.id)).collect {
+        case q: StreamingQueryWrapper => q.streamingQuery.sparkSessionForStream
+      }
+      synchronized { running += 1; sessions = own.toList ++ sessions }
+    }
+    def streamSessions: List[SparkSession] = synchronized(sessions)
     override def onQueryProgress(e: QueryProgressEvent): Unit = ()
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
       synchronized { running -= 1; notifyAll() }

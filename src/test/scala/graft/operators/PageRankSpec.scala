@@ -28,7 +28,7 @@ class PageRankSpec extends SparkSpec {
   private def run(edges: Seq[(Long, Long)], nodes: Seq[Long],
       iters: Int): Map[Long, Long] =
     PageRank.run(edges.toDF("src", "dst"), "src", "dst",
-        nodes.toDF("id"), "id", iters)
+        nodes.toDF("id"), "id", nodes.toDF("id"), iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("random graphs match the sequential recurrence bit-for-bit") {

@@ -92,10 +92,8 @@ class BroadcastAuditSpec extends SparkSpec {
         fact.join(broadcast(dim), "k").collect()
         // listener delivery is async AND the audit reads the session's
         // CURRENT threshold (it is a live monitor, not a plan-time
-        // capture) — poll while the scoped threshold is still in force
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (listener.violations.isEmpty && System.nanoTime() < deadline)
-          Thread.sleep(100)
+        // capture) — drain while the scoped threshold is still in force
+        GraftBridge.drainListeners(spark)
       }
       val v = listener.violations
       assert(v.nonEmpty, "listener never recorded the oversize build")

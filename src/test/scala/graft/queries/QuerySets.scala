@@ -39,7 +39,7 @@ object QuerySets {
     * specs for schema coverage. */
   val eagerCheckpointing: Set[String] = Set(
     "retrieval_mmr", "pagerank_clicks",
-    // r8: CommonNeighbors.adjDeg checkpoints the shared adjacency/degree
+    // r8: CommonNeighbors' candidate frame checkpoints the adjacency/degree
     // tables so the edge derivation computes once, not ~6× (one re-plan
     // per consumer defeated ReuseExchange via per-branch null filters)
     "graph_common_neighbors",
@@ -50,7 +50,7 @@ object QuerySets {
     // each round's center table; graph_components runs the full CC loop
     // (ConnectedComponents.run eagerly checkpoints) inside the builder
     "coreset_kcenter", "graph_components",
-    // r12: resourceAllocation shares CommonNeighbors.adjDeg (same eager
+    // r12: resourceAllocation shares that candidate frame (same eager
     // adjacency/degree checkpoints as graph_common_neighbors)
     "graph_resource_alloc",
     // r12b: knn_pq_adc localCheckpoints the shifted quantized vectors its
@@ -59,7 +59,7 @@ object QuerySets {
     "knn_pq_adc", "retrieval_eval_ndcg",
     // r12e: knn_ivf_pq shares pqAdcTop10's shiftedVectors checkpoint
     "knn_ivf_pq",
-    // r12f: PageRank.runPersonalized checkpoints the seeded node/edge
+    // r12f: PageRank.run checkpoints the seeded node/edge
     // frames and every round's rank frame inside the builder
     "pagerank_personalized",
     // r12c: Hits.run checkpoints edges/nodes and each round's score frame
@@ -96,9 +96,9 @@ object QuerySets {
   /** Keys whose query functions once wrote the session they were handed:
     * the 14 memory-sink stream keys and the foreachBatch pipeline (a
     * session-wide partition cap and a sink view per run), the SQL-text and
-    * bloom keys (fixed-name views, function registration) and one events
-    * reader (the nanosAsLong flag). SessionHygieneSpec and ConcurrencySpec
-    * run them. */
+    * bloom keys (fixed-name views, function registration), one events
+    * reader (the nanosAsLong flag) and the four crawler keys (the crawled
+    * table's view). SessionHygieneSpec and ConcurrencySpec run them. */
   val sessionScoped: Seq[String] = Seq(
     "stream_watermark_late", "stream_window_topn", "stream_hll_window",
     "stream_stream_outer_join", "stream_dedup_stateful", "stream_custom_state",
@@ -109,5 +109,6 @@ object QuerySets {
     "join_bloom_prefilter", "subq_scalar", "subq_in_correlated",
     "cte_sql_entry", "cte_recursive", "subq_lateral", "agg_grouping_sets",
     "rollup_time_grain", "win_range_frame", "dedup_incremental_bloom",
-    "dedup_containment", "stream_tumbling")
+    "dedup_containment", "stream_tumbling", "infer_schema",
+    "schema_evolution_add_only", "workflow_dag", "workflow_fanin")
 }

@@ -36,4 +36,16 @@ class GraftBridgeSpec extends graft.SparkSpec {
       assert(busesHearing() == 1, "the clone's streaming bus stayed attached")
     } finally spark.streams.removeListener(listener)
   }
+
+  test("scopedStreams: three runs of a stream key leave the context's " +
+      "streaming listener buses as they were") {
+    def buses(): Int = spark.sparkContext.listenerBus
+      .findListenersByClass[StreamingQueryListenerBus]().size
+    spark.streams // the caller's own bus exists before the first count
+    val before = buses()
+    (1 to 3).foreach { _ =>
+      graft.SparkEntry.queries("stream_dedup_stateful")(spark, sf).collect()
+    }
+    assert(buses() == before, "a stream run left a listener bus attached")
+  }
 }
