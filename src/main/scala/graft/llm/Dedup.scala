@@ -26,6 +26,9 @@ object Dedup {
   /** Distinct token set of the document text. */
   private def tokenSet(c: Column): Column = array_distinct(split(c, " "))
 
+  /** Sorted distinct token set of the document text. */
+  private val sortedTokens: Column = sort_array(tokenSet(col("text")))
+
   // ---- MinHash ----------------------------------------------------------
 
   // b bands of r rows: candidate threshold ≈ (1/b)^(1/r). With b=4, r=8 the
@@ -36,42 +39,107 @@ object Dedup {
   val NumHashes = 32
   val Bands = 4
 
+  /** k and band count of the md5 recipe the differential-gate keys share:
+    * 8 seeded minima in 2 bands × 4 rows, S-curve midpoint (1/2)^(1/4) ≈
+    * 0.84 — the same ≥0.8-target tuning as the 32-hash xxhash64 recipe. */
+  private val (md5K, md5Bands) = (8, 2)
+
   /** One strong 64-bit hash per token — the expensive string pass, done
     * exactly once per document. */
   def tokenHashes(tokens: Column): Column =
     transform(tokens, t => xxhash64(t))
 
-  /** k seeded min-hashes derived from the per-token hashes: each seed is a
-    * cheap fixed-width rehash (xxhash64 of two longs) of the strong token
-    * hash — the standard minwise trick that avoids k full string passes.
-    * Stays inside whole-stage codegen; no shuffle. */
-  def minhashSignature(tokens: Column, k: Int = NumHashes): Seq[Column] = {
-    val hs = tokenHashes(tokens)
-    minhashFromHashes(hs, k)
+  /** The k = NumHashes seeded min-hashes mh_0..mh_{k-1} of a `tokenHashes`
+    * array: each seed is a cheap fixed-width rehash (xxhash64 of two longs)
+    * of the strong token hash — the standard minwise trick that avoids k
+    * full string passes. All k components come from one fused native pass
+    * (graft.functions.MinHashArray; the k×tokens interpreted-lambda form
+    * dominated the dedup queries' cost), shared by the k element_ats
+    * through codegen subexpression elimination. No shuffle. */
+  def minhashFromHashes(hashes: Column): Seq[Column] = {
+    val arr = graft.functions.MinHashArray.minhash_array(hashes, NumHashes)
+    (0 until NumHashes).map(seed => element_at(arr, seed + 1).as(s"mh_$seed"))
   }
 
-  /** All k components as one array column — a single fused native pass
-    * (graft.functions.MinHashArray); the k×tokens interpreted-lambda form
-    * (`array_min(transform(hashes, h -> xxhash64(h, seed)))` per seed)
-    * dominated the dedup queries' cost. */
-  def minhashArray(hashes: Column, k: Int = NumHashes): Column =
-    graft.functions.MinHashArray.minhash_array(hashes, k)
+  /** xxhash64 signatures (doc_id, mh_0..mh_31) of a documents-shaped frame.
+    * Tokenization sits in its own projection so the signature columns
+    * reference the hash array instead of re-splitting the text k times. */
+  private def signatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokenHashes(tokenSet(col("text"))).as("th"))
+      .select(col("doc_id") +: minhashFromHashes(col("th")): _*)
 
-  /** Signature over an already-materialized `tokenHashes` array column.
-    * The shared minhashArray sub-expression is deduplicated by codegen
-    * subexpression elimination — one pass per row, 32 cheap element_ats. */
-  def minhashFromHashes(hashes: Column, k: Int = NumHashes): Seq[Column] = {
-    val arr = minhashArray(hashes, k)
-    (0 until k).map(seed => element_at(arr, seed + 1).as(s"mh_$seed"))
-  }
+  /** md5 signatures (doc_id, mh_0..mh_7) of a (doc_id, toks) frame: each
+    * seeded hash is md5(seed || '|' || token), lowercase hex in both
+    * engines, and all k minima come from one fused native pass (r17: the
+    * composable k × array_min(transform(..md5..)) chain was the board's
+    * largest interpreted-HOF cost — see Md5MinHashes; bit-identical,
+    * spec-pinned). */
+  private def md5Signatures(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"),
+        graft.functions.Md5MinHashes.md5_minhashes(col("toks"), md5K).as("mh"))
+      .select(col("doc_id") +: (0 until md5K).map(i =>
+        element_at(col("mh"), i + 1).as(s"mh_$i")): _*)
 
-  /** LSH band hashes over an existing signature (columns mh_0..mh_{k-1}):
-    * documents sharing any band hash become candidate pairs. */
-  def bandHashes(k: Int = NumHashes, bands: Int = Bands): Seq[Column] = {
+  /** LSH band rows of a signature frame (doc_id, mh_0..mh_{k-1}): band b
+    * hashes rows b·r until (b+1)·r with `hash` (r = k / bands) into bh_b,
+    * and each doc explodes to one (doc_id, bh_0..bh_{bands-1}, band, bh)
+    * row per band. Every band hash rides along for the first-collision
+    * filter; consumers that never read them have them pruned. Documents
+    * sharing any (band, bh) bucket are candidate pairs. */
+  private[llm] def bandRows(sigs: DataFrame, k: Int, bands: Int,
+      hash: Seq[Column] => Column): DataFrame = {
     val r = k / bands
-    (0 until bands).map { b =>
-      xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*).as(s"band_$b")
-    }
+    val bh = (0 until bands).map(b => col(s"bh_$b"))
+    sigs.select(col("doc_id") +: (0 until bands).map(b =>
+        hash((b * r until (b + 1) * r).map(i => col(s"mh_$i"))).as(s"bh_$b")): _*)
+      .select(col("doc_id") +: bh :+ explode(array((0 until bands).map(b =>
+        struct(lit(b).as("band"), bh(b).as("bh"))): _*)).as("e"): _*)
+      .select(col("doc_id") +: bh :+ col("e.band") :+ col("e.bh"): _*)
+  }
+
+  /** md5 band rows of md5 signatures: each band hash is md5 over the
+    * concatenated row minima, a pure cross-engine-reproducible function of
+    * the text. */
+  private def md5BandRows(sigs: DataFrame): DataFrame =
+    bandRows(sigs, md5K, md5Bands, rows => md5(concat(rows: _*)))
+
+  /** Each band row's `keeper`: the smallest doc_id in its (band, bh)
+    * bucket. A window, NOT groupBy + join back: the join form would re-run
+    * the whole signature pipeline for the second plan branch and pay an
+    * extra shuffle. */
+  private def bucketKeepers(long: DataFrame): DataFrame =
+    long.withColumn("keeper",
+      min(col("doc_id")).over(Window.partitionBy("band", "bh")))
+
+  /** Per-doc LSH verdicts (doc_id, keeper): the smallest doc_id a doc
+    * shares any band with, for docs whose keeper is an earlier doc. */
+  private def lshVerdicts(long: DataFrame): DataFrame =
+    bucketKeepers(long)
+      .groupBy("doc_id").agg(min(col("keeper")).as("keeper"))
+      .filter(col("keeper") < col("doc_id"))
+      .orderBy("doc_id")
+
+  /** The DuckDB replay of the md5 recipe, shared by its four oracles: the
+    * `t` (doc_id, toks), `sig` (doc_id, mh_0..mh_7) and `banded`
+    * (doc_id, b0, b1) CTEs, ending in the comma before the next CTE. md5
+    * hex is lowercase in both engines; list min over hex strings is the
+    * same lexicographic min the engine takes. */
+  private[graft] val OracleMd5Bands: String = {
+    val sigCols = (0 until md5K).map(i =>
+      s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
+      .mkString(",\n        |         ")
+    s"""t AS (
+       |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
+       |  FROM documents),
+       |sig AS (
+       |  SELECT doc_id,
+       |         $sigCols
+       |  FROM t),
+       |banded AS (
+       |  SELECT doc_id,
+       |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
+       |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
+       |  FROM sig),""".stripMargin
   }
 
   // ---- SimHash ----------------------------------------------------------
@@ -88,73 +156,70 @@ object Dedup {
       graft.functions.SimHash64.simhash64(tokenHashes(tokenSet(text)))
         .as("simhash"))
 
+  // ---- exact pair grid --------------------------------------------------
+
   /** Rows per salted sub-block task of every adaptive pair grid. */
   val RowsPerTask = 256
 
-  /** Per-block salt factors for an ADAPTIVE pair grid: one tiny aggregate
+  /** Per-block salt factors for the adaptive pair grid: one tiny aggregate
     * over just the blocking keys (Catalyst prunes every payload column out
     * of this branch — only keys + a count shuffle) yields each block's row
-    * count `bn` and its salt factor `bg` = ceil(bn / RowsPerTask).
-    *
-    * Joined back (broadcast — the stats table is one row per DISTINCT
-    * block, vocabulary-sized, not corpus-sized; at a scale where even that
-    * outgrows broadcast, persist it once and bucket-join) this replaces the
-    * old CONSTANT grid: a singleton block is dropped outright (bn >= 2 —
-    * it cannot produce a pair, so its payload never enters the shuffle),
-    * a small block gets bg = 1 (zero replication — the round-5 driver
-    * bench showed a constant grid × 32 shuffle partitions multiplying tiny
-    * tasks), and only a genuinely hot block fans out, by exactly the
-    * factor its size demands. Every pair is still examined exactly once —
-    * results identical, oracles unchanged. */
-  def blockSaltStats(docs: DataFrame, keys: Seq[String]): DataFrame =
+    * count `bn` and its salt factor `bg` = ceil(bn / RowsPerTask). */
+  private[llm] def blockSaltStats(docs: DataFrame, keys: Seq[String]): DataFrame =
     docs.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bn"))
       .withColumn("bg", greatest(lit(1),
         ceil(col("bn") / lit(RowsPerTask.toDouble))).cast("int"))
 
-  /** The salt idiom shared by every pair-join site: annotate each row with
-    * its block's (bn, bg) and drop singleton blocks before any payload
-    * enters a shuffle. Keeping the join-broadcast-filter in ONE place means
-    * the singleton predicate and the sub-block size cannot drift between
-    * the token, n-gram, and embedding pair grids. */
-  def withAdaptiveSalt(docs: DataFrame, keys: Seq[String]): DataFrame =
-    docs.join(broadcast(blockSaltStats(docs, keys)), keys)
-      .filter(col("bn") >= 2)
-
-  /** Exact blocked near-dup pairs (the E2 semantics, shared by the pair
-    * query and the cluster query so the edge set can never diverge):
-    * token-set Jaccard >= minJac over (first token, length bucket) blocks.
-    * Set sizes are computed once per doc; |A∪B| = |A|+|B|-|A∩B| avoids a
-    * second pairwise array op (the join moves one array per side, and the
-    * pair stage does a single native intersect).
+  /** Every same-block pair of `df` exactly once, on the salted grid every
+    * exact pair key shares: the block `keys`, then for each side `a_<c>` /
+    * `b_<c>` for the `id` column and each `payload` column, with
+    * a_<id> < b_<id>.
     *
-    * The block key is SALTED with the adaptive [[blockSaltStats]] grid:
-    * each d2 lands in one of that block's `bg` deterministic sub-blocks,
-    * each d1 is replicated to all of them — every pair is still examined
-    * exactly once (results identical, oracle unchanged), but a hot block
-    * (every doc sharing a boilerplate first token) spreads over bg tasks
-    * instead of dying on one, and cold blocks pay no fan-out at all. */
-  def nearDupPairs(docs0: DataFrame, minJac: Double): DataFrame = {
-    val keys = Seq("blk_tok", "blk_len")
-    val docs = docs0.select(
-      col("doc_id"), sort_array(tokenSet(col("text"))).as("toks"),
-      split_part(col("text"), lit(" "), lit(1)).as("blk_tok"),
-      floor(col("n_chars") / 100.0).as("blk_len"))
-      .withColumn("nt", size(col("toks")))
-    val blocked = withAdaptiveSalt(docs, keys)
-    val a = blocked.select(col("doc_id").as("d1"), col("toks").as("t1"),
-      col("nt").as("n1"), col("blk_tok"), col("blk_len"), col("bg"))
+    * Skew discipline (the 100 TB shape): each block's stats are joined back
+    * (broadcast — one row per DISTINCT block, vocabulary-sized, not
+    * corpus-sized; at a scale where even that outgrows broadcast, persist it
+    * once and bucket-join). A singleton block is dropped before any payload
+    * enters a shuffle (bn >= 2 — it cannot produce a pair). The b side lands
+    * in one of its block's `bg` sub-blocks g = xxhash64(id) mod bg, and the
+    * a side is replicated to all of them, so the pair join is keyed on
+    * (keys, g): a hot block spreads over bg tasks instead of dying on one,
+    * a small block gets bg = 1 (zero replication), and every pair is still
+    * examined exactly once — results identical to a plain blocked
+    * self-join. */
+  private[llm] def saltedPairs(df: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[String]): DataFrame = {
+    val blocked = df.join(broadcast(blockSaltStats(df, keys)), keys)
+      .filter(col("bn") >= 2)
+    def side(p: String): Seq[Column] =
+      keys.map(col) ++ (id +: payload).map(c => col(c).as(p + c))
+    val a = blocked.select(side("a_") :+ col("bg"): _*)
       .withColumn("g", explode(sequence(lit(0), col("bg") - 1)))
       .drop("bg")
-    val b = blocked.select(col("doc_id").as("d2"), col("toks").as("t2"),
-      col("nt").as("n2"), col("blk_tok"), col("blk_len"),
-      pmod(xxhash64(col("doc_id")), col("bg")).cast("int").as("g"))
-    a.join(b, Seq("blk_tok", "blk_len", "g")).filter(col("d1") < col("d2"))
-      .withColumn("inter", sorted_intersect_count(col("t1"), col("t2")))
+    val b = blocked.select(side("b_") :+
+      pmod(xxhash64(col(id)), col("bg")).cast("int").as("g"): _*)
+    a.join(b, keys :+ "g").filter(col(s"a_$id") < col(s"b_$id"))
+  }
+
+  /** Exact blocked near-dup pairs (d1, d2, jac) over a sorted distinct
+    * hash or token `set` column: set Jaccard >= 0.8 within (first token,
+    * length bucket) blocks, on the [[saltedPairs]] grid. One definition
+    * for the token pair query, the cluster queries (so their edge set can
+    * never diverge) and the char-3-gram pair query. Set sizes are computed
+    * once per doc; |A∪B| = |A|+|B|-|A∩B| avoids a second pairwise array op
+    * (the join moves one array per side, and the pair stage does a single
+    * native intersect). */
+  def nearDupPairs(docs: DataFrame, set: Column): DataFrame = {
+    val sets = docs.select(col("doc_id"), set.as("s"),
+        split_part(col("text"), lit(" "), lit(1)).as("blk_tok"),
+        floor(col("n_chars") / 100.0).as("blk_len"))
+      .withColumn("n", size(col("s")))
+    saltedPairs(sets, Seq("blk_tok", "blk_len"), "doc_id", Seq("s", "n"))
+      .withColumn("inter", sorted_intersect_count(col("a_s"), col("b_s")))
       .withColumn("jac", col("inter").cast("double") /
-        (col("n1") + col("n2") - col("inter")))
-      .filter(col("jac") >= minJac)
-      .select("d1", "d2", "jac")
+        (col("a_n") + col("b_n") - col("inter")))
+      .filter(col("jac") >= 0.8)
+      .select(col("a_doc_id").as("d1"), col("b_doc_id").as("d2"), col("jac"))
   }
 
   /** Body of `dedup_minhash_verified` on any documents-shaped frame
@@ -167,26 +232,8 @@ object Dedup {
     * at the query entry. */
   def minhashVerifiedPairs(docs0: DataFrame,
       minJacNum: Int = 4, minJacDen: Int = 5): DataFrame = {
-    val k = 8; val bands = 2; val r = k / bands
-    val toksDf = docs0.select(col("doc_id"),
-      sort_array(array_distinct(split(col("text"), " "))).as("toks"))
-    // all k seeded minima in ONE fused native pass (r17: the composable
-    // k × array_min(transform(..md5..)) chain was the board's largest
-    // interpreted-HOF cost — see Md5MinHashes; bit-identical, spec-pinned)
-    val sigs = toksDf.select(col("doc_id"),
-        graft.functions.Md5MinHashes.md5_minhashes(col("toks"), k).as("mh"))
-      .select(col("doc_id") +: (0 until k).map(i =>
-        element_at(col("mh"), i + 1).as(s"mh_$i")): _*)
-    val banded = sigs.select(col("doc_id") +: (0 until bands).map(b =>
-      md5(concat((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*))
-        .as(s"band_$b")): _*)
-    val long = banded.select(col("doc_id"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"), col(s"band_$b").as("bh"))): _*)).as("e"))
-      .select(col("doc_id"), col("e.band"), col("e.bh"))
-    val wB = Window.partitionBy("band", "bh")
-    val cand = long
-      .withColumn("keeper", min(col("doc_id")).over(wB))
+    val toksDf = docs0.select(col("doc_id"), sortedTokens.as("toks"))
+    val cand = bucketKeepers(md5BandRows(md5Signatures(toksDf)))
       .filter(col("keeper") < col("doc_id"))
       .select("doc_id", "keeper").distinct()
     val aSide = toksDf.select(col("doc_id"), col("toks").as("t_a"),
@@ -319,7 +366,7 @@ object Dedup {
     // E2 — near-dup by token-set Jaccard >= 0.8, blocked on
     // (first token, length bucket) so the self-join is per-block.
     Query("dedup_near_jaccard", (s, d) =>
-      nearDupPairs(documents(s, d), 0.8).orderBy("d1", "d2"), oracle =
+      nearDupPairs(documents(s, d), sortedTokens).orderBy("d1", "d2"), oracle =
       """WITH docs AS (
         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks,
         |         str_split(text, ' ')[1] AS blk_tok,
@@ -344,7 +391,7 @@ object Dedup {
     Query("dedup_clusters", (s, d) => {
       val docs = documents(s, d)
       graft.operators.ConnectedComponents
-        .run(nearDupPairs(docs, 0.8), "d1", "d2", docs, "doc_id")
+        .run(nearDupPairs(docs, sortedTokens), "d1", "d2", docs, "doc_id")
         .orderBy("doc_id")
     }, oracle =
       // The recursive CTE computes, for every doc, every id reachable over
@@ -385,7 +432,7 @@ object Dedup {
     Query("dedup_cluster_keep_best", (s, d) => {
       val docs = documents(s, d)
       val comp = graft.operators.ConnectedComponents
-        .run(nearDupPairs(docs, 0.8), "d1", "d2", docs, "doc_id")
+        .run(nearDupPairs(docs, sortedTokens), "d1", "d2", docs, "doc_id")
       val withLen = comp.join(
         docs.select(col("doc_id"), col("n_chars")), "doc_id")
       val wC = Window.partitionBy("comp")
@@ -468,23 +515,8 @@ object Dedup {
       // edge stage replays dedup_minhash_verified's banded-candidate +
       // exact-verify construction; component labels the recursive reach
       // fixpoint over those edges; keeper an independent per-comp argmax
-      {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
       s"""WITH RECURSIVE
-         |t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
+         |$OracleMd5Bands
          |long AS (
          |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
          |  UNION ALL
@@ -520,43 +552,23 @@ object Dedup {
          |SELECT c.doc_id, c.comp, k.keeper,
          |       CASE WHEN c.doc_id = k.keeper THEN 1 ELSE 0 END AS kept
          |FROM compt c JOIN k ON c.comp = k.comp
-         |ORDER BY c.doc_id""".stripMargin
-    }),
+         |ORDER BY c.doc_id""".stripMargin),
     // E3 — MinHash signatures (unit-tier: MinHashSpec property-tests the
     // Jaccard estimate; here the signature table itself). Tokenization is
     // materialized in its own projection so the k=32 signature expressions
     // reference the array instead of re-splitting the text k times
     // (CollapseProject keeps the split separate: non-cheap, multi-referenced).
-    Query("minhash_signature", (s, d) => {
-      documents(s, d)
-        .select(col("doc_id"), tokenHashes(tokenSet(col("text"))).as("th"))
-        .select(col("doc_id") +: minhashFromHashes(col("th")): _*)
-        .orderBy("doc_id")
-    }),
+    Query("minhash_signature", (s, d) =>
+      signatures(documents(s, d)).orderBy("doc_id")),
     // E3b — MinHash→LSH dedup verdicts: each doc maps to the smallest doc_id
     // it shares any band with; docs with keeper < doc_id are near-dups of an
     // earlier doc. Deliberately NOT a pair enumeration: this corpus has
     // near-dup clusters of thousands, so pairs are quadratic in cluster size
     // (3.3M pairs at sf0.1) while the min-per-bucket reduction stays linear
     // in docs × bands — the shape that survives 100 TB.
-    Query("dedup_minhash_lsh", (s, d) => {
-      val sigs = documents(s, d)
-        .select(col("doc_id"), tokenHashes(tokenSet(col("text"))).as("th"))
-        .select(col("doc_id") +: minhashFromHashes(col("th")): _*)
-      val banded = sigs.select(col("doc_id") +: bandHashes(): _*)
-      val long = banded.select(col("doc_id"),
-        explode(array((0 until Bands).map(b =>
-          struct(lit(b).as("band"), col(s"band_$b").as("bh"))): _*)).as("e"))
-        .select(col("doc_id"), col("e.band"), col("e.bh"))
-      // window min per bucket, NOT groupBy+join-back: the join form would
-      // re-run the whole signature pipeline for the second plan branch and
-      // pay an extra shuffle
-      val wB = Window.partitionBy("band", "bh")
-      long.withColumn("bucket_keeper", min(col("doc_id")).over(wB))
-        .groupBy("doc_id").agg(min(col("bucket_keeper")).as("keeper"))
-        .filter(col("keeper") < col("doc_id"))
-        .orderBy("doc_id")
-    }),
+    Query("dedup_minhash_lsh", (s, d) =>
+      lshVerdicts(bandRows(signatures(documents(s, d)), NumHashes, Bands,
+        xxhash64(_: _*)))),
     // E3c — the SAME MinHash→LSH pipeline with md5-seeded signatures so
     // the whole construction runs through the DIFFERENTIAL gate (round
     // 10): dedup_minhash_lsh's xxhash64 signatures are engine-local, so
@@ -571,44 +583,11 @@ object Dedup {
     // enumeration); md5 costs more per token than xxhash64, which is
     // exactly why the unit-tier sibling keeps the fast path and this one
     // is the auditable construction.
-    Query("dedup_minhash_banded", (s, d) => {
-      val k = 8; val bands = 2; val r = k / bands
-      val sigs = documents(s, d)
-        .select(col("doc_id"),
-          array_distinct(split(col("text"), " ")).as("toks"))
-        // fused native pass — see minhashVerifiedPairs / Md5MinHashes
-        .select(col("doc_id"),
-          graft.functions.Md5MinHashes.md5_minhashes(col("toks"), k).as("mh"))
-        .select(col("doc_id") +: (0 until k).map(i =>
-          element_at(col("mh"), i + 1).as(s"mh_$i")): _*)
-      val banded = sigs.select(col("doc_id") +: (0 until bands).map(b =>
-        md5(concat((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*))
-          .as(s"band_$b")): _*)
-      val long = banded.select(col("doc_id"),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("band"), col(s"band_$b").as("bh"))): _*)).as("e"))
-        .select(col("doc_id"), col("e.band"), col("e.bh"))
-      val wB = Window.partitionBy("band", "bh")
-      long.withColumn("bucket_keeper", min(col("doc_id")).over(wB))
-        .groupBy("doc_id").agg(min(col("bucket_keeper")).as("keeper"))
-        .filter(col("keeper") < col("doc_id"))
-        .orderBy("doc_id")
-    }, oracle = {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
+    Query("dedup_minhash_banded", (s, d) =>
+      lshVerdicts(md5BandRows(md5Signatures(documents(s, d)
+        .select(col("doc_id"), tokenSet(col("text")).as("toks"))))),
+      oracle =
+      s"""WITH $OracleMd5Bands
          |long AS (
          |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
          |  UNION ALL
@@ -620,8 +599,7 @@ object Dedup {
          |SELECT doc_id, MIN(bucket_keeper) AS keeper
          |FROM m GROUP BY doc_id
          |HAVING MIN(bucket_keeper) < doc_id
-         |ORDER BY doc_id""".stripMargin
-    }),
+         |ORDER BY doc_id""".stripMargin),
     // LSH CALIBRATION audit (round 14): estimated-vs-true Jaccard for
     // every band-collision candidate pair, bucketed by the signature
     // estimate — the tuning readout every production dedup runs before
@@ -637,7 +615,6 @@ object Dedup {
     // discipline), and the report is ≤ 9 rows (one per possible match
     // count).
     Query("dedup_minhash_calibration", (s, d) => {
-      val k = 8; val bands = 2; val r = k / bands
       // base feeds sigs + both token fetches, sigs feeds the band stream
       // + both signature fetches — the multi-consumer fact-derivation
       // rule (market_basket_lift, round 13): localCheckpoint both so the
@@ -645,14 +622,9 @@ object Dedup {
       // on the steal host: 11.3 s before, 7-8 s warm after; the
       // remaining cost is the candidate join + exact verify itself)
       val base = documents(s, d).select(col("doc_id"),
-        array_distinct(split(col("text"), " ")).as("toks"))
+        tokenSet(col("text")).as("toks"))
         .localCheckpoint()
-      // fused native pass — see minhashVerifiedPairs / Md5MinHashes
-      val sigs = base.select(col("doc_id"),
-          graft.functions.Md5MinHashes.md5_minhashes(col("toks"), k).as("mh"))
-        .select(col("doc_id") +: (0 until k).map(i =>
-          element_at(col("mh"), i + 1).as(s"mh_$i")): _*)
-        .localCheckpoint()
+      val sigs = md5Signatures(base).localCheckpoint()
       // each row of the band stream carries EVERY band hash (bh_0, bh_1)
       // so a pair is emitted only at the FIRST band where it collides
       // (band b with all earlier bands differing) — the classic LSH
@@ -661,16 +633,7 @@ object Dedup {
       // (a both-band collision surfaces at band 0 only), measured
       // 10.1 s → 4.1-4.4 s warm at sf0.1 where the candidate set is
       // 4.6M pairs and the distinct was the single largest stage
-      val withBands = sigs.select(col("doc_id") +: (0 until bands).map(b =>
-        md5(concat((b * r until (b + 1) * r)
-          .map(i => col(s"mh_$i")): _*)).as(s"bh_$b")): _*)
-      val long = withBands.select(
-        col("doc_id") +: (0 until bands).map(b => col(s"bh_$b")) :+
-          explode(array((0 until bands).map(b =>
-            struct(lit(b).as("band"), col(s"bh_$b").as("bh"))): _*))
-            .as("e"): _*)
-        .select(col("doc_id") +: (0 until bands).map(b => col(s"bh_$b")) :+
-          col("e.band") :+ col("e.bh"): _*)
+      val long = md5BandRows(sigs)
       // generic over `bands` (review finding: the first spelling checked
       // only bh_0, correct solely at bands = 2): a band-b row survives
       // iff EVERY earlier band did NOT collide in the equi-join. The
@@ -681,7 +644,7 @@ object Dedup {
       // coalesce(=!=, true) maps every NULL outcome to "no collision",
       // exactly matching the join's own NULL semantics; today band
       // hashes are NULL all-or-none, but this spelling no longer cares.
-      val firstCollision = (0 until bands).map(b =>
+      val firstCollision = (0 until md5Bands).map(b =>
         col("band") === b && (0 until b)
           .map(j => coalesce(col(s"x.bh_$j") =!= col(s"y.bh_$j"), lit(true)))
           .foldLeft(lit(true))(_ && _)).reduce(_ || _)
@@ -710,18 +673,18 @@ object Dedup {
         sort_array(array_distinct(transform(col("toks"), t => xxhash64(t))))
           .as("th"))
         .localCheckpoint()
-      val sigsL = sigs.select(col("doc_id") +: (0 until k).map(i =>
+      val sigsL = sigs.select(col("doc_id") +: (0 until md5K).map(i =>
         xxhash64(col(s"mh_$i")).as(s"mh_$i")): _*)
       val sigA = sigsL.select(col("doc_id").as("a_id") +:
-        (0 until k).map(i => col(s"mh_$i").as(s"a_mh_$i")): _*)
+        (0 until md5K).map(i => col(s"mh_$i").as(s"a_mh_$i")): _*)
       val sigB = sigsL.select(col("doc_id").as("b_id") +:
-        (0 until k).map(i => col(s"mh_$i").as(s"b_mh_$i")): _*)
+        (0 until md5K).map(i => col(s"mh_$i").as(s"b_mh_$i")): _*)
       val tokA = hashedToks.select(col("doc_id").as("a_id"), col("th").as("a_t"))
       val tokB = hashedToks.select(col("doc_id").as("b_id"), col("th").as("b_t"))
       val scored = cand.join(sigA, "a_id").join(sigB, "b_id")
         .join(tokA, "a_id").join(tokB, "b_id")
         .select(
-          (0 until k).map(i => when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1L)
+          (0 until md5K).map(i => when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1L)
             .otherwise(0L)).reduce(_ + _).as("matches"),
           graft.functions.SortedIntersectCount
             .sorted_intersect_count(col("a_t"), col("b_t")).cast("long")
@@ -744,23 +707,9 @@ object Dedup {
       // the banded oracle's sig/band CTEs + candidate join + exact list
       // intersection — every stage the same deterministic md5 recurrence
       {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
-      val matchSum = (0 until 8).map(i =>
+      val matchSum = (0 until md5K).map(i =>
         s"CASE WHEN a.mh_$i = b.mh_$i THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
+      s"""WITH $OracleMd5Bands
          |long AS (
          |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
          |  UNION ALL SELECT doc_id, 1, b1 FROM banded),
@@ -788,42 +737,21 @@ object Dedup {
     // SimHash fingerprints (builder mandate; unit-tier).
     Query("dedup_simhash", (s, d) =>
       simhash(documents(s, d), col("doc_id"), col("text")).orderBy("doc_id")),
-    // Character-3-gram Jaccard near-dup (builder mandate), same blocking
-    // discipline as E2.
-    Query("dedup_ngram_jaccard", (s, d) => {
-      // Character 3-gram shingles, hashed to 64-bit at the doc level so the
-      // pairwise intersect compares longs, not strings (collision probability
-      // over the whole corpus ~1e-10; the DuckDB oracle intersects the plain
-      // grams — results agree absent a 64-bit collision).
-      // Native one-pass shingle hasher (graft.functions.CharNgramHashes):
-      // the composable sequence/transform/substring form allocated per
-      // window and dominated this query's cost.
-      val grams = graft.functions.CharNgramHashes.ngram_hashes(col("text"), 3)
-      val keys = Seq("blk_tok", "blk_len")
-      val docs = documents(s, d).select(
-        col("doc_id"), grams.as("gr"),
-        split_part(col("text"), lit(" "), lit(1)).as("blk_tok"),
-        floor(col("n_chars") / 100.0).as("blk_len"))
-        .withColumn("ng", size(col("gr")))
-      // adaptive salt + singleton-block drop (blockSaltStats): the gram
-      // arrays are the widest payload in the bench — a doc in a pair-less
-      // block must not ship its array through the shuffle at all
-      val blocked = withAdaptiveSalt(docs, keys)
-      val a = blocked.select(col("doc_id").as("d1"), col("gr").as("g1"),
-        col("ng").as("n1"), col("blk_tok"), col("blk_len"), col("bg"))
-        .withColumn("g", explode(sequence(lit(0), col("bg") - 1)))
-        .drop("bg")
-      val b = blocked.select(col("doc_id").as("d2"), col("gr").as("g2"),
-        col("ng").as("n2"), col("blk_tok"), col("blk_len"),
-        pmod(xxhash64(col("doc_id")), col("bg")).cast("int").as("g"))
-      a.join(b, Seq("blk_tok", "blk_len", "g")).filter(col("d1") < col("d2"))
-        .withColumn("inter", sorted_intersect_count(col("g1"), col("g2")))
-        .withColumn("jac", col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")))
-        .filter(col("jac") >= 0.8)
-        .select("d1", "d2", "jac")
-        .orderBy("d1", "d2")
-    }, oracle =
+    // Character-3-gram Jaccard near-dup: E2's pairs over
+    // the char-3-gram set in place of the token set, same blocks, same 0.8.
+    // Shingles are hashed to 64-bit at the doc level so the pairwise
+    // intersect compares longs, not strings (collision probability over the
+    // whole corpus ~1e-10; the DuckDB oracle intersects the plain grams —
+    // results agree absent a 64-bit collision). Native one-pass shingle
+    // hasher (graft.functions.CharNgramHashes): the composable
+    // sequence/transform/substring form allocated per window and dominated
+    // this query's cost. The grid's singleton-block drop matters most here:
+    // the gram arrays are the widest payload in the bench, and a doc in a
+    // pair-less block never ships its array through the shuffle.
+    Query("dedup_ngram_jaccard", (s, d) =>
+      nearDupPairs(documents(s, d),
+        graft.functions.CharNgramHashes.ngram_hashes(col("text"), 3))
+        .orderBy("d1", "d2"), oracle =
       """WITH docs AS (
         |  SELECT doc_id,
         |         list_distinct(list_transform(range(1, greatest(length(text) - 2, 1) + 1),
@@ -1307,22 +1235,7 @@ object Dedup {
       // cross-engine bit-agreement); the VERIFY stage is independently
       // constructed: plain-token list_intersect here vs the native sorted
       // 64-bit-hash intersect on the Spark side
-      {
-      val sigCols = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(toks, x -> md5('$i|' || x)), 'min') AS mh_$i")
-        .mkString(",\n        |         ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_distinct(str_split(text, ' ')) AS toks
-         |  FROM documents),
-         |sig AS (
-         |  SELECT doc_id,
-         |         $sigCols
-         |  FROM t),
-         |banded AS (
-         |  SELECT doc_id,
-         |         md5(mh_0 || mh_1 || mh_2 || mh_3) AS b0,
-         |         md5(mh_4 || mh_5 || mh_6 || mh_7) AS b1
-         |  FROM sig),
+      s"""WITH $OracleMd5Bands
          |long AS (
          |  SELECT doc_id, 0 AS band, b0 AS bh FROM banded
          |  UNION ALL
@@ -1343,8 +1256,7 @@ object Dedup {
          |  JOIN t b ON b.doc_id = c.keeper)
          |SELECT doc_id, keeper, inter, uni FROM j
          |WHERE inter * 5 >= uni * 4
-         |ORDER BY doc_id, keeper""".stripMargin
-    }),
+         |ORDER BY doc_id, keeper""".stripMargin),
     // Per-doc n-gram NOVELTY vs the earlier corpus (round 11): what
     // fraction of this doc's distinct char-3-grams first appeared in a
     // LOWER-doc_id doc — the ingest-order curation signal (drop or

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Typed MinHash aggregator (SURVEY §2 E3, §7.3 hard #2): folds token sets
   * into a k-component signature with an elementwise-min merge.
   *
-  * This is the *incremental* form of [[Dedup.minhashSignature]]: because
+  * This is the *incremental* form of [[Dedup.minhashFromHashes]]: because
   * `merge` is elementwise min (commutative, associative, idempotent),
   * signatures can be built across partitions, across micro-batches
   * (`Dataset.groupByKey(...).agg(MinHashAggregator.toColumn)`), or unioned

@@ -75,14 +75,12 @@ object Similarity {
     * an all-pairs threshold join).
     *
     * Scale design — why a salted grid and not LSH candidates: the pair work
-    * is inherently O(block²/grid) per task instead of O(block²) on one task.
-    * Each b-row lands in one of its label block's `bg` deterministic
-    * sub-blocks (xxhash64(b_id) mod bg); each a-row is replicated to all of
-    * them, so every (a, b) pair is examined exactly once but no single task
-    * ever holds a whole label block — the shape that kills a 1000-executor
-    * job when one label is hot. The salt factor is ADAPTIVE per block
-    * (Dedup.blockSaltStats): bg = ceil(label_rows / RowsPerTask), so cold
-    * labels pay no fan-out and singleton labels never enter the shuffle.
+    * is inherently O(block²/bg) per task instead of O(block²) on one task.
+    * The label blocks go through the adaptive grid every exact pair key
+    * shares ([[Dedup.saltedPairs]]), so no single task ever holds a whole
+    * label block — the shape that kills a 1000-executor job when one label
+    * is hot — while cold labels pay no fan-out and singleton labels never
+    * enter the shuffle.
     *
     * Composing LSH bucket candidates instead (the sub-quadratic shape used
     * by dedup_embedding_ann below) CANNOT keep these exact semantics on this
@@ -96,22 +94,26 @@ object Similarity {
     * regime (≥0.9 cosine, the production dedup setting); at a low threshold
     * the exact grid is the honest plan, and dedup_embedding_ann is the
     * documented approximate alternative. */
-  def embeddingCosineDedup(emb: DataFrame, threshold: Double): DataFrame = {
-    val unit = withUnitVec(emb, "embedding", "uv")
-    val blocked = Dedup.withAdaptiveSalt(unit, Seq("label"))
-    val a = blocked.select(col("vec_id").as("a_id"), col("uv").as("a_v"),
-        col("label"), col("bg"))
-      .withColumn("g", explode(sequence(lit(0), col("bg") - 1)))
-      .drop("bg")
-    val b = blocked.select(col("vec_id").as("b_id"), col("uv").as("b_v"),
-        col("label"),
-        pmod(xxhash64(col("vec_id")), col("bg")).cast("int").as("g"))
-    a.join(b, Seq("label", "g")).filter(col("b_id") < col("a_id"))
-      .filter(dotD(col("a_v"), col("b_v")) > threshold)
-      .groupBy(col("a_id").as("vec_id"))
-      .agg(min(col("b_id")).as("keeper"))
+  def embeddingCosineDedup(emb: DataFrame, threshold: Double): DataFrame =
+    cosineDedupBlocked(withUnitVec(emb, "embedding", "uv"), "label", threshold)
+
+  /** Exact cosine dedup core: every same-`block` pair of a (vec_id, uv,
+    * block) frame on the salted grid, then the min-id keeper — the shared
+    * body of `dedup_embedding_cosine` (block = label) and
+    * `dedup_semantic_cells` (block = IVF cell). */
+  private def cosineDedupBlocked(unit: DataFrame, block: String,
+      threshold: Double): DataFrame =
+    cosineKeepers(Dedup.saltedPairs(unit, Seq(block), "vec_id", Seq("uv")),
+      threshold)
+
+  /** The min-id keeper verdict over candidate pairs (a_vec_id < b_vec_id,
+    * a_uv, b_uv): each later vector whose cosine to an earlier one exceeds
+    * `threshold` maps to the smallest such earlier vec_id. */
+  private def cosineKeepers(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.filter(dotD(col("a_uv"), col("b_uv")) > threshold)
+      .groupBy(col("b_vec_id").as("vec_id"))
+      .agg(min(col("a_vec_id")).as("keeper"))
       .orderBy("vec_id")
-  }
 
   /** LSH-candidate near-dup verdicts: same output contract as
     * [[embeddingCosineDedup]] but pairs are generated by same-(label, band
@@ -166,15 +168,11 @@ object Similarity {
     // rows fan out Bands×; the vector fetches below are equi-joins on id
     val cand = tagged.as("x").join(tagged.as("y"), Seq("blk", "bucket"))
       .filter(col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("b_id"), col("y.vec_id").as("a_id"))
+      .select(col("x.vec_id").as("a_vec_id"), col("y.vec_id").as("b_vec_id"))
       .distinct()
-    val av = unit.select(col("vec_id").as("a_id"), col("uv").as("a_v"))
-    val bv = unit.select(col("vec_id").as("b_id"), col("uv").as("b_v"))
-    cand.join(av, "a_id").join(bv, "b_id")
-      .filter(dotD(col("a_v"), col("b_v")) > threshold)
-      .groupBy(col("a_id").as("vec_id"))
-      .agg(min(col("b_id")).as("keeper"))
-      .orderBy("vec_id")
+    val av = unit.select(col("vec_id").as("a_vec_id"), col("uv").as("a_uv"))
+    val bv = unit.select(col("vec_id").as("b_vec_id"), col("uv").as("b_uv"))
+    cosineKeepers(cand.join(bv, "b_vec_id").join(av, "a_vec_id"), threshold)
   }
 
   def embeddingCosineDedupAnn(emb: DataFrame, threshold: Double,
@@ -1064,20 +1062,8 @@ object Similarity {
     // the label-blocked family does.
     Query("dedup_semantic_cells", (s, d) => {
       val unit = withUnitVec(embeddings(s, d), "embedding", "uv")
-      val clustered = ivfCellAssign(unit, cellCountFor(s, d))
-      val blocked = Dedup.withAdaptiveSalt(clustered, Seq("cell"))
-      val a = blocked.select(col("vec_id").as("a_id"), col("uv").as("a_v"),
-          col("cell"), col("bg"))
-        .withColumn("g", explode(sequence(lit(0), col("bg") - 1)))
-        .drop("bg")
-      val b = blocked.select(col("vec_id").as("b_id"), col("uv").as("b_v"),
-        col("cell"),
-        pmod(xxhash64(col("vec_id")), col("bg")).cast("int").as("g"))
-      a.join(b, Seq("cell", "g")).filter(col("b_id") < col("a_id"))
-        .filter(dotD(col("a_v"), col("b_v")) > 0.4458)
-        .groupBy(col("a_id").as("vec_id"))
-        .agg(min(col("b_id")).as("keeper"))
-        .orderBy("vec_id")
+      cosineDedupBlocked(ivfCellAssign(unit, cellCountFor(s, d)), "cell",
+        0.4458)
     }, oracle =
       // the assignment replays knn_ivf_coarse's deterministic ranking; the
       // within-cell dedup is the dedup_embedding_cosine construction with

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * clustering-coefficient query counts corners of the SAME enumeration
   * the census counts — one orientation definition, impossible to desync.
   *
-  * 100 TB shape: one degree aggregation (map-side combinable), two
+  * 100 TB shape: the caller's degree table (one map-side-combinable
+  * aggregation, shared with the caller's own degree reads), two
   * broadcast-or-shuffle hash joins to rank edge endpoints, one self-join
   * on the oriented source, one semi-join on (u, v) — nothing wider than
   * three longs ever shuffles, and every stage is a declarative plan AQE
@@ -30,11 +31,11 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** @param und id-normalized undirected edges, one row per edge, u < v
+  /** @param und id-normalized undirected edges (u, v), one row per edge, u < v
+    * @param deg the degree table of `und` as (node, d), from [[Graph.degrees]]
     * @return one row per triangle: (a, b, c) with a < b < c */
-  def enumerate(und: DataFrame, u: String = "u", v: String = "v"): DataFrame = {
-    val e = und.select(col(u).as("u"), col(v).as("v"))
-    val deg = Graph.degrees(e)
+  def enumerate(und: DataFrame, deg: DataFrame): DataFrame = {
+    val e = und.select("u", "v")
     val ranked = e
       .join(deg.select(col("node").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("d").as("dv")), "v")

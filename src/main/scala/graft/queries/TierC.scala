@@ -3989,7 +3989,7 @@ object TierCWindow {
       // otherwise re-derive the edge list from raw events
       val und = ClickGraph.und(s, d).localCheckpoint()
       val deg = Graph.degrees(und)
-      val tri = graft.operators.Triangles.enumerate(und)
+      val tri = graft.operators.Triangles.enumerate(und, deg)
       val totals = und.agg(count(lit(1)).as("n_edges")).crossJoin(
         deg.agg(count(lit(1)).as("n_nodes"),
           sum(expr("d * (d - 1) DIV 2")).as("n_wedges")))
@@ -4029,14 +4029,14 @@ object TierCWindow {
     // enumeration's bounds (see Triangles scaladoc) plus one explode to
     // 3 corner rows per triangle and two map-side-combinable aggs.
     Query("graph_clustering_coeff", (s, d) => {
-      // checkpointed (r17 optimization): und feeds the degree agg here
-      // plus THREE reads inside Triangles.enumerate (its own degree agg,
-      // the orientation join, the wedge-closing semi-join) — each re-ran
+      // checkpointed (r17 optimization): und feeds the degree agg (which
+      // Triangles.enumerate orients by too) plus the enumeration's
+      // orientation join and wedge-closing semi-join — each re-ran
       // the events scan + per-user window + distinct without the lineage
       // cut (the graph_modularity precedent)
       val und = ClickGraph.und(s, d).localCheckpoint()
       val deg = Graph.degrees(und)
-      val corners = graft.operators.Triangles.enumerate(und)
+      val corners = graft.operators.Triangles.enumerate(und, deg)
         .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("t"))
       ClickGraph.pages(s, d)

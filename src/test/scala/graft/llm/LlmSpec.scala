@@ -20,7 +20,8 @@ class LlmSpec extends SparkSpec {
       3L -> base.take(40),                     // vs doc1: identical = 1.0
       4L -> (0 until 40).map(i => s"other$i")) // vs doc1: 0.0
     val df = docs.toDF("doc_id", "toks")
-    val sigs = df.select(col("doc_id") +: Dedup.minhashSignature(col("toks")): _*)
+    val sigs = df.select(col("doc_id") +:
+        Dedup.minhashFromHashes(Dedup.tokenHashes(col("toks"))): _*)
       .collect().map(r => r.getLong(0) -> (1 until 33).map(r.getLong).toVector).toMap
     def est(a: Long, b: Long): Double =
       sigs(a).zip(sigs(b)).count { case (x, y) => x == y }.toDouble / 32
@@ -45,9 +46,12 @@ class LlmSpec extends SparkSpec {
       3L -> (base.take(90) ++ (0 until 10).map(i => s"x$i")).mkString(" "), // near
       4L -> (0 until 100).map(i => s"z$i").mkString(" "))         // disjoint
     val df = docs.toDF("doc_id", "text")
-    val sigs = df.select(col("doc_id") +:
-      Dedup.minhashSignature(array_distinct(split(col("text"), " "))): _*)
-    val banded = sigs.select(col("doc_id") +: Dedup.bandHashes(): _*)
+    val sigs = df.select(col("doc_id") +: Dedup.minhashFromHashes(
+      Dedup.tokenHashes(array_distinct(split(col("text"), " ")))): _*)
+    val banded = Dedup.bandRows(sigs, Dedup.NumHashes, Dedup.Bands,
+        xxhash64(_: _*))
+      .select(col("doc_id") +: (0 until Dedup.Bands).map(b => col(s"bh_$b")): _*)
+      .distinct()
       .collect().map(r => r.getLong(0) -> (1 to Dedup.Bands).map(r.getLong)).toMap
     def sharesBand(a: Long, b: Long): Boolean =
       banded(a).zip(banded(b)).exists { case (x, y) => x == y }

@@ -11,13 +11,17 @@ import graft.SparkSpec
 class TrianglesSpec extends SparkSpec {
   import spark.implicits._
 
+  private def enumerate(edges: Seq[(Long, Long)]) = {
+    val und = edges.toDF("u", "v")
+    Triangles.enumerate(und, Graph.degrees(und))
+  }
+
   private def tris(edges: Seq[(Long, Long)]): Set[(Long, Long, Long)] =
-    Triangles.enumerate(edges.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    enumerate(edges).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("K4: all four triangles enumerated exactly once, sorted a<b<c") {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
-    val got = Triangles.enumerate(k4.toDF("u", "v")).collect()
+    val got = enumerate(k4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == 4, s"K4 has exactly 4 triangles; got ${got.toSeq}")
     assert(got.toSet == Set((1L, 2L, 3L), (1L, 2L, 4L), (1L, 3L, 4L),
