@@ -2,9 +2,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Plan-evidence dump for the optimization rounds: writes
-  * `.explain("formatted")` for named queries (default: all) to
-  * `<outDir>/<name>.txt`. It runs on the bench's own session
+/** Plan-evidence dump for the optimization rounds: runs each named query
+  * (default: all) once without collecting rows, then writes its
+  * `.explain("formatted")` to `<outDir>/<name>.txt`. Running first
+  * finalizes the `AdaptiveSparkPlan`, so the dump is the plan that ran
+  * (`isFinalPlan=true`, with any run-time `ReusedExchange`), not the
+  * initial one. It runs on the bench's own session
   * ([[GraftSession.forMain]]), so the committed plan files in plans/rNN/
   * reflect the plans the timed runs execute. Usage:
   *   tools/run.sh graft.Explain <sfDir> <outDir> [queryName ...]
@@ -16,8 +19,9 @@ object Explain {
     new java.io.File(outDir).mkdirs()
     SparkEntry.select(args.drop(2)).toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
+        val qe = fn(spark, sfDir).queryExecution
+        qe.executedPlan.execute().foreach(_ => ())
+        val plan = qe.explainString(ExplainMode.fromString("formatted"))
         Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
         System.err.println(s"[explain] wrote $name")
       } catch { case e: Throwable =>

@@ -1,5 +1,6 @@
 package graft.llm
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,6 +19,27 @@ import graft.functions.RollingHash.rolling_hash
 object TextStats {
 
   private def tokens(c: Column): Column = split(c, " ")
+
+  /** 64-bit hashes of every word n-gram of `text`, from one native pass
+    * (grams never travel as strings). */
+  private def wordNgramHashes(n: Int): Column =
+    graft.functions.TokenNgramHashes.token_ngram_hashes(
+      Dedup.tokenHashes(tokens(col("text"))), n)
+
+  /** Every adjacent token pair (doc_id, w1, w2) of each doc's `text` — the
+    * one bigram derivation of the three bigram keys. Adjacency is explicit
+    * in the token array, so the pairs expand map-side with no exchange (a
+    * per-doc window would shuffle and sort the whole token stream); array
+    * subscripts are 0-based, so pair i is (ts[i], ts[i+1]). A one-token doc
+    * yields no pair, and a doubled space yields the empty token, as the
+    * split does. */
+  private[llm] def bigramPairs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("ts"))
+      .select(col("doc_id"), explode(expr(
+        """transform(slice(ts, 1, size(ts) - 1),
+          |  (x, i) -> struct(x AS w1, ts[i + 1] AS w2))""".stripMargin))
+        .as("p"))
+      .select(col("doc_id"), col("p.w1"), col("p.w2"))
 
   /** The concat-and-chunk packing layout — the shared body of
     * `pack_sequences` (which ships it per-doc) and
@@ -83,8 +105,10 @@ object TextStats {
   }
 
   /** A tiny per-language marker lexicon for the n-gram/stopword language-ID
-    * heuristic. Deterministic and self-contained (no model files). */
-  val LangMarkers: Map[String, Seq[String]] = Map(
+    * heuristic. Deterministic and self-contained (no model files). Its
+    * order is the oracles' column and word order ([[OracleLangHits]],
+    * [[OracleStopwords]]). */
+  val LangMarkers: Map[String, Seq[String]] = ListMap(
     "en" -> Seq("the", "and", "of", "to", "in"),
     "es" -> Seq("el", "la", "de", "que", "y"),
     "de" -> Seq("der", "die", "und", "das", "ist"),
@@ -142,28 +166,41 @@ object TextStats {
     * so the shards can never be cut from a different repeat draw than the
     * one published. Carries n_chars for the shard balance report (unused
     * columns prune out of the scan for the repeats key). The fractional
-    * draw is the exact integer cross-multiply on md5(doc_id) digits 29-32
-    * — see `mix_materialize_repeats`' scaladoc for the bias bound. */
+    * draw is the exact integer cross-multiply on the digits-29-32 draw —
+    * see `mix_materialize_repeats`' scaladoc for the bias bound. */
   private def materializedRepeats(s: SparkSession, d: String): DataFrame = {
     val sched = epochSchedule(s, d).select(col("lang"), col("epochs_q6"))
     documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
       .join(broadcast(sched), Seq("lang"))
-      .withColumn("u16",
-        conv(substring(md5(col("doc_id").cast("string")), 29, 4), 16, 10)
-          .cast("long"))
+      .withColumn("u16", md5Fold(col("doc_id"), 29).cast("long"))
       .select(col("doc_id"), col("lang"), col("n_chars"),
         (expr("epochs_q6 DIV 1000000") +
           when(expr("u16 * 1000000 < (epochs_q6 % 1000000) * 65536"), 1L)
             .otherwise(0L)).as("n_repeats"))
   }
 
-  /** Fold of md5 hex digits [from, from+3] of the stringified id into an
-    * int in [0, 16^4) — the engine-agnostic deterministic-hash primitive
-    * behind sample_split / stratified_sample / pack_sequences sharding
-    * (pure function of the stable id: reruns, retries and engines agree;
-    * four digits keep modulo bias ≤ ~0.02%). `from` is 1-based to match
-    * SQL substring. */
-  private def md5Fold(idCol: Column, from: Int): Column = {
+  /** The md5 digit draw: hex digits [from, from+3] of md5 of the
+    * stringified id, folded into an int in [0, 16^4) — the engine-agnostic
+    * deterministic hash behind every sampling, split and shard decision
+    * here (a pure function of the stable id: reruns, retries and engines
+    * agree; four digits keep modulo bias ≤ ~0.02%). `from` is 1-based to
+    * match SQL substring; [[oracleMd5Fold]] is the DuckDB spelling.
+    *
+    * The digit ledger. Draws on the same id take disjoint digits, so the
+    * decisions stay independent of each other:
+    *   - 1-4, doc_id: the train/val/test split ([[splitRule]]) and the
+    *     packing shard ([[packedLayout]])
+    *   - 5-8, doc_id: `stratified_sample`
+    *   - 9-12, doc_id: `weighted_sample`
+    *   - 13-16, doc_id: the `negative_pairs` partner
+    *   - 17-20, user_id: `sample_user_holdout`
+    *   - 21-24, user_id: the A/B variant ([[abVariant]])
+    *   - 25-28, token: the `dsir_importance` feature buckets
+    *   - 29-32, doc_id: the repeat draw ([[materializedRepeats]])
+    * All 32 digits are taken, so a new draw hashes a new input domain, as
+    * `mix_shard_assignment` does with `doc_id#copy` (digits 1-4 of a string
+    * no other draw hashes). */
+  private[llm] def md5Fold(idCol: Column, from: Int): Column = {
     def hexVal(c: Column): Column =
       when(ascii(c) >= 97, ascii(c) - 87).otherwise(ascii(c) - 48)
     val hx = md5(idCol.cast("string"))
@@ -204,10 +241,19 @@ object TextStats {
   /** The A/B variant assignment — ONE definition shared by
     * `abtest_conversion` (the funnel readout) and `abtest_srm_check`
     * (the assignment-health gate), so the SRM check can never audit a
-    * different split than the one the readout uses. Hashes the USER
-    * (md5 digits 21-24), never the event — the leakage rule. */
+    * different split than the one the readout uses. Hashes the USER,
+    * never the event — the leakage rule. */
   private def abVariant: Column =
     when(md5Fold(col("user_id"), 21) % 2 === 0, "A").otherwise("B")
+
+  /** The deterministic train/val/test split — ONE definition shared by
+    * `sample_split` and the corpus_curation pipeline: the doc's digit
+    * draw mod 10 → 80/10/10 (two digits would leave 256 % 10 = 6 leftover
+    * states and bias train to 80.47%; four shrink the bias to ~0.01%). */
+  private def splitRule: Column = {
+    val bucket = md5Fold(col("doc_id"), 1) % 10
+    when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test")
+  }
 
   /** The shared per-doc quality stats over `text` — ONE definition used by
     * both the score report (text_quality) and the filter verdicts
@@ -367,12 +413,12 @@ object TextStats {
           q.symbolRatio.as("non_alnum_ratio"))
         .orderBy("doc_id")
     }, oracle =
-      """SELECT doc_id, n_chars,
+      s"""SELECT doc_id, n_chars,
         |       CAST(len(str_split(text, ' ')) AS INT) AS n_tokens,
         |       CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
         |         / len(str_split(text, ' ')) AS mean_token_len,
         |       CAST(len(list_filter(str_split(text, ' '),
-        |                t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS DOUBLE)
+        |                t -> list_contains($OracleStopwords, t))) AS DOUBLE)
         |         / len(str_split(text, ' ')) AS stopword_ratio,
         |       CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
         |         / length(text) AS non_alnum_ratio
@@ -488,8 +534,8 @@ object TextStats {
          |         AS oov_q6
          |FROM perdoc GROUP BY lang ORDER BY lang""".stripMargin),
     // Language-ID heuristic: argmax of marker-hit counts, 'und' when nothing
-    // matches. Oracle-checked — the marker lexicon is spelled out in the
-    // DuckDB SQL, and array_max over (hits, lang) structs ties to the
+    // matches. Oracle-checked — the oracle's hit columns come from the same
+    // marker lexicon, and array_max over (hits, lang) structs ties to the
     // lexicographically-largest lang, mirrored by the CASE order fr>es>en>de.
     Query("text_langid", (s, d) => {
       documents(s, d).select(
@@ -497,12 +543,9 @@ object TextStats {
           predictedLang.as("predicted_lang"))
         .orderBy("doc_id")
     }, oracle =
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT doc_id, lang AS actual_lang,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['the','and','of','to','in'], x))) AS h_en,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['el','la','de','que','y'], x))) AS h_es,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['der','die','und','das','ist'], x))) AS h_de,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['le','la','et','les','des'], x))) AS h_fr
+        |$OracleLangHits
         |  FROM documents)
         |SELECT doc_id, actual_lang,
         |  CASE WHEN greatest(h_en,h_es,h_de,h_fr) = 0 THEN 'und'
@@ -535,12 +578,9 @@ object TextStats {
     }, oracle =
       // same CASE-chain classifier as text_langid's oracle, grouped into
       // the confusion matrix with q6 row shares
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT lang AS actual_lang,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['the','and','of','to','in'], x))) AS h_en,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['el','la','de','que','y'], x))) AS h_es,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['der','die','und','das','ist'], x))) AS h_de,
-        |    len(list_filter(str_split(text,' '), x -> list_contains(['le','la','et','les','des'], x))) AS h_fr
+        |$OracleLangHits
         |  FROM documents),
         |p AS (
         |  SELECT actual_lang,
@@ -586,8 +626,7 @@ object TextStats {
     // Native window hashing (TokenNgramHashes); counts are exact integers,
     // the ratio one IEEE division — fully hashable.
     Query("text_repetition", (s, d) => {
-      val grams = graft.functions.TokenNgramHashes.token_ngram_hashes(
-        Dedup.tokenHashes(tokens(col("text"))), 3)
+      val grams = wordNgramHashes(3)
       documents(s, d)
         .select(col("doc_id"), size(grams).as("n_grams"),
           size(array_distinct(grams)).as("n_distinct"))
@@ -620,16 +659,7 @@ object TextStats {
           (rule === "pass").as("keep"))
         .orderBy("doc_id")
     }, oracle =
-      """WITH q AS (
-        |  SELECT doc_id,
-        |         len(str_split(text, ' ')) AS n_tok,
-        |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
-        |           / len(str_split(text, ' ')) AS mean_len,
-        |         len(list_filter(str_split(text, ' '),
-        |              t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS n_stop,
-        |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-        |           / length(text) AS symbol_ratio
-        |  FROM documents),
+      s"""WITH $OracleQualityCte,
         |v AS (
         |  SELECT doc_id,
         |         CASE WHEN n_tok < 20 THEN 'too_few_tokens'
@@ -645,31 +675,22 @@ object TextStats {
     // Deterministic train/val/test split (training-data pipeline op): the
     // split must be a pure function of the stable document id — never
     // rand() — so reruns, retries, and engines agree row-for-row and a doc
-    // can never migrate between splits as the corpus grows. Bucket = first
-    // FOUR md5 hex digits mod 10 (two digits give 256 % 10 = 6 leftover
-    // states, biasing train to 80.47%; four digits shrink the bias to
-    // ~0.01%) → 80/10/10; output is the per-language stratification report
-    // a dataset card needs.
-    Query("sample_split", (s, d) => {
-      val bucket = md5Fold(col("doc_id"), 1) % 10
+    // can never migrate between splits as the corpus grows (splitRule);
+    // output is the per-language stratification report a dataset card
+    // needs.
+    Query("sample_split", (s, d) =>
       documents(s, d)
-        .withColumn("split",
-          when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test"))
+        .withColumn("split", splitRule)
         .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
-        .orderBy("lang", "split")
-    }, oracle =
-      """WITH h AS (
+        .orderBy("lang", "split"), oracle =
+      s"""WITH h AS (
         |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
         |b AS (
         |  SELECT doc_id, lang,
-        |    ((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 10 AS bucket
+        |    $OracleSplitBucket
         |  FROM h)
         |SELECT lang,
-        |       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
-        |            ELSE 'test' END AS split,
+        |       $OracleSplitCase,
         |       COUNT(*) AS n_docs
         |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
     // Decontamination (training-data pipeline op): flag corpus docs sharing
@@ -684,8 +705,7 @@ object TextStats {
       // The DuckDB oracle intersects the plain string grams; counts agree
       // absent a 64-bit collision (same discipline as dedup_ngram_jaccard).
       val grams = documents(s, d).select(col("doc_id"),
-        explode(graft.functions.TokenNgramHashes.token_ngram_hashes(
-          Dedup.tokenHashes(tokens(col("text"))), 8)).as("g"))
+        explode(wordNgramHashes(8)).as("g"))
       val bench = grams.filter(col("doc_id") < 50).select("g").distinct()
       val corpus = grams.filter(col("doc_id") >= 50)
       corpus.join(broadcast(bench), Seq("g"))
@@ -739,9 +759,8 @@ object TextStats {
         |      '\b(customer|dup)\b', '[TERM]', 'g')) AS INT) AS n_chars_scrubbed
         |FROM documents ORDER BY doc_id""".stripMargin),
     // Stratified sampling (training-data pipeline op): per-language keep
-    // rates applied as a pure function of doc_id (md5 digits 5-8, DISJOINT
-    // from sample_split's digits 1-4 so split and sample stay independent)
-    // — never rand(), so reruns/engines agree row-for-row and rates can be
+    // rates applied as a pure function of doc_id (the digits-5-8 draw) —
+    // never rand(), so reruns/engines agree row-for-row and rates can be
     // audited. 100 TB shape: one scan, the verdict is per-row arithmetic
     // with no shuffle before the final small report aggregation.
     Query("stratified_sample", (s, d) => {
@@ -757,16 +776,12 @@ object TextStats {
           sum(kept.cast("long")).as("n_kept"))
         .orderBy("lang")
     }, oracle =
-      // md5 digits 5-8 (disjoint from sample_split's 1-4); rates must match
-      // the Spark when-chain exactly.
-      """WITH h AS (
+      // rates must match the Spark when-chain exactly
+      s"""WITH h AS (
         |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
         |b AS (
         |  SELECT lang,
-        |    ((((CASE WHEN ord(hx[5:5]) >= 97 THEN ord(hx[5:5]) - 87 ELSE ord(hx[5:5]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[6:6]) >= 97 THEN ord(hx[6:6]) - 87 ELSE ord(hx[6:6]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[7:7]) >= 97 THEN ord(hx[7:7]) - 87 ELSE ord(hx[7:7]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[8:8]) >= 97 THEN ord(hx[8:8]) - 87 ELSE ord(hx[8:8]) - 48 END)) % 100 AS pct,
+        |    ${oracleMd5Fold(5)} % 100 AS pct,
         |    CASE WHEN lang = 'en' THEN 60
         |         WHEN lang IN ('es','de') THEN 30
         |         WHEN lang = 'zh' THEN 45
@@ -780,27 +795,13 @@ object TextStats {
     // concat-and-chunk — documents are laid out in a deterministic stream
     // per shard and cut into fixed 512-token blocks; a doc is addressed by
     // its (shard, stream offset, first/last block). 100 TB shape: the
-    // running sum is a window WITHIN a shard (shards = md5(doc_id) digits
-    // 1-4 folded % 8 here; thousands in production), never a global orderBy — the
-    // packing of each shard is independent, so parallelism scales with the
-    // shard count while the layout stays a pure function of doc ids.
+    // running sum is a window WITHIN a shard (8 shards here; thousands in
+    // production), never a global orderBy — the packing of each shard is
+    // independent, so parallelism scales with the shard count while the
+    // layout stays a pure function of doc ids.
     Query("pack_sequences", (s, d) => packedLayout(s, d).orderBy("doc_id"), oracle =
-      // Same md5 digits 1-4 fold as sample_split, % 8 for the shard; the
-      // running sum is a per-shard window (ROWS frame, exact BIGINT), and
-      // '//' is DuckDB's integer floor division.
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 8 AS INT) AS shard,
-        |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
-        |w AS (
-        |  SELECT doc_id, shard, n_tok,
-        |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
-        |  FROM t)
+      // '//' is DuckDB's integer floor division
+      s"""WITH $OraclePackedLayoutCtes
         |SELECT doc_id, shard, n_tok,
         |       stream_end - n_tok AS "offset",
         |       CAST((stream_end - n_tok) // 512 AS BIGINT) AS block_first,
@@ -831,20 +832,8 @@ object TextStats {
           expr("n_tokens * 1000000L DIV (n_blocks * 512)").as("fill_q6"),
           col("n_straddle"))
         .orderBy("shard"), oracle =
-      // same shard/stream CTEs as pack_sequences, aggregated per shard
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 8 AS INT) AS shard,
-        |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
-        |w AS (
-        |  SELECT doc_id, shard, n_tok,
-        |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
-        |  FROM t),
+      // the pack_sequences CTEs, aggregated per shard
+      s"""WITH $OraclePackedLayoutCtes,
         |lay AS (
         |  SELECT shard, n_tok,
         |         CAST((stream_end - n_tok) // 512 AS BIGINT) AS block_first,
@@ -923,8 +912,6 @@ object TextStats {
             .as("factor_q6"))
         .orderBy("lang")
     }, oracle =
-      // positions via range() over the split array — an independent bigram
-      // construction (the Spark plan windows with lead())
       // sqrt is IEEE correctly rounded in both engines, so w_q6 is exact;
       // everything downstream is integer // arithmetic
       """WITH c AS (
@@ -1047,10 +1034,7 @@ object TextStats {
     // (round 14) — the step between mix_epochs_schedule's per-source
     // epochs_q6 and an actual training shard list: each doc repeats
     // ⌊epochs⌋ times plus one more with probability frac(epochs),
-    // decided DETERMINISTICALLY from md5(doc_id) hex digits 29-32 (the
-    // ledger's next free range, opened here: a fresh id namespace so
-    // the draw is independent of the split/stratified/holdout/shard
-    // decisions on digits 1-8 and dsir's content buckets on 25-28).
+    // decided DETERMINISTICALLY by the doc's digits-29-32 draw.
     // The fractional draw is an exact integer cross-multiply —
     // u16·10⁶ < frac_q6·2¹⁶ — so both engines agree bit-for-bit; the
     // acceptance rate is the 2⁻¹⁶-dyadic floor of frac (bias ≤ 1.6e-5,
@@ -1063,19 +1047,16 @@ object TextStats {
         .select("doc_id", "lang", "n_repeats")
         .orderBy("doc_id"), oracle =
       // the same sched CTE (one spelling) joined onto docs; the fractional
-      // draw is the exact integer cross-multiply on md5 digits 29-32
+      // draw is the exact integer cross-multiply
       s"""WITH $MaterializeRepeatsCtes
          |SELECT doc_id, lang, n_repeats FROM rep
          |ORDER BY doc_id""".stripMargin),
     // SHARD the materialized instances (round 14b) — the last step to an
     // actual training shard list: each (doc, copy) instance lands in one
-    // of 8 shards by md5(doc_id||'#'||copy) hex digits 1-4 mod 8, so a
+    // of 8 shards by the digits-1-4 draw of 'doc_id#copy' mod 8, so a
     // document's repeats SPREAD across shards (an epoch-major layout
     // would put copy k of everything in shard k and shard sizes would
-    // inherit the fractional-draw skew). The hash input is a NEW domain —
-    // 'doc_id#copy', not the bare doc_id the md5-digit ledger partitions
-    // — so it collides with no ledger range by input disjointness (the
-    // etl_table_fingerprint precedent). The report is the per-shard
+    // inherit the fractional-draw skew). The report is the per-shard
     // balance audit (instances, distinct docs, chars) a capacity planner
     // reads before launching; the gate's hash match proves both engines
     // materialize AND shard identically. 100 TB: the explode is
@@ -1087,9 +1068,8 @@ object TextStats {
         .filter(col("n_repeats") >= 1)
         .withColumn("copy", explode(sequence(lit(1L), col("n_repeats"))))
       inst.withColumn("shard",
-          pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-            lit("#"), col("copy").cast("string"))), 1, 4), 16, 10)
-            .cast("long"), lit(8L)))
+          (md5Fold(concat(col("doc_id").cast("string"), lit("#"),
+            col("copy").cast("string")), 1) % 8).cast("long"))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_instances"),
           count_distinct(col("doc_id")).as("n_docs"),
@@ -1119,30 +1099,17 @@ object TextStats {
     // ~1.1e-9 across all types × SFs, ~6 orders above libm ulp noise —
     // PropertySpec pins it; q8 measured too tight at ~2.8e-12), so the
     // per-doc score Σ lp_q6 over its bigram INSTANCES is an
-    // order-independent exact long. 100 TB shape: bigram instances from
-    // one per-doc lead() window; the type table is vocab²-bounded and
+    // order-independent exact long. 100 TB shape: bigram instances expand
+    // map-side (bigramPairs); the type table is vocab²-bounded and
     // broadcast onto the instance stream; the doc sum is one
     // map-side-combinable agg keyed by doc_id. Docs shorter than 2 tokens
     // surface as n_bigrams = 0 / ll_q6 = 0 rather than dropping out.
     Query("perplexity_bigram_doc", (s, d) => {
-      // r17 optimization (guide §2.4, remove shuffles outright): bigram
-      // instances used to come from a per-doc lead() window — posexplode
-      // every token, hash-shuffle + sort the full token stream by
-      // (doc_id, pos), lead(1) — but adjacency is already explicit in the
-      // token ARRAY, so the identical pair multiset expands MAP-SIDE with
-      // zero exchanges (the basket_brand_pairs array-expansion precedent;
-      // array subscripts are 0-based, so pair i is (ts[i], ts[i+1])).
       // The instance table is checkpointed once for its three consumers
       // (c12, c1, the per-doc sum join) instead of re-deriving per
-      // consumer. Warm sf0.1 noop: 1.8-2.0 s → ~0.6 s.
-      val big = documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("ts"))
-        .select(col("doc_id"), explode(expr(
-          """transform(slice(ts, 1, size(ts) - 1),
-            |  (x, i) -> struct(x AS w1, ts[i + 1] AS w2))""".stripMargin))
-          .as("p"))
-        .select(col("doc_id"), col("p.w1"), col("p.w2"))
-        .localCheckpoint()
+      // consumer (r17, with the map-side pairs: warm sf0.1 noop
+      // 1.8-2.0 s → ~0.6 s).
+      val big = bigramPairs(documents(s, d)).localCheckpoint()
       val c12 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       val c1 = big.groupBy("w1").agg(count(lit(1)).as("c1"))
       val vocab = documents(s, d)
@@ -1197,7 +1164,7 @@ object TextStats {
     Query("text_chunk_overlap", (s, d) => {
       val W = 64; val S = 48
       documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
         .withColumn("n", size(col("toks")))
         .withColumn("n_chunks", when(col("n") <= W, lit(1))
           .otherwise(lit(1) + expr(s"(n - $W + ${S - 1}) div $S")))
@@ -1243,7 +1210,7 @@ object TextStats {
       val W = 64
       val wHash = Window.partitionBy("chunk_hash")
       documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
         .withColumn("n", size(col("toks")))
         .withColumn("n_chunks", expr(s"(n + ${W - 1}) div $W"))
         .withColumn("idx", explode(sequence(lit(0), col("n_chunks") - 1)))
@@ -1284,7 +1251,7 @@ object TextStats {
     // decontamination → deterministic split — ending in the (lang, split)
     // dataset-card report. Every stage reuses the SAME shared definition
     // its standalone query uses (qualityRule, sha2 min-per-hash, broadcast
-    // 8-gram benchmark set, md5Fold split), so the pipeline is exactly the
+    // 8-gram benchmark set, splitRule), so the pipeline is exactly the
     // composition of the audited operators. 100 TB shape: three scans of
     // the corpus (stats+gate, gram explode, report), one window shuffle
     // keyed by content hash, one broadcast semi-join — no quadratic stage.
@@ -1299,8 +1266,7 @@ object TextStats {
         .filter(col("cc_rn") === 1).drop("cc_h", "cc_rn")
       // stage 3: decontamination vs the benchmark docs (0-49, full corpus —
       // a benchmark doc that failed quality is still contamination)
-      val grams8 = graft.functions.TokenNgramHashes.token_ngram_hashes(
-        Dedup.tokenHashes(tokens(col("text"))), 8)
+      val grams8 = wordNgramHashes(8)
       val bench = docs.filter(col("doc_id") < 50)
         .select(explode(grams8).as("g")).distinct()
       val corpusGrams = deduped.filter(col("doc_id") >= 50)
@@ -1309,11 +1275,9 @@ object TextStats {
         .select("doc_id").distinct()
       val clean = deduped.filter(col("doc_id") >= 50)
         .join(contaminated, Seq("doc_id"), "left_anti")
-      // stage 4: deterministic split (same md5 digits 1-4 as sample_split)
-      val bucket = md5Fold(col("doc_id"), 1) % 10
+      // stage 4: deterministic split
       clean
-        .withColumn("split",
-          when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test"))
+        .withColumn("split", splitRule)
         .groupBy("lang", "split")
         .agg(count(lit(1)).as("n_docs"),
           sum(size(tokens(col("text"))).cast("long")).as("sum_tokens"))
@@ -1322,18 +1286,9 @@ object TextStats {
       // Each CTE replays the corresponding standalone oracle verbatim:
       // quality rule stack (text_quality_filter), sha256 min-per-hash
       // (dedup_exact_text), string 8-grams vs the engine's 64-bit window
-      // hashes (text_decontaminate — equal absent a collision), md5 digit
-      // fold split (sample_split).
-      """WITH q AS (
-        |  SELECT doc_id,
-        |         len(str_split(text, ' ')) AS n_tok,
-        |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
-        |           / len(str_split(text, ' ')) AS mean_len,
-        |         len(list_filter(str_split(text, ' '),
-        |              t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS n_stop,
-        |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-        |           / length(text) AS symbol_ratio
-        |  FROM documents),
+      // hashes (text_decontaminate — equal absent a collision), the split
+      // (sample_split).
+      s"""WITH $OracleQualityCte,
         |kept AS (
         |  SELECT d.* FROM documents d JOIN q USING (doc_id)
         |  WHERE NOT (q.n_tok < 20 OR q.n_tok > 5000 OR q.mean_len < 2.0
@@ -1358,14 +1313,10 @@ object TextStats {
         |  WHERE doc_id >= 50 AND doc_id NOT IN (SELECT doc_id FROM contaminated)),
         |b AS (
         |  SELECT doc_id, lang, text,
-        |    ((((CASE WHEN ord(hx[1:1]) >= 97 THEN ord(hx[1:1]) - 87 ELSE ord(hx[1:1]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[2:2]) >= 97 THEN ord(hx[2:2]) - 87 ELSE ord(hx[2:2]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[3:3]) >= 97 THEN ord(hx[3:3]) - 87 ELSE ord(hx[3:3]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[4:4]) >= 97 THEN ord(hx[4:4]) - 87 ELSE ord(hx[4:4]) - 48 END)) % 10 AS bucket
+        |    $OracleSplitBucket
         |  FROM (SELECT doc_id, lang, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM clean))
         |SELECT lang,
-        |       CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
-        |            ELSE 'test' END AS split,
+        |       $OracleSplitCase,
         |       COUNT(*) AS n_docs,
         |       CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS sum_tokens
         |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
@@ -1746,30 +1697,7 @@ object TextStats {
       // numeric literal CAST to DOUBLE (a bare 2.2 is DECIMAL in DuckDB and
       // would run the formula in decimal arithmetic — the §7.4c trap);
       // fixed-order c1+c2+c3 addition mirrors the pivoted Spark aggregate
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
-        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
-        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |            + CAST(1.0 AS DOUBLE))
-        |         * (tf * CAST(2.2 AS DOUBLE))
-        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE)
-        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
-        |agg AS (
-        |  SELECT doc_id,
-        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
-        |           4) AS score
-        |  FROM contrib GROUP BY doc_id)
+      s"""WITH ${oracleBm25("agg")}
         |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank,
         |       doc_id, score
         |FROM agg ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
@@ -1801,43 +1729,17 @@ object TextStats {
             .as("rrf_q9"))
         .orderBy(desc("rrf_q9"), asc("doc_id")).limit(15)
     }, oracle =
-      // the two component rankings replay their own proven oracles (bm25
-      // CTEs above, the quantized dot from knn_quantized_topk); the fusion
+      // the two component rankings replay their own proven oracles (the
+      // bm25 CTEs, the quantized dot of knn_quantized_topk); the fusion
       // itself is pure integer arithmetic — // and DIV agree on positives
-      s"""WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
-        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
-        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |            + CAST(1.0 AS DOUBLE))
-        |         * (tf * CAST(2.2 AS DOUBLE))
-        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE)
-        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
-        |bm AS (
-        |  SELECT doc_id,
-        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
-        |           4) AS score
-        |  FROM contrib GROUP BY doc_id),
+      s"""WITH ${oracleBm25("bm")},
         |atop AS (
         |  SELECT doc_id,
         |         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
         |           AS r_text
         |  FROM (SELECT doc_id, score FROM bm
         |        ORDER BY score DESC, doc_id LIMIT 20)),
-        |${Similarity.OracleInt8Vectors},
-        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
-        |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
-        |       FROM q, p WHERE q.vec_id <> 0),
+        |$OracleInt8ProbeScores,
         |btop AS (
         |  SELECT vec_id AS doc_id,
         |         CAST(row_number() OVER (ORDER BY score DESC, vec_id) AS INT)
@@ -1894,30 +1796,7 @@ object TextStats {
       // the two component scorers replay their proven oracles; quantization
       // is the floor(s*1e4 + 0.5) half-up idiom (identical doubles in both
       // engines), normalization and blend are pure integer arithmetic
-      s"""WITH tok AS (
-        |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
-        |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
-        |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.token,
-        |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
-        |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |            + CAST(1.0 AS DOUBLE))
-        |         * (tf * CAST(2.2 AS DOUBLE))
-        |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
-        |            + CAST(0.75 AS DOUBLE)
-        |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
-        |bm AS (
-        |  SELECT doc_id,
-        |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
-        |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
-        |           4) AS score
-        |  FROM contrib GROUP BY doc_id),
+      s"""WITH ${oracleBm25("bm")},
         |atop AS (
         |  SELECT doc_id,
         |         CAST(floor(score * 10000 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS t
@@ -1929,10 +1808,7 @@ object TextStats {
         |                   THEN (t - tmin) * 1000000 // (tmax - tmin)
         |                   ELSE 1000000 END AS nt_q6
         |       FROM atop, ts),
-        |${Similarity.OracleInt8Vectors},
-        |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
-        |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
-        |       FROM q, p WHERE q.vec_id <> 0),
+        |$OracleInt8ProbeScores,
         |btop AS (
         |  SELECT vec_id AS doc_id, score AS v
         |  FROM (SELECT vec_id, score FROM vs
@@ -1954,30 +1830,23 @@ object TextStats {
     // (p_num = c12+1, p_den = c1+V): the full estimate with zero float
     // discipline — consumers divide at read time; the count table is the
     // artifact that matters at scale anyway. Top-30 bigrams by count with
-    // the (w1, w2) total-order tiebreak. 100 TB shape: ordered bigrams
-    // from one lead() window per doc_id (high-cardinality partition key),
-    // counts are map-side-combinable long aggs on the bigram key, V rides
-    // as a broadcast 1-row aggregate.
+    // the (w1, w2) total-order tiebreak. 100 TB shape: bigram instances
+    // expand map-side (bigramPairs), counts are map-side-combinable long
+    // aggs on the bigram key, V rides as a broadcast 1-row aggregate.
     Query("text_bigram_lm", (s, d) => {
-      val toks = documents(s, d).select(col("doc_id"),
-        posexplode(tokens(col("text"))).as(Seq("pos", "w")))
-      val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-      val big = toks.withColumn("w2", lead(col("w"), 1).over(byDoc))
-        .filter(col("w2").isNotNull)
-        .select(col("w").as("w1"), col("w2"))
+      val docs = documents(s, d)
+      val big = bigramPairs(docs)
       val c12 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       val c1 = big.groupBy("w1").agg(count(lit(1)).as("c1"))
-      val vocab = toks.agg(count_distinct(col("w")).as("v"))
+      val vocab = docs.select(explode(tokens(col("text"))).as("w"))
+        .agg(count_distinct(col("w")).as("v"))
       c12.join(c1, "w1").crossJoin(broadcast(vocab))
         .select(col("w1"), col("w2"), col("c12"),
           (col("c12") + 1).as("p_num"),
           (col("c1") + col("v")).as("p_den"))
         .orderBy(desc("c12"), asc("w1"), asc("w2")).limit(30)
     }, oracle =
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |big AS (
-        |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
-        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
+      s"""WITH $OracleBigramCtes,
         |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
         |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
         |v AS (SELECT COUNT(DISTINCT w) AS v
@@ -1994,18 +1863,13 @@ object TextStats {
     // PageRank recipe) used only for the total order — zero float
     // discipline. c12 >= 5 is the standard collocation min-count cut,
     // applied before any join so the pair table shrinks first. 100 TB
-    // shape: identical to text_bigram_lm (one lead() window per doc,
+    // shape: identical to text_bigram_lm (map-side bigram instances,
     // map-side-combinable counts); marginals c1/c2 join back on the
     // skew-free token keys; N rides as a broadcast 1-row aggregate.
     // (lift_num·1e6 needs N·c12·1e6 < 2^63 — at corpus scale swap the
     // 1e6 quantizer for DECIMAL(38) or rank on log-space doubles.)
     Query("collocation_pmi", (s, d) => {
-      val toks = documents(s, d).select(col("doc_id"),
-        posexplode(tokens(col("text"))).as(Seq("pos", "w")))
-      val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-      val big = toks.withColumn("w2", lead(col("w"), 1).over(byDoc))
-        .filter(col("w2").isNotNull)
-        .select(col("w").as("w1"), col("w2"))
+      val big = bigramPairs(documents(s, d))
       val n = big.agg(count(lit(1)).as("n"))
       val c12 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
         .filter(col("c12") >= 5)
@@ -2032,10 +1896,7 @@ object TextStats {
       // lift as an exact rational + the 1e6 fixed-point quantization used
       // for the order — DuckDB's // and Spark's DIV agree on non-negative
       // integer floor division
-      """WITH d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |big AS (
-        |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
-        |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
+      s"""WITH $OracleBigramCtes,
         |n AS (SELECT COUNT(*) AS n FROM big),
         |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big
         |        GROUP BY 1, 2 HAVING COUNT(*) >= 5),
@@ -2047,9 +1908,7 @@ object TextStats {
         |ORDER BY lift_q6 DESC, w1, w2 LIMIT 25""".stripMargin),
     // Importance-weighted sampling (training-data pipeline op): per-doc keep
     // rate proportional to length (clamped 10-90%), applied as a pure
-    // function of doc_id — md5 digits 9-12, disjoint from sample_split's
-    // 1-4 and stratified_sample's 5-8, so all three decisions stay
-    // independent. Length buckets stand in for the model-scored quality
+    // function of doc_id (the digits-9-12 draw). Length buckets stand in for the model-scored quality
     // weights a production pipeline would use; the mechanism (deterministic
     // hash vs per-row rate, never rand()) is the point. Integer floor
     // division only — a double→int cast would round in DuckDB but truncate
@@ -2063,17 +1922,14 @@ object TextStats {
           sum(when(kept, col("n_chars")).otherwise(0).cast("long")).as("kept_chars"))
         .orderBy("lang")
     }, oracle =
-      // md5 digits 9-12 (disjoint from 1-4 split and 5-8 stratified); floor
-      // division for the rate (CAST would round in DuckDB, truncate in Spark)
-      """WITH h AS (
+      // floor division for the rate (CAST would round in DuckDB, truncate
+      // in Spark)
+      s"""WITH h AS (
         |  SELECT doc_id, lang, n_chars,
         |         md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
         |b AS (
         |  SELECT lang, n_chars,
-        |    ((((CASE WHEN ord(hx[9:9]) >= 97 THEN ord(hx[9:9]) - 87 ELSE ord(hx[9:9]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[10:10]) >= 97 THEN ord(hx[10:10]) - 87 ELSE ord(hx[10:10]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[11:11]) >= 97 THEN ord(hx[11:11]) - 87 ELSE ord(hx[11:11]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[12:12]) >= 97 THEN ord(hx[12:12]) - 87 ELSE ord(hx[12:12]) - 48 END)) % 100 AS pct,
+        |    ${oracleMd5Fold(9)} % 100 AS pct,
         |    least(90, greatest(10, CAST(floor(n_chars / 20.0) AS BIGINT))) AS rate
         |  FROM h)
         |SELECT lang, COUNT(*) AS n_total,
@@ -2116,9 +1972,8 @@ object TextStats {
     // is taken on the USER, not the event, so every event of a user lands
     // in the same split — a per-event hash would leak a held-out user's
     // behavior into training, the classic eval-contamination bug that
-    // per-doc sample_split cannot prevent for grouped data. md5 digits
-    // 17-20 (next free range; 1-4 split/pack, 5-8 stratified, 9-12
-    // weighted, 13-16 negatives), ~20% of users held out.
+    // per-doc sample_split cannot prevent for grouped data. ~20% of users
+    // held out by the user's digits-17-20 draw.
     Query("sample_user_holdout", (s, d) => {
       val hold = md5Fold(col("user_id"), 17) % 100 < 20
       events(s, d)
@@ -2129,17 +1984,13 @@ object TextStats {
           decSum(col("value")).as("sum_value"))
         .orderBy("split")
     }, oracle =
-      // md5 hex digits 17-20 of the USER id — the same fold discipline as
-      // pack_sequences (digits 1-4); split is a pure function of user_id
-      """WITH h AS (
+      // split is a pure function of user_id
+      s"""WITH h AS (
         |  SELECT user_id, value, md5(CAST(user_id AS VARCHAR)) AS hx
         |  FROM events),
         |b AS (
         |  SELECT user_id, value,
-        |    ((((CASE WHEN ord(hx[17:17]) >= 97 THEN ord(hx[17:17]) - 87 ELSE ord(hx[17:17]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[18:18]) >= 97 THEN ord(hx[18:18]) - 87 ELSE ord(hx[18:18]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[19:19]) >= 97 THEN ord(hx[19:19]) - 87 ELSE ord(hx[19:19]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[20:20]) >= 97 THEN ord(hx[20:20]) - 87 ELSE ord(hx[20:20]) - 48 END)) % 100 AS pct
+        |    ${oracleMd5Fold(17)} % 100 AS pct
         |  FROM h)
         |SELECT CASE WHEN pct < 20 THEN 'holdout' ELSE 'train' END AS split,
         |       COUNT(DISTINCT user_id) AS n_users,
@@ -2148,9 +1999,8 @@ object TextStats {
         |FROM b GROUP BY 1 ORDER BY split""".stripMargin),
     // A/B experiment readout (round 6) — deterministic variant assignment
     // + funnel conversion, the analysis pass every event pipeline ends in.
-    // Assignment hashes the USER (md5 digits 21-24 — next free range;
-    // 17-20 is sample_user_holdout), never the event, for the same
-    // leakage reason as the holdout split; conversion = a purchase event
+    // Assignment hashes the USER (abVariant), never the event, for the
+    // same leakage reason as the holdout split; conversion = a purchase event
     // AFTER the user's first click (event_id order — the fixture's
     // ns-timestamp ordering trap, §7.4e). The conversion rate is the
     // EXACT RATIONAL (n_converted, n_clickers) — no division, no floats;
@@ -2173,10 +2023,9 @@ object TextStats {
             .as("n_converted"))
         .orderBy("variant")
     }, oracle =
-      // md5 hex digits 21-24 of the USER id; conversion compares event_ids
-      // (never the ns timestamps); the rate is the exact rational
-      // (n_converted, n_clickers)
-      """WITH per AS (
+      // conversion compares event_ids (never the ns timestamps); the rate
+      // is the exact rational (n_converted, n_clickers)
+      s"""WITH per AS (
         |  SELECT user_id,
         |         MIN(CASE WHEN event_type = 'click' THEN event_id END)
         |           AS first_click,
@@ -2187,10 +2036,7 @@ object TextStats {
         |  SELECT *, md5(CAST(user_id AS VARCHAR)) AS hx FROM per),
         |v AS (
         |  SELECT first_click, last_purchase,
-        |    CASE WHEN ((((CASE WHEN ord(hx[21:21]) >= 97 THEN ord(hx[21:21]) - 87 ELSE ord(hx[21:21]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[22:22]) >= 97 THEN ord(hx[22:22]) - 87 ELSE ord(hx[22:22]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[23:23]) >= 97 THEN ord(hx[23:23]) - 87 ELSE ord(hx[23:23]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[24:24]) >= 97 THEN ord(hx[24:24]) - 87 ELSE ord(hx[24:24]) - 48 END)) % 2 = 0
+        |    CASE WHEN ${oracleMd5Fold(21)} % 2 = 0
         |      THEN 'A' ELSE 'B' END AS variant
         |  FROM h)
         |SELECT variant, COUNT(*) AS n_users,
@@ -2270,17 +2116,11 @@ object TextStats {
             .as("chi2_q6"))
         .withColumn("srm_detected", col("chi2_q6") > 3841459L)
     }, oracle =
-      // the same digits-21-24 fold over DISTINCT users; chi2 as the exact
+      // the variant draw over DISTINCT users; chi2 as the exact
       // two-equal-cell rational with the q6 critical-value literal
-      {
-      def hv(i: Int) =
-        s"(CASE WHEN ord(hx[$i:$i]) >= 97 THEN ord(hx[$i:$i]) - 87" +
-          s" ELSE ord(hx[$i:$i]) - 48 END)"
-      val fold = s"(((${hv(21)} * 16 + ${hv(22)}) * 16 + ${hv(23)})" +
-        s" * 16 + ${hv(24)})"
       s"""WITH u AS (SELECT DISTINCT user_id FROM events),
          |h AS (SELECT md5(CAST(user_id AS VARCHAR)) AS hx FROM u),
-         |v AS (SELECT CASE WHEN $fold % 2 = 0 THEN 'A' ELSE 'B' END
+         |v AS (SELECT CASE WHEN ${oracleMd5Fold(21, " + ")} % 2 = 0 THEN 'A' ELSE 'B' END
          |        AS variant FROM h),
          |c AS (SELECT
          |        SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS n_a,
@@ -2291,8 +2131,7 @@ object TextStats {
          |            // (n_a + n_b) AS BIGINT) AS chi2_q6,
          |       CAST(n_a - n_b AS HUGEINT) * (n_a - n_b) * 1000000
          |         // (n_a + n_b) > 3841459 AS srm_detected
-         |FROM c""".stripMargin
-    }),
+         |FROM c""".stripMargin),
     // Mix-diversity profile per language: Gini impurity and Shannon
     // entropy of the source distribution — the "is this slice dominated by
     // one crawler?" diagnostic next to corpus_mix_rebalance. Gini is EXACT
@@ -2431,8 +2270,8 @@ object TextStats {
         |       CAST(SUM(CASE WHEN rn <= 5 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
         |FROM r GROUP BY source ORDER BY source""".stripMargin),
     // Deterministic negative-pair sampling (contrastive-training op): each
-    // anchor doc pairs with a pseudo-random partner — md5 digits 13-16 mod
-    // the corpus size (disjoint from digits 1-4/5-8/9-12), never rand(),
+    // anchor doc pairs with a pseudo-random partner — the digits-13-16 draw
+    // mod the corpus size, never rand(),
     // so the pairing is reproducible and auditable. The corpus size
     // arrives as a broadcast 1-row cross join; the partner fetch is a
     // plain equi join on the computed id. same_lang marks in-language vs
@@ -2451,15 +2290,11 @@ object TextStats {
           (col("lang") === col("neg_lang")).as("same_lang"))
         .orderBy("doc_id")
     }, oracle =
-      // md5 digits 13-16 (disjoint from 1-4, 5-8, 9-12)
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents),
         |a AS (
         |  SELECT doc_id, lang,
-        |    CAST(((((CASE WHEN ord(hx[13:13]) >= 97 THEN ord(hx[13:13]) - 87 ELSE ord(hx[13:13]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[14:14]) >= 97 THEN ord(hx[14:14]) - 87 ELSE ord(hx[14:14]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[15:15]) >= 97 THEN ord(hx[15:15]) - 87 ELSE ord(hx[15:15]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[16:16]) >= 97 THEN ord(hx[16:16]) - 87 ELSE ord(hx[16:16]) - 48 END))
+        |    CAST(${oracleMd5Fold(13)}
         |      % (SELECT COUNT(*) FROM documents) AS BIGINT) AS neg_id
         |  FROM h)
         |SELECT a.doc_id, a.neg_id, a.lang = b.lang AS same_lang
@@ -2632,8 +2467,7 @@ object TextStats {
     // vocabulary-sized broadcast. jaccard_q6 is exact integer fixed point.
     Query("corpus_overlap_ngram", (s, d) => {
       val grams = documents(s, d).select(col("source"),
-          explode(graft.functions.TokenNgramHashes.token_ngram_hashes(
-            Dedup.tokenHashes(tokens(col("text"))), 3)).as("g"))
+          explode(wordNgramHashes(3)).as("g"))
         .distinct()
       val counts = grams.groupBy("source").agg(count(lit(1)).as("n"))
       val a = grams.select(col("source").as("src_a"), col("g"))
@@ -2715,10 +2549,10 @@ object TextStats {
       // INDEPENDENT construction: rank()-1 over the raw docs per language
       // (the engine derives strict-greater counts from the (lang, fl_q6)
       // histogram instead — the gate cross-checks the two)
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT doc_id, lang,
         |         CAST(len(list_filter(str_split(text, ' '),
-        |                t -> list_contains(['the','and','of','to','in','el','la','de','que','y','der','die','und','das','ist','le','et','les','des'], t))) AS BIGINT)
+        |                t -> list_contains($OracleStopwords, t))) AS BIGINT)
         |           * 1000000 // len(str_split(text, ' ')) AS fl_q6
         |  FROM documents),
         |r AS (
@@ -2734,9 +2568,7 @@ object TextStats {
     // Resampling (Xie et al. 2023) — score every raw doc by how
     // target-like its hashed-ngram feature distribution is, then sample
     // proportionally. Features: unigram occurrences hashed into B = 256
-    // buckets (md5 hex digits 25-28 of the TOKEN — a content namespace,
-    // disjoint by construction from the id-keyed sampling ranges 1-4/5-8/
-    // 21-24, and 25-28 is the ledger's next free range). Target
+    // buckets (the digits-25-28 draw of the TOKEN). Target
     // distribution = the lang='en' slice; raw = the whole corpus. Bucket
     // log-ratio lr(b) = ln((n_t(b)+1)/(T+B)) − ln((n_r(b)+1)/(R+B))
     // (add-one smoothing) is computed as ONE ln of the exact rational
@@ -2784,20 +2616,16 @@ object TextStats {
           count(lit(1)).as("n_tok"), sum(col("lr_q8")).as("dsir_q8"))
         .orderBy("doc_id")
     }, oracle =
-      // token-bucket fold replays md5Fold at digits 25-28 (the sample_split
-      // idiom, TOKEN namespace); the bucket log-ratio is one ln of an exact
+      // the token-bucket draw; the bucket log-ratio is one ln of an exact
       // rational, half-up quantized to q8 BEFORE the per-doc integer sum
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, lang, unnest(str_split(text, ' ')) AS tok
         |  FROM documents),
         |h AS (
         |  SELECT doc_id, lang, md5(tok) AS hx FROM toks),
         |bk AS (
         |  SELECT doc_id, lang,
-        |    ((((CASE WHEN ord(hx[25:25]) >= 97 THEN ord(hx[25:25]) - 87 ELSE ord(hx[25:25]) - 48 END) * 16
-        |      + (CASE WHEN ord(hx[26:26]) >= 97 THEN ord(hx[26:26]) - 87 ELSE ord(hx[26:26]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[27:27]) >= 97 THEN ord(hx[27:27]) - 87 ELSE ord(hx[27:27]) - 48 END)) * 16
-        |      + (CASE WHEN ord(hx[28:28]) >= 97 THEN ord(hx[28:28]) - 87 ELSE ord(hx[28:28]) - 48 END)) % 256 AS b
+        |    ${oracleMd5Fold(25)} % 256 AS b
         |  FROM h),
         |counts AS (
         |  SELECT b, SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_t,
@@ -2815,6 +2643,112 @@ object TextStats {
         |FROM bk JOIN lr USING (b)
         |GROUP BY bk.doc_id ORDER BY bk.doc_id""".stripMargin)
   )
+
+  /** Hex digit i (1-based) of the DuckDB md5 hex column `hx`, as its
+    * value 0-15. */
+  private def oracleHexDigit(i: Int): String =
+    s"(CASE WHEN ord(hx[$i:$i]) >= 97 THEN ord(hx[$i:$i]) - 87 " +
+      s"ELSE ord(hx[$i:$i]) - 48 END)"
+
+  /** DuckDB spelling of [[md5Fold]] over the md5 hex column `hx`: digits
+    * [from, from+3] folded base 16, one digit per line unless `plus` joins
+    * them on one. */
+  private def oracleMd5Fold(from: Int, plus: String = "\n      + "): String =
+    (from + 1 to from + 3).foldLeft(s"(((${oracleHexDigit(from)}")(
+      (acc, i) => s"$acc * 16$plus${oracleHexDigit(i)})")
+
+  /** A word list as a DuckDB list literal. */
+  private def sqlList(words: Iterable[String]): String =
+    words.map(w => s"'$w'").mkString("[", ",", "]")
+
+  /** The [[qualityStats]] stopword lexicon (the distinct marker words). */
+  private val OracleStopwords: String =
+    sqlList(LangMarkers.values.flatten.toSeq.distinct)
+
+  /** The marker-hit columns `h_<lang>` of [[predictedLang]], one per line. */
+  private val OracleLangHits: String = LangMarkers.map { case (lang, words) =>
+    s"    len(list_filter(str_split(text,' '), x -> list_contains(" +
+      s"${sqlList(words)}, x))) AS h_$lang"
+  }.mkString(",\n")
+
+  /** DuckDB spelling of [[qualityStats]] as the CTE
+    * `q(doc_id, n_tok, mean_len, n_stop, symbol_ratio)`. */
+  private val OracleQualityCte: String =
+    s"""q AS (
+       |  SELECT doc_id,
+       |         len(str_split(text, ' ')) AS n_tok,
+       |         CAST(list_aggregate(list_transform(str_split(text, ' '), t -> length(t)), 'sum') AS DOUBLE)
+       |           / len(str_split(text, ' ')) AS mean_len,
+       |         len(list_filter(str_split(text, ' '),
+       |              t -> list_contains($OracleStopwords, t))) AS n_stop,
+       |         CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+       |           / length(text) AS symbol_ratio
+       |  FROM documents)""".stripMargin
+
+  /** DuckDB spelling of [[splitRule]]: the bucket column over `hx`, and
+    * the CASE that names its split. */
+  private val OracleSplitBucket: String = s"${oracleMd5Fold(1)} % 10 AS bucket"
+  private val OracleSplitCase: String =
+    """CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
+      |            ELSE 'test' END AS split""".stripMargin
+
+  /** DuckDB spelling of [[packedLayout]] as CTEs `t` (shard, n_tok) and
+    * `w` (the per-shard running stream_end). */
+  private val OraclePackedLayoutCtes: String =
+    s"""t AS (
+       |  SELECT doc_id,
+       |    CAST(${oracleMd5Fold(1)} % 8 AS INT) AS shard,
+       |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok
+       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)),
+       |w AS (
+       |  SELECT doc_id, shard, n_tok,
+       |    CAST(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS stream_end
+       |  FROM t)""".stripMargin
+
+  /** DuckDB spelling of [[bm25Top20]]'s scores: the tok … contrib CTEs,
+    * then `<score>(doc_id, score)` with the pivoted c1+c2+c3 sum. */
+  private def oracleBm25(score: String): String =
+    s"""tok AS (
+       |  SELECT doc_id, unnest(str_split(text, ' ')) AS token FROM documents),
+       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+       |corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS n_tok FROM dl),
+       |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok
+       |       WHERE token IN ('join','filter','stream') GROUP BY doc_id, token),
+       |df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
+       |contrib AS (
+       |  SELECT tf.doc_id, tf.token,
+       |         ln((CAST(n_docs AS DOUBLE) - df + CAST(0.5 AS DOUBLE))
+       |            / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+       |            + CAST(1.0 AS DOUBLE))
+       |         * (tf * CAST(2.2 AS DOUBLE))
+       |         / (tf + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE)
+       |            + CAST(0.75 AS DOUBLE)
+       |              * (CAST(dl.dl AS DOUBLE) * n_docs) / n_tok)) AS c
+       |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN corpus),
+       |$score AS (
+       |  SELECT doc_id,
+       |         round(coalesce(max(CASE WHEN token = 'join' THEN c END), CAST(0 AS DOUBLE))
+       |             + coalesce(max(CASE WHEN token = 'filter' THEN c END), CAST(0 AS DOUBLE))
+       |             + coalesce(max(CASE WHEN token = 'stream' THEN c END), CAST(0 AS DOUBLE)),
+       |           4) AS score
+       |  FROM contrib GROUP BY doc_id)""".stripMargin
+
+  /** DuckDB spelling of `Similarity.quantizedScores`: the int8 vectors,
+    * the probe `p` (vec 0) and `vs(vec_id, score)`. */
+  private val OracleInt8ProbeScores: String =
+    s"""${Similarity.OracleInt8Vectors},
+       |p AS (SELECT qv AS pv FROM q WHERE vec_id = 0),
+       |vs AS (SELECT q.vec_id, CAST(list_dot_product(q.qv, p.pv) AS BIGINT) AS score
+       |       FROM q, p WHERE q.vec_id <> 0)""".stripMargin
+
+  /** DuckDB spelling of [[bigramPairs]] without doc_id: `d` (token lists)
+    * and `big(w1, w2)`. */
+  private val OracleBigramCtes: String =
+    """d AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      |big AS (
+      |  SELECT ws[CAST(i AS INT)] AS w1, ws[CAST(i AS INT) + 1] AS w2
+      |  FROM d, UNNEST(range(1, len(ws))) AS t(i))""".stripMargin
 
   /** The bpeLearn recurrence as a DuckDB CTE prefix (words → v0 → … → v8
     * with per-round b$k argmax and m$k merge rows), shared by BOTH bpe
@@ -2880,14 +2814,11 @@ object TextStats {
     * interpolated into both the dedup and the calibration oracles (one
     * SQL definition of the fingerprint, mirroring the shared Scala
     * builder). ((...(d1·16+d2)·16...)+d12): the 12-hex-digit fold of
-    * md5(g), matching Spark's conv(substring(md5(g),1,12),16,10); the
-    * fold seeds in BIGINT — 12 hex digits overflow INT32 arithmetic. */
+    * md5(g), matching Spark's base-16 conversion of the same 12 digits;
+    * the fold seeds in BIGINT — 12 hex digits overflow INT32 arithmetic. */
   private val PhashOracleCtes: String = {
-    def hexDigit(i: Int) =
-      s"(CASE WHEN ord(hx[$i:$i]) >= 97 THEN ord(hx[$i:$i]) - 87 " +
-        s"ELSE ord(hx[$i:$i]) - 48 END)"
-    val fold = (2 to 12).foldLeft(s"CAST(${hexDigit(1)} AS BIGINT)")(
-      (acc, i) => s"($acc * 16 + ${hexDigit(i)})")
+    val fold = (2 to 12).foldLeft(s"CAST(${oracleHexDigit(1)} AS BIGINT)")(
+      (acc, i) => s"($acc * 16 + ${oracleHexDigit(i)})")
     s"""pay AS (SELECT doc_id, text[1:64] AS p FROM documents),
        |g AS (
        |  SELECT doc_id,
