@@ -68,6 +68,15 @@ object ClickGraph {
         greatest(col("prev"), col("page")).as("v"))
       .distinct()
 
+  /** [[und]] checkpointed for the triangle keys, whose degree table has
+    * several consumers. A checkpoint forgets that u and v are never null,
+    * so the filter after it states that again: otherwise a join on u
+    * infers isnotnull(u) into its own copy of the degree aggregation
+    * only, and that copy shuffles apart from the others. */
+  def undCheckpoint(s: SparkSession, d: String): DataFrame =
+    und(s, d).localCheckpoint()
+      .filter(col("u").isNotNull && col("v").isNotNull)
+
   // ---- the SAME derivations for the DuckDB oracles ----------------------
   // One spelling, interpolated into every graph oracle: `ev` mirrors
   // clicks(), `seq`+`und` mirror und(), `adj` is the symmetric adjacency

@@ -3987,7 +3987,7 @@ object TierCWindow {
       // graph_clustering_coeff's per-node corner counts; checkpointed
       // (r17 optimization) for the same reason as there: five consumers
       // otherwise re-derive the edge list from raw events
-      val und = ClickGraph.und(s, d).localCheckpoint()
+      val und = ClickGraph.undCheckpoint(s, d)
       val deg = Graph.degrees(und)
       val tri = graft.operators.Triangles.enumerate(und, deg)
       val totals = und.agg(count(lit(1)).as("n_edges")).crossJoin(
@@ -4034,7 +4034,7 @@ object TierCWindow {
       // orientation join and wedge-closing semi-join — each re-ran
       // the events scan + per-user window + distinct without the lineage
       // cut (the graph_modularity precedent)
-      val und = ClickGraph.und(s, d).localCheckpoint()
+      val und = ClickGraph.undCheckpoint(s, d)
       val deg = Graph.degrees(und)
       val corners = graft.operators.Triangles.enumerate(und, deg)
         .select(explode(array(col("a"), col("b"), col("c"))).as("node"))

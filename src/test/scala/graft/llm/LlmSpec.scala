@@ -241,13 +241,10 @@ class LlmSpec extends SparkSpec {
   }
 
   test("adaptive cell count: exactly 8 on every fixture size, ~sqrt(n)/8 beyond") {
-    import spark.implicits._
     // the fixture-stability claim the oracle parity rests on: K = 8 for
     // every n <= 4096 (all driver SFs), so adaptive K never changes
     // committed outputs; beyond, K tracks ceil(sqrt(n))/8
-    def kOf(n: Int): Int = Similarity.adaptiveCellCount(
-      (0 until n).map(i => (i.toLong, Array(0.1f), 0L))
-        .toDF("vec_id", "embedding", "label"))
+    def kOf(n: Int): Int = Similarity.adaptiveCellCount(n.toLong)
     for (n <- Seq(1, 8, 500, 2000, 4096))
       assert(kOf(n) == 8, s"K must stay 8 at n=$n (fixture stability)")
     // first n with ceil(sqrt(n)) DIV 8 = 9 is 71^2 + 1 = 5042 — the
