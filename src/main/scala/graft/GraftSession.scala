@@ -192,6 +192,13 @@ object GraftSession {
       // per read, so query functions never write the session's conf)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // local files without a forked chmod/readlink per write (see
+      // graft.core.ForkFreeRawLocalFileSystem): one class for the
+      // FileSystem API, one for FileContext (Spark's checkpoint logs)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.core.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.core.ForkFreeLocalFs].getName)
 
   def build(): SparkSession = builder().getOrCreate()
 

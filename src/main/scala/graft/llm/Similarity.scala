@@ -30,7 +30,10 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorOps.dot_product(a, b)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
+  /** The L2 norm as a divisor: null for an all-zero vector (a padding
+    * row, a failed encode), so its cosine is null and ranks last instead
+    * of raising DIVIDE_BY_ZERO under ANSI mode. */
+  def norm(a: Column): Column = nullif(sqrt(dot(a, a)), lit(0.0))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
@@ -708,7 +711,7 @@ object Similarity {
       k: Int = 8, iters: Int = 2): (DataFrame, DataFrame) = {
     val unit = embeddings(s, d)
       .withColumn("ed", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(dot(col("ed"), col("ed"))))
+      .withColumn("nrm", norm(col("ed")))
       .select(col("vec_id"),
         transform(col("ed"), x => round(x / col("nrm"), 6)).as("uv"))
       .localCheckpoint()

@@ -1,8 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.metrics.source.CodegenMetrics
+import graft.core.{ForkFreeLocalFileSystem, ForkFreeLocalFs,
+  ForkFreeRawLocalFileSystem}
 
 /** The session factory and the SQL surface of the native functions:
   * GraftSession.register binds them on the shared suite session (the
@@ -37,6 +41,19 @@ class GraftSessionSpec extends SparkSpec {
       finally walk.close()
     assert(elsewhere.isEmpty,
       s"sessions must be built through GraftSession.builder, not in: $elsewhere")
+  }
+
+  test("local files go through the fork-free filesystem, on both Hadoop APIs") {
+    // FileSystem.get answers from Hadoop's JVM-wide cache: a stock instance
+    // cached before the session was built would show here
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = FileSystem.get(new URI("file:///"), conf)
+    assert(fs.isInstanceOf[ForkFreeLocalFileSystem], fs.getClass)
+    val raw = FileSystem.getLocal(conf).getRaw
+    assert(raw.isInstanceOf[ForkFreeRawLocalFileSystem], raw.getClass)
+    // FileContext, which Spark's streaming checkpoint logs write through
+    val afs = FileContext.getLocalFSFileContext(conf).getDefaultFileSystem
+    assert(afs.isInstanceOf[ForkFreeLocalFs], afs.getClass)
   }
 
   test("a plan run again after 150 other plans reuses its compiled classes") {

@@ -26,19 +26,22 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getString(3))).toSet
 
-  test("top1 keeps the rank-1 window's row: score ties, lowest id, NaN cosine") {
+  test("top1 keeps the rank-1 window's row: score ties, lowest id, NaN and null cosine") {
     // 4dp cosines of each vector to each centroid: the duplicated
     // centroids 7 and 3 tie, vector 3 gives NaN against every centroid,
     // and centroid 5 (paired with vectors 3 and 4 only) gives NaN, which
-    // ranks above every number. A zero vector would raise DIVIDE_BY_ZERO
-    // under the session's ANSI mode, so the NaN comes from a NaN component
+    // ranks above every number. The zero vector 6 and the zero centroid 2
+    // have no norm, so they score null, which ranks below every number:
+    // vector 6's scores all tie at null, and centroid 2 never wins
     val vecs = Seq(
       0L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0), 2L -> Seq(1.0, 1.0),
-      3L -> Seq(Double.NaN, 0.0), 4L -> Seq(-1.0, 0.0), 5L -> Seq(2.0, 2.0))
+      3L -> Seq(Double.NaN, 0.0), 4L -> Seq(-1.0, 0.0), 5L -> Seq(2.0, 2.0),
+      6L -> Seq(0.0, 0.0))
       .toDF("key", "v")
     val cents = Seq(
       7L -> Seq(1.0, 1.0), 3L -> Seq(1.0, 1.0), 5L -> Seq(Double.NaN, 0.0),
-      9L -> Seq(1.0, 0.0), 4L -> Seq(0.0, -1.0), 8L -> Seq(0.0, 1.0))
+      9L -> Seq(1.0, 0.0), 4L -> Seq(0.0, -1.0), 8L -> Seq(0.0, 1.0),
+      2L -> Seq(0.0, 0.0))
       .toDF("id", "c")
     val scored = vecs.crossJoin(cents)
       .filter(col("id") =!= 5 || col("key").isin(3L, 4L))
@@ -47,11 +50,12 @@ class SimilaritySpec extends SparkSpec {
         concat(lit("c"), col("id").cast("string")).as("tag"))
       .repartition(3)
     assert(scored.filter(isnan(col("score"))).count() == 7)
+    assert(scored.filter(col("score").isNull).count() == 12)
     val got = rows(Similarity.top1(scored, Seq("key"), "score", "id",
       highest = true, "tag"))
     assert(got == rows(windowTop1(scored, desc("score"))))
     assert(got.map(r => r._1 -> r._2).toMap ==
-      Map(0L -> 9L, 1L -> 8L, 2L -> 3L, 3L -> 3L, 4L -> 5L, 5L -> 3L))
+      Map(0L -> 9L, 1L -> 8L, 2L -> 3L, 3L -> 3L, 4L -> 5L, 5L -> 3L, 6L -> 2L))
   }
 
   test("top1 under min keeps the rank-1 ascending window's row on distance ties") {
@@ -87,6 +91,26 @@ class SimilaritySpec extends SparkSpec {
         .select("rn", "vec_id").as[(Int, Long)].collect().toSeq.sorted
       assert(got == want, s"order $order")
     }
+  }
+
+  test("every similarity key completes on a corpus with an all-zero embedding") {
+    // a padding row or a failed encode: its norm is 0, so every cosine and
+    // unit vector of it is null rather than a DIVIDE_BY_ZERO under ANSI
+    val dir = tmpDir("graft-emb0")
+    val Zero = 7L
+    spark.read.parquet(s"$sf/embeddings.parquet")
+      .withColumn("embedding", when(col("vec_id") === Zero,
+        transform(col("embedding"), x => x * 0)).otherwise(col("embedding")))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val failed = Similarity.queries.flatMap { q =>
+      try { q.build(spark, dir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Exception => Some(s"${q.name}: ${e.getMessage.take(200)}") }
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+    // the exact top 10 of vec 0 ranks the zero row last, out of the list
+    val top = graft.SparkEntry.queries("knn_cosine_topk")(spark, dir)
+      .select("vec_id").as[Long].collect()
+    assert(top.length == 10 && !top.contains(Zero), top.toSeq)
   }
 
   test("dedup_embedding_ann takes the band width of the directory as it is now") {
