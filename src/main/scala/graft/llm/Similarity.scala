@@ -40,10 +40,12 @@ object Similarity {
   /** Attach a unit-normalized double copy of `vec` as `out`. Pairwise
     * similarity stages normalize each side ONCE per row, so the per-pair
     * work is a single dot product instead of three (cosine recomputes both
-    * norms per pair — 3× the flops on an m×n pair space). */
+    * norms per pair — 3× the flops on an m×n pair space). An all-zero
+    * vector has no unit vector: null, so its dot products are null too. */
   def withUnitVec(df: DataFrame, vec: String, out: String): DataFrame =
     df.withColumn("graft_nrm", norm(col(vec)))
-      .withColumn(out, transform(col(vec), x => x.cast("double") / col("graft_nrm")))
+      .withColumn(out, when(col("graft_nrm").isNotNull,
+        transform(col(vec), x => x.cast("double") / col("graft_nrm"))))
       .drop("graft_nrm")
 
   /** The probe shape of every similarity key: `cands` with the `queries`
@@ -712,8 +714,8 @@ object Similarity {
     val unit = embeddings(s, d)
       .withColumn("ed", transform(col("embedding"), x => x.cast("double")))
       .withColumn("nrm", norm(col("ed")))
-      .select(col("vec_id"),
-        transform(col("ed"), x => round(x / col("nrm"), 6)).as("uv"))
+      .select(col("vec_id"), when(col("nrm").isNotNull,
+        transform(col("ed"), x => round(x / col("nrm"), 6))).as("uv"))
       .localCheckpoint()
     def recenter(assigned: DataFrame): DataFrame = {
       val means = assigned

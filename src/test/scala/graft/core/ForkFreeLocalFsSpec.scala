@@ -31,14 +31,15 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
     val (a, b) = (dir.resolve("stock"), dir.resolve("forkfree"))
     Files.createFile(a)
     Files.createFile(b)
-    val differ = (0 to 0x1ff).filter { mode =>
+    val differ = (0 to 0x1ff).map { mode =>
       val perm = new FsPermission(mode.toShort)
       stock.setPermission(new Path(a.toUri), perm)
       forkFree.setPermission(new Path(b.toUri), perm)
-      unixMode(a) != mode || unixMode(b) != unixMode(a)
-    }
-    assert(differ.isEmpty, differ.take(5).map(m => f"$m%04o: stock " +
-      f"${unixMode(a)}%04o, fork-free ${unixMode(b)}%04o").mkString("; "))
+      (mode, unixMode(a), unixMode(b))
+    }.filter { case (mode, sa, sb) => sa != mode || sb != sa }
+    val firstFive = differ.take(5).map { case (m, sa, sb) =>
+      f"$m%04o: stock $sa%04o, fork-free $sb%04o" }.mkString("; ")
+    assert(firstFive.isEmpty, s"(${differ.size} modes differ)")
     // a sticky directory takes Hadoop's own path, with the same result
     val (da, db) = (dir.resolve("dstock"), dir.resolve("dforkfree"))
     Files.createDirectory(da)

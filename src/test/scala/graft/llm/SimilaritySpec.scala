@@ -107,6 +107,10 @@ class SimilaritySpec extends SparkSpec {
       catch { case e: Exception => Some(s"${q.name}: ${e.getMessage.take(200)}") }
     }
     assert(failed.isEmpty, failed.mkString("\n"))
+    val unit = Similarity.withUnitVec(spark.read.parquet(s"$dir/embeddings.parquet"),
+      "embedding", "uv")
+    assert(unit.filter(col("uv").isNull).select("vec_id").as[Long].collect()
+      .toSeq == Seq(Zero))
     // the exact top 10 of vec 0 ranks the zero row last, out of the list
     val top = graft.SparkEntry.queries("knn_cosine_topk")(spark, dir)
       .select("vec_id").as[Long].collect()
