@@ -26,7 +26,7 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getString(3))).toSet
 
-  test("top1 keeps the rank-1 window's row: score ties, lowest id, NaN and null cosine") {
+  test("top1 keeps the rank-1 window's row: score ties, lowest id, NaN cosine") {
     // 4dp cosines of each vector to each centroid: the duplicated
     // centroids 7 and 3 tie, vector 3 gives NaN against every centroid,
     // and centroid 5 (paired with vectors 3 and 4 only) gives NaN, which
